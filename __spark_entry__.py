@@ -86,6 +86,24 @@ SIMPLIFY_STAGE_DIR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "data", "stage", "simplified_edges"
 )
 
+
+def stage_once(stage_dir: str, key: str, write) -> None:
+    """Run write() to stage a generated fixture into stage_dir unless the
+    stage already holds it for this generator key (synthetic.fixture_key):
+    the marker `.done_<key>` is written only after write() returns, so an
+    interrupted staging re-runs, and a changed generator (new key) drops
+    the old marker and regenerates instead of serving stale files."""
+    os.makedirs(stage_dir, exist_ok=True)
+    marker = os.path.join(stage_dir, f".done_{key}")
+    if os.path.exists(marker):
+        return
+    for name in os.listdir(stage_dir):
+        if name.startswith(".done_"):
+            os.remove(os.path.join(stage_dir, name))
+    write()
+    open(marker, "w").close()
+
+
 # deterministic derived coordinates (integer arithmetic -> exact in both
 # engines): events become points, nations become places
 LAT_EXPR = "(CAST((event_id * 37) % 1700 AS DOUBLE) / 10.0) - 85.0"
@@ -522,17 +540,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # COAST_STAGE_DIR/*.parquet for the edge table, and globs do not
         # recurse
         snap_dir = os.path.join(COAST_STAGE_DIR, "snapshot")
-        os.makedirs(snap_dir, exist_ok=True)
-        marker = os.path.join(COAST_STAGE_DIR, ".done_v1")
-        if not os.path.exists(marker):
+
+        def write():
             coast = synthetic.generate_coastlines()
             synthetic.coastline_edges(coast).to_parquet(
                 os.path.join(COAST_STAGE_DIR, "edges.parquet"), index=False
             )
+            os.makedirs(snap_dir, exist_ok=True)
             coast.to_parquet(
                 os.path.join(snap_dir, "boundaries.parquet"), index=False
             )
-            open(marker, "w").close()
+
+        stage_once(COAST_STAGE_DIR, synthetic.fixture_key(), write)
         return spark.read.parquet(os.path.join(snap_dir, "boundaries.parquet"))
 
     def q_pip_coastline(spark, sf):
@@ -585,9 +604,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _mega_inputs(spark, sf):
         from wikibrain_spark.sources import synthetic
 
-        os.makedirs(MEGA_STAGE_DIR, exist_ok=True)
-        marker = os.path.join(MEGA_STAGE_DIR, ".done_v2")
-        if not os.path.exists(marker):
+        def write():
             mega = synthetic.generate_megacoast()
             # oracle side: flat edge table; engine side: the rings frame
             # as parquet — a 600k-vertex boundary snapshot enters through
@@ -599,7 +616,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             mega.to_parquet(
                 os.path.join(MEGA_STAGE_DIR, "boundaries.parquet"), index=False
             )
-            open(marker, "w").close()
+
+        stage_once(MEGA_STAGE_DIR, synthetic.fixture_key(), write)
         bnd = spark.read.parquet(os.path.join(MEGA_STAGE_DIR, "boundaries.parquet"))
         pts = (
             _t(spark, sf, "events")

@@ -151,11 +151,11 @@ def test_knn_kring_plan_has_no_dedup_aggregate(spark):
 
 def test_clipped_dim_native_plan_points_side_pure(spark):
     """The clipped-dim native PIP (round 6) must keep the points side
-    zero-Python and zero-shuffle: exactly ONE MapInPandas (the clip dim
-    build, once per snapshot) and TWO shuffle exchanges (round 8: the
-    clip-unit repartition that parallelizes the prepass, plus the dim's
-    collect_list groupBy), all inside the broadcast subtree; the probe
-    side is a bare scan into a BroadcastHashJoin."""
+    zero-Python and zero-shuffle: exactly ONE Python map — MapInArrow,
+    the clip dim build, once per snapshot — and TWO shuffle exchanges
+    (round 8: the clip-unit repartition that parallelizes the prepass,
+    plus the dim's collect_list groupBy), all inside the broadcast
+    subtree; the probe side is a bare scan into a BroadcastHashJoin."""
     from wikibrain_spark.operators import spatial_join
 
     bnd = spark.createDataFrame(
@@ -169,15 +169,15 @@ def test_clipped_dim_native_plan_points_side_pure(spark):
     )
     plan = _plan(spatial_join.broadcast_pip_join_native(
         pts, bnd, cell_prefilter_res=2, clip_dim=True))
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert plan.count("BroadcastExchange") == 1
     assert plan.replace("BroadcastExchange", "BX").count("Exchange") == 2
-    # the one MapInPandas and both Exchanges are in the broadcast (dim)
+    # the one MapInArrow and both Exchanges are in the broadcast (dim)
     # subtree: toString indents children, so all must appear AFTER the
     # BroadcastExchange line
     bx = plan.find("BroadcastExchange")
-    assert plan.find("MapInPandas") > bx
+    assert plan.find("MapInArrow") > bx
     assert plan.replace("BroadcastExchange", "BX").find("Exchange") > bx
 
 

@@ -89,6 +89,14 @@ def test_fan_out_is_noop_at_or_above_parallelism(spark):
     assert fan_out(wide) is wide  # untouched frame, no extra shuffle
 
 
+def test_fan_out_passes_streaming_frame_through(spark):
+    """A streaming frame has no RDD to count partitions on: fan_out must
+    hand it back unchanged instead of raising."""
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    assert stream.isStreaming
+    assert fan_out(stream) is stream
+
+
 def test_position_indexed_prefilter_dim_matches_one_row_dim(spark):
     """The position-indexed unclipped prefilter dim (round 8) must produce
     exactly the one-row dim's containment pairs on corner geometry

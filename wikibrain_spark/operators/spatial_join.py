@@ -307,10 +307,15 @@ def _auto_cover_res(
 
     What the gates bound (round 6, bucketed cogroup): group count no
     longer scales with the cover (see shuffle_pip_join's BOUNDED GROUP
-    COUNT note), so the res cost model is (a) the clip prepass — one
-    Sutherland-Hodgman strip/column pass per (ring, covered cell),
-    ~0.1 ms/cell, single task per polygon, so max_ring_cells ~= a 2 s
-    worst-polygon task — and (b) cover row count (tiny rows). Finer res
+    COUNT note), so the res cost model is (a) the clip prepass —
+    geo/clip.py clipped_cell_cover clips each ring to all its strips and
+    each strip piece to all its columns in vectorized passes, measured
+    serial on a 4-core VM at ~0.8 us per vertex plus ~6 us per occupied
+    cell (0.39 s for the 500k-vertex megacoast boundary over 2.8k cells
+    at res 2; 0.12 s for a 4-vertex square over 19.6k cells at res 3),
+    in units of ~_CLIP_CHUNK_TARGET_VERTICES vertices, so max_ring_cells
+    caps a polygon's per-cell term at ~0.1 s — and (b) cover row count
+    (tiny rows). Finer res
     buys pruning: fewer points survive the covered-cells semi-filter and
     each cover row tests fewer points, so the gates sit as fine as the
     prepass allows rather than as coarse as correctness allows.
@@ -758,32 +763,36 @@ def _perimeter_km_col() -> Column:
     )
 
 
-# target vertex load per clip-prepass task: small enough that one 10^6-
-# vertex boundary spreads over ~16 tasks, large enough that the duplicated
-# ring transport (each chunk ships the boundary's full strip-intersecting
-# rings) stays a few MB per task
-_CLIP_CHUNK_TARGET_VERTICES = 60_000
+# target vertex load per clip-prepass unit. Every unit ships its
+# boundary's full strip-intersecting rings, so a boundary split into k
+# units crosses the shuffle and the Arrow channel ~k times; the split only
+# pays while the kernel time it parallelizes exceeds that transport plus a
+# Python stage's fixed cost (~0.3 s per stage at local[4] on a 4-core VM).
+# clipped_cell_cover measures ~0.8 us/vertex serial (0.39 s for the
+# 500k-vertex megacoast boundary at res 2; the per-strip clip it replaced
+# cost 7.8 us/vertex, hence the old 60k target), so a unit of up to 500k
+# vertices costs about one stage overhead of kernel time: the megacoast
+# ships each vertex once (two units, 600k vertices, where the 60k target
+# shipped 4.0M across 11 units) and a 10^7-vertex boundary still spreads
+# over 20 tasks (each shipping the whole ring).
+_CLIP_CHUNK_TARGET_VERTICES = 500_000
 
 
 def _clip_units(boundaries: DataFrame, res: int) -> DataFrame:
     """(boundary_id, rings, strip_lo, strip_hi) work units for the clip
-    prepass (round 8). The Sutherland-Hodgman prepass used to run as one
-    Python task per BOUNDARY — a 600k-vertex snapshot with two polygons
-    ran its entire clip serially in two tasks (one of them 5x the other),
-    measured ~3.4 s at local[32] with 30 cores idle. Cells are strip-
-    aligned, so partitioning each boundary's latitude-strip range into
-    contiguous chunks (one unit per ~_CLIP_CHUNK_TARGET_VERTICES vertices)
-    parallelizes the prepass with NO downstream merge: a unit emits
-    exactly the (cell, pieces) entries of its own strips, disjoint from
-    every other unit's, with identical per-entry content and piece order.
+    prepass (round 8). Cells are strip-aligned, so partitioning each
+    boundary's latitude-strip range into contiguous chunks (one unit per
+    ~_CLIP_CHUNK_TARGET_VERTICES vertices) parallelizes the prepass with
+    NO downstream merge: a unit emits exactly the (cell, pieces) entries
+    of its own strips, disjoint from every other unit's, with identical
+    per-entry content and piece order.
 
     Each unit carries the boundary's rings FILTERED (with a one-strip
     safety margin) to those whose latitude range can touch the unit's
-    strips — the clip of an unrelated ring would return None anyway, the
-    filter just avoids shipping 400k-vertex arrays to chunks that cannot
-    use them. The final repartition spreads units across the cluster; its
-    shuffle moves O(chunks x ring-bytes), a few tens of MB for a 10^6-
-    vertex snapshot."""
+    strips — a ring that cannot reach them would clip to nothing. The
+    final repartition spreads units across the cluster; it moves each
+    ring once per unit that keeps it (see _CLIP_CHUNK_TARGET_VERTICES for
+    why that is about once)."""
     spark = boundaries.sparkSession
     step = cells.hexlite_step(res)
     n_lat, _ = cells.hexlite_dims(res)
@@ -836,6 +845,40 @@ def _clip_units(boundaries: DataFrame, res: int) -> DataFrame:
     return units.repartition(_shuffle_partitions(spark))
 
 
+def _unit_covers(batch, res: int) -> Iterator[tuple[int, dict]]:
+    """(boundary_id, clipped_cell_cover) for every _clip_units row of an
+    Arrow batch. The rings are read as zero-copy NumPy slices of the
+    batch's flat coordinate buffers: no per-vertex Python objects on the
+    way in."""
+    from wikibrain_spark.geo import clip as _clip
+
+    rings = batch.column("rings")
+    r_off = rings.offsets.to_numpy()
+    lat, lon = rings.values.field("ring_lat"), rings.values.field("ring_lon")
+    lat_off, lat_v = lat.offsets.to_numpy(), lat.values.to_numpy()
+    lon_off, lon_v = lon.offsets.to_numpy(), lon.values.to_numpy()
+    bids = batch.column("boundary_id").to_numpy()
+    s_lo = batch.column("strip_lo").to_numpy()
+    s_hi = batch.column("strip_hi").to_numpy()
+    for i in range(batch.num_rows):
+        ring_list = [
+            (lat_v[lat_off[k]:lat_off[k + 1]], lon_v[lon_off[k]:lon_off[k + 1]])
+            for k in range(r_off[i], r_off[i + 1])
+        ]
+        yield int(bids[i]), _clip.clipped_cell_cover(
+            ring_list, res, strip_lo=int(s_lo[i]), strip_hi=int(s_hi[i]))
+
+
+def _list_array(lengths: list, values):
+    """Arrow list array of consecutive runs of `values` (run i has
+    lengths[i] elements)."""
+    import pyarrow as pa
+
+    off = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=off[1:])
+    return pa.ListArray.from_arrays(pa.array(off), values)
+
+
 def clipped_cover_frame(boundaries: DataFrame, res: int) -> DataFrame:
     """(boundary_id, cell, geom array<double>): the clip-to-cell cover the
     shuffle strategy cogroups against — each covered cell carries only the
@@ -844,29 +887,30 @@ def clipped_cover_frame(boundaries: DataFrame, res: int) -> DataFrame:
     shuffle_pip_join so the scaling harness can build its
     cogroup-transport probe from the IDENTICAL cover side (same prepass,
     same shuffle, parity kernel removed)."""
+    import pyarrow as pa
+
     from wikibrain_spark.geo import clip as _clip
 
-    def cover_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for bid, rings, s_lo, s_hi in zip(
-                b["boundary_id"], b["rings"], b["strip_lo"], b["strip_hi"]
-            ):
-                pieces = _clip.clipped_cell_cover(
-                    [(r["ring_lat"], r["ring_lon"]) for r in rings], res,
-                    strip_lo=s_lo, strip_hi=s_hi,
-                )
-                if not pieces:
-                    continue
-                ids = list(pieces)
-                yield pd.DataFrame({
-                    "boundary_id": np.full(len(ids), bid, dtype=np.int64),
-                    "cell": np.array(ids, dtype=np.int64),
-                    "geom": [_clip.pack_pieces(pieces[c]) for c in ids],
-                })
+    def cover_fn(batches):
+        for batch in batches:
+            bids, ids, packs = [], [], []
+            for bid, pieces in _unit_covers(batch, res):
+                for c, plist in pieces.items():
+                    bids.append(bid)
+                    ids.append(c)
+                    packs.append(_clip.pack_pieces(plist))
+            if not ids:
+                continue
+            geom = np.concatenate(packs)
+            yield pa.RecordBatch.from_arrays([
+                pa.array(bids, pa.int64()),
+                pa.array(ids, pa.int64()),
+                _list_array([g.size for g in packs], pa.array(geom, pa.float64())),
+            ], names=["boundary_id", "cell", "geom"])
 
     # strip-aligned parallel prepass (round 8, see _clip_units): units are
     # disjoint in (cell), so the union of per-unit covers IS the cover
-    return _clip_units(boundaries, res).mapInPandas(
+    return _clip_units(boundaries, res).mapInArrow(
         cover_fn, schema="boundary_id long, cell long, geom array<double>"
     )
 
@@ -951,9 +995,9 @@ def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
     fine resolutions stay broadcast-sized at ANY vertex weight and each
     point's fold visits only LOCAL edges.
 
-    The build is a mapInPandas over the polygon DIM — once per snapshot,
-    embarrassingly parallel per polygon, the same prepass position as the
-    shuffle strategy's clip cover. The POINTS side stays zero-Python and
+    The build is a mapInArrow over the polygon DIM's clip units — once
+    per snapshot, embarrassingly parallel, the same prepass position as
+    the shuffle strategy's clip cover. The POINTS side stays zero-Python and
     zero-shuffle (unchanged broadcast hash equi-join + native fold).
 
     boxes: one bbox per probe FRAME over the entry's pieces (raw and
@@ -963,89 +1007,86 @@ def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
     bbox — the exists() gate stays a correct prefilter. Parity over the
     clipped pieces equals full-ring parity for probes inside the cell
     (geo/clip.py's preservation argument)."""
-    from wikibrain_spark.geo import clip as _clip
+    import pyarrow as pa
 
-    def dim_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            cells_out: list[int] = []
-            bid_out: list[int] = []
-            boxes_out: list[list] = []
-            y0s: list[np.ndarray] = []
-            x0s: list[np.ndarray] = []
-            y1s: list[np.ndarray] = []
-            x1s: list[np.ndarray] = []
-            ws: list[np.ndarray] = []
-            for bid, rings, s_lo, s_hi in zip(
-                b["boundary_id"], b["rings"], b["strip_lo"], b["strip_hi"]
-            ):
-                pieces = _clip.clipped_cell_cover(
-                    [(r["ring_lat"], r["ring_lon"]) for r in rings], res,
-                    strip_lo=s_lo, strip_hi=s_hi,
-                )
+    def struct(names, arrays):
+        return pa.StructArray.from_arrays(arrays, names=names)
+
+    def dim_fn(batches):
+        for batch in batches:
+            cell_ids: list[int] = []
+            bids: list[int] = []
+            cell_nv: list[int] = []
+            n_boxes: list[int] = []
+            boxes: list[tuple] = []
+            ys_l: list[np.ndarray] = []
+            xs_l: list[np.ndarray] = []
+            ws: list[bool] = []
+            for bid, pieces in _unit_covers(batch, res):
                 for cell_id, plist in pieces.items():
-                    # NumPy column assembly, O(pieces) Python per cell:
-                    # a closed ring's edge list is (v_i -> v_{i+1 mod n}),
-                    # i.e. the vertex arrays zipped with their roll(-1) —
-                    # at 10^6 total vertices the previous per-edge dict
-                    # loop allocated 10^6+ Python objects where these are
-                    # a handful of array ops (round-6 verdict hygiene #2)
+                    # one bbox per probe frame, frames in first-seen order
                     frame_box: dict[bool, list[float]] = {}
-                    py0, px0, py1, px1, pw = [], [], [], [], []
                     for ys, xs, w in plist:
-                        py0.append(ys); px0.append(xs)
-                        py1.append(np.roll(ys, -1)); px1.append(np.roll(xs, -1))
-                        pw.append(np.full(ys.size, bool(w), dtype=bool))
+                        ys_l.append(ys)
+                        xs_l.append(xs)
+                        ws.append(bool(w))
+                        lo_y, hi_y = float(ys.min()), float(ys.max())
+                        lo_x, hi_x = float(xs.min()), float(xs.max())
                         fb = frame_box.get(bool(w))
-                        lo_y, hi_y = float(np.min(ys)), float(np.max(ys))
-                        lo_x, hi_x = float(np.min(xs)), float(np.max(xs))
                         if fb is None:
                             frame_box[bool(w)] = [lo_y, hi_y, lo_x, hi_x]
                         else:
                             fb[0] = min(fb[0], lo_y); fb[1] = max(fb[1], hi_y)
                             fb[2] = min(fb[2], lo_x); fb[3] = max(fb[3], hi_x)
-                    y0s.append(np.concatenate(py0)); x0s.append(np.concatenate(px0))
-                    y1s.append(np.concatenate(py1)); x1s.append(np.concatenate(px1))
-                    ws.append(np.concatenate(pw))
-                    boxes_out.append([
-                        {"lat_min": fb[0], "lat_max": fb[1],
-                         "lon_min": fb[2], "lon_max": fb[3], "w": w}
-                        for w, fb in frame_box.items()
-                    ])
-                    cells_out.append(int(cell_id))
-                    bid_out.append(int(bid))
-            yield pd.DataFrame({
-                "cell": pd.Series(cells_out, dtype=np.int64),
-                "bid": pd.Series(bid_out, dtype=np.int64),
-                "boxes": boxes_out,
-                "y0": y0s, "x0": x0s, "y1": y1s, "x1": x1s, "w": ws,
-            })
+                    boxes.extend((*fb, w) for w, fb in frame_box.items())
+                    n_boxes.append(len(frame_box))
+                    cell_nv.append(sum(ys.size for ys, _, _ in plist))
+                    cell_ids.append(int(cell_id))
+                    bids.append(bid)
+            if not cell_ids:
+                continue
+            # a closed piece's edge list is (v_i -> v_{i+1 mod n}): the
+            # vertex arrays against a next-index gather that wraps at each
+            # piece's end, for the whole batch in a few array ops
+            y0, x0 = np.concatenate(ys_l), np.concatenate(xs_l)
+            lens = np.array([a.size for a in ys_l])
+            ends = np.cumsum(lens)
+            nxt = np.arange(1, y0.size + 1)
+            nxt[ends - 1] = ends - lens
+            edges = struct(["y0", "x0", "y1", "x1", "w"], [
+                pa.array(y0), pa.array(x0), pa.array(y0[nxt]), pa.array(x0[nxt]),
+                pa.array(np.repeat(np.array(ws, dtype=bool), lens)),
+            ])
+            bx = list(zip(*boxes))
+            box_arr = struct(
+                ["lat_min", "lat_max", "lon_min", "lon_max", "w"],
+                [pa.array(bx[k], pa.float64()) for k in range(4)]
+                + [pa.array(bx[4], pa.bool_())],
+            )
+            yield pa.RecordBatch.from_arrays([
+                pa.array(cell_ids, pa.int64()),
+                struct(["bid", "boxes", "edges"], [
+                    pa.array(bids, pa.int64()),
+                    _list_array(n_boxes, box_arr),
+                    _list_array(cell_nv, edges),
+                ]),
+            ], names=["cell", "p"])
 
     schema = (
-        "cell long, bid long, "
-        "boxes array<struct<lat_min: double, lat_max: double, "
+        "cell long, p struct<bid: long, "
+        "boxes: array<struct<lat_min: double, lat_max: double, "
         "lon_min: double, lon_max: double, w: boolean>>, "
-        "y0 array<double>, x0 array<double>, y1 array<double>, "
-        "x1 array<double>, w array<boolean>"
+        "edges: array<struct<y0: double, x0: double, y1: double, "
+        "x1: double, w: boolean>>>"
     )
-    # the struct shape the native fold consumes is assembled JVM-side:
-    # arrays_zip turns the five parallel primitive arrays into the edge
-    # struct array (field names follow the zipped column names), so the
-    # Arrow channel only ever carries flat primitive vectors
+    # the struct<bid, boxes, edges> shape the native fold consumes is
+    # built as Arrow arrays over the flat per-batch vertex buffers, so the
+    # channel carries columnar buffers with no per-element conversion.
     # strip-aligned parallel prepass (round 8, see _clip_units): units are
     # disjoint in (cell), so no (cell, bid) entry is split across tasks
     return (
         _clip_units(boundaries, res)
-        .mapInPandas(dim_fn, schema=schema)
-        .select(
-            "cell",
-            F.struct(
-                F.col("bid"),
-                F.col("boxes"),
-                F.arrays_zip(
-                    F.col("y0"), F.col("x0"), F.col("y1"), F.col("x1"), F.col("w")
-                ).alias("edges"),
-            ).alias("p"),
-        )
+        .mapInArrow(dim_fn, schema=schema)
         .groupBy("cell")
         .agg(F.collect_list("p").alias("polys"))
     )

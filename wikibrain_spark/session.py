@@ -23,7 +23,12 @@ def fan_out(df, min_partitions: int | None = None):
     kernel runs serially while the rest of the cluster idles — and AQE
     cannot help because there is no exchange to re-plan. The guard makes
     this a NO-OP at scale: a table with at least as many splits as cores
-    passes through untouched, so no production shuffle is introduced."""
+    passes through untouched, so no production shuffle is introduced.
+
+    A streaming frame passes through unchanged: it has no RDD to count
+    partitions on, and each micro-batch is planned by the stream."""
+    if df.isStreaming:
+        return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

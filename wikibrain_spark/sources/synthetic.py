@@ -12,6 +12,7 @@ real tables arrive as Iceberg/Parquet; everything downstream is agnostic.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -43,6 +44,15 @@ CAPTION_WORDS = [
     "plaza", "bridge", "station", "market", "cathedral", "museum", "tower",
     "garden", "harbor", "fountain", "monument", "library", "castle", "square",
 ]
+
+
+def fixture_key() -> str:
+    """Content key for fixtures staged from this module's generators: a
+    hash of this file's source, so an edit to any generator, helper or
+    SEED changes the key and a stager keyed on it regenerates (every
+    generator here is deterministic, so one staging per key is exact)."""
+    with open(__file__, "rb") as fh:
+        return hashlib.sha256(fh.read()).hexdigest()[:16]
 
 
 def _city_polygon(lat: float, lon: float, radius_deg: float, n_vertices: int, rng) -> tuple[np.ndarray, np.ndarray]:
