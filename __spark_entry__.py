@@ -87,23 +87,6 @@ SIMPLIFY_STAGE_DIR = os.path.join(
 )
 
 
-def stage_once(stage_dir: str, key: str, write) -> None:
-    """Run write() to stage a generated fixture into stage_dir unless the
-    stage already holds it for this generator key (synthetic.fixture_key):
-    the marker `.done_<key>` is written only after write() returns, so an
-    interrupted staging re-runs, and a changed generator (new key) drops
-    the old marker and regenerates instead of serving stale files."""
-    os.makedirs(stage_dir, exist_ok=True)
-    marker = os.path.join(stage_dir, f".done_{key}")
-    if os.path.exists(marker):
-        return
-    for name in os.listdir(stage_dir):
-        if name.startswith(".done_"):
-            os.remove(os.path.join(stage_dir, name))
-    write()
-    open(marker, "w").close()
-
-
 # deterministic derived coordinates (integer arithmetic -> exact in both
 # engines): events become points, nations become places
 LAT_EXPR = "(CAST((event_id * 37) % 1700 AS DOUBLE) / 10.0) - 85.0"
@@ -551,7 +534,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 os.path.join(snap_dir, "boundaries.parquet"), index=False
             )
 
-        stage_once(COAST_STAGE_DIR, synthetic.fixture_key(), write)
+        synthetic.stage_once(COAST_STAGE_DIR, synthetic.fixture_key(), write)
         return spark.read.parquet(os.path.join(snap_dir, "boundaries.parquet"))
 
     def q_pip_coastline(spark, sf):
@@ -569,14 +552,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q_pip_coastline"] = q_pip_coastline
 
     # ---- the SAME high-vertex coastline through the CLIPPED prefiltered
-    # native path (round 6): clip_dim bounds the broadcast dim at
-    # O(vertices + cells) — at res 2 the unclipped dim replicates ~12k
-    # edges into every covering cell (a >1 GB broadcast at res 3 — the
-    # documented reason the native path was capped at res 0 on
-    # vertex-heavy sets), clipped it stays megabytes and each point's
-    # fold visits only its cell's local edges. Same oracle as
-    # q_pip_coastline: the gate pins that the clipped fold's parity is
-    # exact on outer+hole, dateline, and multi-component rings.
+    # native path (round 6): unclipped, every point in a covered cell
+    # folds its boundary's full edge list (thousands of edges); clip_dim
+    # cuts each cell's geometry to its window (O(vertices + cells) in
+    # total), so each point's fold visits only its cell's local edges.
+    # Same oracle as q_pip_coastline: the gate pins that the clipped
+    # fold's parity is exact on outer+hole, dateline, and
+    # multi-component rings.
     def q_pip_coastline_native(spark, sf):
         bnd = _coast_inputs(spark)  # staged-once snapshot via the scan path (round 8)
         pts = _event_points(spark, sf).withColumnRenamed("event_id", "image_id")
@@ -617,7 +599,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 os.path.join(MEGA_STAGE_DIR, "boundaries.parquet"), index=False
             )
 
-        stage_once(MEGA_STAGE_DIR, synthetic.fixture_key(), write)
+        synthetic.stage_once(MEGA_STAGE_DIR, synthetic.fixture_key(), write)
         bnd = spark.read.parquet(os.path.join(MEGA_STAGE_DIR, "boundaries.parquet"))
         pts = (
             _t(spark, sf, "events")

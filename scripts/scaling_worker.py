@@ -195,21 +195,22 @@ def main() -> None:
     res["pip3000_native_rows_per_sec"] = round(n_unpref / res["pip3000_native_sec"], 1)
     res["pip3000_prefilter_rows_per_sec"] = round(n_pref / res["pip3000_prefilter_sec"], 1)
 
-    # copy probe: the identical cell->candidates broadcast equi-join with
-    # the PIP math removed (reads only size(polys)). In local mode every
-    # thread probes ONE shared hashed relation and copies the candidate
-    # array through ONE socket's memory system, so this term scales
-    # sub-linearly at any core count — the broadcast-join analogue of the
-    # Arrow-channel probe. prefiltered-minus-probe isolates the kernel
-    # compute the 0.8 gate is about; on a real cluster each executor holds
-    # its own copy of the broadcast and its own memory bus.
+    # copy probe: the identical two-hop broadcast equi-join (cell ->
+    # cover rows, boundary_id -> struct) with the PIP math removed (reads
+    # only size(p.edges)). In local mode every thread probes ONE shared
+    # hashed relation and copies the candidate struct through ONE socket's
+    # memory system, so this term scales sub-linearly at any core count —
+    # the broadcast-join analogue of the Arrow-channel probe.
+    # prefiltered-minus-probe isolates the kernel compute the 0.8 gate is
+    # about; on a real cluster each executor holds its own copy of the
+    # broadcast and its own memory bus.
     from wikibrain_spark.geo import cells as _cells
 
-    cell_dim = _sj.candidate_cell_dim(polys, 2)
     probe = (
         pts_pref.withColumn("cell", _cells.hexlite_cell_col(F.col("lat"), F.col("lon"), 2))
-        .join(F.broadcast(cell_dim), "cell", "left")
-        .select(F.size("polys").alias("k"))
+        .join(F.broadcast(_sj.polygon_cover(polys, 2)), "cell")
+        .join(F.broadcast(_sj.polygon_structs(polys)), "boundary_id")
+        .select(F.size(F.col("p")["edges"]).alias("k"))
     )
     res["pip3000_copy_probe_sec"] = timed(lambda: probe)
     res["pip3000_kernel_sec"] = round(

@@ -181,6 +181,44 @@ def test_clipped_dim_native_plan_points_side_pure(spark):
     assert plan.replace("BroadcastExchange", "BX").find("Exchange") > bx
 
 
+def test_unclipped_prefilter_plan_is_two_broadcast_hash_joins(spark):
+    """The unclipped prefiltered native PIP joins each point's cell onto
+    polygon_cover's (boundary_id, cell) rows, then boundary_id onto
+    polygon_structs: exactly two broadcast hash joins and nothing that
+    numbers, groups or re-explodes the candidates — no Window, no
+    aggregate, no exchange besides the two broadcasts, and the only
+    Generate is the cover's explode inside its broadcast."""
+    from wikibrain_spark.operators import spatial_join
+
+    bnd = spark.createDataFrame(
+        [(1, [{"ring_lat": [0.0, 0.0, 30.0, 30.0],
+               "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}])],
+        f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+    pts = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
+        F.col("event_id").cast("string").alias("image_id"),
+        (F.pmod(F.col("event_id") * 7, 160) - 80.0).alias("lat"),
+        (F.pmod(F.col("event_id") * 11, 350) - 175.0).alias("lon"),
+    )
+    plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
+    assert "Window" not in plan and "Aggregate" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
+    lines = plan.splitlines()
+    gen = [i for i, ln in enumerate(lines) if "Generate " in ln]
+    assert len(gen) == 1 and "explode(" in lines[gen[0]], plan
+    # ancestors of the Generate: each line above it indented less than
+    # everything between them (toString indents children under parents)
+    depth = lines[gen[0]].index("+- ")
+    ancestors = []
+    for ln in reversed(lines[:gen[0]]):
+        d = ln.find("+- ")
+        if d < depth:
+            ancestors.append(ln[d + 3:])
+            depth = d
+    assert any(a.startswith("BroadcastExchange") for a in ancestors), plan
+
+
 def test_compactness_single_pass_no_join(spark):
     """polygon_compactness (round 7) computes both geodesic folds in ONE
     projection over the dim — a self-join of the two per-boundary

@@ -1,6 +1,6 @@
 """Round-8 optimization pins: the behavior-preserving guarantees of the
 performance work (staged HOF expressions, strip-chunked clip prepass,
-position-indexed prefilter dim, fan_out) plus the round-7 ADVICE fixes."""
+unclipped prefilter dim, fan_out) plus the round-7 ADVICE fixes."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from wikibrain_spark.geo import cells
 from wikibrain_spark.geo import clip as _clip
 from wikibrain_spark.geo import simplify as _simp
 from wikibrain_spark.operators import spatial_join
@@ -34,6 +35,18 @@ def test_shuffle_pip_rejects_unknown_clip_cover_string(spark):
     pts = spark.createDataFrame([("a", 5.0, 5.0)], "image_id string, lat double, lon double")
     with pytest.raises(ValueError, match="clip_cover"):
         spatial_join.shuffle_pip_join(pts, bnd, clip_cover="false")
+
+
+def test_tile_assignments_rejects_unknown_strategy(spark):
+    """A misspelled strategy must raise instead of silently running the
+    shuffle join, naming the four accepted values."""
+    bnd = spark.createDataFrame(
+        [(1, [{"ring_lat": [0.0, 0.0, 10.0, 10.0],
+               "ring_lon": [0.0, 10.0, 10.0, 0.0], "is_hole": False}], "Q1", "en:A")],
+        f"boundary_id long, rings {spatial_join.RINGS_TYPE}, qid string, wikipedia string")
+    pts = spark.createDataFrame([("a", 5.0, 5.0)], "image_id string, lat double, lon double")
+    with pytest.raises(ValueError, match="'broadcast', 'fused', 'native', 'shuffle'"):
+        spatial_join.tile_assignments(pts, bnd, strategy="brodcast")
 
 
 def test_clipped_cell_cover_strip_partition_equals_full():
@@ -98,24 +111,46 @@ def test_fan_out_passes_streaming_frame_through(spark):
 
 
 def test_position_indexed_prefilter_dim_matches_one_row_dim(spark):
-    """The position-indexed unclipped prefilter dim (round 8) must produce
-    exactly the one-row dim's containment pairs on corner geometry
-    (dateline ring + overlapping rectangles)."""
+    """The unclipped prefilter dim (cell join onto polygon_cover, then
+    boundary_id join onto polygon_structs) must produce exactly the one-row
+    dim's containment pairs, each pair once, on corner geometry: a
+    dateline ring, overlapping rectangles, a two-outer-ring multipolygon
+    whose ring bboxes share res-2 cells, and a ring with a hole; probes
+    include res-2 cell borders and every ring vertex."""
+    def ring(lat, lon, hole=False):
+        return {"ring_lat": lat, "ring_lon": lon, "is_hole": hole}
+
+    rings = {
+        1: [ring([0.0, 0.0, 30.0, 30.0], [-20.0, 40.0, 40.0, -20.0])],
+        2: [ring([-30.0, -30.0, -5.0, -5.0], [170.0, -165.0, -165.0, 170.0])],
+        3: [ring([10.0, 10.0, 70.0, 70.0], [-30.0, 60.0, 60.0, -30.0])],
+        # two disjoint triangles splitting one square: their bboxes cover
+        # the same res-2 cells, which the cover must still emit once
+        4: [ring([50.0, 50.0, 53.0], [100.0, 103.0, 100.0]),
+            ring([53.0, 50.3, 53.0], [103.0, 103.0, 100.3])],
+        5: [ring([-10.0, -10.0, -4.0, -4.0], [10.0, 16.0, 16.0, 10.0]),
+            ring([-8.0, -8.0, -6.0, -6.0], [12.0, 14.0, 14.0, 12.0], hole=True)],
+    }
     bnd = spark.createDataFrame(
-        [(1, [{"ring_lat": [0.0, 0.0, 30.0, 30.0],
-               "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}]),
-         (2, [{"ring_lat": [-30.0, -30.0, -5.0, -5.0],
-               "ring_lon": [170.0, -165.0, -165.0, 170.0], "is_hole": False}]),
-         (3, [{"ring_lat": [10.0, 10.0, 70.0, 70.0],
-               "ring_lon": [-30.0, 60.0, 60.0, -30.0], "is_hole": False}])],
-        f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+        sorted(rings.items()), f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+    step = cells.hexlite_step(2)
+    probes = [(float((i * 37) % 100 - 50), float((i * 91) % 360 - 180)) for i in range(500)]
+    border_lat = [-90.0 + k * step for k in range(70, 127)]
+    border_lon = [-180.0 + j * step for j in (*range(166, 172), *range(245, 250), *range(306, 315))]
+    probes += [(la, lo) for la in border_lat for lo in border_lon]
+    probes += [(la + step / 2, lo) for la in border_lat for lo in border_lon]
+    probes += [(la, lo + step / 2) for la in border_lat for lo in border_lon]
+    probes += [(la, lo) for rs in rings.values() for r in rs
+               for la, lo in zip(r["ring_lat"], r["ring_lon"])]
     pts = spark.createDataFrame(
-        [(str(i), float((i * 37) % 100 - 50), float((i * 91) % 360 - 180))
-         for i in range(500)],
+        [(str(i), la, lo) for i, (la, lo) in enumerate(probes)],
         "image_id string, lat double, lon double")
-    one_row = {(r["image_id"], r["boundary_id"])
-               for r in spatial_join.broadcast_pip_join_native(pts, bnd).collect()}
-    prefiltered = {(r["image_id"], r["boundary_id"])
-                   for r in spatial_join.broadcast_pip_join_native(
-                       pts, bnd, cell_prefilter_res=2).collect()}
-    assert prefiltered == one_row and len(one_row) > 0
+
+    def pairs(df):
+        return sorted((r["image_id"], r["boundary_id"]) for r in df.collect())
+
+    one_row = pairs(spatial_join.broadcast_pip_join_native(pts, bnd))
+    prefiltered = pairs(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
+    assert prefiltered == one_row
+    assert len(set(one_row)) == len(one_row)
+    assert {b for _, b in one_row} == set(rings)

@@ -229,13 +229,10 @@ def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark):
     strategies = {
         "broadcast": lambda: spatial_join.broadcast_pip_join(pdf, bdf),
         "native": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
-        # the prefiltered dim replicates FULL geometry per covering cell
-        # (that is its design: candidates as row data for the native
-        # fold), so on vertex-heavy polygons its res must be coarse —
-        # res 0 keeps the dim ~13 MB where res 3 built a >1 GB broadcast
-        # (maxResultSize abort). High-vertex sets at fine res belong to
-        # the clipped shuffle strategy; this pins that the native path
-        # stays CORRECT when sized per its own rule.
+        # the unclipped prefiltered fold visits each candidate's FULL
+        # edge list, so vertex-heavy polygons at fine res belong to the
+        # clipped dims; this pins that the unclipped native path stays
+        # CORRECT on them at a coarse res.
         "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=0),
         # the round-6 fix for exactly that limitation: clip_dim carries

@@ -14,6 +14,12 @@ ontology depth (~20 for Wikidata). Each iteration:
                 on cycles.
 The edges side is broadcast when small; `localCheckpoint` every few rounds
 truncates the lineage so the plan does not grow unboundedly.
+
+Every `localCheckpoint` here (edge lists, closure, frontiers) is EAGER and
+NOT RECOVERABLE: it runs a job at the call, keeps the blocks on the
+executors that computed them and cuts the lineage, so a block lost with its
+executor fails the query. Where executors come and go, use `checkpoint()`
+on a reliable directory instead.
 """
 
 from __future__ import annotations

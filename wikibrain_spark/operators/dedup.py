@@ -289,7 +289,12 @@ def minhash_lsh_pairs(
     candidate self-join reads it from both sides, and without
     materialization each side re-runs the whole shingle->minhash pipeline
     — the same reason callers that STAGE the table to parquet (the
-    oracle seam) re-read it from disk."""
+    oracle seam) re-read it from disk. The checkpoint is eager and not
+    recoverable: it runs a job here, keeps the blocks on the executors
+    that computed them and cuts the lineage, so a block lost with its
+    executor fails the query rather than being recomputed (use
+    checkpoint() on a reliable directory where executors come and go).
+    near_dup_clusters' edge and label tables checkpoint the same way."""
     return minhash_pairs_from_banded(
         minhash_banded(documents, n_perms, n_bands, ngram, text_col).localCheckpoint(),
         threshold,

@@ -6,7 +6,7 @@ per-ring antimeridian unwrap — see geo/pip.py's module doc for the model.
 Legacy single-ring frames (ring_lat/ring_lon arrays) are upgraded by
 normalize_rings at every operator entry point.
 
-Two physical strategies, one logical contract (SURVEY.md U4, J12-J14):
+Four physical strategies, one logical contract (SURVEY.md U4, J12-J14):
 
 1. broadcast_pip_join — the dimension side (boundary polygons) is small
    enough to broadcast. We broadcast the raw ring arrays once; each Python
@@ -14,7 +14,12 @@ Two physical strategies, one logical contract (SURVEY.md U4, J12-J14):
    (amortized inside mapInPandas), then streams Arrow batches through it.
    This is the STRtree-in-mapInPandas pattern from the north star.
 
-2. shuffle_pip_join — polygons too big to broadcast. Polygons are exploded
+2. geotag_pip_fused — strategy 1 fused with the geotag header parse.
+
+3. broadcast_pip_join_native — zero Python: polygons as row data through
+   broadcast joins into a native parity fold (auto_prefilter plans it).
+
+4. shuffle_pip_join — polygons too big to broadcast. Polygons are exploded
    to their covering hexlite cells; points carry their cell; the equi-join
    on cell co-locates candidates; an exact ring test refines. Hot cells
    (megacity polygons) are salted: the points side gets salt =
@@ -43,9 +48,18 @@ from wikibrain_spark.geo import cells, pip
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
 
+# planner gates, shared by _auto_cover_res, auto_prefilter and
+# shuffle_pip_join (their docstrings give the cost model behind each)
+_MAX_MEAN_CELLS = 1024.0  # mean bbox cover per outer ring
+_MAX_RING_CELLS = 16384.0  # worst ring's bbox cover
+_HEAVY_EDGES_PER_POLY = 10_000.0  # above this mean, the mean gate widens 8x
+_CLIP_THRESHOLD_EDGES = 2_000_000.0  # unclipped sum_poly(edges x cover) past which to clip
+
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
 RINGS_TYPE = "array<struct<ring_lat: array<double>, ring_lon: array<double>, is_hole: boolean>>"
+# the hit rows the Python PIP strategies emit
+_PIP_SCHEMA = "image_id string, lat double, lon double, boundary_id long"
 
 
 def pack_rings_col(rings):
@@ -188,9 +202,10 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     level (outer rings, the cover): sums/ maxima of the bbox span products
     ab and a+b, plus the outer-ring count, so any res's mean/max cover
     follows from cover(r) = ab/step^2 + (a+b)/step + 1 (linear in the
-    stats). Poly level (the unclipped dim's replication): the dim ships
-    each polygon's FULL edge list once per covering cell, so its total
-    edge-struct count at res is sum_poly(edges_poly * cover_poly) =
+    stats). Poly level (the unclipped cover's replication): the shuffle
+    cover ships each polygon's FULL edge list once per covering cell, and
+    the unclipped native dim pairs it with every covering cell, so the
+    edge count at res is sum_poly(edges_poly * cover_poly) =
     S_e_ab/step^2 + S_e_sum/step + S_e_n with S_e_* = sum_poly(edges *
     sum_outer_ring(ab | a+b | 1)) — also linear, captured in the same
     pass. Memoized per logical plan (semanticHash): a boundary snapshot
@@ -273,7 +288,8 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
     _cover_stats sufficient statistics. The cover count is
     sum_ring((a/step+1)(b/step+1)) expanded to the linear form; the
     replication count weights each ring's cover by its edge count —
-    exactly what the unclipped dim/shuffle cover ships. Both
+    exactly what the unclipped shuffle cover ships, and the edges the
+    unclipped native dim's fold pairs with covered cells. Both
     auto_prefilter's clip_dim flip and shuffle_pip_join's clip_cover
     flip + n_buckets sizing read THIS function, so the two strategies
     make one consistent statistics-driven decision."""
@@ -286,12 +302,10 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
     return cover_est, replicated
 
 
-def _auto_cover_res(
-    boundaries: DataFrame, max_mean_cells: float = 1024.0, max_ring_cells: float = 16384.0
-) -> int:
+def _auto_cover_res(boundaries: DataFrame) -> int:
     """_auto_index_res for the SHUFFLE strategy: analogous gates (mean
-    bbox cover <= max_mean_cells per outer ring, worst ring <=
-    max_ring_cells) but computed from a native aggregate of per-ring bbox
+    bbox cover <= _MAX_MEAN_CELLS per outer ring, worst ring <=
+    _MAX_RING_CELLS) but computed from a native aggregate of per-ring bbox
     spans — the shuffle side must never collect the polygon geometry to
     the driver (its dim can be big; that is the strategy's reason to
     exist). The cover-count formula
@@ -313,7 +327,7 @@ def _auto_cover_res(
     serial on a 4-core VM at ~0.8 us per vertex plus ~6 us per occupied
     cell (0.39 s for the 500k-vertex megacoast boundary over 2.8k cells
     at res 2; 0.12 s for a 4-vertex square over 19.6k cells at res 3),
-    in units of ~_CLIP_CHUNK_TARGET_VERTICES vertices, so max_ring_cells
+    in units of ~_CLIP_CHUNK_TARGET_VERTICES vertices, so _MAX_RING_CELLS
     caps a polygon's per-cell term at ~0.1 s — and (b) cover row count
     (tiny rows). Finer res
     buys pruning: fewer points survive the covered-cells semi-filter and
@@ -327,7 +341,7 @@ def _auto_cover_res(
     high-vertex snapshot ONE step of extra resolution cuts the dominant
     per-point term ~2.6x while the costs the mean gate bounds (cover
     rows, clip prepass) stay seconds even at 8x the gate. When the mean
-    edge count per polygon exceeds heavy_edges_per_poly the mean gate
+    edge count per polygon exceeds _HEAVY_EDGES_PER_POLY the mean gate
     widens 8x (the max gate — a single worst-task bound — never moves).
     Measured on megacoast (res 1 -> 2): 20M-point refine 3.5x faster,
     prepass +2 s once per snapshot. Low-vertex snapshots are unaffected
@@ -335,8 +349,8 @@ def _auto_cover_res(
     s = _cover_stats(boundaries)
     if not s["n_outer"]:
         return 0
-    heavy_edges_per_poly = 10_000.0
-    if s["s_e_n"] / s["n_outer"] > heavy_edges_per_poly:
+    max_mean_cells = _MAX_MEAN_CELLS
+    if s["s_e_n"] / s["n_outer"] > _HEAVY_EDGES_PER_POLY:
         max_mean_cells = 8.0 * max_mean_cells
     for res in range(7, 0, -1):
         step = cells.hexlite_step(res)
@@ -344,33 +358,29 @@ def _auto_cover_res(
             s["sum_absum"] / s["n_outer"]
         ) / step + 1.0
         max_cover = s["max_ab"] / step**2 + s["max_sum"] / step + 1.0
-        if mean_cover <= max_mean_cells and max_cover <= max_ring_cells:
+        if mean_cover <= max_mean_cells and max_cover <= _MAX_RING_CELLS:
             return res
     return 0
 
 
-def auto_prefilter(
-    boundaries: DataFrame,
-    max_mean_cells: float = 1024.0,
-    max_ring_cells: float = 16384.0,
-    max_replicated_edges: float = 2_000_000.0,
-) -> tuple[int, bool]:
+def auto_prefilter(boundaries: DataFrame) -> tuple[int, bool]:
     """Physical-strategy chooser for the broadcast native path: returns
     (cell_prefilter_res, clip_dim) from the same one-job distributed
     stats pass the shuffle strategy sizes itself with (_cover_stats) —
     the engine-side analogue of Catalyst picking a join strategy from
     size statistics. res comes from the _auto_cover_res gates; clip_dim
-    flips ON when the UNCLIPPED dim at that res would replicate more
-    than max_replicated_edges edge structs (the dim ships each polygon's
-    full edge list once per covering cell — sum_poly(edges x cover),
-    linear in the captured statistics; ~2M structs ~ a 10^2-MB broadcast,
-    past which the clipped O(vertices + cells) dim wins outright: 99.4M
-    -> 59.8k edge structs on the 12k-vertex coastline fixture at res 3).
+    flips ON when the UNCLIPPED cover at that res pairs more than
+    _CLIP_THRESHOLD_EDGES edges with cells. A point folds over the full
+    edge list of every polygon covering its cell, so sum_poly(edges x
+    cover), linear in the captured statistics, is the fold work summed
+    over the covered cells; past the threshold the clipped dim, whose
+    fold visits only each cell's local edges, wins outright (99.4M ->
+    59.8k edges on the 12k-vertex coastline fixture at res 3).
     Pass the result to broadcast_pip_join_native, or just pass
     cell_prefilter_res="auto" there."""
-    res = _auto_cover_res(boundaries, max_mean_cells, max_ring_cells)
+    res = _auto_cover_res(boundaries)
     _, replicated = _replication_estimates(boundaries, res)
-    return res, replicated > max_replicated_edges
+    return res, replicated > _CLIP_THRESHOLD_EDGES
 
 
 def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int | None = None) -> DataFrame:
@@ -380,7 +390,20 @@ def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int 
     shipped via a Spark broadcast variable; workers rebuild the index once.
     index_res=None (default) sizes the bucket grid to the polygon extents
     (see _auto_index_res)."""
-    spark = points.sparkSession
+    pip_batches = _index_pip_fn(
+        points.sparkSession, boundaries, index_res,
+        lambda b: (b["lat"].to_numpy(), b["lon"].to_numpy()),
+    )
+    # lat/lon ride along so downstream tile encoding needs no re-join
+    return points.select("image_id", "lat", "lon").mapInPandas(pip_batches, schema=_PIP_SCHEMA)
+
+
+def _index_pip_fn(spark: SparkSession, boundaries: DataFrame, index_res: int | None, coords):
+    """The mapInPandas function of the Python broadcast strategies: the
+    polygon rings are collected on the driver and broadcast once, each
+    partition builds the PolygonIndex once, and every batch's points
+    (coords(batch) -> lat, lon arrays) come out as (image_id, lat, lon,
+    boundary_id) hit rows."""
     ids, rings = _collect_polygon_rings(boundaries)
     if index_res is None:
         index_res = _auto_index_res(rings)
@@ -390,8 +413,7 @@ def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int 
         p_ids, p_rings, res = bc.value
         index = pip.PolygonIndex(p_ids, rings=p_rings, res=res)  # once per partition
         for b in batches:
-            lat = b["lat"].to_numpy()
-            lon = b["lon"].to_numpy()
+            lat, lon = coords(b)
             pt_idx, poly_id = index.query_batch(lat, lon)
             yield pd.DataFrame(
                 {
@@ -402,10 +424,7 @@ def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int 
                 }
             )
 
-    # lat/lon ride along so downstream tile encoding needs no re-join
-    return points.select("image_id", "lat", "lon").mapInPandas(
-        pip_batches, schema="image_id string, lat double, lon double, boundary_id long"
-    )
+    return pip_batches
 
 
 def _ring_wraps_col(ring_lon):
@@ -475,15 +494,17 @@ def broadcast_pip_join_native(
     regardless of polygon cardinality. Same half-open edge rule as the
     NumPy kernel (geo/pip.py points_in_ring).
 
-    cell_prefilter_res: when set, the one-row dim is replaced by a
-    (cover_cell -> polygon-subset array) dim joined on each point's hexlite
-    cell — a broadcast hash equi-join, still zero shuffle of the points —
-    so each point folds only over the polygons whose bbox covers its cell.
-    This is the scale configuration for large polygon COUNTS (per-point
-    work drops from O(all polygons) to O(cell candidates)). Size it to
-    VERTEX weight too: the dim replicates each polygon's full geometry
-    once per covering cell, so its broadcast is O(cells x vertices) —
-    a 10^4-vertex continental ring wants res 0-1, or clip_dim=True.
+    cell_prefilter_res: when set, the one-row dim is replaced by two
+    broadcast hash equi-joins — each point's hexlite cell against
+    polygon_cover's (boundary_id, cell) rows, then boundary_id against
+    polygon_structs — still zero shuffle of the points, so each point
+    folds only over the polygons whose bbox covers its cell. This is the
+    scale configuration for large polygon COUNTS (per-point work drops
+    from O(all polygons) to O(cell candidates)). The broadcasts are
+    O(cells + vertices): the cover carries ids only and each polygon's
+    struct ships once. Per-point work still grows with VERTEX weight: a
+    candidate's fold visits its polygon's whole edge list, which is what
+    clip_dim=True bounds.
 
     cell_prefilter_res="auto" resolves BOTH the resolution and clip_dim
     from the auto_prefilter statistics pass (one tiny agg job, memoized
@@ -492,12 +513,11 @@ def broadcast_pip_join_native(
 
     clip_dim (with cell_prefilter_res): build the dim with clipped_cell_dim
     — each cell carries only the geometry clipped to its window, making
-    the broadcast O(vertices + cells) and the per-point fold O(local
-    edges), so fine prefilter resolutions work at ANY vertex weight. The
-    dim build gains a once-per-snapshot Python prepass (the points side
-    stays zero-Python, zero-shuffle); keep the default when the polygon
-    set is low-vertex and the fully-native dim build matters more than
-    fold locality.
+    the per-point fold O(local edges), so fine prefilter resolutions work
+    at ANY vertex weight. The dim build gains a once-per-snapshot Python
+    prepass (the points side stays zero-Python, zero-shuffle); keep the
+    default when the polygon set is low-vertex and the fully-native dim
+    build matters more than fold locality.
 
     extra_cols: additional point-side columns carried through to the output
     (e.g. event_time on the Structured Streaming path — both plan shapes
@@ -540,59 +560,28 @@ def broadcast_pip_join_native(
     if cell_prefilter_res is None:
         poly_dim = poly_structs.agg(F.collect_list("p").alias("polys"))  # single row
         pts = points.crossJoin(F.broadcast(poly_dim))
-        polys = F.col("polys")
     elif clip_dim:
         cell_dim = clipped_cell_dim(boundaries, cell_prefilter_res)
         pts = points.withColumn(
-            "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), cell_prefilter_res)
+            "cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res)
         ).join(F.broadcast(cell_dim), "cell", "left")
-        polys = F.col("polys")
     else:
-        # POSITION-INDEXED unclipped dim (round 8): the old
-        # candidate_cell_dim shipped a full copy of each polygon's
-        # struct<bid, boxes, edges> once per covering cell — an
-        # O(cells x vertices) aggregate + broadcast (the polar cap at
-        # res 3 covers ~39k cells x a 77-edge struct ~ a 10^2 MB dim;
-        # measured as the whole cost of that bench row). Now the per-cell
-        # dim carries only int POSITIONS; each point explodes its cell's
-        # candidate positions and a broadcast HASH join on position
-        # attaches exactly the candidate's own struct to each narrow
-        # (point, candidate) row, where the fold evaluates as a filter
-        # BEFORE any projection copies the struct. O(cells + vertices)
-        # broadcast bytes, per-candidate work unchanged, identical rows.
-        # (A rejected intermediate carried the structs as a one-row
-        # array column resolved per point with element_at: every output
-        # row then materialized a copy of the WHOLE array — measured
-        # 70x slower than the replicated dim at 2M points. Big arrays
-        # must stay on the build side of a hash join, never become a
-        # per-row column.)
-        from pyspark.sql import Window
-
-        pos = poly_structs.withColumn(
-            "pos", F.row_number().over(Window.orderBy("boundary_id"))
-        )
-        cell_dim = (
-            polygon_cover(boundaries, cell_prefilter_res)
-            .join(pos.select("boundary_id", "pos"), "boundary_id")
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
-        )
+        # polygon_cover emits each (boundary_id, cell) once and boundary_id
+        # is unique, so the cell join yields one row per (point, candidate)
+        # and the boundary_id join attaches that candidate's own struct.
+        # Both sides are broadcast hash relations (O(cells + vertices)
+        # bytes); the fold runs as the second join's condition, before any
+        # projection copies the struct. Points in uncovered cells drop at
+        # the inner cell join. Keep the structs on a hash join's build
+        # side: resolving them from a per-row array column copies the
+        # whole array per row (measured 70x slower at 2M points).
         cand = (
-            points.withColumn(
-                "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), cell_prefilter_res)
-            )
-            .join(F.broadcast(cell_dim), "cell", "left")
-            # non-outer explode: points in uncovered cells (null _poss)
-            # drop here, same as the explode(null) of the other branches
-            .select(
-                "image_id", "lat", "lon", "_lon360", *extra_cols,
-                F.explode("_poss").alias("_pos"),
-            )
-            .join(F.broadcast(pos.select(F.col("pos").alias("_pos"), "p")), "_pos")
+            points.withColumn("cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res))
+            .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
+            .join(F.broadcast(poly_structs), "boundary_id")
         )
         return cand.where(inside(F.col("p"))).select(
-            "image_id", "lat", "lon", *extra_cols,
-            F.col("p")["bid"].alias("boundary_id"),
+            "image_id", "lat", "lon", *extra_cols, "boundary_id"
         )
     return pts.select(
         "image_id", "lat", "lon", *extra_cols,
@@ -613,6 +602,11 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     flat even-odd edge list over ALL rings, each edge tagged with its
     ring's frame — parity composes per ring, so edges of differently-
     framed rings (a Fiji-style multipolygon) coexist in one fold.
+
+    boundary_id must be unique: the prefiltered native join attaches
+    structs by boundary_id, so a duplicated id attaches both polygons'
+    structs to each of their cover rows and a point can come out paired
+    with that id more than once.
 
     Round 8: the per-ring test-frame arrays are STAGED once
     (_staged_rings_col, a separate projection so CollapseProject cannot
@@ -971,29 +965,17 @@ def simplify_rings(boundaries: DataFrame, tolerance_deg: float) -> DataFrame:
     )
 
 
-def candidate_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
-    """(cell, polys array<struct>) — per-cell polygon candidate subsets for
-    the prefiltered native strategy (and the scaling harness's copy probe)."""
-    return (
-        polygon_cover(boundaries, res)
-        .join(polygon_structs(boundaries), "boundary_id")
-        .groupBy("cell")
-        .agg(F.collect_list("p").alias("polys"))
-    )
-
-
 def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
-    """candidate_cell_dim with BOUNDED per-cell geometry: each (cell,
-    polygon) entry carries only the polygon CLIPPED to that cell's window
-    (geo/clip.py), re-expressed as the struct<bid, boxes, edges> shape the
-    native fold consumes. The unclipped dim replicates each polygon's full
-    geometry once per covering cell — O(cells x vertices) broadcast, which
-    is why high-vertex sets forced the prefilter down to res 0 (a res-3
-    dim over the coastline fixture built a >1 GB broadcast); clipped, the
-    total is O(vertices + cells) (every original edge lands in the few
-    cells it crosses, interior cells degenerate to the 4-edge window), so
-    fine resolutions stay broadcast-sized at ANY vertex weight and each
-    point's fold visits only LOCAL edges.
+    """(cell, polys array<struct>) — the per-cell candidate dim with
+    BOUNDED per-cell geometry: each (cell, polygon) entry carries only the
+    polygon CLIPPED to that cell's window (geo/clip.py), re-expressed as
+    the struct<bid, boxes, edges> shape the native fold consumes. The
+    unclipped prefilter folds each candidate's full edge list, so a point
+    near a 10^5-vertex ring pays every vertex; clipped, the total is
+    O(vertices + cells) (every original edge lands in the few cells it
+    crosses, interior cells degenerate to the 4-edge window), so fine
+    resolutions stay broadcast-sized at ANY vertex weight and each point's
+    fold visits only LOCAL edges.
 
     The build is a mapInArrow over the polygon DIM's clip units — once
     per snapshot, embarrassingly parallel, the same prepass position as
@@ -1211,7 +1193,6 @@ def shuffle_pip_join(
     hotness_sample_fraction: float = 0.01,
     clip_cover: bool | str = "auto",
     n_buckets: int | None = None,
-    clip_threshold_edges: float = 2_000_000.0,
 ) -> DataFrame:
     """Shuffle strategy with explicit hot-cell salting.
 
@@ -1274,7 +1255,7 @@ def shuffle_pip_join(
     transport still duplicates the FULL geometry per covered cell —
     O(cells x vertices) shuffle volume, ~10 GB for one 10^4-vertex
     continental boundary at res 4. With clipping, the cover prepass
-    (a mapInPandas over the polygon DIM — once per snapshot,
+    (a mapInArrow over the polygon DIM — once per snapshot,
     embarrassingly parallel per polygon) ships each cell only the
     polygon clipped to that cell's window: O(vertices + cells) total,
     and the refine folds over a handful of LOCAL edges instead of the
@@ -1284,7 +1265,7 @@ def shuffle_pip_join(
     cover would replicate sum_poly(edges x cover) edge coordinates
     through the shuffle — linear in the _cover_stats sufficient
     statistics, the same decision auto_prefilter makes for clip_dim —
-    and below clip_threshold_edges the zero-extra-Python native cover
+    and below _CLIP_THRESHOLD_EDGES the zero-extra-Python native cover
     wins outright (a 40-vertex rectangle set replicates ~10^5 doubles:
     clipping that costs a whole extra Spark job to save megabytes,
     measured as the regressed round-6 bench row). Booleans force
@@ -1314,7 +1295,7 @@ def shuffle_pip_join(
         # memoized; _auto_cover_res already paid the stats job
         cover_est, replicated = _replication_estimates(boundaries, res)
         if clip_cover == "auto":
-            clip_cover = replicated > clip_threshold_edges
+            clip_cover = replicated > _CLIP_THRESHOLD_EDGES
     pts = points.select(
         "image_id", "lat", "lon",
         cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias("cell"),
@@ -1342,8 +1323,10 @@ def shuffle_pip_join(
         n_buckets = max(n_part, min(4 * n_part, int(cover_est) + 1))
     bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(n_buckets)).cast("int")
 
-    # replicate polygon cover rows for hot cells: salt 0..n_salt-1
-    cover_salted = (
+    # replicate polygon cover rows for hot cells: salt 0..n_salt-1. The
+    # geometry rides this POLYGON side of the cogroup: one row per
+    # (boundary, covered cell, salt) — bounded by the cover, not by points
+    polys_salted = (
         cover.join(F.broadcast(hot), "cell", "left")
         .withColumn("salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1)))
         .drop("n_salt")
@@ -1370,10 +1353,6 @@ def shuffle_pip_join(
         .drop("n_salt")
         .withColumn("bucket", bucket)
     )
-
-    # geometry rides the POLYGON side of the cogroup: one row per
-    # (boundary, covered cell, salt) — bounded by the cover, not by points
-    polys_salted = cover_salted
 
     def refine(pts_b: pd.DataFrame, polys_b: pd.DataFrame) -> pd.DataFrame:
         if pts_b.empty or polys_b.empty:
@@ -1436,9 +1415,7 @@ def shuffle_pip_join(
         pts_salted.repartition(n_part, "bucket", "salt")
         .groupBy("bucket", "salt")
         .cogroup(polys_salted.repartition(n_part, "bucket", "salt").groupBy("bucket", "salt"))
-        .applyInPandas(
-            refine, schema="image_id string, lat double, lon double, boundary_id long"
-        )
+        .applyInPandas(refine, schema=_PIP_SCHEMA)
     )
 
 
@@ -1455,31 +1432,14 @@ def geotag_pip_fused(images: DataFrame, boundaries: DataFrame, index_res: int | 
     """
     from wikibrain_spark import codecs
 
-    spark = images.sparkSession
-    ids, rings = _collect_polygon_rings(boundaries)
-    if index_res is None:
-        index_res = _auto_index_res(rings)
-    bc = spark.sparkContext.broadcast((ids, rings, index_res))
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p_ids, p_rings, res = bc.value
-        index = pip.PolygonIndex(p_ids, rings=p_rings, res=res)
-        for b in batches:
-            lat, lon = codecs.extract_geotags_batch(b["hdr"].tolist())
-            pt_idx, poly_id = index.query_batch(lat, lon)
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"].to_numpy()[pt_idx],
-                    "lat": lat[pt_idx],
-                    "lon": lon[pt_idx],
-                    "boundary_id": poly_id,
-                }
-            )
-
+    fused = _index_pip_fn(
+        images.sparkSession, boundaries, index_res,
+        lambda b: codecs.extract_geotags_batch(b["hdr"].tolist()),
+    )
     # header-only projection before the Arrow hop (see extract_geotags)
     return images.select(
         "image_id", F.substring("bytes", 1, codecs.HEADER_SIZE).alias("hdr")
-    ).mapInPandas(fused, schema="image_id string, lat double, lon double, boundary_id long")
+    ).mapInPandas(fused, schema=_PIP_SCHEMA)
 
 
 def tile_assignments(
@@ -1491,7 +1451,8 @@ def tile_assignments(
 
     Returns (image_id, cell_r{res}, boundary_id, qid, wikipedia).
     strategy: 'broadcast' | 'shuffle' (points = geotagged rows), or
-    'fused' (points = the raw images DataFrame; one Python hop total).
+    'fused' | 'native' (points = the raw images DataFrame; 'fused' makes
+    one Python hop total, 'native' none). Any other value raises.
 
     native_prefilter_res: the native strategy's cell-prefilter resolution.
     Since round 5 the flagship native path DEFAULTS to the cell-prefiltered
@@ -1512,6 +1473,11 @@ def tile_assignments(
     one-row dim (the plan probes in the scaling harness still measure
     it).
     """
+    if strategy not in ("broadcast", "fused", "native", "shuffle"):
+        raise ValueError(
+            "strategy must be one of 'broadcast', 'fused', 'native', 'shuffle', "
+            f"got {strategy!r}"
+        )
     if strategy == "fused":
         pairs = geotag_pip_fused(points, boundaries)
     elif strategy == "native":

@@ -55,6 +55,22 @@ def fixture_key() -> str:
         return hashlib.sha256(fh.read()).hexdigest()[:16]
 
 
+def stage_once(stage_dir: str, key: str, write) -> None:
+    """Run write() into stage_dir unless it already holds this key's stage
+    (fixture_key, plus any generation parameters). The `.done_<key>` marker
+    is written after write() returns, so an interrupted staging re-runs; a
+    new key drops the old marker and regenerates."""
+    os.makedirs(stage_dir, exist_ok=True)
+    marker = os.path.join(stage_dir, f".done_{key}")
+    if os.path.exists(marker):
+        return
+    for name in os.listdir(stage_dir):
+        if name.startswith(".done_"):
+            os.remove(os.path.join(stage_dir, name))
+    write()
+    open(marker, "w").close()
+
+
 def _city_polygon(lat: float, lon: float, radius_deg: float, n_vertices: int, rng) -> tuple[np.ndarray, np.ndarray]:
     ang = np.linspace(0, 2 * np.pi, n_vertices, endpoint=False)
     r = radius_deg * (0.7 + 0.6 * rng.random(n_vertices))
@@ -992,29 +1008,24 @@ def materialize(out_dir: str, n_images: int = 2000) -> dict[str, str]:
     """Write all synthetic tables as parquet under out_dir (idempotent cache).
 
     Returns {table_name: path}. Uses pyarrow via pandas — no Spark needed, so
-    generation never competes with the session under test.
+    generation never competes with the session under test. Staged once per
+    (fixture_key(), n_images): an edit to this module regenerates.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    # _v2: boundaries moved to the multipolygon `rings` schema (+4 complex
-    # fixtures) — the bump invalidates caches generated under the old schema
-    marker = os.path.join(out_dir, f".done_{n_images}_v2")
-    paths = {}
     names = ["images", "expected_geotags", "boundaries", "expected_tiles",
              "wikidata", "wikidata_claims", "ontology_edges", "wikidata_redirects",
              "wikipedia_pages", "wikipedia_redirects", "disambig_links", "test_elements"]
-    for nm in names:
-        paths[nm] = os.path.join(out_dir, f"{nm}.parquet")
-    if os.path.exists(marker):
-        return paths
-    rng = np.random.default_rng(SEED)
-    boundaries = generate_boundaries(rng)
-    images, geotags = generate_images(n_images, rng)
-    tiles = expected_tiles(geotags, boundaries)
-    dims = generate_wikidata_dim()
-    frames = {"images": images, "expected_geotags": geotags,
-              "boundaries": boundaries, "expected_tiles": tiles,
-              "test_elements": generate_test_elements(), **dims}
-    for nm, frame in frames.items():
-        frame.to_parquet(paths[nm], index=False)
-    open(marker, "w").close()
+    paths = {nm: os.path.join(out_dir, f"{nm}.parquet") for nm in names}
+
+    def write():
+        rng = np.random.default_rng(SEED)
+        boundaries = generate_boundaries(rng)
+        images, geotags = generate_images(n_images, rng)
+        tiles = expected_tiles(geotags, boundaries)
+        frames = {"images": images, "expected_geotags": geotags,
+                  "boundaries": boundaries, "expected_tiles": tiles,
+                  "test_elements": generate_test_elements(), **generate_wikidata_dim()}
+        for nm, frame in frames.items():
+            frame.to_parquet(paths[nm], index=False)
+
+    stage_once(out_dir, f"{fixture_key()}_{n_images}", write)
     return paths
