@@ -244,10 +244,11 @@ def main() -> None:
         "O(all polygons) to O(cell candidates)); its scaling row above is",
         "measured at 200x the points so it stays compute-bound.",
         "",
-        "The copy-probe row runs the IDENTICAL cell→candidates broadcast",
-        "equi-join with the PIP math replaced by size(polys): in local mode",
-        "every thread probes ONE shared hashed relation and copies candidate",
-        "arrays through ONE socket's memory system, so that term is",
+        "The copy-probe row runs the IDENTICAL two-hop broadcast equi-join",
+        "(cell → polygon_cover, then boundary_id → polygon_structs) with the",
+        "PIP math replaced by size(p.edges): in local mode every thread probes",
+        "ONE shared hashed relation per hop and copies candidate structs",
+        "through ONE socket's memory system, so that term is",
         "bandwidth-bound at any core count — the broadcast-join analogue of",
         "the Arrow-channel probe. On a real cluster each executor holds its",
         "own broadcast copy on its own memory bus. `prefiltered minus probe`",

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from wikibrain_spark.operators import knn
+from wikibrain_spark.operators import knn, spatial_join
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -107,8 +107,6 @@ def test_shuffle_pip_plan_is_one_cogroup_no_post_refine_exchange(spark):
     count is exempt from AQE coalescing, which otherwise folds this
     deliberately-light shuffle into one task and serializes every group
     behind a single Python worker."""
-    from wikibrain_spark.operators import spatial_join
-
     pts = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         F.col("event_id").cast("string").alias("image_id"),
         (F.pmod(F.col("event_id") * 7, 160) - 80.0).alias("lat"),
@@ -149,15 +147,10 @@ def test_knn_kring_plan_has_no_dedup_aggregate(spark):
     assert "Window" in plan  # the top-k itself
 
 
-def test_clipped_dim_native_plan_points_side_pure(spark):
-    """The clipped-dim native PIP (round 6) must keep the points side
-    zero-Python and zero-shuffle: exactly ONE Python map — MapInArrow,
-    the clip dim build, once per snapshot — and TWO shuffle exchanges
-    (round 8: the clip-unit repartition that parallelizes the prepass,
-    plus the dim's collect_list groupBy), all inside the broadcast
-    subtree; the probe side is a bare scan into a BroadcastHashJoin."""
-    from wikibrain_spark.operators import spatial_join
-
+@pytest.fixture(scope="module")
+def native_pip_inputs(spark):
+    """(points, boundaries) for the native PIP plan pins: the sf0.001
+    events as scattered points and one 30x60-degree box."""
     bnd = spark.createDataFrame(
         [(1, [{"ring_lat": [0.0, 0.0, 30.0, 30.0],
                "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}])],
@@ -167,38 +160,56 @@ def test_clipped_dim_native_plan_points_side_pure(spark):
         (F.pmod(F.col("event_id") * 7, 160) - 80.0).alias("lat"),
         (F.pmod(F.col("event_id") * 11, 350) - 175.0).alias("lon"),
     )
+    return pts, bnd
+
+
+def test_clipped_dim_native_plan_points_side_pure(native_pip_inputs):
+    """The clipped-dim native PIP (round 6) must keep the points side
+    zero-Python and zero-shuffle: exactly ONE Python map — MapInArrow,
+    the clip dim build, once per snapshot — and ONE shuffle exchange
+    (round 8: the clip-unit repartition that parallelizes the prepass),
+    inside the broadcast subtree. The dim is (cell, p) rows, never
+    grouped: no aggregate, and the probe side is a bare scan into the one
+    BroadcastHashJoin, whose condition is the parity fold."""
+    pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.broadcast_pip_join_native(
         pts, bnd, cell_prefilter_res=2, clip_dim=True))
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Aggregate" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
     assert plan.count("BroadcastExchange") == 1
-    assert plan.replace("BroadcastExchange", "BX").count("Exchange") == 2
-    # the one MapInArrow and both Exchanges are in the broadcast (dim)
-    # subtree: toString indents children, so all must appear AFTER the
+    assert plan.replace("BroadcastExchange", "BX").count("Exchange") == 1, plan
+    # the one MapInArrow and the Exchange are in the broadcast (dim)
+    # subtree: toString indents children, so both must appear AFTER the
     # BroadcastExchange line
     bx = plan.find("BroadcastExchange")
     assert plan.find("MapInArrow") > bx
     assert plan.replace("BroadcastExchange", "BX").find("Exchange") > bx
 
 
-def test_unclipped_prefilter_plan_is_two_broadcast_hash_joins(spark):
+def test_one_row_dim_plan_is_one_broadcast_nested_loop_join(native_pip_inputs):
+    """The native PIP without a prefilter pairs every point with every
+    polygon's struct row in ONE broadcast nested-loop join whose condition
+    is the parity fold: no aggregate gathers the polygons into one row,
+    no Generate explodes the matches, and the only exchange is the
+    broadcast."""
+    pts, bnd = native_pip_inputs
+    plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd))
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert "Aggregate" not in plan and "Generate" not in plan, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
+
+
+def test_unclipped_prefilter_plan_is_two_broadcast_hash_joins(native_pip_inputs):
     """The unclipped prefiltered native PIP joins each point's cell onto
     polygon_cover's (boundary_id, cell) rows, then boundary_id onto
     polygon_structs: exactly two broadcast hash joins and nothing that
     numbers, groups or re-explodes the candidates — no Window, no
     aggregate, no exchange besides the two broadcasts, and the only
     Generate is the cover's explode inside its broadcast."""
-    from wikibrain_spark.operators import spatial_join
-
-    bnd = spark.createDataFrame(
-        [(1, [{"ring_lat": [0.0, 0.0, 30.0, 30.0],
-               "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}])],
-        f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
-    pts = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        F.col("event_id").cast("string").alias("image_id"),
-        (F.pmod(F.col("event_id") * 7, 160) - 80.0).alias("lat"),
-        (F.pmod(F.col("event_id") * 11, 350) - 175.0).alias("lon"),
-    )
+    pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
     assert "Window" not in plan and "Aggregate" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 2, plan
@@ -223,8 +234,6 @@ def test_compactness_single_pass_no_join(spark):
     """polygon_compactness (round 7) computes both geodesic folds in ONE
     projection over the dim — a self-join of the two per-boundary
     aggregates would shuffle at millions of boundaries for nothing."""
-    from wikibrain_spark.operators import spatial_join
-
     bdf = spark.createDataFrame(
         [(1, [{"ring_lat": [0.0, 0.0, 5.0, 5.0],
                "ring_lon": [0.0, 5.0, 5.0, 0.0], "is_hole": False}])],

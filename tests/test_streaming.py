@@ -346,7 +346,9 @@ def test_streaming_pip_complex_geometry_matches_batch(spark, stream_dir, tmp_pat
     """Stream-static PIP over MULTIPOLYGON geometry: a donut (outer +
     hole) and a dateline-crossing ring flow through the same stream-static
     native fold, and the windowed counts equal the batch plan — pinning
-    that the rings schema and the wrap/hole handling are stream-legal."""
+    that the rings schema and the wrap/hole handling are stream-legal.
+    Runs the prefiltered dim (res 2, stream-static hash joins) and the
+    one-row dim (res None, a stream-static nested-loop join)."""
     from wikibrain_spark.operators import geotag, spatial_join
 
     def rect(la0, la1, lo0, lo1, hole=False):
@@ -359,33 +361,35 @@ def test_streaming_pip_complex_geometry_matches_batch(spark, stream_dir, tmp_pat
         ],
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}",
     )
-    counts = pipeline.streaming_pip_boundary_counts(
-        spark, stream_dir, boundaries, window_duration="10 minutes"
-    )
-    pipeline.run_stream_once(counts, str(tmp_path / "ckpt_cplx"), "pip_cplx_test")
-    got = spark.sql("select * from pip_cplx_test").toPandas()
-
     batch = spark.read.parquet(stream_dir)
     pts = geotag.extract_geotags(batch, resolutions=(3,), with_s2=False).join(
         batch.select("image_id", F.timestamp_micros("event_time_us").alias("event_time")),
         "image_id",
     )
-    want = (
-        spatial_join.broadcast_pip_join_native(
-            pts, boundaries, cell_prefilter_res=2, extra_cols=("event_time",)
-        )
-        .groupBy(F.window("event_time", "10 minutes").alias("win"), "boundary_id")
-        .agg(F.count("*").alias("n_images"))
-        .select(F.col("win.start").alias("window_start"), "boundary_id", "n_images")
-        .toPandas()
-    )
     key = ["window_start", "boundary_id"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key).reset_index(drop=True),
-        want.sort_values(key).reset_index(drop=True),
-        check_dtype=False,
-    )
-    assert got["n_images"].sum() > 0
+    for res in (2, None):
+        counts = pipeline.streaming_pip_boundary_counts(
+            spark, stream_dir, boundaries, window_duration="10 minutes",
+            cell_prefilter_res=res,
+        )
+        table = f"pip_cplx_test_{res}"
+        pipeline.run_stream_once(counts, str(tmp_path / f"ckpt_cplx_{res}"), table)
+        got = spark.sql(f"select * from {table}").toPandas()
+        want = (
+            spatial_join.broadcast_pip_join_native(
+                pts, boundaries, cell_prefilter_res=res, extra_cols=("event_time",)
+            )
+            .groupBy(F.window("event_time", "10 minutes").alias("win"), "boundary_id")
+            .agg(F.count("*").alias("n_images"))
+            .select(F.col("win.start").alias("window_start"), "boundary_id", "n_images")
+            .toPandas()
+        )
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want.sort_values(key).reset_index(drop=True),
+            check_dtype=False,
+        )
+        assert got["n_images"].sum() > 0
 
 
 def test_streaming_pip_clipped_dim_matches_batch(spark, stream_dir, tmp_path):

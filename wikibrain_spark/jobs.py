@@ -84,7 +84,8 @@ def streaming_flagship_ingest(
 
     The stream graph is zero-Python except the dedup state operator: the
     geotag parse is the native binary header parse, and the PIP is the
-    broadcast one-row-dim fold — both the UNCHANGED batch operators.
+    native broadcast fold (cell-prefiltered at ``cell_prefilter_res``; None
+    selects the one-row dim) — both the UNCHANGED batch operators.
 
     ``fail_before_commit``: test-only fault injection — batch ids that
     raise AFTER writing their parquet but BEFORE the ledger commit,

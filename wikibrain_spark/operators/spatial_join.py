@@ -54,6 +54,8 @@ _MAX_MEAN_CELLS = 1024.0  # mean bbox cover per outer ring
 _MAX_RING_CELLS = 16384.0  # worst ring's bbox cover
 _HEAVY_EDGES_PER_POLY = 10_000.0  # above this mean, the mean gate widens 8x
 _CLIP_THRESHOLD_EDGES = 2_000_000.0  # unclipped sum_poly(edges x cover) past which to clip
+_INDEX_MAX_MEAN_CELLS = 256.0  # _auto_index_res (PolygonIndex buckets): mean cover
+_INDEX_MAX_RING_CELLS = 4096.0  # _auto_index_res: worst ring's cover
 
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
@@ -132,13 +134,11 @@ def _collect_polygon_rings(boundaries: DataFrame) -> tuple[np.ndarray, list]:
     return ids, rings
 
 
-def _auto_index_res(
-    rings_per_poly, max_mean_cells: float = 256.0, max_ring_cells: float = 4096.0
-) -> int:
-    """Finest hexlite res whose bbox cover stays <= max_mean_cells cells
-    per outer ring ON AVERAGE and <= max_ring_cells for EVERY ring. A
-    fixed fine res is a trap for large polygons: at res 4 a 60°-wide
-    boundary enumerates ~2x10^5 bucket cells, and the PolygonIndex
+def _auto_index_res(rings_per_poly) -> int:
+    """Finest hexlite res whose bbox cover stays <= _INDEX_MAX_MEAN_CELLS
+    cells per outer ring ON AVERAGE and <= _INDEX_MAX_RING_CELLS for EVERY
+    ring. A fixed fine res is a trap for large polygons: at res 4 a
+    60°-wide boundary enumerates ~2x10^5 bucket cells, and the PolygonIndex
     rebuilds that dict in EVERY Python worker — measured as the dominant
     cost of the broadcast strategy on continent-scale test rectangles.
     The max gate matters for SKEWED sets (round-5 verdict #3): one
@@ -162,7 +162,8 @@ def _auto_index_res(
     for res in range(7, 0, -1):
         step = cells.hexlite_step(res)
         covers = [(a / step + 1.0) * (b / step + 1.0) for a, b in spans]
-        if sum(covers) / len(covers) <= max_mean_cells and max(covers) <= max_ring_cells:
+        if (sum(covers) / len(covers) <= _INDEX_MAX_MEAN_CELLS
+                and max(covers) <= _INDEX_MAX_RING_CELLS):
             return res
     return 0
 
@@ -481,11 +482,11 @@ def broadcast_pip_join_native(
     extra_cols: tuple[str, ...] = (),
     clip_dim: bool = False,
 ) -> DataFrame:
-    """Fully-JVM, fully-NARROW even-odd PIP: the (broadcast-sized) polygon
-    set is aggregated into ONE row — an array<struct<bid, bbox, edges>>
-    column — and broadcast-cross-joined onto the points; each point filters
-    that array with a bbox prefilter + crossing-parity fold (higher-order
-    functions over ROW DATA, not plan literals).
+    """Fully-JVM, fully-NARROW even-odd PIP: every variant joins each point
+    to its candidate polygons' struct<bid, boxes, edges> rows from a
+    broadcast dim, with a bbox prefilter + crossing-parity fold
+    (higher-order functions over ROW DATA, not plan literals) as the join
+    condition.
 
     Zero Python and zero shuffle of the points side. A previous formulation
     inlined every edge as a plan literal, which hit Janino's 64 KB
@@ -494,34 +495,35 @@ def broadcast_pip_join_native(
     regardless of polygon cardinality. Same half-open edge rule as the
     NumPy kernel (geo/pip.py points_in_ring).
 
-    cell_prefilter_res: when set, the one-row dim is replaced by two
+    cell_prefilter_res: None (the one-row dim) makes every polygon a
+    candidate of every point — a broadcast nested-loop join. When set, two
     broadcast hash equi-joins — each point's hexlite cell against
     polygon_cover's (boundary_id, cell) rows, then boundary_id against
-    polygon_structs — still zero shuffle of the points, so each point
-    folds only over the polygons whose bbox covers its cell. This is the
-    scale configuration for large polygon COUNTS (per-point work drops
-    from O(all polygons) to O(cell candidates)). The broadcasts are
-    O(cells + vertices): the cover carries ids only and each polygon's
-    struct ships once. Per-point work still grows with VERTEX weight: a
-    candidate's fold visits its polygon's whole edge list, which is what
-    clip_dim=True bounds.
+    polygon_structs — so each point folds only over the polygons whose
+    bbox covers its cell. This is the scale configuration for large
+    polygon COUNTS (per-point work drops from O(all polygons) to O(cell
+    candidates)). The broadcasts are O(cells + vertices): the cover
+    carries ids only and each polygon's struct ships once. Per-point work
+    still grows with VERTEX weight: a candidate's fold visits its
+    polygon's whole edge list, which is what clip_dim=True bounds.
 
     cell_prefilter_res="auto" resolves BOTH the resolution and clip_dim
     from the auto_prefilter statistics pass (one tiny agg job, memoized
     per boundary snapshot) — the engine picks the physical dim strategy
     the way Catalyst picks a join strategy from size stats.
 
-    clip_dim (with cell_prefilter_res): build the dim with clipped_cell_dim
-    — each cell carries only the geometry clipped to its window, making
-    the per-point fold O(local edges), so fine prefilter resolutions work
-    at ANY vertex weight. The dim build gains a once-per-snapshot Python
-    prepass (the points side stays zero-Python, zero-shuffle); keep the
-    default when the polygon set is low-vertex and the fully-native dim
-    build matters more than fold locality.
+    clip_dim (with cell_prefilter_res): one broadcast hash join on cell
+    against clipped_cell_rows — each (cell, polygon) row carries only the
+    geometry clipped to that cell's window, making the per-point fold
+    O(local edges), so fine prefilter resolutions work at ANY vertex
+    weight. The dim build gains a once-per-snapshot Python prepass (the
+    points side stays zero-Python, zero-shuffle); keep the default when
+    the polygon set is low-vertex and the fully-native dim build matters
+    more than fold locality.
 
     extra_cols: additional point-side columns carried through to the output
-    (e.g. event_time on the Structured Streaming path — both plan shapes
-    here are stream-static-join legal: a broadcast static dim and no
+    (e.g. event_time on the Structured Streaming path — every plan shape
+    here is stream-static-join legal: a broadcast static dim and no
     shuffle of the points, so the SAME operator serves batch and stream).
     """
     if cell_prefilter_res == "auto":
@@ -557,39 +559,31 @@ def broadcast_pip_join_native(
         )
         return F.when(in_bbox, F.pmod(crossings, F.lit(2)) == 1).otherwise(F.lit(False))
 
+    # each branch builds candidate rows (point, boundary_id, p); Spark pushes
+    # the shared fold filter below into the join condition. The tail reads
+    # the dim's boundary_id column, not p.bid, so the broadcast is pruned to
+    # the fields the fold reads
     if cell_prefilter_res is None:
-        poly_dim = poly_structs.agg(F.collect_list("p").alias("polys"))  # single row
-        pts = points.crossJoin(F.broadcast(poly_dim))
+        cand = points.crossJoin(F.broadcast(poly_structs))
     elif clip_dim:
-        cell_dim = clipped_cell_dim(boundaries, cell_prefilter_res)
-        pts = points.withColumn(
+        cand = points.withColumn(
             "cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res)
-        ).join(F.broadcast(cell_dim), "cell", "left")
+        ).join(F.broadcast(clipped_cell_rows(boundaries, cell_prefilter_res)), "cell")
     else:
         # polygon_cover emits each (boundary_id, cell) once and boundary_id
         # is unique, so the cell join yields one row per (point, candidate)
         # and the boundary_id join attaches that candidate's own struct.
         # Both sides are broadcast hash relations (O(cells + vertices)
-        # bytes); the fold runs as the second join's condition, before any
-        # projection copies the struct. Points in uncovered cells drop at
-        # the inner cell join. Keep the structs on a hash join's build
-        # side: resolving them from a per-row array column copies the
-        # whole array per row (measured 70x slower at 2M points).
+        # bytes). Keep the structs on a hash join's build side: resolving
+        # them from a per-row array column copies the whole array per row
+        # (measured 70x slower at 2M points).
         cand = (
             points.withColumn("cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res))
             .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
             .join(F.broadcast(poly_structs), "boundary_id")
         )
-        return cand.where(inside(F.col("p"))).select(
-            "image_id", "lat", "lon", *extra_cols, "boundary_id"
-        )
-    return pts.select(
-        "image_id", "lat", "lon", *extra_cols,
-        # explode(null) yields no rows, so points whose cell has no covering
-        # polygon (left-join miss) drop out without a null guard
-        F.explode(
-            F.transform(F.filter(F.col("polys"), inside), lambda s: s["bid"])
-        ).alias("boundary_id"),
+    return cand.where(inside(F.col("p"))).select(
+        "image_id", "lat", "lon", *extra_cols, "boundary_id"
     )
 
 
@@ -945,7 +939,7 @@ def simplify_rings(boundaries: DataFrame, tolerance_deg: float) -> DataFrame:
     operator is APPROXIMATE by design; containment within tolerance of a
     boundary can flip). Once-per-snapshot dim prepass, embarrassingly
     parallel per polygon — the same cost position as the clip prepass it
-    feeds: simplifying a 600k-vertex snapshot before clipped_cell_dim /
+    feeds: simplifying a 600k-vertex snapshot before clipped_cell_rows /
     shuffle_pip_join shrinks every vertex-linear term downstream by the
     reduction factor."""
     from wikibrain_spark.geo import simplify as _simp
@@ -965,17 +959,17 @@ def simplify_rings(boundaries: DataFrame, tolerance_deg: float) -> DataFrame:
     )
 
 
-def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
-    """(cell, polys array<struct>) — the per-cell candidate dim with
-    BOUNDED per-cell geometry: each (cell, polygon) entry carries only the
-    polygon CLIPPED to that cell's window (geo/clip.py), re-expressed as
-    the struct<bid, boxes, edges> shape the native fold consumes. The
-    unclipped prefilter folds each candidate's full edge list, so a point
-    near a 10^5-vertex ring pays every vertex; clipped, the total is
-    O(vertices + cells) (every original edge lands in the few cells it
-    crosses, interior cells degenerate to the 4-edge window), so fine
-    resolutions stay broadcast-sized at ANY vertex weight and each point's
-    fold visits only LOCAL edges.
+def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
+    """(cell, boundary_id, p struct) — the per-cell candidate rows with
+    BOUNDED per-cell geometry, one row per (cell, polygon): each carries
+    only the polygon CLIPPED to that cell's window (geo/clip.py),
+    re-expressed as the struct<bid, boxes, edges> shape the native fold
+    consumes. The unclipped prefilter folds each candidate's full edge
+    list, so a point near a 10^5-vertex ring pays every vertex; clipped,
+    the total is O(vertices + cells) (every original edge lands in the few
+    cells it crosses, interior cells degenerate to the 4-edge window), so
+    fine resolutions stay broadcast-sized at ANY vertex weight and each
+    point's fold visits only LOCAL edges.
 
     The build is a mapInArrow over the polygon DIM's clip units — once
     per snapshot, embarrassingly parallel, the same prepass position as
@@ -1045,17 +1039,17 @@ def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
                 [pa.array(bx[k], pa.float64()) for k in range(4)]
                 + [pa.array(bx[4], pa.bool_())],
             )
+            bid_arr = pa.array(bids, pa.int64())
             yield pa.RecordBatch.from_arrays([
                 pa.array(cell_ids, pa.int64()),
+                bid_arr,
                 struct(["bid", "boxes", "edges"], [
-                    pa.array(bids, pa.int64()),
-                    _list_array(n_boxes, box_arr),
-                    _list_array(cell_nv, edges),
+                    bid_arr, _list_array(n_boxes, box_arr), _list_array(cell_nv, edges),
                 ]),
-            ], names=["cell", "p"])
+            ], names=["cell", "boundary_id", "p"])
 
     schema = (
-        "cell long, p struct<bid: long, "
+        "cell long, boundary_id long, p struct<bid: long, "
         "boxes: array<struct<lat_min: double, lat_max: double, "
         "lon_min: double, lon_max: double, w: boolean>>, "
         "edges: array<struct<y0: double, x0: double, y1: double, "
@@ -1066,12 +1060,12 @@ def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
     # channel carries columnar buffers with no per-element conversion.
     # strip-aligned parallel prepass (round 8, see _clip_units): units are
     # disjoint in (cell), so no (cell, bid) entry is split across tasks
-    return (
-        _clip_units(boundaries, res)
-        .mapInArrow(dim_fn, schema=schema)
-        .groupBy("cell")
-        .agg(F.collect_list("p").alias("polys"))
-    )
+    return _clip_units(boundaries, res).mapInArrow(dim_fn, schema=schema)
+
+
+def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
+    """clipped_cell_rows as (cell, polys array<struct>): bench.py's and perfbench's dim probes."""
+    return clipped_cell_rows(boundaries, res).groupBy("cell").agg(F.collect_list("p").alias("polys"))
 
 
 def polygon_cover(
@@ -1457,8 +1451,8 @@ def tile_assignments(
     native_prefilter_res: the native strategy's cell-prefilter resolution.
     Since round 5 the flagship native path DEFAULTS to the cell-prefiltered
     dim: per-point work drops from O(all polygon edges) to O(cell-candidate
-    edges) — the one-row-dim fold pays every polygon's edges per point,
-    which stopped being competitive once boundaries grew multipolygon/hole
+    edges) — the one-row dim pairs every point with every polygon, which
+    stopped being competitive once boundaries grew multipolygon/hole
     rings — and the dim build (polygon_cover) is now native expressions,
     so the whole plan keeps zero Python (pinned). The DEFAULT is "auto"
     (round 7): both the resolution and the clipped-vs-unclipped dim come
@@ -1470,7 +1464,7 @@ def tile_assignments(
     fixture must keep resolving to (4, unclipped)
     (tests/test_round7_hygiene.py), so the bench row's plan cannot drift
     silently. A fixed int keeps the old behavior; None selects the
-    one-row dim (the plan probes in the scaling harness still measure
+    one-row dim, a nested-loop join (the scaling harness still measures
     it).
     """
     if strategy not in ("broadcast", "fused", "native", "shuffle"):

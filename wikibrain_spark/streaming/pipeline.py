@@ -111,7 +111,7 @@ def streaming_pip_boundary_counts(
     boundaries: DataFrame,
     window_duration: str = "10 minutes",
     watermark: str = "30 minutes",
-    cell_prefilter_res: int = 2,
+    cell_prefilter_res: int | None = 2,
     clip_dim: bool = False,
 ) -> DataFrame:
     """Streaming geotag → PIP → windowed per-boundary counts.
