@@ -207,7 +207,7 @@ def test_pole_enclosing_ring_with_closure_edges():
 
 
 def test_pole_ring_native_parity(spark):
-    """The native HOF path agrees with the NumPy kernel on the
+    """The native path agrees with the NumPy kernel on the
     pole-enclosing ring (its _ring_wraps_col must also keep the raw frame)."""
     import pandas as pd
     from wikibrain_spark.operators import spatial_join

@@ -7,10 +7,13 @@ reappearing in joins that are duplicate-free by construction, or the
 InferFiltersFromGenerate filter re-inlining a staged candidate tree.
 """
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from wikibrain_spark import jvm
 from wikibrain_spark.operators import knn, spatial_join
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -163,6 +166,24 @@ def native_pip_inputs(spark):
     return pts, bnd
 
 
+def _assert_compiled_fold(plan: str, key_cols: list[str]) -> None:
+    """The native PIP's fold is ONE call of the compiled UDF, in the join
+    condition, with no interpreted aggregate/exists lambda left in it;
+    the broadcast it reads is pruned to key_cols plus p.bbin/p.ebin (no
+    p.edges, no p.bid shipped)."""
+    assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
+    join = next(ln for ln in plan.splitlines() if f"{jvm.PIP_FOLD}(" in ln)
+    assert "Join" in join, plan
+    assert "lambdafunction" not in join and "exists(" not in plan, plan
+    lines = plan.splitlines()
+    under = [lines[i + 1] for i, ln in enumerate(lines[:-1])
+             if "BroadcastExchange" in ln and "bbin" in lines[i + 1]]
+    assert len(under) == 1, plan
+    cols = under[0].split("Project [", 1)[1].rsplit("]", 1)[0]
+    shipped = [re.sub(r"#\d+L?", "", c.strip()) for c in cols.split(",")]
+    assert shipped == [*key_cols, "p.bbin AS _extract_bbin", "p.ebin AS _extract_ebin"], plan
+
+
 def test_clipped_dim_native_plan_points_side_pure(native_pip_inputs):
     """The clipped-dim native PIP (round 6) must keep the points side
     zero-Python and zero-shuffle: exactly ONE Python map — MapInArrow,
@@ -177,6 +198,10 @@ def test_clipped_dim_native_plan_points_side_pure(native_pip_inputs):
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Aggregate" not in plan, plan
+    _assert_compiled_fold(plan, ["cell", "boundary_id"])
+    # the clip units' vertex-count aggregate runs below the dim build;
+    # nothing above it folds with a lambda
+    assert "aggregate(" not in plan[: plan.find("MapInArrow")], plan
     assert plan.count("BroadcastHashJoin") == 1, plan
     assert plan.count("BroadcastExchange") == 1
     assert plan.replace("BroadcastExchange", "BX").count("Exchange") == 1, plan
@@ -197,6 +222,8 @@ def test_one_row_dim_plan_is_one_broadcast_nested_loop_join(native_pip_inputs):
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd))
     assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    _assert_compiled_fold(plan, ["boundary_id"])
+    assert "aggregate(" not in plan and "Python" not in plan, plan
     assert "Aggregate" not in plan and "Generate" not in plan, plan
     assert plan.count("BroadcastExchange") == 1, plan
     assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
@@ -212,6 +239,8 @@ def test_unclipped_prefilter_plan_is_two_broadcast_hash_joins(native_pip_inputs)
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
     assert "Window" not in plan and "Aggregate" not in plan, plan
+    _assert_compiled_fold(plan, ["boundary_id"])
+    assert "aggregate(" not in plan and "Python" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 2, plan
     assert plan.count("BroadcastExchange") == 2, plan
     assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan

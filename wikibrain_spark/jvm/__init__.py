@@ -1,0 +1,113 @@
+"""Compiled JVM kernels: the Java UDFs whose sources sit in this package.
+
+The .java files compile on first use with the JDK's `javac --release 17`
+against pyspark's own jars, into one jar cached in `_jars/` beside the
+sources. The jar's name carries source_key(), a hash of the sources, so
+an edited source builds a new jar and an unchanged one reuses it. The
+build writes to a temporary file and renames it into place, so
+concurrent processes never see a partial jar. Delete `_jars/` to force a
+rebuild.
+
+register(spark) makes the UDFs callable by name in a session
+(F.call_function(PIP_FOLD, ...)). Each SparkContext loads the jar once
+with ADD JAR. No session setting is needed: a session built with a plain
+SparkSession.builder works the same as one from session.get_spark.
+
+There is no fallback: without javac, or when the classes do not load,
+register raises.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+
+from pyspark.errors import AnalysisException
+from pyspark.sql.types import BinaryType, BooleanType
+
+SOURCE_DIR = os.path.dirname(os.path.abspath(__file__))
+CACHE_DIR = os.path.join(SOURCE_DIR, "_jars")
+
+PIP_FOLD = "wb_pip_fold"  # (lat, lon, bbin, ebin) -> boolean, see PipFold.java
+PACK_DOUBLES = "wb_pack_doubles"  # array<double> -> little-endian binary
+_UDFS = (
+    (PIP_FOLD, "wikibrain_spark.jvm.PipFold", BooleanType()),
+    (PACK_DOUBLES, "wikibrain_spark.jvm.PackDoubles", BinaryType()),
+)
+
+
+def _sources() -> list[str]:
+    return sorted(
+        os.path.join(SOURCE_DIR, n) for n in os.listdir(SOURCE_DIR) if n.endswith(".java")
+    )
+
+
+def source_key() -> str:
+    """Content key of the Java sources (names and bytes)."""
+    h = hashlib.sha256()
+    for path in _sources():
+        h.update(os.path.basename(path).encode() + b"\0")
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
+def jar_path() -> str:
+    """The jar built from the current sources, compiled first if the
+    cache does not hold it yet."""
+    path = os.path.join(CACHE_DIR, f"wikibrain-jvm-{source_key()}.jar")
+    if not os.path.exists(path):
+        _build(path)
+    return path
+
+
+def _build(path: str) -> None:
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            "javac not found on PATH: the compiled PIP fold needs a JDK 17+ "
+            f"javac to build {os.path.basename(path)} from {SOURCE_DIR}/*.java"
+        )
+    import pyspark
+
+    classpath = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    os.makedirs(CACHE_DIR, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=CACHE_DIR) as tmp:
+        classes = os.path.join(tmp, "classes")
+        done = subprocess.run(
+            [javac, "--release", "17", "-cp", classpath, "-d", classes, *_sources()],
+            capture_output=True, text=True,
+        )
+        if done.returncode != 0:
+            raise RuntimeError(f"javac failed to build {os.path.basename(path)}:\n{done.stderr}")
+        staged = os.path.join(tmp, "staged.jar")
+        with zipfile.ZipFile(staged, "w") as jar:
+            for root, _, names in os.walk(classes):
+                for n in sorted(names):
+                    full = os.path.join(root, n)
+                    jar.write(full, os.path.relpath(full, classes))
+        os.replace(staged, path)
+
+
+def register(spark) -> None:
+    """Register the compiled UDFs in `spark`'s session.
+
+    The jar is added once per SparkContext (ADD JAR ships it to the
+    executors and adds it to the context's jar class loader). Registration
+    loads the classes through the calling thread's context class loader,
+    which is set to that jar class loader first, so it works from any
+    thread, including a foreachBatch callback."""
+    path = jar_path()
+    if os.path.basename(path) not in spark.sparkContext._jsc.sc().listJars().mkString("\n"):
+        spark.sql(f"ADD JAR '{path}'")
+    loader = spark._jsparkSession.sharedState().jarClassLoader()
+    spark._jvm.java.lang.Thread.currentThread().setContextClassLoader(loader)
+    for name, cls, rtype in _UDFS:
+        try:
+            spark.udf.registerJavaFunction(name, cls, rtype)
+        except AnalysisException as e:
+            raise RuntimeError(f"cannot load {cls} from {path}: {e}") from e

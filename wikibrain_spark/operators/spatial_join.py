@@ -16,8 +16,10 @@ Four physical strategies, one logical contract (SURVEY.md U4, J12-J14):
 
 2. geotag_pip_fused — strategy 1 fused with the geotag header parse.
 
-3. broadcast_pip_join_native — zero Python: polygons as row data through
-   broadcast joins into a native parity fold (auto_prefilter plans it).
+3. broadcast_pip_join_native — zero Python on the points side: polygons
+   as packed row data through broadcast joins into one compiled JVM
+   parity fold, jvm/PipFold.java, as the join condition (auto_prefilter
+   plans the dim).
 
 4. shuffle_pip_join — polygons too big to broadcast. Polygons are exploded
    to their covering hexlite cells; points carry their cell; the equi-join
@@ -44,6 +46,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wikibrain_spark import jvm
 from wikibrain_spark.geo import cells, pip
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
@@ -483,17 +486,18 @@ def broadcast_pip_join_native(
     clip_dim: bool = False,
 ) -> DataFrame:
     """Fully-JVM, fully-NARROW even-odd PIP: every variant joins each point
-    to its candidate polygons' struct<bid, boxes, edges> rows from a
-    broadcast dim, with a bbox prefilter + crossing-parity fold
-    (higher-order functions over ROW DATA, not plan literals) as the join
-    condition.
+    to its candidate polygons' struct<bid, bbin, ebin, edges> rows from a
+    broadcast dim, with one call of the compiled fold jvm/PipFold.java
+    (registered by jvm.register) as the join condition. The fold reads
+    the packed little-endian bboxes and edges (polygon_structs has the
+    layout) in a tight loop: a bbox gate, then crossing parity with the
+    same half-open edge rule and floating-point operation order as the
+    NumPy kernel (geo/pip.py points_in_ring). A null lat or lon is
+    outside. Because the polygons are data, the condition is one fixed
+    call at any polygon count (inlined plan literals hit Janino's 64 KB
+    method ceiling at a few hundred edges).
 
-    Zero Python and zero shuffle of the points side. A previous formulation
-    inlined every edge as a plan literal, which hit Janino's 64 KB
-    method/constant-pool ceiling at a few hundred edges (round-1 verdict
-    'what's wrong #4'); with the polygons as data the lambda is fixed-size
-    regardless of polygon cardinality. Same half-open edge rule as the
-    NumPy kernel (geo/pip.py points_in_ring).
+    Zero Python and zero shuffle of the points side.
 
     cell_prefilter_res: None (the one-row dim) makes every polygon a
     candidate of every point — a broadcast nested-loop join. When set, two
@@ -528,43 +532,15 @@ def broadcast_pip_join_native(
     """
     if cell_prefilter_res == "auto":
         cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
-    poly_structs = polygon_structs(boundaries)
-
+    jvm.register(points.sparkSession)
     lat, lon = F.col("lat"), F.col("lon")
-    # probe lon in the unwrapped frame, used against dateline-crossing
-    # rings — STAGED as a point-side column (round 8): the fold references
-    # it once per edge, and inline it was a per-edge CASE re-evaluation
-    points = points.withColumn("_lon360", F.when(lon < 0, lon + F.lit(360.0)).otherwise(lon))
-    lon360 = F.col("_lon360")
-
-    def inside(p):
-        crossings = F.aggregate(
-            p["edges"],
-            F.lit(0),
-            lambda acc, e: acc + F.when(
-                ((e["y0"] > lat) != (e["y1"] > lat))
-                & (F.when(e["w"], lon360).otherwise(lon)
-                   < (e["x1"] - e["x0"]) * (lat - e["y0"])
-                   # null denominator when y1==y0 -> null predicate -> 0
-                   # (never a divide-by-zero under ANSI)
-                   / F.when(e["y1"] != e["y0"], e["y1"] - e["y0"]) + e["x0"]),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        in_bbox = F.exists(
-            p["boxes"],
-            lambda b: (lat >= b["lat_min"]) & (lat <= b["lat_max"])
-            & (F.when(b["w"], lon360).otherwise(lon) >= b["lon_min"])
-            & (F.when(b["w"], lon360).otherwise(lon) <= b["lon_max"]),
-        )
-        return F.when(in_bbox, F.pmod(crossings, F.lit(2)) == 1).otherwise(F.lit(False))
 
     # each branch builds candidate rows (point, boundary_id, p); Spark pushes
     # the shared fold filter below into the join condition. The tail reads
-    # the dim's boundary_id column, not p.bid, so the broadcast is pruned to
-    # the fields the fold reads
+    # the dim's boundary_id column, not p.bid, so the broadcast ships only
+    # the keys, p.bbin and p.ebin
     if cell_prefilter_res is None:
-        cand = points.crossJoin(F.broadcast(poly_structs))
+        cand = points.crossJoin(F.broadcast(polygon_structs(boundaries)))
     elif clip_dim:
         cand = points.withColumn(
             "cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res)
@@ -580,22 +556,30 @@ def broadcast_pip_join_native(
         cand = (
             points.withColumn("cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res))
             .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
-            .join(F.broadcast(poly_structs), "boundary_id")
+            .join(F.broadcast(polygon_structs(boundaries)), "boundary_id")
         )
-    return cand.where(inside(F.col("p"))).select(
+    p = F.col("p")
+    return cand.where(F.call_function(jvm.PIP_FOLD, lat, lon, p["bbin"], p["ebin"])).select(
         "image_id", "lat", "lon", *extra_cols, "boundary_id"
     )
 
 
 def polygon_structs(boundaries: DataFrame) -> DataFrame:
-    """(boundary_id, p) where p = struct<bid, boxes, edges> — the row-data
-    (multi)polygon representation consumed by the native PIP fold.
+    """(boundary_id, p) where p = struct<bid, bbin, ebin, edges> — the
+    row-data (multi)polygon representation consumed by the native PIP
+    fold (jvm/PipFold.java).
 
-    boxes: one bbox per OUTER ring (holes never extend coverage), lon
-    bounds in the ring's own frame with a `w` (wrapped) flag. edges: the
-    flat even-odd edge list over ALL rings, each edge tagged with its
-    ring's frame — parity composes per ring, so edges of differently-
-    framed rings (a Fiji-style multipolygon) coexist in one fold.
+    bbin: one bbox per OUTER ring (holes never extend coverage), packed as
+    five little-endian doubles [lat_min, lat_max, lon_min, lon_max, w]:
+    lon bounds in the ring's own frame, w = 1.0 for a wrapped
+    (dateline-crossing) ring, else 0.0. ebin: the flat even-odd edge list
+    over ALL rings, five little-endian doubles per edge [y0, y1, x0, x1,
+    w], each edge in its ring's frame — parity composes per ring, so
+    edges of differently-framed rings (a Fiji-style multipolygon) coexist
+    in one fold. Both are packed by the compiled PackDoubles UDF, so the
+    build stays native. edges: the same edge list as
+    array<struct<y0, x0, y1, x1, w>>, for size(p.edges) counters; the
+    join reads only bbin and ebin, so Spark prunes it from the broadcast.
 
     boundary_id must be unique: the prefiltered native join attaches
     structs by boundary_id, so a duplicated id attaches both polygons'
@@ -607,6 +591,7 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     re-inline it) — the previous per-edge lambda re-evaluated the
     O(vertices) unwrap transform per edge index, an O(vertices^2)
     interpreted blowup on high-vertex rings."""
+    jvm.register(boundaries.sparkSession)
 
     def ring_edges(s):
         la, ulo = s["la"], s["ulo"]
@@ -623,24 +608,28 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
         )
 
     def ring_box(s):
-        return F.struct(
-            F.array_min(s["la"]).alias("lat_min"),
-            F.array_max(s["la"]).alias("lat_max"),
-            F.array_min(s["ulo"]).alias("lon_min"),
-            F.array_max(s["ulo"]).alias("lon_max"),
-            s["w"].alias("w"),
+        return F.array(
+            F.array_min(s["la"]), F.array_max(s["la"]),
+            F.array_min(s["ulo"]), F.array_max(s["ulo"]), s["w"].cast("double"),
         )
+
+    def pack(records):
+        return F.call_function(jvm.PACK_DOUBLES, F.flatten(records))
 
     staged = normalize_rings(boundaries).select(
         "boundary_id", _staged_rings_col(F.col("rings")).alias("_rs")
     )
     rs = F.col("_rs")
-    return staged.select(
+    # the edge structs are staged too: ebin and edges both read them
+    with_edges = staged.select("boundary_id", "_rs", F.flatten(F.transform(rs, ring_edges)).alias("_e"))
+    return with_edges.select(
         "boundary_id",
         F.struct(
             F.col("boundary_id").alias("bid"),
-            F.transform(F.filter(rs, lambda s: ~s["is_hole"]), ring_box).alias("boxes"),
-            F.flatten(F.transform(rs, ring_edges)).alias("edges"),
+            pack(F.transform(F.filter(rs, lambda s: ~s["is_hole"]), ring_box)).alias("bbin"),
+            pack(F.transform("_e", lambda e: F.array(
+                e["y0"], e["y1"], e["x0"], e["x1"], e["w"].cast("double")))).alias("ebin"),
+            F.col("_e").alias("edges"),
         ).alias("p"),
     )
 
@@ -963,8 +952,8 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
     """(cell, boundary_id, p struct) — the per-cell candidate rows with
     BOUNDED per-cell geometry, one row per (cell, polygon): each carries
     only the polygon CLIPPED to that cell's window (geo/clip.py),
-    re-expressed as the struct<bid, boxes, edges> shape the native fold
-    consumes. The unclipped prefilter folds each candidate's full edge
+    re-expressed as polygon_structs' struct<bid, bbin, ebin, edges> shape.
+    The unclipped prefilter folds each candidate's full edge
     list, so a point near a 10^5-vertex ring pays every vertex; clipped,
     the total is O(vertices + cells) (every original edge lands in the few
     cells it crosses, interior cells degenerate to the 4-edge window), so
@@ -974,19 +963,34 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
     The build is a mapInArrow over the polygon DIM's clip units — once
     per snapshot, embarrassingly parallel, the same prepass position as
     the shuffle strategy's clip cover. The POINTS side stays zero-Python and
-    zero-shuffle (unchanged broadcast hash equi-join + native fold).
+    zero-shuffle (unchanged broadcast hash equi-join + compiled fold).
 
-    boxes: one bbox per probe FRAME over the entry's pieces (raw and
+    bbin: one bbox per probe FRAME over the entry's pieces (raw and
     unwrapped pieces can coexist in one cell for a Fiji-style
-    multipolygon; a single bbox cannot span both frames). A point in
-    region ∩ cell lies in some piece's region, hence inside its frame's
-    bbox — the exists() gate stays a correct prefilter. Parity over the
-    clipped pieces equals full-ring parity for probes inside the cell
-    (geo/clip.py's preservation argument)."""
+    multipolygon; a single bbox cannot span both frames), packed as five
+    little-endian doubles [lat_min, lat_max, lon_min, lon_max, w] with
+    w = 1.0 for the unwrapped frame. A point in region ∩ cell lies in
+    some piece's region, hence inside its frame's bbox — the bbox gate
+    stays a correct prefilter. ebin: every piece's closed edge list,
+    five little-endian doubles [y0, y1, x0, x1, w] per edge. Parity over
+    the clipped pieces equals full-ring parity for probes inside the cell
+    (geo/clip.py's preservation argument). edges: the same edge list as
+    array<struct<y0, x0, y1, x1, w>>, for size(p.edges) counters; the
+    join prunes it from the broadcast."""
     import pyarrow as pa
 
     def struct(names, arrays):
         return pa.StructArray.from_arrays(arrays, names=names)
+
+    def packed(lengths, records: np.ndarray):
+        """Binary array whose value i is the next lengths[i] rows of the
+        (n, 5) float64 `records`, as little-endian bytes."""
+        off = np.zeros(len(lengths) + 1, dtype=np.int32)
+        np.cumsum(lengths, out=off[1:])
+        data = np.ascontiguousarray(records, dtype="<f8")
+        return pa.Array.from_buffers(pa.binary(), len(lengths), [
+            None, pa.py_buffer(off * np.int32(records.shape[1] * 8)), pa.py_buffer(data.ravel()),
+        ])
 
     def dim_fn(batches):
         for batch in batches:
@@ -1014,7 +1018,7 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
                         else:
                             fb[0] = min(fb[0], lo_y); fb[1] = max(fb[1], hi_y)
                             fb[2] = min(fb[2], lo_x); fb[3] = max(fb[3], hi_x)
-                    boxes.extend((*fb, w) for w, fb in frame_box.items())
+                    boxes.extend((*fb, float(w)) for w, fb in frame_box.items())
                     n_boxes.append(len(frame_box))
                     cell_nv.append(sum(ys.size for ys, _, _ in plist))
                     cell_ids.append(int(cell_id))
@@ -1029,35 +1033,31 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
             ends = np.cumsum(lens)
             nxt = np.arange(1, y0.size + 1)
             nxt[ends - 1] = ends - lens
+            y1, x1 = y0[nxt], x0[nxt]
+            w = np.repeat(np.array(ws, dtype=bool), lens)
             edges = struct(["y0", "x0", "y1", "x1", "w"], [
-                pa.array(y0), pa.array(x0), pa.array(y0[nxt]), pa.array(x0[nxt]),
-                pa.array(np.repeat(np.array(ws, dtype=bool), lens)),
+                pa.array(y0), pa.array(x0), pa.array(y1), pa.array(x1), pa.array(w),
             ])
-            bx = list(zip(*boxes))
-            box_arr = struct(
-                ["lat_min", "lat_max", "lon_min", "lon_max", "w"],
-                [pa.array(bx[k], pa.float64()) for k in range(4)]
-                + [pa.array(bx[4], pa.bool_())],
-            )
             bid_arr = pa.array(bids, pa.int64())
             yield pa.RecordBatch.from_arrays([
                 pa.array(cell_ids, pa.int64()),
                 bid_arr,
-                struct(["bid", "boxes", "edges"], [
-                    bid_arr, _list_array(n_boxes, box_arr), _list_array(cell_nv, edges),
+                struct(["bid", "bbin", "ebin", "edges"], [
+                    bid_arr,
+                    packed(n_boxes, np.array(boxes, dtype=np.float64)),
+                    packed(cell_nv, np.column_stack([y0, y1, x0, x1, w.astype(np.float64)])),
+                    _list_array(cell_nv, edges),
                 ]),
             ], names=["cell", "boundary_id", "p"])
 
     schema = (
-        "cell long, boundary_id long, p struct<bid: long, "
-        "boxes: array<struct<lat_min: double, lat_max: double, "
-        "lon_min: double, lon_max: double, w: boolean>>, "
-        "edges: array<struct<y0: double, x0: double, y1: double, "
-        "x1: double, w: boolean>>>"
+        "cell long, boundary_id long, p struct<bid: long, bbin: binary, "
+        "ebin: binary, edges: array<struct<y0: double, x0: double, "
+        "y1: double, x1: double, w: boolean>>>"
     )
-    # the struct<bid, boxes, edges> shape the native fold consumes is
-    # built as Arrow arrays over the flat per-batch vertex buffers, so the
-    # channel carries columnar buffers with no per-element conversion.
+    # the struct the fold consumes is built as Arrow arrays over the flat
+    # per-batch vertex buffers, so the channel carries columnar buffers
+    # with no per-element conversion.
     # strip-aligned parallel prepass (round 8, see _clip_units): units are
     # disjoint in (cell), so no (cell, bid) entry is split across tasks
     return _clip_units(boundaries, res).mapInArrow(dim_fn, schema=schema)
