@@ -199,7 +199,7 @@ def _rect_boundaries(spark: SparkSession) -> DataFrame:
 # =====================================================================
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: image table -> native binary geotag parse -> H3-style cells
+    """Flagship: image table -> compiled binary geotag parse -> H3-style cells
     -> point-in-polygon join -> per-tile assignment rows, in the zero-Python
     `native` configuration (the scaling-gate carrier, BENCH/BASELINE.md);
     tests pin it row-identical to the mapInPandas paths."""

@@ -87,7 +87,7 @@ def main() -> None:
     )
     res["flagship_rows_per_sec"] = round(n4 / res["flagship_tiles_sec"], 1)
 
-    # zero-Python flagship: native header parse + compiled-fold PIP — no
+    # zero-Python flagship: compiled header parse + compiled-fold PIP — no
     # Arrow channel anywhere. TWO configurations measured since round 5:
     # the ONE-ROW dim (per-point fold over every polygon edge — pure
     # compute, the gate carrier continuous with rounds 2-4) and the

@@ -1,12 +1,12 @@
-"""The fully-JVM flagship path (native binary f64 parse + native even-odd
-PIP) must agree exactly with the Python-kernel path."""
+"""The fully-JVM flagship path (compiled binary f64 parse + compiled
+even-odd PIP) must agree exactly with the Python-kernel path."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from wikibrain_spark import codecs
+from wikibrain_spark import codecs, jvm
 from wikibrain_spark.functions import binparse
 from wikibrain_spark.operators import geotag, spatial_join
 from wikibrain_spark.sources import synthetic
@@ -42,6 +42,43 @@ def test_native_f64_hard_values(spark):
     np.testing.assert_array_equal(got["lon"].to_numpy(), -np.array(vals))
 
 
+def _bits(x: np.ndarray) -> np.ndarray:
+    return np.asarray(x, dtype=np.float64).view(np.int64)
+
+
+def test_native_f64_truncated_and_special_payloads(spark):
+    """A payload too short for a double reads that double as null, and
+    every special double round-trips bit-exact; a truncated image gets no
+    tile row (its null coordinate is outside every polygon)."""
+    full = codecs.pack_header("ppm", 1, 1, 10.0, 1.0)
+    cut = {f"cut{n}": full[:n] for n in (0, 12, 18, 25)}
+    rows = [*cut.items(), ("null", None), ("full", full)]
+    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    got = {r["image_id"]: (r["lat"], r["lon"])
+           for r in df.select("image_id", *binparse.geotag_cols(F.col("bytes"))).collect()}
+    assert got == {"cut0": (None, None), "cut12": (None, None), "cut18": (10.0, None),
+                   "cut25": (10.0, None), "null": (None, None), "full": (10.0, 1.0)}
+
+    vals = [float("nan"), float("inf"), float("-inf"), 5e-324, 2.2250738585072014e-308,
+            1.7976931348623157e308, -0.0]
+    special = spark.createDataFrame(
+        [(str(i), codecs.pack_header("ppm", 1, 1, v, -v)) for i, v in enumerate(vals)],
+        "id string, bytes binary")
+    out = special.select("id", *binparse.geotag_cols(F.col("bytes"))).toPandas()
+    out = out.sort_values("id", key=lambda s: s.astype(int))
+    np.testing.assert_array_equal(_bits(out["lat"]), _bits(vals))
+    np.testing.assert_array_equal(_bits(out["lon"]), _bits(np.negative(vals)))
+
+    # a square around both the real point (10, 1) and the (10, 0) a
+    # zero-filled lon would land on
+    square = [(1, "Q1", "en:Square", [5.0, 5.0, 15.0, 15.0], [-5.0, 5.0, 5.0, -5.0])]
+    boundaries = spark.createDataFrame(
+        square, "boundary_id long, qid string, wikipedia string, "
+                "ring_lat array<double>, ring_lon array<double>")
+    tiles = spatial_join.tile_assignments(df, boundaries, res=9, strategy="native")
+    assert [r["image_id"] for r in tiles.collect()] == ["full"]
+
+
 def test_native_pip_matches_kernel_path(spark, paths):
     images = spark.read.parquet(paths["images"])
     boundaries = spark.read.parquet(paths["boundaries"])
@@ -61,6 +98,11 @@ def test_native_plan_has_no_python(spark, paths):
         images, boundaries, res=9, strategy="native"
     )._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan  # no ArrowEvalPython / MapInPandas stages
+    # the header parse is one compiled read per coordinate, not the
+    # hex -> conv -> decimal string round trip
+    assert plan.count(f"{jvm.LE_DOUBLE}(") == 2
+    for fn in ("conv(", "hex(", "pow("):
+        assert fn not in plan, fn
 
 
 def test_native_pip_survives_large_polygon_set(spark):

@@ -1,7 +1,7 @@
 """The compiled parity fold (jvm/PipFold.java) behind every native PIP
 variant: a seeded differential test against the NumPy kernel on
 adversarial geometry, null coordinates in batch and stream, and the jar
-build and loading."""
+build and loading (for the fold and the header parse, jvm/LeDouble.java)."""
 
 from __future__ import annotations
 
@@ -12,9 +12,11 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from wikibrain_spark import jvm
+from wikibrain_spark import codecs, jvm
+from wikibrain_spark.functions import binparse
 from wikibrain_spark.geo import cells, pip
 from wikibrain_spark.operators import spatial_join
 
@@ -210,3 +212,16 @@ def test_plain_session_needs_no_spark_jars(spark, fold_case):
     got = {(r["image_id"], r["boundary_id"]) for r in spatial_join.broadcast_pip_join_native(
         plain.createDataFrame(pts), b, cell_prefilter_res=4).collect()}
     assert got == want
+
+
+def test_plain_session_parses_headers_before_any_pip_call(spark):
+    """In a plain SparkSession.builder session whose registry holds none of
+    the compiled UDFs, le_double_col registers the jar's UDFs itself: the
+    header parse works before any PIP call."""
+    plain = SparkSession.builder.getOrCreate().newSession()
+    assert not any(plain.catalog.functionExists(name) for name, _, _ in jvm._UDFS)
+    images = plain.createDataFrame(  # makes `plain` the active session
+        [(codecs.pack_header("ppm", 1, 1, 52.52, -13.405),)], "bytes binary")
+    row = images.select(*binparse.geotag_cols(F.col("bytes"))).first()
+    assert (row["lat"], row["lon"]) == (52.52, -13.405)
+    assert plain.catalog.functionExists(jvm.LE_DOUBLE)

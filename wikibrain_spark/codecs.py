@@ -40,6 +40,8 @@ MAGIC = b"WBIM"
 VERSION = 1
 HEADER_FMT = "<4sBBHHdd"
 HEADER_SIZE = struct.calcsize(HEADER_FMT)  # 26
+LAT_OFFSET = struct.calcsize(HEADER_FMT[:-2])  # 10, 0-based: lat, lon end the header
+LON_OFFSET = LAT_OFFSET + 8  # 18
 
 FMT_CODES = {"ppm": 1, "bmp": 2, "pngz": 3, "dctq": 4}
 CODE_FMTS = {v: k for k, v in FMT_CODES.items()}
@@ -63,7 +65,7 @@ def parse_header(payload: bytes) -> tuple[str, int, int, float, float]:
 
 def extract_geotag(payload: bytes) -> tuple[float, float]:
     """Header-only fast path: (lat, lon) without decoding pixels."""
-    lat, lon = struct.unpack_from("<dd", payload, 10)
+    lat, lon = struct.unpack_from("<dd", payload, LAT_OFFSET)
     return lat, lon
 
 
@@ -83,8 +85,8 @@ def extract_geotags_batch(payloads) -> tuple[np.ndarray, np.ndarray]:
     else:
         blob = b"".join(p[:HEADER_SIZE] for p in payloads)
     buf = np.frombuffer(blob, dtype=np.uint8).reshape(n, HEADER_SIZE)
-    lat = np.ascontiguousarray(buf[:, 10:18]).view(np.float64).ravel()
-    lon = np.ascontiguousarray(buf[:, 18:26]).view(np.float64).ravel()
+    lat = np.ascontiguousarray(buf[:, LAT_OFFSET:LON_OFFSET]).view(np.float64).ravel()
+    lon = np.ascontiguousarray(buf[:, LON_OFFSET:HEADER_SIZE]).view(np.float64).ravel()
     return lat, lon
 
 

@@ -1,53 +1,36 @@
-"""Native-expression binary parsing: little-endian float64 from a binary
-column — no Python, no UDF, stays in whole-stage codegen.
+"""Binary header parsing: little-endian float64 from a binary column, in
+the JVM.
 
-Why: the geotag hot path reads two f64 (lat, lon) at fixed offsets of the
-payload header. Shipping rows to a Python worker for an 8-byte decode hits
-the Arrow-channel rows/sec ceiling; this parses in the JVM:
-
-  1. hex() the 8 bytes, reorder the hex pairs to big-endian,
-  2. conv(hex, 16, 10) -> unsigned decimal string -> decimal(20,0),
-  3. wrap to signed int64 bit pattern,
-  4. reconstruct the double arithmetically: sign * (1 + m/2^52) * 2^(e-1023).
-
-Step 4 is EXACT for all normal doubles: m/2^52 is a division by a power of
-two (exact), 1+frac fits in 53 bits (exact), and multiplying by 2^k is
-exact while the result stays normal. Zero is special-cased; geotag values
-are never subnormal/NaN/Inf.
+The geotag hot path reads two f64 (lat, lon) at fixed offsets of the
+payload header (codecs.HEADER_FMT). Each read is one call of the compiled
+Java UDF jvm/LeDouble.java, which loads the 8 bytes as one little-endian
+double: bit-exact for every value, NaN, infinities, subnormals and -0.0
+included. A null payload, or one too short to hold the 8 bytes, reads as
+null, so a truncated header never parses to a coordinate (and a null
+coordinate matches no polygon in the native PIP join).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-_TWO_63 = 9223372036854775807  # 2^63 - 1
-_TWO_64_DEC = "18446744073709551616"  # 2^64 as decimal literal
-
-
-def le_uint64_bits(data: Column, offset: int) -> Column:
-    """Signed-int64 bit pattern of the little-endian u64 at 1-based offset."""
-    h = F.hex(F.substring(data, offset, 8))  # 16 hex chars, byte order = LE
-    be_hex = F.concat(*[F.substring(h, 15 - 2 * i, 2) for i in range(8)])
-    unsigned = F.conv(be_hex, 16, 10).cast("decimal(20,0)")
-    wrapped = F.when(
-        unsigned > F.lit(_TWO_63),
-        (unsigned - F.expr(f"CAST({_TWO_64_DEC} AS DECIMAL(21,0))")).cast("long"),
-    ).otherwise(unsigned.cast("long"))
-    return wrapped
-
-
-def bits_to_double(bits: Column) -> Column:
-    """IEEE-754 binary64 from its int64 bit pattern (normal values + zero)."""
-    sign = F.when(bits < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    exp = F.shiftrightunsigned(bits, 52).bitwiseAND(F.lit(0x7FF)).cast("int")
-    mantissa = bits.bitwiseAND(F.lit((1 << 52) - 1))
-    frac = mantissa.cast("double") / F.lit(float(1 << 52))
-    normal = sign * (F.lit(1.0) + frac) * F.pow(F.lit(2.0), (exp - 1023).cast("double"))
-    # e == 0: zero or subnormal; geotags only hit exact zero
-    return F.when(exp == 0, sign * frac * F.pow(F.lit(2.0), F.lit(-1022.0))).otherwise(normal)
+from wikibrain_spark import codecs, jvm
 
 
 def le_double_col(data: Column, offset: int) -> Column:
-    """Little-endian float64 at 1-based byte offset of a binary column."""
-    return bits_to_double(le_uint64_bits(data, offset))
+    """Little-endian float64 at 1-based byte offset of a binary column;
+    null when the value is null or shorter than offset + 7 bytes.
+
+    Registers the compiled UDF in the active session, so build the
+    returned column into a DataFrame of that session."""
+    jvm.register(SparkSession.active())
+    return F.call_function(jvm.LE_DOUBLE, data, F.lit(offset))
+
+
+def geotag_cols(bytes_col: Column) -> tuple[Column, Column]:
+    """(lat, lon) read from a column of WBIM payloads (codecs header)."""
+    return (
+        le_double_col(bytes_col, codecs.LAT_OFFSET + 1).alias("lat"),
+        le_double_col(bytes_col, codecs.LON_OFFSET + 1).alias("lon"),
+    )

@@ -83,9 +83,10 @@ def streaming_flagship_ingest(
     ledger row is staging garbage), exactly as in the batch job above.
 
     The stream graph is zero-Python except the dedup state operator: the
-    geotag parse is the native binary header parse, and the PIP is the
-    native broadcast fold (cell-prefiltered at ``cell_prefilter_res``; None
-    selects the one-row dim) — both the UNCHANGED batch operators.
+    geotag parse is the compiled header parse (binparse.geotag_cols), and
+    the PIP is the native broadcast fold (cell-prefiltered at
+    ``cell_prefilter_res``; None selects the one-row dim) — both the
+    UNCHANGED batch operators.
 
     ``fail_before_commit``: test-only fault injection — batch ids that
     raise AFTER writing their parquet but BEFORE the ledger commit,
@@ -94,9 +95,13 @@ def streaming_flagship_ingest(
     Returns the full committed-ledger map after the run drains
     (Trigger.AvailableNow).
     """
+    from wikibrain_spark import jvm
     from wikibrain_spark.functions import binparse
     from wikibrain_spark.streaming.pipeline import IMAGE_SCHEMA, streaming_dedup
 
+    # the parse resolves in `spark`, which need not be the active session
+    # that le_double_col registers on
+    jvm.register(spark)
     stream = (
         spark.readStream.schema(IMAGE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -105,8 +110,7 @@ def streaming_flagship_ingest(
     pts = stream.select(
         "image_id",
         F.md5("bytes").alias("fp"),
-        binparse.le_double_col(F.col("bytes"), 11).alias("lat"),
-        binparse.le_double_col(F.col("bytes"), 19).alias("lon"),
+        *binparse.geotag_cols(F.col("bytes")),
     )
     unique = streaming_dedup(pts, key_col="fp", id_col="image_id", carry_cols=("lat", "lon"))
 

@@ -9,9 +9,15 @@ concurrent processes never see a partial jar. Delete `_jars/` to force a
 rebuild.
 
 register(spark) makes the UDFs callable by name in a session
-(F.call_function(PIP_FOLD, ...)). Each SparkContext loads the jar once
-with ADD JAR. No session setting is needed: a session built with a plain
-SparkSession.builder works the same as one from session.get_spark.
+(F.call_function(PIP_FOLD, ...)):
+
+  wb_pip_fold      (lat, lon, bbin, ebin) -> boolean   PipFold.java
+  wb_pack_doubles  array<double> -> binary             PackDoubles.java
+  wb_le_double     (bytes, offset) -> double           LeDouble.java
+
+Each SparkContext loads the jar once with ADD JAR. No session setting
+is needed: a session built with a plain SparkSession.builder works the
+same as one from session.get_spark.
 
 There is no fallback: without javac, or when the classes do not load,
 register raises.
@@ -27,16 +33,18 @@ import tempfile
 import zipfile
 
 from pyspark.errors import AnalysisException
-from pyspark.sql.types import BinaryType, BooleanType
+from pyspark.sql.types import BinaryType, BooleanType, DoubleType
 
 SOURCE_DIR = os.path.dirname(os.path.abspath(__file__))
 CACHE_DIR = os.path.join(SOURCE_DIR, "_jars")
 
 PIP_FOLD = "wb_pip_fold"  # (lat, lon, bbin, ebin) -> boolean, see PipFold.java
 PACK_DOUBLES = "wb_pack_doubles"  # array<double> -> little-endian binary
+LE_DOUBLE = "wb_le_double"  # (binary, 1-based offset) -> little-endian double
 _UDFS = (
     (PIP_FOLD, "wikibrain_spark.jvm.PipFold", BooleanType()),
     (PACK_DOUBLES, "wikibrain_spark.jvm.PackDoubles", BinaryType()),
+    (LE_DOUBLE, "wikibrain_spark.jvm.LeDouble", DoubleType()),
 )
 
 
@@ -69,7 +77,7 @@ def _build(path: str) -> None:
     javac = shutil.which("javac")
     if javac is None:
         raise RuntimeError(
-            "javac not found on PATH: the compiled PIP fold needs a JDK 17+ "
+            "javac not found on PATH: the compiled JVM kernels need a JDK 17+ "
             f"javac to build {os.path.basename(path)} from {SOURCE_DIR}/*.java"
         )
     import pyspark

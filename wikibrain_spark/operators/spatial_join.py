@@ -1475,16 +1475,14 @@ def tile_assignments(
     if strategy == "fused":
         pairs = geotag_pip_fused(points, boundaries)
     elif strategy == "native":
-        # fully-JVM flagship: native binary header parse + native PIP;
+        # fully-JVM flagship: compiled header parse + compiled PIP fold;
         # points = the raw images DataFrame
-        from wikibrain_spark import codecs
         from wikibrain_spark.functions import binparse
 
-        pts = points.select(
-            "image_id",
-            binparse.le_double_col(F.col("bytes"), 11).alias("lat"),
-            binparse.le_double_col(F.col("bytes"), 19).alias("lon"),
-        )
+        # the parse resolves in points' session, which need not be the
+        # active one that le_double_col registers on
+        jvm.register(points.sparkSession)
+        pts = points.select("image_id", *binparse.geotag_cols(F.col("bytes")))
         pairs = broadcast_pip_join_native(
             pts, boundaries, cell_prefilter_res=native_prefilter_res
         )
