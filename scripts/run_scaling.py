@@ -66,13 +66,9 @@ def main() -> None:
         ("big-big salted shuffle range join (20M x 2M pts, km=10)", "wd_shuffle_sec"),
         ("shuffle-transport probe (same exchange, no join/compute)", "wd_shuffle_transport_probe_sec"),
         ("clip-to-cell shuffle PIP (20M pts x 128k coastline edges)", "coast_clip_sec"),
-        ("cogroup-transport probe (same shuffle+channel, no parity)", "coast_transport_probe_sec"),
-        ("clip-to-cell PIP kernel (join minus transport probe)", "coast_kernel_sec"),
         ("clipped-dim NATIVE PIP (same 20M pts, broadcast fold)", "coast_native_clip_sec"),
         ("megacoast shuffle PIP (20M pts x 600k-vertex snapshot)", "mega_clip_sec"),
         ("megacoast clip prepass probe (clipped-dim build alone)", "mega_prepass_probe_sec"),
-        ("megacoast cogroup-transport probe (prepass+shuffle+channel)", "mega_transport_probe_sec"),
-        ("megacoast refine kernel (join minus transport probe)", "mega_kernel_sec"),
         ("megacoast clipped-dim NATIVE PIP (same 20M pts)", "mega_native_clip_sec"),
         # NOTE: the clipped-vs-unclipped payload PAIR is deliberately absent
         # from this table — it is per-level A/B evidence (a 2M-point join
@@ -161,26 +157,23 @@ def main() -> None:
         ),
             *(
             [
-                "The clip-to-cell shuffle-PIP rows (new in round 6) carry the",
-                "round's lead fix: the cogrouped shuffle strategy ships each",
-                "covered cell only the polygon geometry CLIPPED to that cell's",
-                "window (Sutherland-Hodgman, parity-exact; geo/clip.py), so",
-                f"transport is O(vertices + cells). The 20M-point row against",
-                f"32 x 1500-vertex coastlines ({lo.get('coast_edges', 0)} edges) uses",
-                "points CONCENTRATED on the coastline boxes so the join, not a",
-                "semi-filter scan, is what's measured. Its raw efficiency is",
-                "bounded by the per-group Arrow materialization the cogroup-",
-                "transport probe isolates (the same single-JVM channel ceiling",
-                "the Arrow-channel probe shows for mapInPandas); the KERNEL row",
-                "(join minus probe) is the term that must — and does — scale.",
+                "The clip-to-cell shuffle-PIP rows run shuffle_pip_join: each",
+                "point joins the (cell, polygon) rows of its cell on",
+                "(cell, salt), each row carrying only the polygon geometry",
+                "CLIPPED to that cell's window (Sutherland-Hodgman,",
+                "parity-exact; geo/clip.py), and the compiled parity fold is",
+                "the join condition, so the dim is O(vertices + cells). The",
+                "20M-point row against 32 x 4000-vertex coastlines",
+                f"({lo.get('coast_edges', 0)} edges) uses points CONCENTRATED on",
+                "the coastline boxes so the join, not a semi-filter scan, is",
+                "what's measured.",
                 "The clipped-dim NATIVE row runs the SAME 20M points through",
                 "the broadcast fold over a clipped O(vertices + cells) dim",
                 "(round 6): fully JVM on the points side, so it carries the",
                 "broadcast-path scaling story for high-vertex boundary sets.",
                 "The payload pair runs the IDENTICAL 2M-point join with",
-                "clipping on vs OFF — unclipped ships every ring in full once",
-                "per covered cell (O(cells x vertices), the round-5 verdict's",
-                "remaining scale-killer) and measures "
+                "clipping on vs OFF — unclipped pairs every ring in full with",
+                "each covered cell (O(cells x vertices)) and measures "
                 + (
                     f"{lo.get('coast_payload_unclipped_sec', 0)}s vs {lo.get('coast_payload_clip_sec', 0)}s clipped at"
                     f" local[{LEVELS[0]}], {hi.get('coast_payload_unclipped_sec', 0)}s vs"
@@ -197,42 +190,13 @@ def main() -> None:
                 "The MEGACOAST rows (new in round 7) push the vertex axis an",
                 "order of magnitude further: ONE 600k-vertex snapshot (400k-",
                 "vertex continent + 100k-vertex hole + 100k-vertex dateline",
-                "shelf) against 20M concentrated points. Unlike the",
+                "shelf) against 20M concentrated points, through the shuffle",
+                "join and the broadcast clipped-dim native join (what",
+                "auto_prefilter selects for megacoast). Unlike the",
                 "32-polygon coastline row, the clip prepass here parallelizes",
                 "over only 2 boundary rows, so it is a FIXED term at any core",
-                "count by construction — the prepass-probe row times the",
-                "clipped-dim build alone, and the cogroup-transport probe",
-                "(coast-row methodology: identical semi-filter, clip prepass,",
-                "bucket shuffle, and per-group Arrow materialization with the",
-                "parity kernel replaced by a count) captures ALL the",
-                "by-construction-fixed terms, including the single-JVM Arrow",
-                "channel ceiling the standalone channel probe documents. The",
-                "KERNEL row (join minus transport probe) is the residual the",
-                "probe's count-refine cannot reproduce: the per-group pandas",
-                "materialization of 20M point rows PLUS the parity merge and",
-                "the pair-output channel — read it against the Arrow-channel",
-                "probe's signature "
-                + (
-                    f"({(lo['mega_kernel_sec'] / hi['mega_kernel_sec'] / ratio):.2f} vs"
-                    f" {(lo['channel_probe_sec'] / hi['channel_probe_sec'] / ratio):.2f} this run):"
-                    if "mega_kernel_sec" in lo else ":"
-                ),
-                "at 20M concentrated points through ONE shared JVM the row is",
-                "channel-bound end to end, the same single-socket artifact",
-                "every mapInPandas row in this file documents. The engine",
-                "term that is NOT an artifact — the refine's NumPy crossing",
-                "parity — is ~4e9 edge tests here, seconds of compute that",
-                "the probe pair brackets. On a real cluster each executor",
-                "owns its Arrow channel (the term scales with executors), the",
-                "prepass amortizes once per snapshot across every query, and",
-                "per-polygon parallelism is the remaining axis (real boundary",
-                "sets have many polygons — the coastline row demonstrates",
-                "that distribution at 32). The broadcast answer for THIS",
-                "snapshot shape is the clipped-dim NATIVE row directly above:",
-                "zero Python on the points side, and it is what",
-                "auto_prefilter actually selects for megacoast — measured",
-                "0.84 in BOTH round-7 pairs, the stable scaling story for",
-                "the 600k-vertex axis.",
+                "count by construction; the prepass-probe row times the",
+                "clipped-dim build alone.",
                 "",
             ]
             if "mega_clip_sec" in lo else []
@@ -319,7 +283,7 @@ def main() -> None:
         "Round 7 ran two full pairs: gate carrier 0.836 then 0.998,",
         "prefiltered flagship 0.803 then 0.983, decode 0.877 then 0.906,",
         "ingest 0.763 then 0.877, megacoast NATIVE 0.840 then 0.837 (the",
-        "most stable new row). The cogroup-shuffle rows are the",
+        "most stable new row). The (then cogrouped) shuffle rows were the",
         "cache-sensitive ones this round: coast clip measured 0.844 then",
         "0.507 and its kernel 1.027 then 0.482 — the IDENTICAL code's",
         "local[4] leg ran 26.5 s in the first pair and 15.2 s in the",

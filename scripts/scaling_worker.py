@@ -115,8 +115,6 @@ def main() -> None:
     # this probe quantifies that artifact so the flagship number can be
     # read against it. On a real multi-executor cluster each executor has
     # its own channel, so this term scales with executors.
-    import pandas as _pd
-
     def _ident(batches):
         for b in batches:
             yield b
@@ -277,12 +275,12 @@ def main() -> None:
 
     # HIGH-VERTEX clipped shuffle PIP (round-5 verdict #1+#2): 20M points
     # against 32 coastline polygons of 4000 vertices each (128k edges)
-    # through the cogrouped clip-to-cell shuffle strategy. The clip
-    # prepass distributes per polygon (32 tasks >= cores at both levels),
-    # the cogroup ships each cell only its LOCAL edge subset, and the
+    # through the clip-to-cell shuffle strategy. The clip prepass
+    # distributes per polygon (32 tasks >= cores at both levels), each
+    # (cell, polygon) dim row carries only its LOCAL edge subset, and the
     # payload pair below quantifies what that buys: the same join with
-    # clip_cover=False ships full rings once per covered cell
-    # (O(cells x vertices) shuffle + O(full-ring) refine folds).
+    # clip_cover=False pairs full rings with every covered cell
+    # (O(cells x vertices) dim rows + O(full-ring) folds).
     from wikibrain_spark.sources.synthetic import _coast_ring
 
     rngc = np.random.default_rng(77)
@@ -302,7 +300,7 @@ def main() -> None:
 
     def _pts_near(n_pts: int):
         # points concentrated in +/-8 deg boxes around the coastline
-        # centers: the row must measure cogroup transport + refine parity.
+        # centers: the row must measure the join and its parity folds.
         # With globally-uniform points the covered-cells semi-filter drops
         # >90% before the shuffle and the whole join finishes in ~4 s of
         # prepass jobs at EITHER core count — a fixed-cost-bound row reads
@@ -327,38 +325,6 @@ def main() -> None:
         lambda: _sj.shuffle_pip_join(pts_coast, coast_df)
     )
     res["coast_clip_rows_per_sec"] = round(n_pref / res["coast_clip_sec"], 1)
-
-    # cogroup-transport probe: the SAME covered-points semi-filter,
-    # bucket shuffle, and per-group Arrow materialization with the parity
-    # kernel replaced by a per-group count — isolates the channel-bound
-    # transport term exactly the way the wd_shuffle and Arrow-channel
-    # probes do, so the kernel row reads net of the single-JVM ceiling.
-    coast_res = _sj._auto_cover_res(coast_df)
-    n_buckets = 16 * cpus * 2
-    bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(n_buckets)).cast("int")
-    coast_cov = _sj.polygon_cover(coast_df, coast_res)
-    pts_bkt = (
-        pts_coast.select(
-            "image_id", "lat", "lon",
-            _cells.hexlite_cell_col(F.col("lat"), F.col("lon"), coast_res).alias("cell"),
-        )
-        .join(F.broadcast(coast_cov.select("cell")), "cell", "left_semi")
-        .withColumn("bucket", bucket)
-    )
-    cov_bkt = coast_cov.withColumn("bucket", bucket)
-
-    def _count_refine(a: _pd.DataFrame, b: _pd.DataFrame) -> _pd.DataFrame:
-        return _pd.DataFrame({"n": [len(a) + len(b)]})
-
-    res["coast_transport_probe_sec"] = timed(
-        lambda: pts_bkt.repartition(cpus * 2, "bucket")
-        .groupBy("bucket")
-        .cogroup(cov_bkt.repartition(cpus * 2, "bucket").groupBy("bucket"))
-        .applyInPandas(_count_refine, schema="n long")
-    )
-    res["coast_kernel_sec"] = round(
-        max(res["coast_clip_sec"] - res["coast_transport_probe_sec"], 0.001), 3
-    )
 
     # the same 20M points through the CLIPPED-DIM native broadcast fold
     # (round 6): O(vertices + cells) broadcast, per-point fold over LOCAL
@@ -385,13 +351,13 @@ def main() -> None:
     # 600k-VERTEX MEGACOAST (round 7): one boundary snapshot an order of
     # magnitude past the coastline row (400k-vertex continent + 100k-vertex
     # hole + 100k-vertex dateline shelf) through both clipped strategies.
-    # What scales here is the REFINE (20M concentrated points x local
+    # What scales here is the FOLD (20M concentrated points x local
     # clipped edges); the clip prepass itself is a once-per-snapshot term
     # that parallelizes only per polygon (2 rows), so it is measured
-    # SEPARATELY (mega_prepass_probe_sec: the clipped-dim build alone) and
-    # subtracted for the kernel row — at production scale the prepass
-    # amortizes over every query against the snapshot, while the refine is
-    # the per-query cost the cluster size must actually buy down.
+    # SEPARATELY (mega_prepass_probe_sec: the clipped-dim build alone) —
+    # at production scale the prepass amortizes over every query against
+    # the snapshot, while the fold is the per-query cost the cluster size
+    # must actually buy down.
     from wikibrain_spark.sources.synthetic import generate_megacoast
 
     mega_pq = os.path.join(REPO, "data", "mega_scaling_boundaries.parquet")
@@ -400,7 +366,7 @@ def main() -> None:
     mega_df = spark.read.parquet(mega_pq)
     res["mega_edges"] = 600_000
 
-    n_mega = n_pref  # the 20M-point convention: per-point refine work is
+    n_mega = n_pref  # the 20M-point convention: per-point fold work is
     # ~10x the coastline row's (boundary cells carry ~190 local edges at
     # the vertex-heavy auto res), so at 20M the kernel term dominates the
     # by-construction-fixed transport at both levels
@@ -439,35 +405,6 @@ def main() -> None:
     res["mega_clip_sec"] = timed(lambda: _sj.shuffle_pip_join(mega_pts, mega_df))
     res["mega_clip_rows_per_sec"] = round(n_mega / res["mega_clip_sec"], 1)
 
-    # cogroup-transport probe, SAME methodology as the coast row: the
-    # identical covered-points semi-filter, clip prepass (via
-    # clipped_cover_frame — the exact cover side the join cogroups
-    # against), bucket shuffle, and per-group Arrow materialization, with
-    # the parity kernel replaced by a count. With only 2 boundary rows the
-    # prepass AND the single-JVM channel term are fixed by construction;
-    # the kernel row (join minus probe) is the term cores must buy down.
-    mega_cov = _sj.clipped_cover_frame(mega_df, mega_res_auto)
-    mega_nb = 4 * cpus
-    mega_bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(mega_nb)).cast("int")
-    mega_bbox_cov = _sj.polygon_cover(mega_df, mega_res_auto)
-    mega_pts_bkt = (
-        mega_pts.select(
-            "image_id", "lat", "lon",
-            _cells.hexlite_cell_col(F.col("lat"), F.col("lon"), mega_res_auto).alias("cell"),
-        )
-        .join(F.broadcast(mega_bbox_cov.select("cell")), "cell", "left_semi")
-        .withColumn("bucket", mega_bucket)
-    )
-    mega_cov_bkt = mega_cov.withColumn("bucket", mega_bucket)
-    res["mega_transport_probe_sec"] = timed(
-        lambda: mega_pts_bkt.repartition(cpus * 2, "bucket")
-        .groupBy("bucket")
-        .cogroup(mega_cov_bkt.repartition(cpus * 2, "bucket").groupBy("bucket"))
-        .applyInPandas(_count_refine, schema="n long")
-    )
-    res["mega_kernel_sec"] = round(
-        max(res["mega_clip_sec"] - res["mega_transport_probe_sec"], 0.001), 3
-    )
     res["mega_native_clip_sec"] = timed(
         lambda: _sj.broadcast_pip_join_native(
             mega_pts, mega_df, cell_prefilter_res="auto"

@@ -1,5 +1,5 @@
 """The fully-JVM flagship path (compiled binary f64 parse + compiled
-even-odd PIP) must agree exactly with the Python-kernel path."""
+even-odd PIP) must agree exactly with the fused Python path."""
 
 import numpy as np
 import pandas as pd
@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from wikibrain_spark import codecs, jvm
 from wikibrain_spark.functions import binparse
-from wikibrain_spark.operators import geotag, spatial_join
+from wikibrain_spark.operators import spatial_join
 from wikibrain_spark.sources import synthetic
 
 
@@ -79,12 +79,29 @@ def test_native_f64_truncated_and_special_payloads(spark):
     assert [r["image_id"] for r in tiles.collect()] == ["full"]
 
 
+def test_repeated_boundary_id_raises(spark):
+    """Two polygon rows under one boundary_id would pair a point with
+    that id twice: the native flagship and the shuffle join raise
+    ValueError naming the id instead."""
+    images = spark.createDataFrame(
+        [("a", codecs.pack_header("ppm", 1, 1, 10.0, 1.0))], "image_id string, bytes binary")
+    square = ([5.0, 5.0, 15.0, 15.0], [-5.0, 5.0, 5.0, -5.0])
+    boundaries = spark.createDataFrame(
+        [(1, "Q1", "en:A", *square), (7, "Q7", "en:B", *square), (7, "Q7", "en:B", *square)],
+        "boundary_id long, qid string, wikipedia string, "
+        "ring_lat array<double>, ring_lon array<double>")
+    with pytest.raises(ValueError, match="boundary_id 7 "):
+        spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
+    pts = spark.createDataFrame([("a", 10.0, 1.0)], "image_id string, lat double, lon double")
+    with pytest.raises(ValueError, match="boundary_id 7 "):
+        spatial_join.shuffle_pip_join(pts, boundaries, res=2, clip_cover=False)
+
+
 def test_native_pip_matches_kernel_path(spark, paths):
     images = spark.read.parquet(paths["images"])
     boundaries = spark.read.parquet(paths["boundaries"])
     native = spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
-    pts = geotag.extract_geotags(images, with_s2=False)
-    python_path = spatial_join.tile_assignments(pts, boundaries, res=9, strategy="broadcast")
+    python_path = spatial_join.tile_assignments(images, boundaries, res=9, strategy="fused")
     a = native.toPandas().sort_values(["image_id", "boundary_id"]).reset_index(drop=True)
     b = python_path.toPandas().sort_values(["image_id", "boundary_id"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)

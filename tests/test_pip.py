@@ -56,6 +56,32 @@ def test_polygon_index_matches_bruteforce():
     assert got == want
 
 
+def test_polygon_index_chunks_points_against_heavy_ring(monkeypatch):
+    """query_batch hands crossing_parity at most PARITY_CELL_BUDGET
+    point x edge cells per call (a whole batch against a 400k-vertex
+    ring would allocate GBs), with the unchunked kernel's answer."""
+    ang = np.linspace(0.0, 2 * np.pi, 3001)[:-1]
+    r = 5.0 + 0.5 * np.sin(40 * ang)
+    rlat, rlon = 10.0 + r * np.sin(ang), 20.0 + r * np.cos(ang)
+    rng = np.random.default_rng(3)
+    lat, lon = rng.uniform(4.0, 16.0, 700), rng.uniform(14.0, 26.0, 700)
+    want = np.nonzero(pip.points_in_ring(lat, lon, rlat, rlon))[0]
+    assert 0 < want.size < lat.size
+
+    monkeypatch.setattr(pip, "PARITY_CELL_BUDGET", 300_000)
+    cells_per_call = []
+    real = pip.crossing_parity
+
+    def spy(plat, plon, ring_lat, ring_lon):
+        cells_per_call.append(len(plat) * len(ring_lat))
+        return real(plat, plon, ring_lat, ring_lon)
+
+    monkeypatch.setattr(pip, "crossing_parity", spy)
+    got_pt, got_poly = pip.PolygonIndex([9], [rlat], [rlon], res=2).query_batch(lat, lon)
+    assert len(cells_per_call) > 1 and max(cells_per_call) <= 300_000
+    assert sorted(got_pt.tolist()) == want.tolist() and set(got_poly.tolist()) == {9}
+
+
 # ------------------------------------------------- multipolygon / hole /
 # antimeridian (round-4 verdict #1: the north rule's real OSM boundary shape)
 
@@ -182,7 +208,7 @@ def test_dateline_sliver_seam_parity(spark):
     for fn in (
         lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
         lambda: spatial_join.broadcast_pip_join_native(pdf, bdf, cell_prefilter_res=3),
-        lambda: spatial_join.broadcast_pip_join(pdf, bdf, index_res=3),
+        lambda: spatial_join.broadcast_pip_join(pdf, bdf),
         lambda: spatial_join.shuffle_pip_join(pdf, bdf, res=3),
     ):
         got = [r["image_id"] for r in fn().collect()]
@@ -238,8 +264,8 @@ def test_pole_ring_native_parity(spark):
         lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=2, clip_dim=True),
         lambda: spatial_join.broadcast_pip_join(pdf, bdf),
-        # both SHUFFLE transports: Sutherland-Hodgman pieces of the
-        # pole-closure edges, and the full-ring packed wire format
+        # both SHUFFLE dims: Sutherland-Hodgman pieces of the
+        # pole-closure edges, and the full-ring structs
         lambda: spatial_join.shuffle_pip_join(
             pdf, bdf, res=2, hot_cell_threshold=100, n_salt=4,
             hotness_sample_fraction=1.0),

@@ -1,7 +1,8 @@
 """The compiled parity fold (jvm/PipFold.java) behind every native PIP
-variant: a seeded differential test against the NumPy kernel on
-adversarial geometry, null coordinates in batch and stream, and the jar
-build and loading (for the fold and the header parse, jvm/LeDouble.java)."""
+variant and the shuffle join: a seeded differential test against the
+NumPy kernel on adversarial geometry, null coordinates in batch and
+stream, and the jar build and loading (for the fold and the header
+parse, jvm/LeDouble.java)."""
 
 from __future__ import annotations
 
@@ -144,6 +145,21 @@ def test_every_native_variant_matches_numpy_kernel(spark, fold_case, variant):
     pdf = spark.createDataFrame(_with_nulls(pts), POINT_SCHEMA)
     got = [(r["image_id"], r["boundary_id"]) for r in
            spatial_join.broadcast_pip_join_native(pdf, bdf, **VARIANTS[variant]).collect()]
+    assert len(got) == len(set(got)), "duplicate output pairs"
+    assert set(got) == want
+
+
+@pytest.mark.parametrize("clip_cover,res", [(False, 4), (True, 2)], ids=["unclipped_res4", "clipped_res2"])
+def test_shuffle_join_matches_numpy_kernel(spark, fold_case, clip_cover, res):
+    """shuffle_pip_join returns exactly the NumPy kernel's pairs on the
+    same adversarial points, with every cell salted, and drops null
+    coordinates."""
+    _, pts, want, bdf = fold_case
+    pdf = spark.createDataFrame(_with_nulls(pts), POINT_SCHEMA)
+    out = spatial_join.shuffle_pip_join(
+        pdf, bdf, res=res, hot_cell_threshold=0, n_salt=3,
+        hotness_sample_fraction=1.0, clip_cover=clip_cover)
+    got = [(r["image_id"], r["boundary_id"]) for r in out.collect()]
     assert len(got) == len(set(got)), "duplicate output pairs"
     assert set(got) == want
 

@@ -99,43 +99,38 @@ def test_within_distance_shuffle_plan_is_salted_shuffle_join(spark):
     assert "HashAggregate" not in plan, "hotness count leaked into the join plan"
 
 
-def test_shuffle_pip_plan_is_one_cogroup_no_post_refine_exchange(spark):
-    """Round-5 verdict #1: the shuffle PIP's refine is ONE cogrouped
-    Python stage keyed by (bucket, salt) — geometry crosses the shuffle
-    once per covered cell, never per candidate pair — and its output flows
-    out with NO further exchange and NO dedup aggregate (pairs are unique
-    by construction: one (cell, salt) per point, each (boundary, cell)
-    once in the cover). The two exchanges feeding the cogroup are the
-    explicit numbered repartitions (round 6): a user-specified partition
-    count is exempt from AQE coalescing, which otherwise folds this
-    deliberately-light shuffle into one task and serializes every group
-    behind a single Python worker."""
-    pts = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        F.col("event_id").cast("string").alias("image_id"),
-        (F.pmod(F.col("event_id") * 7, 160) - 80.0).alias("lat"),
-        (F.pmod(F.col("event_id") * 11, 350) - 175.0).alias("lon"),
-    )
-    bnd = spark.createDataFrame(
-        [(1, [{"ring_lat": [0.0, 0.0, 30.0, 30.0],
-               "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}])],
-        f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+def test_shuffle_pip_plan_is_native_candidate_rows(native_pip_inputs):
+    """The shuffle PIP builds the native candidate rows: no Python stage
+    anywhere in the unclipped plan, exactly one compiled fold call and it
+    is the condition of the (cell, salt) join, the uncovered points leave
+    through a broadcast SEMI join (no distinct aggregate), and nothing
+    groups the candidates (pairs are unique by construction: one
+    (cell, salt) per point, each (boundary, cell) once per salt)."""
+    pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.shuffle_pip_join(
-        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4))
-    assert plan.count("FlatMapCoGroupsInPandas") == 1
-    assert "HashAggregate" not in plan and "ObjectHashAggregate" not in plan
-    # toString prints downstream operators first: everything BEFORE the
-    # cogroup line is post-refine and must be exchange-free
-    post_refine = plan[: plan.find("FlatMapCoGroupsInPandas")]
-    assert "Exchange" not in post_refine, f"post-refine shuffle:\n{plan}"
-    # shuffle budget: EXACTLY the two (bucket, salt) repartitions feeding
-    # the cogroup (reused by it — no third exchange) — geometry is carried
-    # through the cover prepass (no attach join at all) and the
-    # uncovered-points semi-filter broadcasts (broadcasts don't count)
-    stripped = plan.replace("BroadcastExchange", "BX")
-    assert stripped.count("Exchange") <= 2, f"extra shuffles:\n{plan}"
-    # the uncovered-points filter must be a broadcast SEMI join (no
-    # distinct aggregate, no shuffle) on the points side
+        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=False))
+    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "Python"):
+        assert op not in plan, plan
+    assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
+    join = next(ln for ln in plan.splitlines() if f"{jvm.PIP_FOLD}(" in ln)
+    assert "Join" in join and "salt" in join and "cell" in join, plan
     assert "LeftSemi" in plan, f"covered-cells semi-filter missing:\n{plan}"
+    assert "Aggregate" not in plan, plan
+    # the broadcast strategy is the same operator with a broadcast dim
+    assert "Python" not in _plan(spatial_join.broadcast_pip_join(pts, bnd))
+
+
+def test_clipped_shuffle_pip_plan_has_one_python_map(native_pip_inputs):
+    """The clipped shuffle PIP's only Python operator is the dim build's
+    one MapInArrow; the fold stays the compiled join condition."""
+    pts, bnd = native_pip_inputs
+    plan = _plan(spatial_join.shuffle_pip_join(
+        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=True))
+    assert plan.count("MapInArrow") == 1, plan
+    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plan, plan
+    assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
+    assert "Join" in next(ln for ln in plan.splitlines() if f"{jvm.PIP_FOLD}(" in ln), plan
 
 
 def test_knn_kring_plan_has_no_dedup_aggregate(spark):

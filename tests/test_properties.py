@@ -169,7 +169,7 @@ def test_clipped_cover_parity_matches_pip_kernel(seed, res, c_lat, c_lon, base_r
     random resolution, the per-cell CLIPPED pieces must reproduce the
     reference crossing parity for every probe — probe's cell absent
     from the cover => outside; present => piece-parity XOR. This is the
-    invariant the cogrouped shuffle refine rests on (geo/clip.py's
+    invariant the clipped PIP dims rest on (geo/clip.py's
     parity-preservation argument), checked end-to-end through
     clipped_cell_cover rather than through any Spark plan."""
     from wikibrain_spark.geo import cells as _cells

@@ -288,8 +288,8 @@ def test_megacoast_fixture_invariants():
 
 
 def test_megacoast_strategies_match_numpy_kernel(spark, tmp_path):
-    """Both statistics-driven physical strategies (cogrouped clip-to-cell
-    shuffle; clipped-dim prefiltered native) agree with the reference
+    """Both statistics-driven physical strategies (clip-to-cell shuffle;
+    clipped-dim prefiltered native) agree with the reference
     NumPy crossing-parity kernel on the 600k-vertex fixture — the
     order-of-magnitude transport/refine parity pin the 12k coastline
     could not give. Probes concentrate near both boundaries (including

@@ -70,9 +70,9 @@ def test_clipped_cell_cover_strip_partition_equals_full():
 
 
 def test_clip_units_cover_distributed_equals_direct(spark):
-    """clipped_cover_frame through _clip_units emits exactly one row per
-    (boundary, cell) with the same packed geometry as the direct
-    per-boundary enumeration."""
+    """clipped_cell_rows through _clip_units emits exactly one row per
+    (cell, boundary) whose packed edges are the pieces' closed edge
+    lists from the direct per-boundary clipped_cell_cover."""
     coast = synthetic.generate_coastlines()
     bnd = spark.createDataFrame(
         [(int(r["boundary_id"]),
@@ -80,18 +80,22 @@ def test_clip_units_cover_distributed_equals_direct(spark):
          for _, r in coast.iterrows()],
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
     got = {}
-    for r in spatial_join.clipped_cover_frame(bnd, 2).collect():
-        key = (r["boundary_id"], r["cell"])
+    for r in spatial_join.clipped_cell_rows(bnd, 2).collect():
+        key = (r["cell"], r["boundary_id"])
         assert key not in got, f"split entry {key}"
-        got[key] = np.asarray(r["geom"])
+        got[key] = bytes(r["p"]["ebin"])
     want = {}
     for _, r in coast.iterrows():
         rings = [(rr["ring_lat"], rr["ring_lon"]) for rr in r["rings"]]
         for c, plist in _clip.clipped_cell_cover(rings, 2).items():
-            want[(int(r["boundary_id"]), c)] = _clip.pack_pieces(plist)
+            want[(c, int(r["boundary_id"]))] = np.concatenate([
+                np.column_stack([ys, np.roll(ys, -1), xs, np.roll(xs, -1),
+                                 np.full(ys.size, float(w))])
+                for ys, xs, w in plist
+            ]).astype("<f8").tobytes()
     assert set(got) == set(want)
     for k in want:
-        assert np.array_equal(got[k], want[k]), k
+        assert got[k] == want[k], k
 
 
 def test_fan_out_is_noop_at_or_above_parallelism(spark):

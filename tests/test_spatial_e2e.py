@@ -168,12 +168,6 @@ def test_all_strategies_match_numpy_oracle_on_complex_fixture(spark):
             pdf, bdf, cell_prefilter_res=3, clip_dim=True),
         "shuffle_salted": lambda: spatial_join.shuffle_pip_join(
             pdf, bdf, hot_cell_threshold=100, n_salt=4, hotness_sample_fraction=1.0),
-        # n_buckets=3 packs MANY distinct cells into every cogroup group,
-        # exercising the refine's per-cell searchsorted merge (round-6
-        # bounded-group-count change) far harder than the default
-        "shuffle_tiny_buckets": lambda: spatial_join.shuffle_pip_join(
-            pdf, bdf, res=2, hot_cell_threshold=100, n_salt=4,
-            hotness_sample_fraction=1.0, n_buckets=3),
     }
     for name, fn in strategies.items():
         pairs = [(r["image_id"], r["boundary_id"]) for r in fn().collect()]

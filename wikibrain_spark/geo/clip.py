@@ -1,5 +1,5 @@
-"""Clip-to-cell polygon covers: bounded geometry transport for the
-shuffle PIP strategy (round-5 verdict #1, fix option (a)).
+"""Clip-to-cell polygon covers: bounded per-cell geometry for the
+clipped native PIP dim (spatial_join.clipped_cell_rows).
 
 A 10^4-vertex boundary covering 10^5 grid cells must NOT ship its full
 ring set once per covered cell — that is O(cells x vertices) shuffle
@@ -269,14 +269,3 @@ def clipped_cell_cover(
                 out.setdefault(row | c, []).append((py, px, unwrap_probe))
     return out
 
-
-def pack_pieces(pieces: list) -> np.ndarray:
-    """Flat array<double> wire format, rings concatenated, each as
-    [n_pts, unwrap_probe, lats..., lons...] — the shape
-    spatial_join.unpack_rings reads (coords already in test frame)."""
-    parts = []
-    for ys, xs, wraps in pieces:
-        parts.append(np.array([float(ys.size), 1.0 if wraps else 0.0]))
-        parts.append(np.asarray(ys, dtype=np.float64))
-        parts.append(np.asarray(xs, dtype=np.float64))
-    return np.concatenate(parts) if parts else np.empty(0)

@@ -37,8 +37,9 @@ its spatial surface is point distances, wikimedia_link_issue_reporter.py
 
 The index buckets polygon bboxes into hexlite cells at a chosen resolution;
 lookup is O(1) per point + exact tests against only the bucket's polygons.
-This is the worker-side structure the broadcast spatial join ships: it is
-built once per Python worker from broadcast arrays (SURVEY.md U4).
+This is the worker-side structure of the fused geotag + PIP path
+(spatial_join.geotag_pip_fused): it is built once per Python worker from
+broadcast arrays (SURVEY.md U4).
 """
 
 from __future__ import annotations
@@ -49,6 +50,11 @@ from wikibrain_spark.geo import cells
 
 # a ring wider than half the globe is taken to cross the antimeridian
 WRAP_SPAN_DEG = 180.0
+
+# point x edge cells one crossing_parity call may materialize: its
+# float64 temporaries then stay ~64 MB each (a 2,048-point Arrow batch
+# against a 400k-vertex ring would otherwise allocate several GB)
+PARITY_CELL_BUDGET = 8_000_000
 
 
 def ring_wraps(ring_lon: np.ndarray) -> bool:
@@ -82,7 +88,7 @@ def points_in_ring(lat: np.ndarray, lon: np.ndarray, ring_lat: np.ndarray, ring_
     """Even-odd test of N points against one closed ring (M vertices).
 
     Vectorized over points x edges; memory O(N*M) per call — callers chunk
-    points (the mapInPandas batch is the chunk). Antimeridian-aware: a
+    points (see PARITY_CELL_BUDGET). Antimeridian-aware: a
     wrapping ring and the probe lons are moved to the unwrapped frame.
     """
     lat = np.asarray(lat, dtype=np.float64)
@@ -193,8 +199,8 @@ class PolygonIndex:
         """All (point_idx, poly_id) containment pairs for a batch of points.
 
         bbox prefilter then exact even-odd test over ALL rings of the
-        polygon, polygon-at-a-time (vectorized over the batch's points —
-        the batch is the Arrow batch).
+        polygon, polygon-at-a-time, vectorized over the candidate points
+        in chunks of at most PARITY_CELL_BUDGET points x ring vertices.
         """
         lat = np.asarray(lat, dtype=np.float64)
         lon = np.asarray(lon, dtype=np.float64)
@@ -209,8 +215,12 @@ class PolygonIndex:
             if not m.any():
                 continue
             idx = np.nonzero(m)[0]
-            inside = points_in_rings(lat[idx], lon[idx], self.rings[p])
-            hit = idx[inside]
+            rings = self.rings[p]
+            chunk = max(1, PARITY_CELL_BUDGET // max(1, max(r[0].size for r in rings)))
+            hit = np.concatenate([
+                c[points_in_rings(lat[c], lon[c], rings)]
+                for c in (idx[s:s + chunk] for s in range(0, idx.size, chunk))
+            ])
             if hit.size:
                 out_pt.append(hit)
                 out_poly.append(np.full(hit.size, self.poly_ids[p], dtype=np.int64))

@@ -6,33 +6,28 @@ per-ring antimeridian unwrap — see geo/pip.py's module doc for the model.
 Legacy single-ring frames (ring_lat/ring_lon arrays) are upgraded by
 normalize_rings at every operator entry point.
 
-Four physical strategies, one logical contract (SURVEY.md U4, J12-J14):
+Two operators, one logical contract (SURVEY.md U4, J12-J14):
 
-1. broadcast_pip_join — the dimension side (boundary polygons) is small
-   enough to broadcast. We broadcast the raw ring arrays once; each Python
-   worker builds the grid-bucketed PolygonIndex a single time per partition
-   (amortized inside mapInPandas), then streams Arrow batches through it.
-   This is the STRtree-in-mapInPandas pattern from the north star.
+1. Native candidate rows, the one operator behind broadcast_pip_join_native,
+   broadcast_pip_join and shuffle_pip_join: each point is joined to the
+   candidate polygons' packed geometry rows, and the compiled parity fold
+   jvm/PipFold.java is the join condition. Zero Python on the points side.
+   - broadcast_pip_join_native broadcasts the dim (auto_prefilter plans
+     it: one-row, cell-prefiltered, or clipped to each cell's window);
+     broadcast_pip_join is its cell_prefilter_res="auto" form.
+   - shuffle_pip_join builds the same (cell, polygon) rows but joins them
+     on (cell, salt) with no broadcast hint, so Catalyst and AQE pick the
+     distribution from the dim's size. Hot cells (megacity polygons) are
+     salted explicitly: the points side gets salt =
+     pmod(xxhash64(image_id), n_salt) and each hot cell's dim rows are
+     replicated n_salt times, ONLY for cells above a hotness threshold
+     measured by a sampled count pre-pass.
 
-2. geotag_pip_fused — strategy 1 fused with the geotag header parse.
-
-3. broadcast_pip_join_native — zero Python on the points side: polygons
-   as packed row data through broadcast joins into one compiled JVM
-   parity fold, jvm/PipFold.java, as the join condition (auto_prefilter
-   plans the dim).
-
-4. shuffle_pip_join — polygons too big to broadcast. Polygons are exploded
-   to their covering hexlite cells; points carry their cell; the equi-join
-   on cell co-locates candidates; an exact ring test refines. Hot cells
-   (megacity polygons) are salted: the points side gets salt =
-   pmod(hash(image_id), n_salt) and the polygon side is replicated n_salt
-   times — ONLY for cells above a hotness threshold measured by a cheap
-   count pre-pass (AQE skew-join is the backstop, but it cannot split the
-   Python refine stage, so explicit salting is load-bearing at 100 TB).
-
-At 100 TB the join key is (cell_r{res}); the points side arrives already
-partitioned by cell prefix from the geotag stage, so the shuffle moves
-only the exploded polygon side when bucketing is aligned.
+2. geotag_pip_fused, the one Python path: the geotag header parse fused
+   with a grid-bucketed PolygonIndex (geo/pip.py) in one mapInPandas,
+   built once per partition from a driver-side broadcast of the rings.
+   It stays because its DataFrame builds faster on the driver than the
+   native plan's (ROADMAP direction 3).
 """
 
 from __future__ import annotations
@@ -63,46 +58,8 @@ _INDEX_MAX_RING_CELLS = 4096.0  # _auto_index_res: worst ring's cover
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
 RINGS_TYPE = "array<struct<ring_lat: array<double>, ring_lon: array<double>, is_hole: boolean>>"
-# the hit rows the Python PIP strategies emit
+# the hit rows geotag_pip_fused emits
 _PIP_SCHEMA = "image_id string, lat double, lon double, boundary_id long"
-
-
-def pack_rings_col(rings):
-    """Flat array<double> wire format for a multipolygon: rings
-    concatenated, each as [n_pts, unwrap_probe, lats..., lons...], with
-    lons stored in the ring's TEST FRAME (unwrapped for dateline-crossing
-    rings) and unwrap_probe saying whether probe lons shift +360 when
-    negative. Same format geo/clip.py pack_pieces emits for clipped
-    covers, so the refine kernel is shared.
-
-    The cogrouped shuffle refine ships geometry in this format because the
-    cogroup Arrow deserializer in this pyspark/pyarrow combination
-    segfaults on any doubly-nested column (array<struct<array…>> and
-    array<array<double>> both crash the worker in arrow_to_pandas; flat
-    array<double> is fine) — and a flat double vector is also the cheapest
-    transport Arrow offers (no offsets-of-offsets, no struct dispatch).
-    Native expressions only; the per-ring transform iterates rings, not
-    vertices — the vertex arrays concat through JVM-side."""
-    def one(r):
-        w = _ring_wraps_col(r["ring_lon"])
-        return F.concat(
-            F.array(F.size(r["ring_lat"]).cast("double"), w.cast("double")),
-            r["ring_lat"], _unwrap_lon_col(r["ring_lon"], w),
-        )
-    return F.flatten(F.transform(rings, one))
-
-
-def unpack_rings(packed) -> list:
-    """Inverse of pack_rings_col / clip.pack_pieces:
-    → [(lat_arr, lon_arr_test_frame, unwrap_probe), ...]."""
-    a = np.asarray(packed, dtype=np.float64)
-    o, rings = 0, []
-    while o < a.size:
-        n = int(a[o])
-        unwrap = a[o + 1] != 0.0
-        rings.append((a[o + 2:o + 2 + n], a[o + 2 + n:o + 2 + 2 * n], unwrap))
-        o += 2 + 2 * n
-    return rings
 
 
 def normalize_rings(boundaries: DataFrame) -> DataFrame:
@@ -174,8 +131,8 @@ def _auto_index_res(rings_per_poly) -> int:
 def _shuffle_partitions(spark: SparkSession) -> int:
     """spark.sql.shuffle.partitions as an int, falling back to the
     cluster's default parallelism when the conf is non-numeric ("auto"
-    on AQE-managed deployments, e.g. Databricks) — sizing a cogroup must
-    never raise over a perf knob's spelling."""
+    on AQE-managed deployments, e.g. Databricks) — sizing a repartition
+    must never raise over a perf knob's spelling."""
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (ValueError, TypeError):
@@ -184,7 +141,7 @@ def _shuffle_partitions(spark: SparkSession) -> int:
 
 # LRU-bounded memo of _cover_stats results. Keyed by the plan's
 # semanticHash: a boundary snapshot is treated as IMMUTABLE for the
-# session (documented contract — same assumption the broadcast
+# session (documented contract — same assumption geotag_pip_fused's
 # PolygonIndex pull makes). Every consumer is a perf knob, so a stale
 # hit can never change output rows; the bound keeps a long-lived session
 # iterating over many snapshots from growing the memo forever, and
@@ -213,13 +170,33 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     S_e_ab/step^2 + S_e_sum/step + S_e_n with S_e_* = sum_poly(edges *
     sum_outer_ring(ab | a+b | 1)) — also linear, captured in the same
     pass. Memoized per logical plan (semanticHash): a boundary snapshot
-    is treated as immutable for the session (the same assumption the
-    broadcast PolygonIndex pull makes); every consumer is a perf knob, so
-    a stale hit can never change output rows."""
+    is treated as immutable for the session (the same assumption
+    geotag_pip_fused's PolygonIndex pull makes); every consumer is a perf
+    knob, so a stale hit can never change output rows.
+
+    The same pass counts the polygon rows per boundary_id (ring 0 of
+    each row) and raises ValueError naming a repeated id: every native
+    dim keys its geometry rows by boundary_id, so a repeated id would
+    pair a point with it more than once."""
     key = boundaries.semanticHash()
-    if key in _COVER_STATS_CACHE:
+    stats = _COVER_STATS_CACHE.get(key)
+    if stats is None:
+        stats = _measure_cover_stats(boundaries)
+        _COVER_STATS_CACHE[key] = stats
+        if len(_COVER_STATS_CACHE) > _COVER_STATS_CACHE_MAX:
+            _COVER_STATS_CACHE.popitem(last=False)
+    else:
         _COVER_STATS_CACHE.move_to_end(key)
-        return _COVER_STATS_CACHE[key]
+    if (stats["id_rows"] or 0) > 1:
+        raise ValueError(
+            f"boundary_id {stats['dup_id']} names {stats['id_rows']} polygon rows; "
+            "boundary_id must be unique"
+        )
+    return stats
+
+
+def _measure_cover_stats(boundaries: DataFrame) -> dict:
+    """The one aggregate job behind _cover_stats."""
     r = F.col("r")
     # round 8: stage the per-ring bbox scalars in one projection so the
     # unwrap transform runs at most twice per ring (u_min/u_max, gated on
@@ -230,9 +207,10 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     u = F.transform(r["ring_lon"], lambda x: F.when(x < 0, x + F.lit(360.0)).otherwise(x))
     staged = (
         normalize_rings(boundaries)
-        .select("boundary_id", F.explode("rings").alias("r"))
+        .select("boundary_id", F.posexplode("rings").alias("pos", "r"))
         .select(
             "boundary_id",
+            (F.col("pos") == 0).cast("long").alias("first"),
             r["is_hole"].alias("is_hole"),
             F.size(r["ring_lat"]).cast("double").alias("edges"),
             (F.array_max(r["ring_lat"]) - F.array_min(r["ring_lat"])).alias("a"),
@@ -258,6 +236,7 @@ def _cover_stats(boundaries: DataFrame) -> dict:
             F.when(~F.col("is_hole"), a * b).alias("ab_or_null"),
             F.when(~F.col("is_hole"), a + b).alias("absum_or_null"),
             F.col("edges").alias("edges"),
+            "first",
         )
         .groupBy("boundary_id")
         .agg(
@@ -267,6 +246,7 @@ def _cover_stats(boundaries: DataFrame) -> dict:
             F.max("ab_or_null").alias("p_max_ab"),
             F.max("absum_or_null").alias("p_max_sum"),
             F.sum("edges").alias("p_edges"),
+            F.sum("first").alias("p_rows"),
         )
     )
     row = per_poly.agg(
@@ -278,12 +258,10 @@ def _cover_stats(boundaries: DataFrame) -> dict:
         F.sum(F.col("p_edges") * F.col("p_ab")).alias("s_e_ab"),
         F.sum(F.col("p_edges") * F.col("p_sum")).alias("s_e_sum"),
         F.sum(F.col("p_edges") * F.col("p_n")).alias("s_e_n"),
+        F.max("p_rows").alias("id_rows"),
+        F.max_by("boundary_id", "p_rows").alias("dup_id"),
     ).collect()[0]
-    stats = dict(row.asDict())
-    _COVER_STATS_CACHE[key] = stats
-    if len(_COVER_STATS_CACHE) > _COVER_STATS_CACHE_MAX:
-        _COVER_STATS_CACHE.popitem(last=False)
-    return stats
+    return dict(row.asDict())
 
 
 def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, float]:
@@ -291,12 +269,11 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
     for an UNCLIPPED cover of `boundaries` at `res`, from the memoized
     _cover_stats sufficient statistics. The cover count is
     sum_ring((a/step+1)(b/step+1)) expanded to the linear form; the
-    replication count weights each ring's cover by its edge count —
-    exactly what the unclipped shuffle cover ships, and the edges the
-    unclipped native dim's fold pairs with covered cells. Both
+    replication count weights each ring's cover by its edge count — the
+    edges the unclipped dim's fold pairs with covered cells. Both
     auto_prefilter's clip_dim flip and shuffle_pip_join's clip_cover
-    flip + n_buckets sizing read THIS function, so the two strategies
-    make one consistent statistics-driven decision."""
+    flip read THIS function, so the two strategies make one consistent
+    statistics-driven decision."""
     s = _cover_stats(boundaries)
     if not s["n_outer"]:
         return 0.0, 0.0
@@ -307,12 +284,11 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
 
 
 def _auto_cover_res(boundaries: DataFrame) -> int:
-    """_auto_index_res for the SHUFFLE strategy: analogous gates (mean
-    bbox cover <= _MAX_MEAN_CELLS per outer ring, worst ring <=
-    _MAX_RING_CELLS) but computed from a native aggregate of per-ring bbox
-    spans — the shuffle side must never collect the polygon geometry to
-    the driver (its dim can be big; that is the strategy's reason to
-    exist). The cover-count formula
+    """Cover resolution of the native candidate-row dims: gates on the
+    mean bbox cover (<= _MAX_MEAN_CELLS per outer ring) and the worst
+    ring's (<= _MAX_RING_CELLS), computed from a native aggregate of
+    per-ring bbox spans — never a driver collect of the polygon
+    geometry (the dim can be big). The cover-count formula
     (a/step+1)(b/step+1) = ab/step^2 + (a+b)/step + 1 is linear in
     (ab, a+b), so mean needs only E[ab], E[a+b]; the max gate uses
     max(ab), max(a+b) — an upper bound on the worst ring's cover,
@@ -320,12 +296,10 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     rows collected, memoized per logical plan (semanticHash) so repeated
     joins against the same boundary snapshot pay it once per session
     (treats a boundary snapshot as immutable for the session — the same
-    assumption the broadcast strategy's PolygonIndex pull makes; res is a
+    assumption geotag_pip_fused's PolygonIndex pull makes; res is a
     perf knob, so a stale hit can never change the output rows).
 
-    What the gates bound (round 6, bucketed cogroup): group count no
-    longer scales with the cover (see shuffle_pip_join's BOUNDED GROUP
-    COUNT note), so the res cost model is (a) the clip prepass —
+    What the gates bound: (a) the clip prepass —
     geo/clip.py clipped_cell_cover clips each ring to all its strips and
     each strip piece to all its columns in vectorized passes, measured
     serial on a 4-core VM at ~0.8 us per vertex plus ~6 us per occupied
@@ -339,7 +313,7 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     prepass allows rather than as coarse as correctness allows.
 
     VERTEX-HEAVY relaxation (round 7, from the 600k-vertex megacoast
-    row): the refine visits O(edges-in-the-probe's-cell) per point, and
+    row): the fold visits O(edges-in-the-probe's-cell) per point, and
     boundary-cell edge density falls ~linearly with step (the ring's
     edges spread over ~perimeter/step boundary cells), so for a
     high-vertex snapshot ONE step of extra resolution cuts the dominant
@@ -347,7 +321,7 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     rows, clip prepass) stay seconds even at 8x the gate. When the mean
     edge count per polygon exceeds _HEAVY_EDGES_PER_POLY the mean gate
     widens 8x (the max gate — a single worst-task bound — never moves).
-    Measured on megacoast (res 1 -> 2): 20M-point refine 3.5x faster,
+    Measured on megacoast (res 1 -> 2): 20M-point join 3.5x faster,
     prepass +2 s once per snapshot. Low-vertex snapshots are unaffected
     (coastline mean ~3.8k edges/poly keeps the strict gate)."""
     s = _cover_stats(boundaries)
@@ -387,48 +361,11 @@ def auto_prefilter(boundaries: DataFrame) -> tuple[int, bool]:
     return res, replicated > _CLIP_THRESHOLD_EDGES
 
 
-def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int | None = None) -> DataFrame:
-    """points(image_id, lat, lon, ...) x boundaries -> (image_id, boundary_id).
-
-    The polygon set is collected on the driver (it is the broadcast dim) and
-    shipped via a Spark broadcast variable; workers rebuild the index once.
-    index_res=None (default) sizes the bucket grid to the polygon extents
-    (see _auto_index_res)."""
-    pip_batches = _index_pip_fn(
-        points.sparkSession, boundaries, index_res,
-        lambda b: (b["lat"].to_numpy(), b["lon"].to_numpy()),
-    )
-    # lat/lon ride along so downstream tile encoding needs no re-join
-    return points.select("image_id", "lat", "lon").mapInPandas(pip_batches, schema=_PIP_SCHEMA)
-
-
-def _index_pip_fn(spark: SparkSession, boundaries: DataFrame, index_res: int | None, coords):
-    """The mapInPandas function of the Python broadcast strategies: the
-    polygon rings are collected on the driver and broadcast once, each
-    partition builds the PolygonIndex once, and every batch's points
-    (coords(batch) -> lat, lon arrays) come out as (image_id, lat, lon,
-    boundary_id) hit rows."""
-    ids, rings = _collect_polygon_rings(boundaries)
-    if index_res is None:
-        index_res = _auto_index_res(rings)
-    bc = spark.sparkContext.broadcast((ids, rings, index_res))
-
-    def pip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p_ids, p_rings, res = bc.value
-        index = pip.PolygonIndex(p_ids, rings=p_rings, res=res)  # once per partition
-        for b in batches:
-            lat, lon = coords(b)
-            pt_idx, poly_id = index.query_batch(lat, lon)
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"].to_numpy()[pt_idx],
-                    "lat": lat[pt_idx],
-                    "lon": lon[pt_idx],
-                    "boundary_id": poly_id,
-                }
-            )
-
-    return pip_batches
+def broadcast_pip_join(points: DataFrame, boundaries: DataFrame) -> DataFrame:
+    """points(image_id, lat, lon, ...) x boundaries -> (image_id, lat, lon,
+    boundary_id): broadcast_pip_join_native with the dim planned by
+    auto_prefilter."""
+    return broadcast_pip_join_native(points, boundaries, cell_prefilter_res="auto")
 
 
 def _ring_wraps_col(ring_lon):
@@ -532,13 +469,10 @@ def broadcast_pip_join_native(
     """
     if cell_prefilter_res == "auto":
         cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
-    jvm.register(points.sparkSession)
     lat, lon = F.col("lat"), F.col("lon")
 
-    # each branch builds candidate rows (point, boundary_id, p); Spark pushes
-    # the shared fold filter below into the join condition. The tail reads
-    # the dim's boundary_id column, not p.bid, so the broadcast ships only
-    # the keys, p.bbin and p.ebin
+    # each branch builds candidate rows (point, boundary_id, p) for the
+    # shared fold tail
     if cell_prefilter_res is None:
         cand = points.crossJoin(F.broadcast(polygon_structs(boundaries)))
     elif clip_dim:
@@ -558,10 +492,21 @@ def broadcast_pip_join_native(
             .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
             .join(F.broadcast(polygon_structs(boundaries)), "boundary_id")
         )
+    return _fold_candidates(cand, extra_cols)
+
+
+def _fold_candidates(cand: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The tail every native PIP plan shares: keep the candidate rows
+    (point, boundary_id, p) whose point the compiled fold puts inside p,
+    as (image_id, lat, lon, *extra_cols, boundary_id). Spark pushes the
+    fold filter into the candidate join's condition. The tail reads the
+    dim's boundary_id column, not p.bid, so the dim side ships only the
+    keys, p.bbin and p.ebin."""
+    jvm.register(cand.sparkSession)
     p = F.col("p")
-    return cand.where(F.call_function(jvm.PIP_FOLD, lat, lon, p["bbin"], p["ebin"])).select(
-        "image_id", "lat", "lon", *extra_cols, "boundary_id"
-    )
+    return cand.where(
+        F.call_function(jvm.PIP_FOLD, F.col("lat"), F.col("lon"), p["bbin"], p["ebin"])
+    ).select("image_id", "lat", "lon", *extra_cols, "boundary_id")
 
 
 def polygon_structs(boundaries: DataFrame) -> DataFrame:
@@ -581,10 +526,11 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     array<struct<y0, x0, y1, x1, w>>, for size(p.edges) counters; the
     join reads only bbin and ebin, so Spark prunes it from the broadcast.
 
-    boundary_id must be unique: the prefiltered native join attaches
+    boundary_id must be unique: the prefiltered native joins attach
     structs by boundary_id, so a duplicated id attaches both polygons'
     structs to each of their cover rows and a point can come out paired
-    with that id more than once.
+    with that id more than once. _cover_stats, which every auto-planned
+    join and shuffle_pip_join reads, raises ValueError on one.
 
     Round 8: the per-ring test-frame arrays are STAGED once
     (_staged_rings_col, a separate projection so CollapseProject cannot
@@ -856,42 +802,6 @@ def _list_array(lengths: list, values):
     return pa.ListArray.from_arrays(pa.array(off), values)
 
 
-def clipped_cover_frame(boundaries: DataFrame, res: int) -> DataFrame:
-    """(boundary_id, cell, geom array<double>): the clip-to-cell cover the
-    shuffle strategy cogroups against — each covered cell carries only the
-    polygon geometry CLIPPED to its window, packed flat for the Arrow
-    channel (geo/clip.py pack_pieces wire format). Extracted from
-    shuffle_pip_join so the scaling harness can build its
-    cogroup-transport probe from the IDENTICAL cover side (same prepass,
-    same shuffle, parity kernel removed)."""
-    import pyarrow as pa
-
-    from wikibrain_spark.geo import clip as _clip
-
-    def cover_fn(batches):
-        for batch in batches:
-            bids, ids, packs = [], [], []
-            for bid, pieces in _unit_covers(batch, res):
-                for c, plist in pieces.items():
-                    bids.append(bid)
-                    ids.append(c)
-                    packs.append(_clip.pack_pieces(plist))
-            if not ids:
-                continue
-            geom = np.concatenate(packs)
-            yield pa.RecordBatch.from_arrays([
-                pa.array(bids, pa.int64()),
-                pa.array(ids, pa.int64()),
-                _list_array([g.size for g in packs], pa.array(geom, pa.float64())),
-            ], names=["boundary_id", "cell", "geom"])
-
-    # strip-aligned parallel prepass (round 8, see _clip_units): units are
-    # disjoint in (cell), so the union of per-unit covers IS the cover
-    return _clip_units(boundaries, res).mapInArrow(
-        cover_fn, schema="boundary_id long, cell long, geom array<double>"
-    )
-
-
 def polygon_compactness(boundaries: DataFrame) -> DataFrame:
     """(boundary_id, area_km2, perimeter_km, polsby_popper): the standard
     compactness QA signal 4*pi*A/P^2 (1.0 = a circle; gerrymander-style
@@ -961,9 +871,9 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
     point's fold visits only LOCAL edges.
 
     The build is a mapInArrow over the polygon DIM's clip units — once
-    per snapshot, embarrassingly parallel, the same prepass position as
-    the shuffle strategy's clip cover. The POINTS side stays zero-Python and
-    zero-shuffle (unchanged broadcast hash equi-join + compiled fold).
+    per snapshot, embarrassingly parallel. The POINTS side stays
+    zero-Python (an equi-join on cell + compiled fold: broadcast in
+    broadcast_pip_join_native, on (cell, salt) in shuffle_pip_join).
 
     bbin: one bbox per probe FRAME over the entry's pieces (raw and
     unwrapped pieces can coexist in one cell for a Fiji-style
@@ -1068,9 +978,7 @@ def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
     return clipped_cell_rows(boundaries, res).groupBy("cell").agg(F.collect_list("p").alias("polys"))
 
 
-def polygon_cover(
-    boundaries: DataFrame, res: int = COVER_RES, with_rings: bool = False
-) -> DataFrame:
+def polygon_cover(boundaries: DataFrame, res: int = COVER_RES) -> DataFrame:
     """Explode each polygon to its covering cells at `res` (bbox cover of
     every non-hole ring; holes sit inside an outer so they add no cells).
     This is the scale-side pre-pass; at 10^12 rows it runs once per polygon
@@ -1168,13 +1076,8 @@ def polygon_cover(
         ),
         ring_cells,
     )))
-    # with_rings carries the geometry THROUGH the explode (narrow op) so a
-    # consumer needing (cell, rings) rows pays no attach join — the shuffle
-    # PIP strategy keys its cogroup on this directly (one rings copy per
-    # covered cell, which is exactly its transport bound anyway)
-    keep = ["boundary_id", "rings"] if with_rings else ["boundary_id"]
     return normalize_rings(boundaries).select(
-        *keep, F.explode(covered).alias("cell")
+        "boundary_id", F.explode(covered).alias("cell")
     )
 
 
@@ -1186,11 +1089,25 @@ def shuffle_pip_join(
     n_salt: int = 8,
     hotness_sample_fraction: float = 0.01,
     clip_cover: bool | str = "auto",
-    n_buckets: int | None = None,
 ) -> DataFrame:
-    """Shuffle strategy with explicit hot-cell salting.
+    """Shuffled native PIP with explicit hot-cell salting.
 
-    points must carry (image_id, lat, lon). Returns (image_id, boundary_id).
+    points must carry (image_id, lat, lon). Returns (image_id, lat, lon,
+    boundary_id).
+
+    The same candidate rows and compiled fold as broadcast_pip_join_native,
+    distributed by (cell, salt) instead of a broadcast hint: each point
+    carries its hexlite cell at `res` and a salt; the dim is one row per
+    (cell, polygon) carrying the polygon's packed geometry; the two sides
+    equi-join on (cell, salt) and the fold (jvm/PipFold.java) is the join
+    condition. There is no hint, so Catalyst and AQE pick broadcast or
+    shuffled from the dim's size. Zero Python on the points side. Pairs
+    are unique by construction: a point has one (cell, salt), and the dim
+    holds each (cell, polygon) once per salt (boundary_id must be unique;
+    a repeated id raises ValueError).
+
+    res=None resolves the cover resolution from the _cover_stats pass
+    (_auto_cover_res, one tiny agg job memoized per boundary snapshot).
 
     PROBE-SIDE-ONLY salting invariant: hotness is measured on the points
     side only, never on the polygon-cover side. Per-cell work is
@@ -1199,82 +1116,24 @@ def shuffle_pip_join(
     points-cold cell does little total work — so measuring the cover side
     would pay a pre-pass over the exploded cover frame to find cells that
     never bottleneck a task. Pinned by the build-hot/probe-cold fixture in
-    test_pipeline_ops.
-
-    GROUP-ONCE GEOMETRY TRANSPORT (round-5 verdict #1): the refine stage
-    is a COGROUPED applyInPandas — the points of a group and the geometry
-    of the polygons covering that group's cells arrive as two separate
-    frames, so each polygon's rings cross the shuffle and the Arrow
-    channel ONCE PER COVERED CELL, never once per candidate pair. The
-    previous formulation joined rings onto the candidate output, which
-    shipped a full copy of the boundary's multipolygon on EVERY
-    point x boundary row: a 10^4-vertex coastline in a 50k-point hot cell
-    serialized ~5x10^8 float pairs through one worker's Arrow channel.
-    Now that same cell ships 50k narrow point rows + one 10^4-vertex
-    geometry. The output needs NO dedup: a point belongs to exactly one
-    (cell, salt) pair and the cover emits each (boundary, cell) once, so
-    (image_id, boundary_id) pairs are unique by construction (same proof
-    as within_distance_join; plan pinned in test_plan_audit).
-
-    BOUNDED GROUP COUNT (round 6): the cogroup key is (bucket, salt)
-    with bucket = pmod(xxhash64(cell), n_buckets), NOT the raw cell.
-    Spark's cogrouped applyInPandas pays ~2-3 ms of framework overhead
-    per GROUP (per-group Arrow batch + pandas materialization, measured
-    round 6), so keying by cell makes group count — and therefore a hard
-    floor on the stage's CPU — scale with the COVER (O(cells), i.e. with
-    resolution), reaching minutes at res >= 3 on a continent-bbox dim.
-    Bucketing caps groups at ~n_buckets x n_salt independent of
-    resolution; inside a group the per-cell candidate semantics are
-    recovered with a sorted searchsorted merge (vectorized, zero Python
-    per row). Both cogroup inputs are explicitly
-    repartition(N, bucket, salt)-ed: the exchanges satisfy the cogroup's
-    required clustering (no extra shuffle — plan-pinned) and the
-    user-specified N is exempt from AQE partition coalescing, which
-    otherwise folds this deliberately-light shuffle into ONE task and
-    serializes every group behind a single Python worker (the round-3
-    AQE-coalesce trap, re-measured here: 16k groups = 38 s serial).
-    n_buckets defaults to 16x the session's shuffle partitions — groups
-    stay ~10-100x finer than tasks for even scheduling while the
-    per-group overhead stays amortized; scale it with the cluster the
-    same way shuffle partitions scale.
-
-    Memory: applyInPandas materializes each cogroup whole (it does not
-    stream Arrow batches). A group holds ~covered_points/n_buckets rows
-    plus any one hot cell's 1/n_salt share, so hot_cell_threshold still
-    bounds the skew term — a cell above it splits into n_salt groups.
+    test_pipeline_ops. A cell whose sampled point count passes
+    hot_cell_threshold gets salt = pmod(xxhash64(image_id), n_salt) on its
+    points and n_salt copies of its dim rows; other cells use salt 0.
     Points in cells no polygon covers are dropped by the covered-cells
-    semi-filter before the shuffle.
+    semi-filter before the join.
 
-    CLIP-TO-CELL COVER (clip_cover="auto", the default): once-per-cell
-    transport still duplicates the FULL geometry per covered cell —
-    O(cells x vertices) shuffle volume, ~10 GB for one 10^4-vertex
-    continental boundary at res 4. With clipping, the cover prepass
-    (a mapInArrow over the polygon DIM — once per snapshot,
-    embarrassingly parallel per polygon) ships each cell only the
-    polygon clipped to that cell's window: O(vertices + cells) total,
-    and the refine folds over a handful of LOCAL edges instead of the
-    whole ring (geo/clip.py has the parity-preservation argument).
-    "auto" flips clipping on exactly when the statistics say the
-    duplication it removes is worth a Python prepass: the unclipped
-    cover would replicate sum_poly(edges x cover) edge coordinates
-    through the shuffle — linear in the _cover_stats sufficient
-    statistics, the same decision auto_prefilter makes for clip_dim —
-    and below _CLIP_THRESHOLD_EDGES the zero-extra-Python native cover
-    wins outright (a 40-vertex rectangle set replicates ~10^5 doubles:
-    clipping that costs a whole extra Spark job to save megabytes,
-    measured as the regressed round-6 bench row). Booleans force
-    either path.
-
-    n_buckets=None sizes the cogroup from the same statistics:
-    ~4 groups per task (hash-LLN keeps per-bucket cell counts
-    concentrated once covered cells >> buckets, so finer bucketing
-    buys little balancing while its ~2-3 ms/group Arrow overhead is a
-    hard floor on the stage — 512 groups cost ~1.2 s of pure framework
-    time on a fixture whose total refine work is milliseconds), floored
-    at one group per task and never more buckets than the estimated
-    covered-cell count (beyond that buckets are provably empty). Skew
-    is the salt's job, not the bucket count's: a hot cell splits into
-    n_salt groups regardless of how many buckets there are.
+    CLIP-TO-CELL DIM (clip_cover="auto", the default): the unclipped dim
+    (polygon_cover joined to polygon_structs on boundary_id) carries each
+    polygon's FULL edge list on every covered cell, O(cells x vertices),
+    and every candidate folds over all of it. clipped_cell_rows carries
+    only the polygon clipped to the cell's window: O(vertices + cells)
+    in total, built by a once-per-snapshot mapInArrow prepass over the
+    polygon dim, and each fold visits a handful of LOCAL edges
+    (geo/clip.py has the parity-preservation argument). "auto" clips
+    exactly when the unclipped dim would pair more than
+    _CLIP_THRESHOLD_EDGES edges with cells — the same statistics and
+    threshold auto_prefilter uses for clip_dim. Booleans force either
+    path.
     """
     from wikibrain_spark.operators.knn import _sampled_hot_cells
 
@@ -1282,14 +1141,11 @@ def shuffle_pip_join(
         raise ValueError(
             f"clip_cover must be a bool or the string 'auto', got {clip_cover!r}"
         )  # round-7 ADVICE: any other string silently enabled clipping via truthiness
+    _cover_stats(boundaries)  # raises on a repeated boundary_id
     if res is None:
         res = _auto_cover_res(boundaries)
-    spark = points.sparkSession
-    if clip_cover == "auto" or n_buckets is None:
-        # memoized; _auto_cover_res already paid the stats job
-        cover_est, replicated = _replication_estimates(boundaries, res)
-        if clip_cover == "auto":
-            clip_cover = replicated > _CLIP_THRESHOLD_EDGES
+    if clip_cover == "auto":
+        clip_cover = _replication_estimates(boundaries, res)[1] > _CLIP_THRESHOLD_EDGES
     pts = points.select(
         "image_id", "lat", "lon",
         cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias("cell"),
@@ -1303,34 +1159,18 @@ def shuffle_pip_join(
     hot = _sampled_hot_cells(pts, "cell", hot_cell_threshold, n_salt, hotness_sample_fraction)
 
     if clip_cover:
-        cover = clipped_cover_frame(boundaries, res)
+        dim = clipped_cell_rows(boundaries, res)
     else:
-        # full geometry carried through the explode — no attach join;
-        # packed flat for the cogroup Arrow channel (see pack_rings_col)
-        cover = (
-            polygon_cover(boundaries, res, with_rings=True)
-            .withColumn("geom", pack_rings_col(F.col("rings")))
-            .drop("rings")
-        )
-    n_part = _shuffle_partitions(spark)
-    if n_buckets is None:
-        n_buckets = max(n_part, min(4 * n_part, int(cover_est) + 1))
-    bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(n_buckets)).cast("int")
-
-    # replicate polygon cover rows for hot cells: salt 0..n_salt-1. The
-    # geometry rides this POLYGON side of the cogroup: one row per
-    # (boundary, covered cell, salt) — bounded by the cover, not by points
-    polys_salted = (
-        cover.join(F.broadcast(hot), "cell", "left")
+        dim = polygon_cover(boundaries, res).join(polygon_structs(boundaries), "boundary_id")
+    # replicate the dim rows of hot cells: salt 0..n_salt-1
+    dim_salted = (
+        dim.join(F.broadcast(hot), "cell", "left")
         .withColumn("salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1)))
         .drop("n_salt")
-        .withColumn("bucket", bucket)
     )
     # COVERED-CELLS semi-filter: points in cells no polygon's bbox covers
-    # can never match — drop them BEFORE the shuffle and the cogroup, so
-    # neither the exchange nor the per-group Python overhead is paid for
-    # the (at sparse densities, vast) uncovered majority. The filter uses
-    # the NATIVE bbox cover enumeration (a superset of the clipped cover —
+    # can never match — drop them BEFORE the shuffle. The filter uses the
+    # NATIVE bbox cover enumeration (a superset of the clipped cover —
     # clipping only ever removes cells), so it adds zero Python and no
     # second run of the clip prepass; left_semi needs no distinct, so no
     # aggregate enters the plan.
@@ -1345,91 +1185,42 @@ def shuffle_pip_join(
             ),
         )
         .drop("n_salt")
-        .withColumn("bucket", bucket)
     )
-
-    def refine(pts_b: pd.DataFrame, polys_b: pd.DataFrame) -> pd.DataFrame:
-        if pts_b.empty or polys_b.empty:
-            return pd.DataFrame(
-                {"image_id": pd.Series(dtype=object),
-                 "lat": pd.Series(dtype=np.float64),
-                 "lon": pd.Series(dtype=np.float64),
-                 "boundary_id": pd.Series(dtype=np.int64)}
-            )
-        # per-cell merge inside the bucket: sort the group's points by
-        # cell once, then each cover row selects ITS cell's contiguous
-        # point range with two searchsorted probes — the candidate set is
-        # identical to a per-cell cogroup, with O(n log n) setup instead
-        # of per-cell group overhead
-        cell_arr = pts_b["cell"].to_numpy()
-        order = np.argsort(cell_arr, kind="stable")
-        cs = cell_arr[order]
-        lat = pts_b["lat"].to_numpy()[order]
-        lon = pts_b["lon"].to_numpy()[order]
-        ids = pts_b["image_id"].to_numpy()[order]
-        out = []
-        lon360 = np.where(lon < 0.0, lon + 360.0, lon)
-        # each cover row tests its cell's points vectorized. Packed coords
-        # are already in each ring's test frame, so parity uses the
-        # EXPLICIT-frame kernel (the heuristic would misread clipped
-        # fragments). crossing_parity materializes points x edges — chunk
-        # the point axis so a hot (threshold-sized) cell against a
-        # 10^4-vertex ring stays ~8M cells per slab, not N*M gigabytes
-        for bid, pcell, packed in zip(
-            polys_b["boundary_id"].to_numpy(), polys_b["cell"].to_numpy(), polys_b["geom"]
-        ):
-            lo_i = int(np.searchsorted(cs, pcell, "left"))
-            hi_i = int(np.searchsorted(cs, pcell, "right"))
-            if lo_i == hi_i:
-                continue
-            rings = unpack_rings(packed)
-            n_edges = sum(len(r[0]) for r in rings)
-            chunk = max(1024, 8_000_000 // max(1, n_edges))
-            hits = []
-            for s in range(lo_i, hi_i, chunk):
-                e = min(s + chunk, hi_i)
-                inside = np.zeros(e - s, dtype=bool)
-                for ys, xs, unwrap in rings:
-                    inside ^= pip.crossing_parity(
-                        lat[s:e], (lon360 if unwrap else lon)[s:e], ys, xs,
-                    )
-                hits.append(np.nonzero(inside)[0] + s)
-            idx = np.concatenate(hits) if hits else np.empty(0, dtype=np.int64)
-            if idx.size:
-                out.append(pd.DataFrame(
-                    {"image_id": ids[idx],
-                     "lat": lat[idx], "lon": lon[idx],
-                     "boundary_id": np.full(idx.size, bid, dtype=np.int64)}
-                ))
-        if not out:
-            return refine(pts_b.iloc[:0], polys_b.iloc[:0])
-        return pd.concat(out, ignore_index=True)
-
-    return (
-        pts_salted.repartition(n_part, "bucket", "salt")
-        .groupBy("bucket", "salt")
-        .cogroup(polys_salted.repartition(n_part, "bucket", "salt").groupBy("bucket", "salt"))
-        .applyInPandas(refine, schema=_PIP_SCHEMA)
-    )
+    return _fold_candidates(pts_salted.join(dim_salted, ["cell", "salt"]))
 
 
-def geotag_pip_fused(images: DataFrame, boundaries: DataFrame, index_res: int | None = None) -> DataFrame:
+def geotag_pip_fused(images: DataFrame, boundaries: DataFrame) -> DataFrame:
     """Fused geotag-extract + PIP in ONE mapInPandas: images (image_id,
     bytes) -> (image_id, lat, lon, boundary_id).
 
-    The composable path (extract_geotags -> broadcast_pip_join) crosses the
-    JVM<->Python Arrow channel twice per row; at full width that doubles the
-    Python-worker count per task and the Arrow (de)serialization. Fusing
-    keeps one worker per task and reads the binary column exactly once —
-    use for the hot path when no intermediate columns are needed.
-    index_res=None sizes the bucket grid to the polygon extents.
+    The polygon rings are collected on the driver and broadcast once;
+    each partition builds the PolygonIndex once (bucket grid sized to the
+    polygon extents, _auto_index_res), and each Arrow batch's headers are
+    parsed and probed in the same Python worker, which reads the binary
+    column exactly once. The Python path that remains: its DataFrame
+    builds faster on the driver than the native plan's (ROADMAP
+    direction 3).
     """
     from wikibrain_spark import codecs
 
-    fused = _index_pip_fn(
-        images.sparkSession, boundaries, index_res,
-        lambda b: codecs.extract_geotags_batch(b["hdr"].tolist()),
-    )
+    ids, rings = _collect_polygon_rings(boundaries)
+    bc = images.sparkSession.sparkContext.broadcast((ids, rings, _auto_index_res(rings)))
+
+    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        p_ids, p_rings, res = bc.value
+        index = pip.PolygonIndex(p_ids, rings=p_rings, res=res)  # once per partition
+        for b in batches:
+            lat, lon = codecs.extract_geotags_batch(b["hdr"].tolist())
+            pt_idx, poly_id = index.query_batch(lat, lon)
+            yield pd.DataFrame(
+                {
+                    "image_id": b["image_id"].to_numpy()[pt_idx],
+                    "lat": lat[pt_idx],
+                    "lon": lon[pt_idx],
+                    "boundary_id": poly_id,
+                }
+            )
+
     # header-only projection before the Arrow hop (see extract_geotags)
     return images.select(
         "image_id", F.substring("bytes", 1, codecs.HEADER_SIZE).alias("hdr")
@@ -1445,8 +1236,11 @@ def tile_assignments(
 
     Returns (image_id, cell_r{res}, boundary_id, qid, wikipedia).
     strategy: 'broadcast' | 'shuffle' (points = geotagged rows), or
-    'fused' | 'native' (points = the raw images DataFrame; 'fused' makes
-    one Python hop total, 'native' none). Any other value raises.
+    'fused' | 'native' (points = the raw images DataFrame). 'broadcast'
+    (broadcast_pip_join), 'shuffle' (shuffle_pip_join) and 'native' run
+    the native candidate-row operator with no Python on the points side;
+    'fused' (geotag_pip_fused) is the one Python path, a single Python
+    hop per row. Any other value raises.
 
     native_prefilter_res: the native strategy's cell-prefilter resolution.
     Since round 5 the flagship native path DEFAULTS to the cell-prefiltered
