@@ -226,3 +226,20 @@ def test_clip_units_ship_megacoast_about_once(spark, tmp_path):
                     lambda acc, r: acc + F.size(r["ring_lat"])).alias("nv")
     ).agg(F.sum("nv")).collect()[0][0]
     assert n_vertices <= shipped <= 2 * n_vertices, (shipped, n_vertices)
+
+
+def test_clip_units_follow_the_chunk_target(spark, monkeypatch):
+    """_clip_units' expressions are memoized per JVM; the memo key carries
+    the vertex target, so lowering it (as the coastline differential test
+    does) splits the same boundaries into more units at the same res."""
+    coast = synthetic.generate_coastlines()
+    bdf = spark.createDataFrame(
+        [(int(r["boundary_id"]),
+          [(rr["ring_lat"], rr["ring_lon"], rr["is_hole"]) for rr in r["rings"]])
+         for _, r in coast.iterrows()],
+        f"boundary_id long, rings {spatial_join.RINGS_TYPE}",
+    )
+    default = spatial_join._clip_units(bdf, 2).count()
+    monkeypatch.setattr(spatial_join, "_CLIP_CHUNK_TARGET_VERTICES", 1_000)
+    small = spatial_join._clip_units(bdf, 2).count()
+    assert default == len(coast) < small, (default, small)

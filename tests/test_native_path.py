@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from scripts.driver_split import count_py4j_calls
 from wikibrain_spark import codecs, jvm
 from wikibrain_spark.functions import binparse
 from wikibrain_spark.operators import spatial_join
@@ -184,3 +185,69 @@ def test_native_pip_cell_prefilter_matches_default(spark):
            for r in spatial_join.broadcast_pip_join_native(
                points, boundaries, cell_prefilter_res=3).collect()}
     assert base and pre == base
+
+
+# --------------------------------------------- driver cost of the plan build
+
+# py4j round trips of one warm native tiles build on the 12-city fixture
+# (statistics pass + tile_assignments): measured 563 on local[4], with
+# each pure Column expression built once per JVM (session.expr_once); the
+# per-call builds made about 4,600. The bound leaves ~1.5x headroom.
+PY4J_BUDGET = 850
+
+
+def test_warm_tiles_build_stays_within_py4j_budget(spark, paths):
+    images = spark.read.parquet(paths["images"])
+    boundaries = spark.read.parquet(paths["boundaries"])
+
+    def build():
+        spatial_join.clear_cover_stats_cache()
+        spatial_join.auto_prefilter(boundaries)
+        return spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
+
+    first = build()  # fills the per-JVM expression memo
+    with count_py4j_calls() as calls:
+        build()
+    assert 0 < calls.n <= PY4J_BUDGET, calls.n
+    assert first.count() == build().count() > 0
+
+
+def test_memoized_cover_frames_keep_their_own_cell_attribute(spark, paths):
+    """polygon_cover's expression is built once per JVM and aliased per
+    call, so two cover frames expose different `cell` attributes and one
+    plan can hold both."""
+    boundaries = spark.read.parquet(paths["boundaries"])
+    a, b = (spatial_join.polygon_cover(boundaries, 4) for _ in range(2))
+
+    def cell_id(df):
+        out = df._jdf.queryExecution().analyzed().output()
+        attrs = [out.apply(i) for i in range(out.size())]
+        return next(x.exprId().id() for x in attrs if x.name() == "cell")
+
+    assert cell_id(a) != cell_id(b)
+    pairs = a.join(b, ["boundary_id", "cell"]).count()
+    assert pairs == a.count() > 0
+
+
+def test_expr_once_builds_once_per_gateway(monkeypatch):
+    from pyspark import SparkContext
+
+    from wikibrain_spark import session
+
+    built = []
+
+    def build():
+        built.append(len(built) + 1)
+        return built[-1]
+
+    key = ("test_expr_once",)
+    assert session.expr_once(key, build) == session.expr_once(key, build) == 1
+    monkeypatch.setattr(SparkContext, "_gateway", object())  # a new JVM
+    assert session.expr_once(key, build) == 2
+
+
+def test_register_twice_in_a_session_sends_nothing(spark):
+    jvm.register(spark)
+    with count_py4j_calls() as calls:
+        jvm.register(spark)
+    assert calls.n == 0

@@ -120,6 +120,20 @@ def test_shuffle_pip_plan_is_native_candidate_rows(native_pip_inputs):
     assert "Python" not in _plan(spatial_join.broadcast_pip_join(pts, bnd))
 
 
+def test_shuffle_pip_unclipped_dim_broadcasts_structs(native_pip_inputs):
+    """The unclipped shuffle dim attaches each polygon's one struct row
+    through a broadcast hash join on boundary_id, whatever size Catalyst
+    sees for the boundary frame: a createDataFrame frame has none, and
+    without the hint the dim planned a SortMergeJoin with two boundary_id
+    exchanges for a one-polygon snapshot."""
+    pts, bnd = native_pip_inputs
+    lines = _plan(spatial_join.shuffle_pip_join(
+        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=False)).splitlines()
+    joins = [ln for ln in lines if "Join [boundary_id" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], "\n".join(lines)
+    assert not any("SortMergeJoin" in ln for ln in lines), "\n".join(lines)
+
+
 def test_clipped_shuffle_pip_plan_has_one_python_map(native_pip_inputs):
     """The clipped shuffle PIP's only Python operator is the dim build's
     one MapInArrow; the fold stays the compiled join condition."""

@@ -8,6 +8,9 @@ double: bit-exact for every value, NaN, infinities, subnormals and -0.0
 included. A null payload, or one too short to hold the 8 bytes, reads as
 null, so a truncated header never parses to a coordinate (and a null
 coordinate matches no polygon in the native PIP join).
+
+geotag_cols over a column NAME builds its two reads once per JVM
+(session.expr_once) and aliases them per call.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from wikibrain_spark import codecs, jvm
+from wikibrain_spark.session import expr_once
 
 
 def le_double_col(data: Column, offset: int) -> Column:
@@ -28,9 +32,21 @@ def le_double_col(data: Column, offset: int) -> Column:
     return F.call_function(jvm.LE_DOUBLE, data, F.lit(offset))
 
 
-def geotag_cols(bytes_col: Column) -> tuple[Column, Column]:
-    """(lat, lon) read from a column of WBIM payloads (codecs header)."""
+def geotag_cols(bytes_col: str | Column) -> tuple[Column, Column]:
+    """(lat, lon) read from a column of WBIM payloads (codecs header).
+
+    Registers the compiled UDF in the active session, like le_double_col.
+    Given the column's name, the two reads are built once per JVM."""
+    if isinstance(bytes_col, str):
+        jvm.register(SparkSession.active())  # a memo hit never reaches le_double_col
+        lat, lon = expr_once(("geotag_cols", bytes_col), lambda: _geotag_reads(F.col(bytes_col)))
+    else:
+        lat, lon = _geotag_reads(bytes_col)
+    return lat.alias("lat"), lon.alias("lon")
+
+
+def _geotag_reads(data: Column) -> tuple[Column, Column]:
     return (
-        le_double_col(bytes_col, codecs.LAT_OFFSET + 1).alias("lat"),
-        le_double_col(bytes_col, codecs.LON_OFFSET + 1).alias("lon"),
+        le_double_col(data, codecs.LAT_OFFSET + 1),
+        le_double_col(data, codecs.LON_OFFSET + 1),
     )

@@ -35,6 +35,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from wikibrain_spark.session import expr_once
+
 HEXLITE_MODE = 1
 HEXLITE_BASE_DEG = 8.0  # res-0 cell edge in degrees
 _SQRT7 = math.sqrt(7.0)
@@ -177,8 +179,15 @@ def hexlite_parent_sql(cell_expr: str, parent_res: int, child_res: int) -> str:
     return hexlite_cell_sql(lat_c, lon_c, parent_res)
 
 
-def hexlite_cell_col(lat: Column, lon: Column, res: int) -> Column:
-    """Native Column expression — stays inside whole-stage codegen."""
+def hexlite_cell_col(lat: Column | str, lon: Column | str, res: int) -> Column:
+    """Native Column expression — stays inside whole-stage codegen.
+
+    Given column NAMES, the expression is built once per JVM
+    (session.expr_once) and shared by every caller; alias it at the call
+    site."""
+    if isinstance(lat, str) and isinstance(lon, str):
+        return expr_once(("hexlite_cell_col", lat, lon, res),
+                         lambda: hexlite_cell_col(F.col(lat), F.col(lon), res))
     step = hexlite_step(res)
     n_lat, n_lon = hexlite_dims(res)
     lat_idx = F.least(F.floor((lat + F.lit(90.0)) / F.lit(step)), F.lit(n_lat - 1)).cast("long")

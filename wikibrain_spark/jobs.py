@@ -110,7 +110,7 @@ def streaming_flagship_ingest(
     pts = stream.select(
         "image_id",
         F.md5("bytes").alias("fp"),
-        *binparse.geotag_cols(F.col("bytes")),
+        *binparse.geotag_cols("bytes"),
     )
     unique = streaming_dedup(pts, key_col="fp", id_col="image_id", carry_cols=("lat", "lon"))
 
@@ -128,7 +128,7 @@ def streaming_flagship_ingest(
         )
         out = pairs.select(
             "image_id",
-            cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias(f"cell_r{res}"),
+            cells.hexlite_cell_col("lat", "lon", res).alias(f"cell_r{res}"),
             "boundary_id",
         )
         if dim is not None:

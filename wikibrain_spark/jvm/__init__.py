@@ -15,9 +15,11 @@ register(spark) makes the UDFs callable by name in a session
   wb_pack_doubles  array<double> -> binary             PackDoubles.java
   wb_le_double     (bytes, offset) -> double           LeDouble.java
 
-Each SparkContext loads the jar once with ADD JAR. No session setting
-is needed: a session built with a plain SparkSession.builder works the
-same as one from session.get_spark.
+Each SparkContext loads the jar once with ADD JAR, and each session
+registers the UDFs once: register remembers the sessions it has served,
+keyed on the jar and the UDF list, so a repeated call costs no py4j
+round trip. No session setting is needed: a session built with a plain
+SparkSession.builder works the same as one from session.get_spark.
 
 There is no fallback: without javac, or when the classes do not load,
 register raises.
@@ -30,6 +32,7 @@ import os
 import shutil
 import subprocess
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.errors import AnalysisException
@@ -46,6 +49,9 @@ _UDFS = (
     (PACK_DOUBLES, "wikibrain_spark.jvm.PackDoubles", BinaryType()),
     (LE_DOUBLE, "wikibrain_spark.jvm.LeDouble", DoubleType()),
 )
+# session -> (jar path, _UDFS) it registered; weak, so a dropped session
+# leaves the memo
+_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _sources() -> list[str]:
@@ -108,8 +114,14 @@ def register(spark) -> None:
     executors and adds it to the context's jar class loader). Registration
     loads the classes through the calling thread's context class loader,
     which is set to that jar class loader first, so it works from any
-    thread, including a foreachBatch callback."""
+    thread, including a foreachBatch callback.
+
+    A session registers once per jar and UDF list: a later call with the
+    same ones returns at once."""
     path = jar_path()
+    done = (path, _UDFS)
+    if _REGISTERED.get(spark) == done:
+        return
     if os.path.basename(path) not in spark.sparkContext._jsc.sc().listJars().mkString("\n"):
         spark.sql(f"ADD JAR '{path}'")
     loader = spark._jsparkSession.sharedState().jarClassLoader()
@@ -119,3 +131,4 @@ def register(spark) -> None:
             spark.udf.registerJavaFunction(name, cls, rtype)
         except AnalysisException as e:
             raise RuntimeError(f"cannot load {cls} from {path}: {e}") from e
+    _REGISTERED[spark] = done

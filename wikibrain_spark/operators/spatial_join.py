@@ -26,8 +26,21 @@ Two operators, one logical contract (SURVEY.md U4, J12-J14):
 2. geotag_pip_fused, the one Python path: the geotag header parse fused
    with a grid-bucketed PolygonIndex (geo/pip.py) in one mapInPandas,
    built once per partition from a driver-side broadcast of the rings.
-   It stays because its DataFrame builds faster on the driver than the
-   native plan's (ROADMAP direction 3).
+   It stays as bench.py's flagship_fused row until that row moves onto
+   the native operator (ROADMAP direction 3); with its expressions built
+   once per JVM, the native plan now builds and runs faster at that
+   row's size.
+
+Driver cost: a PySpark Column is built in the JVM one py4j round trip per
+operator, and the native plan's higher-order-function expressions run to
+hundreds of operators. Each pure expression here (polygon_cover's cells,
+polygon_structs' staged rings, edges and struct, the statistics lists,
+the clip units, the cell and header columns, the fold condition) is
+therefore built ONCE PER JVM through session.expr_once, keyed on its
+parameters, and reused by every DataFrame after that. The memo holds only
+expressions without a top-level alias: every call site puts its own
+output alias on, so two frames (shuffle_pip_join's two polygon_cover
+frames, say) never share an output attribute.
 """
 
 from __future__ import annotations
@@ -43,6 +56,7 @@ from pyspark.sql import functions as F
 
 from wikibrain_spark import jvm
 from wikibrain_spark.geo import cells, pip
+from wikibrain_spark.session import expr_once
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
 
@@ -195,8 +209,35 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     return stats
 
 
+def _named(exprs: dict[str, Column], *names: str) -> list[Column]:
+    """The memoized expressions `names` of `exprs` (all of them if none
+    are named), each aliased to its name: the call-site aliasing of a
+    session.expr_once name -> Column dict."""
+    return [exprs[n].alias(n) for n in names or exprs]
+
+
 def _measure_cover_stats(boundaries: DataFrame) -> dict:
-    """The one aggregate job behind _cover_stats."""
+    """The one aggregate job behind _cover_stats. Its expressions are
+    built once per JVM (_cover_stats_exprs); the names go on here, and
+    the totals are named in the returned dict."""
+    rings, staged, per_poly, per_id, total = expr_once(("cover_stats",), _cover_stats_exprs)
+    polys = (
+        normalize_rings(boundaries)
+        .select("boundary_id", rings.alias("pos", "r"))
+        .select("boundary_id", *_named(staged))
+        .select("boundary_id", *_named(per_poly), "edges", "first")
+        .groupBy("boundary_id")
+        .agg(*_named(per_id))
+    )
+    row = polys.agg(*total.values()).collect()[0]
+    return dict(zip(total, row))
+
+
+def _cover_stats_exprs() -> tuple:
+    """_measure_cover_stats' ring explode, then its four name -> Column
+    dicts: the per-ring staging projection, the per-ring terms (besides
+    `edges` and `first`, which pass through), the per-polygon aggregate
+    and the total aggregate."""
     r = F.col("r")
     # round 8: stage the per-ring bbox scalars in one projection so the
     # unwrap transform runs at most twice per ring (u_min/u_max, gated on
@@ -205,63 +246,51 @@ def _measure_cover_stats(boundaries: DataFrame) -> dict:
     raw_min, raw_max = F.array_min(r["ring_lon"]), F.array_max(r["ring_lon"])
     can_wrap = raw_max - raw_min > F.lit(180.0)
     u = F.transform(r["ring_lon"], lambda x: F.when(x < 0, x + F.lit(360.0)).otherwise(x))
-    staged = (
-        normalize_rings(boundaries)
-        .select("boundary_id", F.posexplode("rings").alias("pos", "r"))
-        .select(
-            "boundary_id",
-            (F.col("pos") == 0).cast("long").alias("first"),
-            r["is_hole"].alias("is_hole"),
-            F.size(r["ring_lat"]).cast("double").alias("edges"),
-            (F.array_max(r["ring_lat"]) - F.array_min(r["ring_lat"])).alias("a"),
-            raw_min.alias("raw_min"),
-            raw_max.alias("raw_max"),
-            F.when(can_wrap, F.array_min(u)).alias("u_min"),
-            F.when(can_wrap, F.array_max(u)).alias("u_max"),
-        )
-    )
+    staged = {
+        "first": (F.col("pos") == 0).cast("long"),
+        "is_hole": r["is_hole"],
+        "edges": F.size(r["ring_lat"]).cast("double"),
+        "a": F.array_max(r["ring_lat"]) - F.array_min(r["ring_lat"]),
+        "raw_min": raw_min,
+        "raw_max": raw_max,
+        "u_min": F.when(can_wrap, F.array_min(u)),
+        "u_max": F.when(can_wrap, F.array_max(u)),
+    }
     w = (F.col("raw_max") - F.col("raw_min") > F.lit(180.0)) & (
         F.col("u_max") - F.col("u_min") <= F.lit(180.0)
     )
     outer = (~F.col("is_hole")).cast("double")
     a = F.col("a")
     b = F.when(w, F.col("u_max") - F.col("u_min")).otherwise(F.col("raw_max") - F.col("raw_min"))
-    per_poly = (
-        staged
-        .select(
-            "boundary_id",
-            (outer * a * b).alias("ab"),
-            (outer * (a + b)).alias("absum"),
-            outer.alias("n_outer"),
-            F.when(~F.col("is_hole"), a * b).alias("ab_or_null"),
-            F.when(~F.col("is_hole"), a + b).alias("absum_or_null"),
-            F.col("edges").alias("edges"),
-            "first",
-        )
-        .groupBy("boundary_id")
-        .agg(
-            F.sum("ab").alias("p_ab"),
-            F.sum("absum").alias("p_sum"),
-            F.sum("n_outer").alias("p_n"),
-            F.max("ab_or_null").alias("p_max_ab"),
-            F.max("absum_or_null").alias("p_max_sum"),
-            F.sum("edges").alias("p_edges"),
-            F.sum("first").alias("p_rows"),
-        )
-    )
-    row = per_poly.agg(
-        F.sum("p_ab").alias("sum_ab"),
-        F.sum("p_sum").alias("sum_absum"),
-        F.sum("p_n").alias("n_outer"),
-        F.max("p_max_ab").alias("max_ab"),
-        F.max("p_max_sum").alias("max_sum"),
-        F.sum(F.col("p_edges") * F.col("p_ab")).alias("s_e_ab"),
-        F.sum(F.col("p_edges") * F.col("p_sum")).alias("s_e_sum"),
-        F.sum(F.col("p_edges") * F.col("p_n")).alias("s_e_n"),
-        F.max("p_rows").alias("id_rows"),
-        F.max_by("boundary_id", "p_rows").alias("dup_id"),
-    ).collect()[0]
-    return dict(row.asDict())
+    per_poly = {
+        "ab": outer * a * b,
+        "absum": outer * (a + b),
+        "n_outer": outer,
+        "ab_or_null": F.when(~F.col("is_hole"), a * b),
+        "absum_or_null": F.when(~F.col("is_hole"), a + b),
+    }
+    per_id = {
+        "p_ab": F.sum("ab"),
+        "p_sum": F.sum("absum"),
+        "p_n": F.sum("n_outer"),
+        "p_max_ab": F.max("ab_or_null"),
+        "p_max_sum": F.max("absum_or_null"),
+        "p_edges": F.sum("edges"),
+        "p_rows": F.sum("first"),
+    }
+    total = {
+        "sum_ab": F.sum("p_ab"),
+        "sum_absum": F.sum("p_sum"),
+        "n_outer": F.sum("p_n"),
+        "max_ab": F.max("p_max_ab"),
+        "max_sum": F.max("p_max_sum"),
+        "s_e_ab": F.sum(F.col("p_edges") * F.col("p_ab")),
+        "s_e_sum": F.sum(F.col("p_edges") * F.col("p_sum")),
+        "s_e_n": F.sum(F.col("p_edges") * F.col("p_n")),
+        "id_rows": F.max("p_rows"),
+        "dup_id": F.max_by("boundary_id", "p_rows"),
+    }
+    return F.posexplode("rings"), staged, per_poly, per_id, total
 
 
 def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, float]:
@@ -469,7 +498,6 @@ def broadcast_pip_join_native(
     """
     if cell_prefilter_res == "auto":
         cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
-    lat, lon = F.col("lat"), F.col("lon")
 
     # each branch builds candidate rows (point, boundary_id, p) for the
     # shared fold tail
@@ -477,7 +505,7 @@ def broadcast_pip_join_native(
         cand = points.crossJoin(F.broadcast(polygon_structs(boundaries)))
     elif clip_dim:
         cand = points.withColumn(
-            "cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res)
+            "cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res)
         ).join(F.broadcast(clipped_cell_rows(boundaries, cell_prefilter_res)), "cell")
     else:
         # polygon_cover emits each (boundary_id, cell) once and boundary_id
@@ -488,7 +516,7 @@ def broadcast_pip_join_native(
         # them from a per-row array column copies the whole array per row
         # (measured 70x slower at 2M points).
         cand = (
-            points.withColumn("cell", cells.hexlite_cell_col(lat, lon, cell_prefilter_res))
+            points.withColumn("cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res))
             .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
             .join(F.broadcast(polygon_structs(boundaries)), "boundary_id")
         )
@@ -503,10 +531,9 @@ def _fold_candidates(cand: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataF
     dim's boundary_id column, not p.bid, so the dim side ships only the
     keys, p.bbin and p.ebin."""
     jvm.register(cand.sparkSession)
-    p = F.col("p")
-    return cand.where(
-        F.call_function(jvm.PIP_FOLD, F.col("lat"), F.col("lon"), p["bbin"], p["ebin"])
-    ).select("image_id", "lat", "lon", *extra_cols, "boundary_id")
+    inside = expr_once(("pip_fold",), lambda: F.call_function(
+        jvm.PIP_FOLD, F.col("lat"), F.col("lon"), F.col("p")["bbin"], F.col("p")["ebin"]))
+    return cand.where(inside).select("image_id", "lat", "lon", *extra_cols, "boundary_id")
 
 
 def polygon_structs(boundaries: DataFrame) -> DataFrame:
@@ -538,7 +565,18 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     O(vertices) unwrap transform per edge index, an O(vertices^2)
     interpreted blowup on high-vertex rings."""
     jvm.register(boundaries.sparkSession)
+    edges, p = expr_once(("polygon_structs",), _polygon_struct_exprs)
+    # the edge structs are staged too: ebin and edges both read them
+    return (
+        _staged_rings_frame(boundaries)
+        .select("boundary_id", "_rs", edges.alias("_e"))
+        .select("boundary_id", p.alias("p"))
+    )
 
+
+def _polygon_struct_exprs() -> tuple[Column, Column]:
+    """polygon_structs' (_e, p) over the staged `_rs` rings: the flat edge
+    structs, and the struct built from `_rs` and `_e`."""
     def ring_edges(s):
         la, ulo = s["la"], s["ulo"]
         n = F.size(la)
@@ -562,22 +600,15 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     def pack(records):
         return F.call_function(jvm.PACK_DOUBLES, F.flatten(records))
 
-    staged = normalize_rings(boundaries).select(
-        "boundary_id", _staged_rings_col(F.col("rings")).alias("_rs")
-    )
     rs = F.col("_rs")
-    # the edge structs are staged too: ebin and edges both read them
-    with_edges = staged.select("boundary_id", "_rs", F.flatten(F.transform(rs, ring_edges)).alias("_e"))
-    return with_edges.select(
-        "boundary_id",
-        F.struct(
-            F.col("boundary_id").alias("bid"),
-            pack(F.transform(F.filter(rs, lambda s: ~s["is_hole"]), ring_box)).alias("bbin"),
-            pack(F.transform("_e", lambda e: F.array(
-                e["y0"], e["y1"], e["x0"], e["x1"], e["w"].cast("double")))).alias("ebin"),
-            F.col("_e").alias("edges"),
-        ).alias("p"),
+    p = F.struct(
+        F.col("boundary_id").alias("bid"),
+        pack(F.transform(F.filter(rs, lambda s: ~s["is_hole"]), ring_box)).alias("bbin"),
+        pack(F.transform("_e", lambda e: F.array(
+            e["y0"], e["y1"], e["x0"], e["x1"], e["w"].cast("double")))).alias("ebin"),
+        F.col("_e").alias("edges"),
     )
+    return F.flatten(F.transform(rs, ring_edges)), p
 
 
 def polygon_area_km2(boundaries: DataFrame) -> DataFrame:
@@ -608,9 +639,8 @@ def _staged_rings_frame(boundaries: DataFrame) -> DataFrame:
     geodesic folds, so their per-vertex lambdas reference pre-built arrays
     instead of re-evaluating the O(vertices) unwrap per vertex (an
     O(vertices^2) interpreted blowup on high-vertex rings; round 8)."""
-    return normalize_rings(boundaries).select(
-        "boundary_id", _staged_rings_col(F.col("rings")).alias("_rs")
-    )
+    staged = expr_once(("staged_rings",), lambda: _staged_rings_col(F.col("rings")))
+    return normalize_rings(boundaries).select("boundary_id", staged.alias("_rs"))
 
 
 def _area_km2_col() -> Column:
@@ -716,22 +746,36 @@ def _clip_units(boundaries: DataFrame, res: int) -> DataFrame:
     final repartition spreads units across the cluster; it moves each
     ring once per unit that keeps it (see _CLIP_CHUNK_TARGET_VERTICES for
     why that is about once)."""
-    spark = boundaries.sparkSession
+    target = _CLIP_CHUNK_TARGET_VERTICES
+    e = expr_once(("clip_units", res, target), lambda: _clip_unit_exprs(res, target))
+    units = (
+        normalize_rings(boundaries)
+        .select("boundary_id", *_named(e, "_r2"))
+        .select("boundary_id", "_r2", *_named(e, "_i0", "_ns", "_nc"))
+        # explode(sequence) drops boundaries with null bounds (no rings)
+        .withColumn("_k", e["_k"])
+        .select("boundary_id", *_named(e, "rings", "strip_lo", "strip_hi"))
+    )
+    return units.repartition(_shuffle_partitions(boundaries.sparkSession))
+
+
+def _clip_unit_exprs(res: int, target: int) -> dict[str, Column]:
+    """_clip_units' columns at `res`, about `target` vertices per unit, by
+    the name each gets: the staged rings `_r2`, the strip bounds
+    `_i0`/`_ns`/`_nc` read from them, the chunk explode `_k`, and each
+    unit's `rings`, `strip_lo`, `strip_hi`."""
     step = cells.hexlite_step(res)
     n_lat, _ = cells.hexlite_dims(res)
 
     r2 = F.col("_r2")
-    staged = normalize_rings(boundaries).select(
-        "boundary_id",
-        F.transform(
-            F.col("rings"),
-            lambda r: F.struct(
-                r.alias("r"),
-                F.floor((F.array_min(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i0"),
-                F.floor((F.array_max(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i1"),
-                F.size(r["ring_lat"]).alias("nv"),
-            ),
-        ).alias("_r2"),
+    staged = F.transform(
+        F.col("rings"),
+        lambda r: F.struct(
+            r.alias("r"),
+            F.floor((F.array_min(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i0"),
+            F.floor((F.array_max(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i1"),
+            F.size(r["ring_lat"]).alias("nv"),
+        ),
     )
     i0 = F.greatest(F.lit(0).cast("long"), F.array_min(F.transform(r2, lambda x: x["i0"])))
     i1 = F.least(F.lit(n_lat - 1).cast("long"), F.array_max(F.transform(r2, lambda x: x["i1"])))
@@ -739,33 +783,24 @@ def _clip_units(boundaries: DataFrame, res: int) -> DataFrame:
     total_v = F.aggregate(r2, F.lit(0), lambda a, x: a + x["nv"])
     n_chunks = F.least(
         n_strips,
-        F.greatest(F.lit(1).cast("long"), F.ceil(total_v / F.lit(_CLIP_CHUNK_TARGET_VERTICES))),
-    )
-    with_bounds = staged.select(
-        "boundary_id", "_r2",
-        i0.alias("_i0"), n_strips.alias("_ns"), n_chunks.alias("_nc"),
+        F.greatest(F.lit(1).cast("long"), F.ceil(total_v / F.lit(target))),
     )
     k = F.col("_k")
     strip_lo = F.col("_i0") + F.floor(k * F.col("_ns") / F.col("_nc"))
     strip_hi = F.col("_i0") + F.floor((k + 1) * F.col("_ns") / F.col("_nc")) - 1
-    units = (
-        with_bounds
-        # explode(sequence) drops boundaries with null bounds (no rings)
-        .withColumn("_k", F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nc") - 1)))
-        .select(
-            "boundary_id",
-            F.transform(
-                F.filter(
-                    F.col("_r2"),
-                    lambda x: (x["i0"] <= strip_hi + 1) & (x["i1"] >= strip_lo - 1),
-                ),
-                lambda x: x["r"],
-            ).alias("rings"),
-            strip_lo.cast("long").alias("strip_lo"),
-            strip_hi.cast("long").alias("strip_hi"),
-        )
-    )
-    return units.repartition(_shuffle_partitions(spark))
+    return {
+        "_r2": staged,
+        "_i0": i0,
+        "_ns": n_strips,
+        "_nc": n_chunks,
+        "_k": F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nc") - 1)),
+        "rings": F.transform(
+            F.filter(r2, lambda x: (x["i0"] <= strip_hi + 1) & (x["i1"] >= strip_lo - 1)),
+            lambda x: x["r"],
+        ),
+        "strip_lo": strip_lo.cast("long"),
+        "strip_hi": strip_hi.cast("long"),
+    }
 
 
 def _unit_covers(batch, res: int) -> Iterator[tuple[int, dict]]:
@@ -992,7 +1027,17 @@ def polygon_cover(boundaries: DataFrame, res: int = COVER_RES) -> DataFrame:
     hexlite_cover_bbox kernel is pinned in tests, dateline rings included
     (the unwrapped bbox portion at/above +180 is enumerated through the
     probe formula — see hexlite_cover_bbox — so raw-negative probes land
-    in exactly the emitted cells at every resolution)."""
+    in exactly the emitted cells at every resolution).
+
+    The explode expression is built once per JVM and res
+    (_cover_explode); each call aliases it `cell`, so two cover frames
+    in one plan keep distinct output attributes."""
+    cover = expr_once(("polygon_cover", res), lambda: _cover_explode(res))
+    return normalize_rings(boundaries).select("boundary_id", cover.alias("cell"))
+
+
+def _cover_explode(res: int) -> Column:
+    """polygon_cover's explode(covered cells) over the `rings` column."""
     step = cells.hexlite_step(res)
     n_lat, n_lon = cells.hexlite_dims(res)
     hdr = (cells.HEXLITE_MODE << 60) | (res << 56)
@@ -1076,9 +1121,7 @@ def polygon_cover(boundaries: DataFrame, res: int = COVER_RES) -> DataFrame:
         ),
         ring_cells,
     )))
-    return normalize_rings(boundaries).select(
-        "boundary_id", F.explode(covered).alias("cell")
-    )
+    return F.explode(covered)
 
 
 def shuffle_pip_join(
@@ -1148,7 +1191,7 @@ def shuffle_pip_join(
         clip_cover = _replication_estimates(boundaries, res)[1] > _CLIP_THRESHOLD_EDGES
     pts = points.select(
         "image_id", "lat", "lon",
-        cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias("cell"),
+        cells.hexlite_cell_col("lat", "lon", res).alias("cell"),
     )
 
     # SAMPLED hotness pre-pass: cells whose estimated point-count exceeds
@@ -1161,7 +1204,11 @@ def shuffle_pip_join(
     if clip_cover:
         dim = clipped_cell_rows(boundaries, res)
     else:
-        dim = polygon_cover(boundaries, res).join(polygon_structs(boundaries), "boundary_id")
+        # one struct per polygon: broadcast it, as the native path does (a
+        # boundary frame with no size statistics would otherwise plan a
+        # sort-merge join with two boundary_id exchanges)
+        dim = polygon_cover(boundaries, res).join(
+            F.broadcast(polygon_structs(boundaries)), "boundary_id")
     # replicate the dim rows of hot cells: salt 0..n_salt-1
     dim_salted = (
         dim.join(F.broadcast(hot), "cell", "left")
@@ -1197,9 +1244,8 @@ def geotag_pip_fused(images: DataFrame, boundaries: DataFrame) -> DataFrame:
     each partition builds the PolygonIndex once (bucket grid sized to the
     polygon extents, _auto_index_res), and each Arrow batch's headers are
     parsed and probed in the same Python worker, which reads the binary
-    column exactly once. The Python path that remains: its DataFrame
-    builds faster on the driver than the native plan's (ROADMAP
-    direction 3).
+    column exactly once. The Python path that remains, as bench.py's
+    flagship_fused row (ROADMAP direction 3).
     """
     from wikibrain_spark import codecs
 
@@ -1276,7 +1322,7 @@ def tile_assignments(
         # the parse resolves in points' session, which need not be the
         # active one that le_double_col registers on
         jvm.register(points.sparkSession)
-        pts = points.select("image_id", *binparse.geotag_cols(F.col("bytes")))
+        pts = points.select("image_id", *binparse.geotag_cols("bytes"))
         pairs = broadcast_pip_join_native(
             pts, boundaries, cell_prefilter_res=native_prefilter_res
         )
@@ -1288,7 +1334,7 @@ def tile_assignments(
         pairs.join(F.broadcast(dim), "boundary_id")
         .select(
             "image_id",
-            cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias(f"cell_r{res}"),
+            cells.hexlite_cell_col("lat", "lon", res).alias(f"cell_r{res}"),
             "boundary_id",
             "qid",
             "wikipedia",

@@ -5,13 +5,58 @@ sandbox it runs local[N]. Every knob here matters at 100 TB:
   - AQE on: runtime re-planning, skew-join splitting, partition coalescing.
   - Arrow on + bounded batch size: image batches must fit executor memory.
   - shuffle partitions parameterized: sized to the data scale, not hardcoded.
+
+It also holds expr_once, the per-JVM memo of the pure Column expressions
+the native tiles plan is built from.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# expr_once's memo, the py4j gateway its Columns live in, and its lock
+_EXPRS: dict = {}
+_EXPRS_GATEWAY = None
+_EXPRS_LOCK = threading.RLock()  # a build may ask for another expression
+
+
+def expr_once(key: Hashable, build: Callable[[], T]) -> T:
+    """build() the first time `key` is asked for in this JVM, the memoized
+    value after that.
+
+    Every Column expression in PySpark is a JVM object that Python builds
+    one py4j call at a time, and a higher-order-function expression such
+    as polygon_cover's costs hundreds of calls. The native tiles plan's
+    expressions depend on nothing but their parameters (res, column
+    names), and a Column is not tied to a session or a DataFrame, so each
+    is built once per JVM and reused by every DataFrame after that. `key`
+    names the expression and every parameter it depends on, a module
+    constant that build() reads included (pass it to build() too, so a
+    patched value cannot hit the entry built under the old one). The
+    memo is dropped when SparkContext._gateway changes (a new JVM).
+
+    The rule for what goes in: only expressions WITHOUT a top-level alias
+    (or a value holding only such expressions). Alias at the call site, so
+    each DataFrame gets its own output attribute (exprId); two frames
+    built from one memoized expression can then sit in one plan, as
+    shuffle_pip_join's two polygon_cover frames do. Aliases nested inside
+    an expression (struct field names, lambda results) are fine."""
+    global _EXPRS_GATEWAY
+    with _EXPRS_LOCK:
+        if SparkContext._gateway is not _EXPRS_GATEWAY:
+            _EXPRS.clear()
+            _EXPRS_GATEWAY = SparkContext._gateway
+        if key not in _EXPRS:
+            _EXPRS[key] = build()
+        return _EXPRS[key]
 
 
 def fan_out(df, min_partitions: int | None = None):
