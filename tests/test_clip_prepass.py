@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from wikibrain_spark.geo import cells, clip, pip
 from wikibrain_spark.operators import spatial_join
@@ -210,36 +209,89 @@ def test_clip_kernel_equals_oracle_on_megacoast_shelf():
                        "megacoast 41")
 
 
-def test_clip_units_ship_megacoast_about_once(spark, tmp_path):
-    """The clip units carry each boundary's rings once per unit; on the
-    600k-vertex megacoast at its auto res (2) the units' ring vertices
-    must stay within 2x the snapshot's (native size() aggregate — no
-    Python UDF runs)."""
-    mega = synthetic.generate_megacoast()
-    n_vertices = sum(len(r["ring_lat"]) for rings in mega["rings"] for r in rings)
-    path = str(tmp_path / "mega.parquet")
-    mega.to_parquet(path, index=False)
-    bnd = spark.read.parquet(path)
-    units = spatial_join._clip_units(bnd, 2)
-    shipped = units.select(
-        F.aggregate("rings", F.lit(0).cast("long"),
-                    lambda acc, r: acc + F.size(r["ring_lat"])).alias("nv")
-    ).agg(F.sum("nv")).collect()[0][0]
-    assert n_vertices <= shipped <= 2 * n_vertices, (shipped, n_vertices)
+# ------------------------------------- compiled clip (jvm/ClipCells.java)
+
+def _packed_oracle(rows, res):
+    """{(cell, boundary_id): (bbin, ebin)} from clipped_cell_cover: one
+    bbox per probe frame (frames in first-seen order) and each piece's
+    closed edge list, as clipped_cell_rows packs them."""
+    want = {}
+    for bid, rings in rows:
+        for c, plist in clip.clipped_cell_cover(rings, res).items():
+            frames: dict[bool, list[float]] = {}
+            for ys, xs, w in plist:
+                box = [float(ys.min()), float(ys.max()), float(xs.min()), float(xs.max())]
+                fb = frames.setdefault(bool(w), box)
+                fb[:] = [min(fb[0], box[0]), max(fb[1], box[1]),
+                         min(fb[2], box[2]), max(fb[3], box[3])]
+            bbin = np.array([[*fb, float(w)] for w, fb in frames.items()], dtype="<f8")
+            ebin = np.concatenate([
+                np.column_stack([ys, np.roll(ys, -1), xs, np.roll(xs, -1),
+                                 np.full(ys.size, float(w))])
+                for ys, xs, w in plist]).astype("<f8")
+            want[(c, bid)] = (bbin.tobytes(), ebin.tobytes())
+    return want
 
 
-def test_clip_units_follow_the_chunk_target(spark, monkeypatch):
-    """_clip_units' expressions are memoized per JVM; the memo key carries
-    the vertex target, so lowering it (as the coastline differential test
-    does) splits the same boundaries into more units at the same res."""
-    coast = synthetic.generate_coastlines()
+def _assert_rows_match_oracle(spark, rows, res, label):
+    """clipped_cell_rows over `rows` ((boundary_id, [(lat, lon), ...]))
+    gives the oracle's (cell, boundary_id) set with byte-identical bbin and
+    ebin, and p.edges unpacks ebin."""
     bdf = spark.createDataFrame(
-        [(int(r["boundary_id"]),
-          [(rr["ring_lat"], rr["ring_lon"], rr["is_hole"]) for rr in r["rings"]])
-         for _, r in coast.iterrows()],
-        f"boundary_id long, rings {spatial_join.RINGS_TYPE}",
-    )
-    default = spatial_join._clip_units(bdf, 2).count()
-    monkeypatch.setattr(spatial_join, "_CLIP_CHUNK_TARGET_VERTICES", 1_000)
-    small = spatial_join._clip_units(bdf, 2).count()
-    assert default == len(coast) < small, (default, small)
+        [(bid, [([float(v) for v in la], [float(v) for v in lo], False) for la, lo in rings])
+         for bid, rings in rows],
+        f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+    got = {}
+    for r in spatial_join.clipped_cell_rows(bdf, res).collect():
+        key = (r["cell"], r["boundary_id"])
+        assert key not in got, f"{label}: repeated row {key}"
+        assert r["p"]["bid"] == r["boundary_id"]
+        ebin = bytes(r["p"]["ebin"])
+        rec = np.frombuffer(ebin, dtype="<f8").reshape(-1, 5)
+        edges = np.array([(e["y0"], e["y1"], e["x0"], e["x1"], float(e["w"]))
+                          for e in r["p"]["edges"]]).reshape(-1, 5)
+        assert np.array_equal(edges, rec), f"{label}: p.edges differs from ebin at {key}"
+        got[key] = (bytes(r["p"]["bbin"]), ebin)
+    want = _packed_oracle(
+        [(bid, [(np.asarray(la, dtype=np.float64), np.asarray(lo, dtype=np.float64))
+                for la, lo in rings]) for bid, rings in rows], res)
+    assert want, f"{label}: oracle cover empty"
+    assert set(got) == set(want), f"{label}: (cell, boundary_id) sets differ"
+    for k, (bbin, ebin) in want.items():
+        assert got[k][0] == bbin, f"{label}: bbin differs at {k}"
+        assert got[k][1] == ebin, f"{label}: ebin differs at {k}"
+
+
+def _coast_rows(frame):
+    return [(int(r["boundary_id"]), [(rr["ring_lat"], rr["ring_lon"]) for rr in r["rings"]])
+            for _, r in frame.iterrows()]
+
+
+@pytest.mark.parametrize("res", [1, 2, 3])
+def test_compiled_clip_bytes_equal_oracle_on_adversarial_rings(spark, res):
+    """Every adversarial ring set above (cell-border vertices and
+    staircases, combs, slivers, dateline and +180-seam rings, holes and
+    multipolygons, pole-touching rings and the Antarctica-style
+    pole-enclosing cap at res <= 2) as one boundary each, plus a
+    Fiji-style multipolygon whose dateline ring and raw island share a
+    cell, so that cell packs one bbox per frame."""
+    rows = [(bid, rings) for bid, rings in enumerate(_ring_sets(res, 0).values(), start=1)]
+    fiji = [([5.0, 5.0, 12.0, 12.0], [176.0, -177.0, -177.0, 176.0]),
+            ([8.0, 8.0, 9.0], [178.2, 178.8, 178.5])]
+    rows.append((len(rows) + 1, fiji))
+    two_frames = _packed_oracle([(0, [(np.asarray(a), np.asarray(b)) for a, b in fiji])], res)
+    assert any(len(bbin) == 80 for bbin, _ in two_frames.values()), "no two-frame cell"
+    _assert_rows_match_oracle(spark, rows, res, f"adversarial@res{res}")
+
+
+def test_compiled_clip_bytes_equal_oracle_on_coastline(spark):
+    _assert_rows_match_oracle(spark, _coast_rows(synthetic.generate_coastlines()), 2,
+                              "coastline@res2")
+
+
+def test_compiled_clip_bytes_equal_oracle_on_megacoast(spark):
+    """Both megacoast boundaries at their auto res (2): the 400k-vertex
+    coastline with its 100k-vertex inland-sea hole, and the 100k-vertex
+    dateline shelf."""
+    _assert_rows_match_oracle(spark, _coast_rows(synthetic.generate_megacoast()), 2,
+                              "megacoast@res2")

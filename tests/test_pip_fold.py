@@ -216,6 +216,32 @@ def test_unloadable_class_raises_naming_it(spark, monkeypatch):
         jvm.register(spark)
 
 
+def test_every_java_class_is_a_registered_udf(spark):
+    """The jar carries no dead class: every .java source in the package is
+    a UDF in jvm._UDFS, and each one registers in a plain session with
+    its declared return type (array-of-struct ones included)."""
+    sources = {f"wikibrain_spark.jvm.{n[:-len('.java')]}"
+               for n in os.listdir(jvm.SOURCE_DIR) if n.endswith(".java")}
+    assert sources == {cls for _, cls, _ in jvm._UDFS}
+    plain = SparkSession.builder.getOrCreate().newSession()
+    jvm.register(plain)
+    assert all(plain.catalog.functionExists(name) for name, _, _ in jvm._UDFS)
+    # a triangle inside one res-2 cell clips to itself
+    ring = F.array(F.struct(F.array(*map(F.lit, [0.1, 0.1, 0.2])).alias("ring_lat"),
+                            F.array(*map(F.lit, [0.1, 0.2, 0.1])).alias("ring_lon"),
+                            F.lit(False).alias("is_hole")))
+    res = 2
+    clipped = plain.range(1).select(F.call_function(
+        jvm.CLIP_CELLS, ring, F.lit(res), F.lit(cells.hexlite_step(res))).alias("c"))
+    unpacked = clipped.select(F.call_function(jvm.UNPACK_EDGES, F.col("c")[0]["ebin"]).alias("e"))
+    declared = {name: rtype for name, _, rtype in jvm._UDFS}
+    assert clipped.schema["c"].dataType.simpleString() == declared[jvm.CLIP_CELLS].replace(" ", "")
+    assert unpacked.schema["e"].dataType.simpleString() == declared[jvm.UNPACK_EDGES].replace(" ", "")
+    edges = unpacked.first()["e"]
+    assert [(e["y0"], e["x0"], e["y1"], e["x1"], e["w"]) for e in edges] == [
+        (0.1, 0.1, 0.1, 0.2, False), (0.1, 0.2, 0.2, 0.1, False), (0.2, 0.1, 0.1, 0.1, False)]
+
+
 def test_plain_session_needs_no_spark_jars(spark, fold_case):
     """A session from a plain SparkSession.builder, with no spark.jars and
     a fresh function registry, runs the native join: the jar is added and

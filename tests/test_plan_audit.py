@@ -135,14 +135,14 @@ def test_shuffle_pip_unclipped_dim_broadcasts_structs(native_pip_inputs):
 
 
 def test_clipped_shuffle_pip_plan_has_one_python_map(native_pip_inputs):
-    """The clipped shuffle PIP's only Python operator is the dim build's
-    one MapInArrow; the fold stays the compiled join condition."""
+    """The clipped shuffle PIP has no Python operator at all: the dim
+    build is the compiled clip exploded in the boundary scan's stage, and
+    the fold stays the compiled join condition."""
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.shuffle_pip_join(
         pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=True))
-    assert plan.count("MapInArrow") == 1, plan
-    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert op not in plan, plan
+    assert "Python" not in plan and "InArrow" not in plan and "InPandas" not in plan, plan
+    assert plan.count(f"{jvm.CLIP_CELLS}(") == 1, plan
     assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
     assert "Join" in next(ln for ln in plan.splitlines() if f"{jvm.PIP_FOLD}(" in ln), plan
 
@@ -175,11 +175,11 @@ def native_pip_inputs(spark):
     return pts, bnd
 
 
-def _assert_compiled_fold(plan: str, key_cols: list[str]) -> None:
+def _assert_compiled_fold(plan: str, key_cols: list[str], packed: str = "p") -> None:
     """The native PIP's fold is ONE call of the compiled UDF, in the join
     condition, with no interpreted aggregate/exists lambda left in it;
-    the broadcast it reads is pruned to key_cols plus p.bbin/p.ebin (no
-    p.edges, no p.bid shipped)."""
+    the broadcast it reads is pruned to key_cols plus the bbin and ebin
+    fields of `packed` (no p.edges, no p.bid shipped)."""
     assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
     join = next(ln for ln in plan.splitlines() if f"{jvm.PIP_FOLD}(" in ln)
     assert "Join" in join, plan
@@ -190,36 +190,31 @@ def _assert_compiled_fold(plan: str, key_cols: list[str]) -> None:
     assert len(under) == 1, plan
     cols = under[0].split("Project [", 1)[1].rsplit("]", 1)[0]
     shipped = [re.sub(r"#\d+L?", "", c.strip()) for c in cols.split(",")]
-    assert shipped == [*key_cols, "p.bbin AS _extract_bbin", "p.ebin AS _extract_ebin"], plan
+    assert shipped == [
+        *key_cols, f"{packed}.bbin AS _extract_bbin", f"{packed}.ebin AS _extract_ebin"], plan
 
 
 def test_clipped_dim_native_plan_points_side_pure(native_pip_inputs):
-    """The clipped-dim native PIP (round 6) must keep the points side
-    zero-Python and zero-shuffle: exactly ONE Python map — MapInArrow,
-    the clip dim build, once per snapshot — and ONE shuffle exchange
-    (round 8: the clip-unit repartition that parallelizes the prepass),
-    inside the broadcast subtree. The dim is (cell, p) rows, never
-    grouped: no aggregate, and the probe side is a bare scan into the one
-    BroadcastHashJoin, whose condition is the parity fold."""
+    """The clipped-dim native PIP has no Python operator and no exchange
+    but its one broadcast: the dim is the compiled clip exploded straight
+    off the boundary scan (one call, inside the broadcast subtree), never
+    grouped, and the probe side is a bare scan into the one
+    BroadcastHashJoin, whose condition is the parity fold. The broadcast
+    ships the cell, the id and the clip's bbin and ebin; p.edges, unpacked
+    from ebin only where it is read, never runs."""
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.broadcast_pip_join_native(
         pts, bnd, cell_prefilter_res=2, clip_dim=True))
-    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Aggregate" not in plan, plan
-    _assert_compiled_fold(plan, ["cell", "boundary_id"])
-    # the clip units' vertex-count aggregate runs below the dim build;
-    # nothing above it folds with a lambda
-    assert "aggregate(" not in plan[: plan.find("MapInArrow")], plan
+    assert "Python" not in plan and "InArrow" not in plan and "InPandas" not in plan, plan
+    assert "Aggregate" not in plan and "aggregate(" not in plan, plan
+    _assert_compiled_fold(plan, ["_c.cell AS cell", "boundary_id"], packed="_c")
     assert plan.count("BroadcastHashJoin") == 1, plan
-    assert plan.count("BroadcastExchange") == 1
-    assert plan.replace("BroadcastExchange", "BX").count("Exchange") == 1, plan
-    # the one MapInArrow and the Exchange are in the broadcast (dim)
-    # subtree: toString indents children, so both must appear AFTER the
-    # BroadcastExchange line
-    bx = plan.find("BroadcastExchange")
-    assert plan.find("MapInArrow") > bx
-    assert plan.replace("BroadcastExchange", "BX").find("Exchange") > bx
+    assert plan.count("Exchange") == plan.count("BroadcastExchange") == 1, plan
+    assert f"{jvm.UNPACK_EDGES}(" not in plan, plan
+    # the one clip call is in the broadcast (dim) subtree: toString
+    # indents children, so it must appear AFTER the BroadcastExchange line
+    assert plan.count(f"{jvm.CLIP_CELLS}(") == 1, plan
+    assert plan.find(f"{jvm.CLIP_CELLS}(") > plan.find("BroadcastExchange"), plan
 
 
 def test_one_row_dim_plan_is_one_broadcast_nested_loop_join(native_pip_inputs):

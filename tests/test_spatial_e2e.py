@@ -175,19 +175,13 @@ def test_all_strategies_match_numpy_oracle_on_complex_fixture(spark):
         assert set(pairs) == want, f"{name} diverges from NumPy oracle"
 
 
-def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark, monkeypatch):
+def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark):
     """All four PIP strategies return identical pairs on the HIGH-VERTEX
     coastline fixture (~12k edges: 4k-vertex outer + 2k-vertex hole,
     3k-vertex dateline ring, two 1.5k-vertex components) — vertex count
     is the variable real OSM boundaries stress that the <=40-vertex
-    fixtures never did (round-5 verdict #2). Oracle is the NumPy kernel.
-
-    A 1k-vertex clip-unit target splits each boundary's strip range over
-    several clip units, so an entry emitted by two units would show as a
-    duplicated pair."""
+    fixtures never did (round-5 verdict #2). Oracle is the NumPy kernel."""
     from wikibrain_spark.geo import pip
-
-    monkeypatch.setattr(spatial_join, "_CLIP_CHUNK_TARGET_VERTICES", 1_000)
 
     coast = synthetic.generate_coastlines()
     assert sum(

@@ -1,6 +1,12 @@
 """Clip-to-cell polygon covers: bounded per-cell geometry for the
 clipped native PIP dim (spatial_join.clipped_cell_rows).
 
+The dim itself is built by the compiled port of this module,
+jvm/ClipCells.java, inside the boundary scan's stage. This NumPy
+implementation is its test oracle (as geo/pip.py is the fold's): the
+compiled clip must give the same cells and byte-identical packed pieces,
+and clip_bands is pinned against a naive full-ring Sutherland-Hodgman.
+
 A 10^4-vertex boundary covering 10^5 grid cells must NOT ship its full
 ring set once per covered cell — that is O(cells x vertices) shuffle
 volume (~10 GB for one continental coastline at res 4). Instead each
@@ -31,10 +37,8 @@ images of each raw cell's window (the window itself and the window
 shifted +360); its pieces carry an explicit unwrap-probe flag, because a
 clipped fragment no longer looks wrapping-shaped to the heuristic.
 
-This runs once per polygon-snapshot on the DIM side (mapInArrow over
-strip-chunked boundary units — embarrassingly parallel, tiny next to
-the points table), which is also why Python is acceptable here: it is
-the same once-per-snapshot prepass position as the PolygonIndex build.
+The clip runs once per polygon snapshot on the DIM side, one boundary
+per call: embarrassingly parallel and tiny next to the points table.
 """
 
 from __future__ import annotations
@@ -194,10 +198,10 @@ def clipped_cell_cover(
     per-column full-ring clip it replaces).
 
     strip_lo/strip_hi (round 8): restrict the walk to latitude strips in
-    [strip_lo, strip_hi] — the parallel-prepass seam. Every cell belongs
-    to exactly one strip, so a partition of the strip range across
-    workers yields each (cell) entry exactly once, with pieces in the
-    same ring/strip/column order as the unrestricted call."""
+    [strip_lo, strip_hi]. Every cell belongs to exactly one strip, so a
+    partition of the strip range yields each (cell) entry exactly once,
+    with pieces in the same ring/strip/column order as the unrestricted
+    call."""
     step = cells.hexlite_step(res)
     n_lat, n_lon = cells.hexlite_dims(res)
     hdr = (cells.HEXLITE_MODE << 60) | (res << 56)

@@ -11,9 +11,15 @@ rebuild.
 register(spark) makes the UDFs callable by name in a session
 (F.call_function(PIP_FOLD, ...)):
 
-  wb_pip_fold      (lat, lon, bbin, ebin) -> boolean   PipFold.java
-  wb_pack_doubles  array<double> -> binary             PackDoubles.java
-  wb_le_double     (bytes, offset) -> double           LeDouble.java
+  wb_pip_fold       (lat, lon, bbin, ebin) -> boolean       PipFold.java
+  wb_pack_doubles   array<double> -> binary                 PackDoubles.java
+  wb_le_double      (bytes, offset) -> double               LeDouble.java
+  wb_clip_cells     (rings, res, step)                      ClipCells.java
+                    -> array<struct<cell, bbin, ebin>>
+  wb_unpack_edges   ebin -> array<struct<y0, x0, y1, x1, w>> UnpackEdges.java
+
+Every .java class here is one of these UDFs (a tier-1 test checks that the
+jar carries no class the list does not register).
 
 Each SparkContext loads the jar once with ADD JAR, and each session
 registers the UDFs once: register remembers the sessions it has served,
@@ -44,10 +50,16 @@ CACHE_DIR = os.path.join(SOURCE_DIR, "_jars")
 PIP_FOLD = "wb_pip_fold"  # (lat, lon, bbin, ebin) -> boolean, see PipFold.java
 PACK_DOUBLES = "wb_pack_doubles"  # array<double> -> little-endian binary
 LE_DOUBLE = "wb_le_double"  # (binary, 1-based offset) -> little-endian double
+CLIP_CELLS = "wb_clip_cells"  # (rings, res, step) -> one boundary's clipped cells
+UNPACK_EDGES = "wb_unpack_edges"  # packed edge records -> edge structs
 _UDFS = (
     (PIP_FOLD, "wikibrain_spark.jvm.PipFold", BooleanType()),
     (PACK_DOUBLES, "wikibrain_spark.jvm.PackDoubles", BinaryType()),
     (LE_DOUBLE, "wikibrain_spark.jvm.LeDouble", DoubleType()),
+    (CLIP_CELLS, "wikibrain_spark.jvm.ClipCells",
+     "array<struct<cell: bigint, bbin: binary, ebin: binary>>"),
+    (UNPACK_EDGES, "wikibrain_spark.jvm.UnpackEdges",
+     "array<struct<y0: double, x0: double, y1: double, x1: double, w: boolean>>"),
 )
 # session -> (jar path, _UDFS) it registered; weak, so a dropped session
 # leaves the memo

@@ -11,7 +11,10 @@ Two operators, one logical contract (SURVEY.md U4, J12-J14):
 1. Native candidate rows, the one operator behind broadcast_pip_join_native,
    broadcast_pip_join and shuffle_pip_join: each point is joined to the
    candidate polygons' packed geometry rows, and the compiled parity fold
-   jvm/PipFold.java is the join condition. Zero Python on the points side.
+   jvm/PipFold.java is the join condition. Zero Python on the points side,
+   and none in the dims: the clipped dim's clip is compiled too
+   (jvm/ClipCells.java, ~0.2 s warm for the 600k-vertex megacoast at res
+   2 on a 4-core VM, in the boundary scan's stage).
    - broadcast_pip_join_native broadcasts the dim (auto_prefilter plans
      it: one-row, cell-prefiltered, or clipped to each cell's window);
      broadcast_pip_join is its cell_prefilter_res="auto" form.
@@ -35,12 +38,14 @@ Driver cost: a PySpark Column is built in the JVM one py4j round trip per
 operator, and the native plan's higher-order-function expressions run to
 hundreds of operators. Each pure expression here (polygon_cover's cells,
 polygon_structs' staged rings, edges and struct, the statistics lists,
-the clip units, the cell and header columns, the fold condition) is
-therefore built ONCE PER JVM through session.expr_once, keyed on its
-parameters, and reused by every DataFrame after that. The memo holds only
-expressions without a top-level alias: every call site puts its own
-output alias on, so two frames (shuffle_pip_join's two polygon_cover
-frames, say) never share an output attribute.
+the clip call and its row struct, the cell and header columns, the fold
+condition) is therefore built ONCE PER JVM through session.expr_once,
+keyed on its parameters, and reused by every DataFrame after that. The
+memo holds only expressions without a top-level alias: every call site
+puts its own output alias on, so two frames (shuffle_pip_join's two
+polygon_cover frames, say) never share an output attribute. The one
+exception is the statistics pass, whose frame ends in its own collect
+(_measure_cover_stats).
 """
 
 from __future__ import annotations
@@ -209,35 +214,30 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     return stats
 
 
-def _named(exprs: dict[str, Column], *names: str) -> list[Column]:
-    """The memoized expressions `names` of `exprs` (all of them if none
-    are named), each aliased to its name: the call-site aliasing of a
-    session.expr_once name -> Column dict."""
-    return [exprs[n].alias(n) for n in names or exprs]
-
-
 def _measure_cover_stats(boundaries: DataFrame) -> dict:
     """The one aggregate job behind _cover_stats. Its expressions are
-    built once per JVM (_cover_stats_exprs); the names go on here, and
-    the totals are named in the returned dict."""
+    built once per JVM (_cover_stats_exprs), their aliases included: the
+    frame never leaves this function's own collect, so two frames that
+    share the memoized output attributes never meet in one plan. The
+    totals are named in the returned dict."""
     rings, staged, per_poly, per_id, total = expr_once(("cover_stats",), _cover_stats_exprs)
     polys = (
         normalize_rings(boundaries)
-        .select("boundary_id", rings.alias("pos", "r"))
-        .select("boundary_id", *_named(staged))
-        .select("boundary_id", *_named(per_poly), "edges", "first")
+        .select("boundary_id", rings)
+        .select("boundary_id", *staged)
+        .select("boundary_id", *per_poly, "edges", "first")
         .groupBy("boundary_id")
-        .agg(*_named(per_id))
+        .agg(*per_id)
     )
     row = polys.agg(*total.values()).collect()[0]
     return dict(zip(total, row))
 
 
 def _cover_stats_exprs() -> tuple:
-    """_measure_cover_stats' ring explode, then its four name -> Column
-    dicts: the per-ring staging projection, the per-ring terms (besides
-    `edges` and `first`, which pass through), the per-polygon aggregate
-    and the total aggregate."""
+    """_measure_cover_stats' aliased ring explode (pos, r), then its
+    aliased lists: the per-ring staging projection, the per-ring terms
+    (besides `edges` and `first`, which pass through) and the per-polygon
+    aggregate; last the name -> Column dict of the total aggregate."""
     r = F.col("r")
     # round 8: stage the per-ring bbox scalars in one projection so the
     # unwrap transform runs at most twice per ring (u_min/u_max, gated on
@@ -290,7 +290,12 @@ def _cover_stats_exprs() -> tuple:
         "id_rows": F.max("p_rows"),
         "dup_id": F.max_by("boundary_id", "p_rows"),
     }
-    return F.posexplode("rings"), staged, per_poly, per_id, total
+
+    def named(exprs: dict[str, Column]) -> list[Column]:
+        return [e.alias(n) for n, e in exprs.items()]
+
+    return (F.posexplode("rings").alias("pos", "r"), named(staged), named(per_poly),
+            named(per_id), total)
 
 
 def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, float]:
@@ -329,14 +334,13 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     perf knob, so a stale hit can never change the output rows).
 
     What the gates bound: (a) the clip prepass —
-    geo/clip.py clipped_cell_cover clips each ring to all its strips and
-    each strip piece to all its columns in vectorized passes, measured
-    serial on a 4-core VM at ~0.8 us per vertex plus ~6 us per occupied
-    cell (0.39 s for the 500k-vertex megacoast boundary over 2.8k cells
-    at res 2; 0.12 s for a 4-vertex square over 19.6k cells at res 3),
-    in units of ~_CLIP_CHUNK_TARGET_VERTICES vertices, so _MAX_RING_CELLS
-    caps a polygon's per-cell term at ~0.1 s — and (b) cover row count
-    (tiny rows). Finer res
+    jvm/ClipCells.java clips each ring to all its strips and each strip
+    piece to all its columns, one task per boundary, measured warm on a
+    4-core VM at ~0.26 us per vertex plus ~1.6 us per occupied cell
+    (0.13 s for the 500k-vertex megacoast boundary over 2.8k cells at
+    res 2; 0.06 s for a 4-vertex square over 39k cells at res 3), so
+    _MAX_RING_CELLS caps a polygon's per-cell term at ~0.03 s — and (b)
+    cover row count (tiny rows). Finer res
     buys pruning: fewer points survive the covered-cells semi-filter and
     each cover row tests fewer points, so the gates sit as fine as the
     prepass allows rather than as coarse as correctness allows.
@@ -350,9 +354,10 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     rows, clip prepass) stay seconds even at 8x the gate. When the mean
     edge count per polygon exceeds _HEAVY_EDGES_PER_POLY the mean gate
     widens 8x (the max gate — a single worst-task bound — never moves).
-    Measured on megacoast (res 1 -> 2): 20M-point join 3.5x faster,
-    prepass +2 s once per snapshot. Low-vertex snapshots are unaffected
-    (coastline mean ~3.8k edges/poly keeps the strict gate)."""
+    Measured on megacoast (res 1 -> 2): 20M-point join 3.5x faster; the
+    res-2 clipped dim builds in ~0.2 s once per snapshot. Low-vertex
+    snapshots are unaffected (coastline mean ~3.8k edges/poly keeps the
+    strict gate)."""
     s = _cover_stats(boundaries)
     if not s["n_outer"]:
         return 0
@@ -486,10 +491,10 @@ def broadcast_pip_join_native(
     against clipped_cell_rows — each (cell, polygon) row carries only the
     geometry clipped to that cell's window, making the per-point fold
     O(local edges), so fine prefilter resolutions work at ANY vertex
-    weight. The dim build gains a once-per-snapshot Python prepass (the
-    points side stays zero-Python, zero-shuffle); keep the default when
-    the polygon set is low-vertex and the fully-native dim build matters
-    more than fold locality.
+    weight. The dim build gains a once-per-snapshot compiled clip of each
+    boundary (jvm/ClipCells.java, in the boundary scan's stage; the whole
+    plan stays zero-Python); keep the default when the polygon set is
+    low-vertex and the cheaper dim build matters more than fold locality.
 
     extra_cols: additional point-side columns carried through to the output
     (e.g. event_time on the Structured Streaming path — every plan shape
@@ -716,127 +721,6 @@ def _perimeter_km_col() -> Column:
     )
 
 
-# target vertex load per clip-prepass unit. Every unit ships its
-# boundary's full strip-intersecting rings, so a boundary split into k
-# units crosses the shuffle and the Arrow channel ~k times; the split only
-# pays while the kernel time it parallelizes exceeds that transport plus a
-# Python stage's fixed cost (~0.3 s per stage at local[4] on a 4-core VM).
-# clipped_cell_cover measures ~0.8 us/vertex serial (0.39 s for the
-# 500k-vertex megacoast boundary at res 2; the per-strip clip it replaced
-# cost 7.8 us/vertex, hence the old 60k target), so a unit of up to 500k
-# vertices costs about one stage overhead of kernel time: the megacoast
-# ships each vertex once (two units, 600k vertices, where the 60k target
-# shipped 4.0M across 11 units) and a 10^7-vertex boundary still spreads
-# over 20 tasks (each shipping the whole ring).
-_CLIP_CHUNK_TARGET_VERTICES = 500_000
-
-
-def _clip_units(boundaries: DataFrame, res: int) -> DataFrame:
-    """(boundary_id, rings, strip_lo, strip_hi) work units for the clip
-    prepass (round 8). Cells are strip-aligned, so partitioning each
-    boundary's latitude-strip range into contiguous chunks (one unit per
-    ~_CLIP_CHUNK_TARGET_VERTICES vertices) parallelizes the prepass with
-    NO downstream merge: a unit emits exactly the (cell, pieces) entries
-    of its own strips, disjoint from every other unit's, with identical
-    per-entry content and piece order.
-
-    Each unit carries the boundary's rings FILTERED (with a one-strip
-    safety margin) to those whose latitude range can touch the unit's
-    strips — a ring that cannot reach them would clip to nothing. The
-    final repartition spreads units across the cluster; it moves each
-    ring once per unit that keeps it (see _CLIP_CHUNK_TARGET_VERTICES for
-    why that is about once)."""
-    target = _CLIP_CHUNK_TARGET_VERTICES
-    e = expr_once(("clip_units", res, target), lambda: _clip_unit_exprs(res, target))
-    units = (
-        normalize_rings(boundaries)
-        .select("boundary_id", *_named(e, "_r2"))
-        .select("boundary_id", "_r2", *_named(e, "_i0", "_ns", "_nc"))
-        # explode(sequence) drops boundaries with null bounds (no rings)
-        .withColumn("_k", e["_k"])
-        .select("boundary_id", *_named(e, "rings", "strip_lo", "strip_hi"))
-    )
-    return units.repartition(_shuffle_partitions(boundaries.sparkSession))
-
-
-def _clip_unit_exprs(res: int, target: int) -> dict[str, Column]:
-    """_clip_units' columns at `res`, about `target` vertices per unit, by
-    the name each gets: the staged rings `_r2`, the strip bounds
-    `_i0`/`_ns`/`_nc` read from them, the chunk explode `_k`, and each
-    unit's `rings`, `strip_lo`, `strip_hi`."""
-    step = cells.hexlite_step(res)
-    n_lat, _ = cells.hexlite_dims(res)
-
-    r2 = F.col("_r2")
-    staged = F.transform(
-        F.col("rings"),
-        lambda r: F.struct(
-            r.alias("r"),
-            F.floor((F.array_min(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i0"),
-            F.floor((F.array_max(r["ring_lat"]) + F.lit(90.0)) / F.lit(step)).alias("i1"),
-            F.size(r["ring_lat"]).alias("nv"),
-        ),
-    )
-    i0 = F.greatest(F.lit(0).cast("long"), F.array_min(F.transform(r2, lambda x: x["i0"])))
-    i1 = F.least(F.lit(n_lat - 1).cast("long"), F.array_max(F.transform(r2, lambda x: x["i1"])))
-    n_strips = i1 - i0 + 1
-    total_v = F.aggregate(r2, F.lit(0), lambda a, x: a + x["nv"])
-    n_chunks = F.least(
-        n_strips,
-        F.greatest(F.lit(1).cast("long"), F.ceil(total_v / F.lit(target))),
-    )
-    k = F.col("_k")
-    strip_lo = F.col("_i0") + F.floor(k * F.col("_ns") / F.col("_nc"))
-    strip_hi = F.col("_i0") + F.floor((k + 1) * F.col("_ns") / F.col("_nc")) - 1
-    return {
-        "_r2": staged,
-        "_i0": i0,
-        "_ns": n_strips,
-        "_nc": n_chunks,
-        "_k": F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nc") - 1)),
-        "rings": F.transform(
-            F.filter(r2, lambda x: (x["i0"] <= strip_hi + 1) & (x["i1"] >= strip_lo - 1)),
-            lambda x: x["r"],
-        ),
-        "strip_lo": strip_lo.cast("long"),
-        "strip_hi": strip_hi.cast("long"),
-    }
-
-
-def _unit_covers(batch, res: int) -> Iterator[tuple[int, dict]]:
-    """(boundary_id, clipped_cell_cover) for every _clip_units row of an
-    Arrow batch. The rings are read as zero-copy NumPy slices of the
-    batch's flat coordinate buffers: no per-vertex Python objects on the
-    way in."""
-    from wikibrain_spark.geo import clip as _clip
-
-    rings = batch.column("rings")
-    r_off = rings.offsets.to_numpy()
-    lat, lon = rings.values.field("ring_lat"), rings.values.field("ring_lon")
-    lat_off, lat_v = lat.offsets.to_numpy(), lat.values.to_numpy()
-    lon_off, lon_v = lon.offsets.to_numpy(), lon.values.to_numpy()
-    bids = batch.column("boundary_id").to_numpy()
-    s_lo = batch.column("strip_lo").to_numpy()
-    s_hi = batch.column("strip_hi").to_numpy()
-    for i in range(batch.num_rows):
-        ring_list = [
-            (lat_v[lat_off[k]:lat_off[k + 1]], lon_v[lon_off[k]:lon_off[k + 1]])
-            for k in range(r_off[i], r_off[i + 1])
-        ]
-        yield int(bids[i]), _clip.clipped_cell_cover(
-            ring_list, res, strip_lo=int(s_lo[i]), strip_hi=int(s_hi[i]))
-
-
-def _list_array(lengths: list, values):
-    """Arrow list array of consecutive runs of `values` (run i has
-    lengths[i] elements)."""
-    import pyarrow as pa
-
-    off = np.zeros(len(lengths) + 1, dtype=np.int32)
-    np.cumsum(lengths, out=off[1:])
-    return pa.ListArray.from_arrays(pa.array(off), values)
-
-
 def polygon_compactness(boundaries: DataFrame) -> DataFrame:
     """(boundary_id, area_km2, perimeter_km, polsby_popper): the standard
     compactness QA signal 4*pi*A/P^2 (1.0 = a circle; gerrymander-style
@@ -905,107 +789,52 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
     fine resolutions stay broadcast-sized at ANY vertex weight and each
     point's fold visits only LOCAL edges.
 
-    The build is a mapInArrow over the polygon DIM's clip units — once
-    per snapshot, embarrassingly parallel. The POINTS side stays
-    zero-Python (an equi-join on cell + compiled fold: broadcast in
-    broadcast_pip_join_native, on (cell, salt) in shuffle_pip_join).
+    The build is one projection over the boundary scan: the compiled
+    jvm/ClipCells.java clips each boundary row to its cells (byte for byte
+    what geo/clip.py's clipped_cell_cover gives, packed as below) and an
+    explode makes the rows. No Python and no shuffle: the clip runs in the
+    scan's own stage, one boundary per call, once per snapshot: ~0.2 s
+    warm on a 4-core VM for the 600k-vertex megacoast at res 2 (3.3k
+    rows). The POINTS side stays zero-Python too (an equi-join on cell + compiled
+    fold: broadcast in broadcast_pip_join_native, on (cell, salt) in
+    shuffle_pip_join).
 
     bbin: one bbox per probe FRAME over the entry's pieces (raw and
     unwrapped pieces can coexist in one cell for a Fiji-style
     multipolygon; a single bbox cannot span both frames), packed as five
     little-endian doubles [lat_min, lat_max, lon_min, lon_max, w] with
-    w = 1.0 for the unwrapped frame. A point in region ∩ cell lies in
-    some piece's region, hence inside its frame's bbox — the bbox gate
-    stays a correct prefilter. ebin: every piece's closed edge list,
-    five little-endian doubles [y0, y1, x0, x1, w] per edge. Parity over
-    the clipped pieces equals full-ring parity for probes inside the cell
-    (geo/clip.py's preservation argument). edges: the same edge list as
-    array<struct<y0, x0, y1, x1, w>>, for size(p.edges) counters; the
-    join prunes it from the broadcast."""
-    import pyarrow as pa
-
-    def struct(names, arrays):
-        return pa.StructArray.from_arrays(arrays, names=names)
-
-    def packed(lengths, records: np.ndarray):
-        """Binary array whose value i is the next lengths[i] rows of the
-        (n, 5) float64 `records`, as little-endian bytes."""
-        off = np.zeros(len(lengths) + 1, dtype=np.int32)
-        np.cumsum(lengths, out=off[1:])
-        data = np.ascontiguousarray(records, dtype="<f8")
-        return pa.Array.from_buffers(pa.binary(), len(lengths), [
-            None, pa.py_buffer(off * np.int32(records.shape[1] * 8)), pa.py_buffer(data.ravel()),
-        ])
-
-    def dim_fn(batches):
-        for batch in batches:
-            cell_ids: list[int] = []
-            bids: list[int] = []
-            cell_nv: list[int] = []
-            n_boxes: list[int] = []
-            boxes: list[tuple] = []
-            ys_l: list[np.ndarray] = []
-            xs_l: list[np.ndarray] = []
-            ws: list[bool] = []
-            for bid, pieces in _unit_covers(batch, res):
-                for cell_id, plist in pieces.items():
-                    # one bbox per probe frame, frames in first-seen order
-                    frame_box: dict[bool, list[float]] = {}
-                    for ys, xs, w in plist:
-                        ys_l.append(ys)
-                        xs_l.append(xs)
-                        ws.append(bool(w))
-                        lo_y, hi_y = float(ys.min()), float(ys.max())
-                        lo_x, hi_x = float(xs.min()), float(xs.max())
-                        fb = frame_box.get(bool(w))
-                        if fb is None:
-                            frame_box[bool(w)] = [lo_y, hi_y, lo_x, hi_x]
-                        else:
-                            fb[0] = min(fb[0], lo_y); fb[1] = max(fb[1], hi_y)
-                            fb[2] = min(fb[2], lo_x); fb[3] = max(fb[3], hi_x)
-                    boxes.extend((*fb, float(w)) for w, fb in frame_box.items())
-                    n_boxes.append(len(frame_box))
-                    cell_nv.append(sum(ys.size for ys, _, _ in plist))
-                    cell_ids.append(int(cell_id))
-                    bids.append(bid)
-            if not cell_ids:
-                continue
-            # a closed piece's edge list is (v_i -> v_{i+1 mod n}): the
-            # vertex arrays against a next-index gather that wraps at each
-            # piece's end, for the whole batch in a few array ops
-            y0, x0 = np.concatenate(ys_l), np.concatenate(xs_l)
-            lens = np.array([a.size for a in ys_l])
-            ends = np.cumsum(lens)
-            nxt = np.arange(1, y0.size + 1)
-            nxt[ends - 1] = ends - lens
-            y1, x1 = y0[nxt], x0[nxt]
-            w = np.repeat(np.array(ws, dtype=bool), lens)
-            edges = struct(["y0", "x0", "y1", "x1", "w"], [
-                pa.array(y0), pa.array(x0), pa.array(y1), pa.array(x1), pa.array(w),
-            ])
-            bid_arr = pa.array(bids, pa.int64())
-            yield pa.RecordBatch.from_arrays([
-                pa.array(cell_ids, pa.int64()),
-                bid_arr,
-                struct(["bid", "bbin", "ebin", "edges"], [
-                    bid_arr,
-                    packed(n_boxes, np.array(boxes, dtype=np.float64)),
-                    packed(cell_nv, np.column_stack([y0, y1, x0, x1, w.astype(np.float64)])),
-                    _list_array(cell_nv, edges),
-                ]),
-            ], names=["cell", "boundary_id", "p"])
-
-    schema = (
-        "cell long, boundary_id long, p struct<bid: long, bbin: binary, "
-        "ebin: binary, edges: array<struct<y0: double, x0: double, "
-        "y1: double, x1: double, w: boolean>>>"
+    w = 1.0 for the unwrapped frame, frames in first-seen order. A point
+    in region ∩ cell lies in some piece's region, hence inside its
+    frame's bbox — the bbox gate stays a correct prefilter. ebin: every
+    piece's closed edge list, five little-endian doubles [y0, y1, x0, x1,
+    w] per edge. Parity over the clipped pieces equals full-ring parity
+    for probes inside the cell (geo/clip.py's preservation argument).
+    edges: the same edge list as array<struct<y0, x0, y1, x1, w>>, for
+    size(p.edges) counters, unpacked from ebin by the compiled
+    jvm/UnpackEdges.java only where it is read; the join reads bbin and
+    ebin alone, so Spark prunes it."""
+    jvm.register(boundaries.sparkSession)
+    clipped, p = expr_once(("clipped_cell_rows", res), lambda: _clipped_row_exprs(res))
+    return (
+        normalize_rings(boundaries)
+        .select("boundary_id", clipped.alias("_c"))
+        .select(F.col("_c")["cell"].alias("cell"), "boundary_id", p.alias("p"))
     )
-    # the struct the fold consumes is built as Arrow arrays over the flat
-    # per-batch vertex buffers, so the channel carries columnar buffers
-    # with no per-element conversion.
-    # strip-aligned parallel prepass (round 8, see _clip_units): units are
-    # disjoint in (cell), so no (cell, bid) entry is split across tasks
-    return _clip_units(boundaries, res).mapInArrow(dim_fn, schema=schema)
+
+
+def _clipped_row_exprs(res: int) -> tuple[Column, Column]:
+    """clipped_cell_rows' explode of the compiled clip over `rings`, and
+    the p struct built from the exploded `_c`."""
+    c = F.col("_c")
+    clipped = F.explode(F.call_function(
+        jvm.CLIP_CELLS, F.col("rings"), F.lit(res), F.lit(cells.hexlite_step(res))))
+    p = F.struct(
+        F.col("boundary_id").alias("bid"),
+        c["bbin"].alias("bbin"),
+        c["ebin"].alias("ebin"),
+        F.call_function(jvm.UNPACK_EDGES, c["ebin"]).alias("edges"),
+    )
+    return clipped, p
 
 
 def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
@@ -1170,8 +999,8 @@ def shuffle_pip_join(
     polygon's FULL edge list on every covered cell, O(cells x vertices),
     and every candidate folds over all of it. clipped_cell_rows carries
     only the polygon clipped to the cell's window: O(vertices + cells)
-    in total, built by a once-per-snapshot mapInArrow prepass over the
-    polygon dim, and each fold visits a handful of LOCAL edges
+    in total, built by the compiled clip (jvm/ClipCells.java) in the
+    boundary scan's stage, and each fold visits a handful of LOCAL edges
     (geo/clip.py has the parity-preservation argument). "auto" clips
     exactly when the unclipped dim would pair more than
     _CLIP_THRESHOLD_EDGES edges with cells — the same statistics and
