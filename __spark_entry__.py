@@ -202,7 +202,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: image table -> compiled binary geotag parse -> H3-style cells
     -> point-in-polygon join -> per-tile assignment rows, in the zero-Python
     `native` configuration (the scaling-gate carrier, BENCH/BASELINE.md);
-    tests pin it row-identical to the mapInPandas paths."""
+    tests pin it row-identical to the NumPy oracle (synthetic.expected_tiles)."""
     from wikibrain_spark.sources import synthetic
 
     paths = synthetic.materialize(DATA_DIR, n_images=2000)
@@ -422,7 +422,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     q["q_tile_pyramid"] = q_tile_pyramid
 
-    # ---- point-in-polygon spatial join via the REAL mapInPandas kernel (U4)
+    # ---- point-in-polygon spatial join via the compiled native PIP fold (U4)
     def q_pip_rectangles(spark, sf):
         pts = _event_points(spark, sf).withColumnRenamed("event_id", "image_id")
         pairs = spatial_join.broadcast_pip_join(

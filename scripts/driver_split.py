@@ -20,7 +20,9 @@ It prints one JSON line per run (seconds per part, py4j commands the
 driver's thread sent during read, stats, build and plan, and whether the
 run's (count, checksum) equals the workload's reference), then one line
 of medians. --root measures another source checkout (for a parent/change
-comparison, interleave the two over the same seeds). Runs on local[N],
+comparison, interleave the two over the same seeds): its JVM starts with
+that checkout as the working directory, so Spark's Python workers import
+the measured package, not this one. Runs on local[N],
 N = the usable cores; everything it writes stays under the measured
 checkout's .perfbench_work/ and is deleted at the end.
 """
@@ -102,6 +104,8 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
     root = os.path.abspath(args.root)
     sys.path[:0] = [os.path.join(root, "perfbench"), root]
+    # Python workers put their cwd ahead of PYTHONPATH
+    os.chdir(root)
     import run  # perfbench/run.py: isolate() and stop_jvm()
     import workloads
 

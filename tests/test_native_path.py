@@ -1,5 +1,8 @@
 """The fully-JVM flagship path (compiled binary f64 parse + compiled
-even-odd PIP) must agree exactly with the fused Python path."""
+even-odd PIP) must agree exactly with the NumPy oracle, and every geotag
+parse Spark runs (batch, streaming, flagship) is the compiled one."""
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -98,15 +101,103 @@ def test_repeated_boundary_id_raises(spark):
         spatial_join.shuffle_pip_join(pts, boundaries, res=2, clip_cover=False)
 
 
-def test_native_pip_matches_kernel_path(spark, paths):
+def test_repeated_boundary_id_raises_on_fixed_res_native(spark):
+    """The fixed-res and one-row native dims read the same statistics
+    pass as "auto", so a repeated id raises there too instead of pairing
+    a point with it twice."""
+    square = ([5.0, 5.0, 15.0, 15.0], [-5.0, 5.0, 5.0, -5.0])
+    boundaries = spark.createDataFrame(
+        [(1, *square), (7, *square), (7, *square)],
+        "boundary_id long, ring_lat array<double>, ring_lon array<double>")
+    pts = spark.createDataFrame([("a", 10.0, 1.0)], "image_id string, lat double, lon double")
+    for res in (2, None):
+        with pytest.raises(ValueError, match="boundary_id 7 "):
+            spatial_join.broadcast_pip_join_native(pts, boundaries, cell_prefilter_res=res)
+
+
+def _jobs_run_by(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_native_build_runs_only_the_statistics_jobs(spark, paths):
+    """Every native entry reads the memoized statistics pass, so building
+    a plan at "auto" or a fixed res launches exactly the jobs
+    auto_prefilter alone does, and none on a memo hit."""
     images = spark.read.parquet(paths["images"])
     boundaries = spark.read.parquet(paths["boundaries"])
-    native = spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
-    python_path = spatial_join.tile_assignments(images, boundaries, res=9, strategy="fused")
-    a = native.toPandas().sort_values(["image_id", "boundary_id"]).reset_index(drop=True)
-    b = python_path.toPandas().sort_values(["image_id", "boundary_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) > 0
+    pts = images.select("image_id", *binparse.geotag_cols("bytes"))
+
+    def cold(fn):
+        def run():
+            spatial_join.clear_cover_stats_cache()
+            fn()
+        return run
+
+    stats = _jobs_run_by(spark, "wb_stats", cold(lambda: spatial_join.auto_prefilter(boundaries)))
+    assert stats > 0
+    for res in ("auto", 4, None):
+        build = functools.partial(spatial_join.broadcast_pip_join_native, pts, boundaries, res)
+        assert _jobs_run_by(spark, f"wb_cold_{res}", cold(build)) == stats, res
+        assert _jobs_run_by(spark, f"wb_warm_{res}", build) == 0, res
+
+
+def test_native_pip_matches_kernel_path(spark, paths):
+    """The flagship strategies ("fused" is an alias of "native") return
+    exactly the NumPy oracle's rows over the fixture's true geotags."""
+    images = spark.read.parquet(paths["images"])
+    boundaries = spark.read.parquet(paths["boundaries"])
+    want = synthetic.expected_tiles(
+        pd.read_parquet(paths["expected_geotags"]), pd.read_parquet(paths["boundaries"]))
+    assert len(want) > 0
+    for strategy in ("native", "fused"):
+        got = spatial_join.tile_assignments(images, boundaries, res=9, strategy=strategy)
+        got = got.select("image_id", "cell_r9", "boundary_id", "qid").toPandas()
+        pd.testing.assert_frame_equal(
+            got.sort_values(["image_id", "boundary_id"]).reset_index(drop=True), want)
+
+
+def test_geotag_parses_are_compiled(spark, paths, tmp_path):
+    """The batch parse, the streaming parse and the flagship's "fused"
+    alias each read the header with the two compiled double reads, and
+    none of their executed plans holds a Python operator."""
+    from wikibrain_spark.operators import geotag
+    from wikibrain_spark.streaming import pipeline
+
+    images = spark.read.parquet(paths["images"])
+    boundaries = spark.read.parquet(paths["boundaries"])
+    src = tmp_path / "src"
+    src.mkdir()
+    batch = pd.read_parquet(paths["images"]).head(50).assign(event_time_us=1_700_000_000_000_000)
+    batch.to_parquet(src / "part0.parquet", index=False)
+    q = pipeline.run_stream_once(
+        pipeline.streaming_geotags(spark, str(src), res=3), str(tmp_path / "ckpt"),
+        "wb_geotag_stream", output_mode="append")
+    plans = {
+        "batch": _plan(geotag.extract_geotags(images, with_s2=False)),
+        "stream": q._jsq.explainInternal(False),
+        "fused": _plan(spatial_join.tile_assignments(images, boundaries, strategy="fused")),
+    }
+    for name, plan in plans.items():
+        for op in ("Python", "InPandas", "InArrow"):
+            assert op not in plan, (name, plan)
+        assert plan.count(f"{jvm.LE_DOUBLE}(") == 2, (name, plan)
+
+    streamed = spark.sql("select image_id, lat, lon, cell from wb_geotag_stream").toPandas()
+    parsed = geotag.extract_geotags(
+        spark.read.parquet(str(src)), resolutions=(3,), with_s2=False).toPandas()
+    pd.testing.assert_frame_equal(
+        streamed.sort_values("image_id").reset_index(drop=True),
+        parsed.rename(columns={"cell_r3": "cell"}).sort_values("image_id").reset_index(drop=True))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_native_plan_has_no_python(spark, paths):

@@ -142,45 +142,6 @@ def test_polygon_index_rings_form_with_wrap_and_holes():
     assert east and west
 
 
-def test_auto_index_res_sizes_to_polygon_extent():
-    """Continent-scale polygons must get a coarse bucket grid: at a fixed
-    res 4 a 60-degree rectangle enumerates ~2x10^5 bucket cells per worker
-    (measured as the dominant broadcast-strategy cost). Small city polygons
-    must keep a fine grid."""
-    from wikibrain_spark.operators.spatial_join import _auto_index_res
-
-    big = [[([-20.0, -20.0, 40.0, 40.0], [-90.0, 0.0, 0.0, -90.0], False)]]
-    small = [[([52.0, 52.0, 52.2, 52.2], [13.0, 13.2, 13.2, 13.0], False)]]
-    r_big, r_small = _auto_index_res(big), _auto_index_res(small)
-    assert r_big < r_small
-    # the chosen res really does bound the mean cover
-    from wikibrain_spark.geo import cells as c
-    step = c.hexlite_step(r_big)
-    assert (60.0 / step + 1) * (90.0 / step + 1) <= 256
-    assert _auto_index_res([]) == 0  # degenerate: no outer rings
-
-
-def test_auto_index_res_max_gate_on_skewed_mix(monkeypatch):
-    """One continent ring among 10^3 city rings must NOT re-inherit the
-    fine-res bucket-enumeration trap: the cities dilute the MEAN below the
-    gate while the continent's own cover explodes. The max gate caps the
-    worst ring's cover (round-5 verdict #3)."""
-    from wikibrain_spark.geo import cells as c
-    from wikibrain_spark.operators import spatial_join
-
-    continent = [([-20.0, -20.0, 40.0, 40.0], [-90.0, 0.0, 0.0, -90.0], False)]
-    city = [([52.0, 52.0, 52.2, 52.2], [13.0, 13.2, 13.2, 13.0], False)]
-    skewed = [continent] + [city] * 1000
-    res = spatial_join._auto_index_res(skewed)
-    step = c.hexlite_step(res)
-    # the continent's cover at the chosen res is bounded by the max gate
-    assert (60.0 / step + 1.0) * (90.0 / step + 1.0) <= 4096.0
-    # and the gate actually bound: the mean-only choice would be finer
-    monkeypatch.setattr(spatial_join, "_INDEX_MAX_RING_CELLS", float("inf"))
-    mean_only = spatial_join._auto_index_res(skewed)
-    assert res < mean_only
-
-
 def test_dateline_sliver_seam_parity(spark):
     """A wrapped ring whose unwrapped lon_max lands just past +180 (in the
     grid's over-wide last cell) contains probe points that encode to

@@ -70,9 +70,10 @@ def test_clipped_cell_cover_strip_partition_equals_full():
 
 
 def test_clip_units_cover_distributed_equals_direct(spark):
-    """clipped_cell_rows through _clip_units emits exactly one row per
-    (cell, boundary) whose packed edges are the pieces' closed edge
-    lists from the direct per-boundary clipped_cell_cover."""
+    """clipped_cell_rows (the compiled clip over the coastline fixture,
+    is_hole flags included) emits exactly one row per (cell, boundary)
+    whose packed edges are the pieces' closed edge lists from the direct
+    per-boundary clipped_cell_cover."""
     coast = synthetic.generate_coastlines()
     bnd = spark.createDataFrame(
         [(int(r["boundary_id"]),

@@ -70,12 +70,14 @@ def extract_geotag(payload: bytes) -> tuple[float, float]:
 
 
 def extract_geotags_batch(payloads) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized geotag extraction over a sequence of payload bytes.
+    """Vectorized geotag extraction over a sequence of payload bytes: the
+    NumPy reference the compiled header parse (binparse.geotag_cols) is
+    tested against.
 
     The fixed-size headers are concatenated into one buffer and parsed with
-    a single NumPy view — no per-row struct.unpack (measured ~5x faster on
-    Arrow-batch-sized inputs; the only remaining Python-level loop is the
-    26-byte slice per row, skipped when payloads are pre-sliced headers).
+    a single NumPy view — no per-row struct.unpack (the only Python-level
+    loop is the 26-byte slice per row, skipped when payloads are
+    pre-sliced headers).
     """
     n = len(payloads)
     if n == 0:

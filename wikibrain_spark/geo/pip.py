@@ -37,9 +37,10 @@ its spatial surface is point distances, wikimedia_link_issue_reporter.py
 
 The index buckets polygon bboxes into hexlite cells at a chosen resolution;
 lookup is O(1) per point + exact tests against only the bucket's polygons.
-This is the worker-side structure of the fused geotag + PIP path
-(spatial_join.geotag_pip_fused): it is built once per Python worker from
-broadcast arrays (SURVEY.md U4).
+Spark never runs this module: the engine's one PIP fold is the compiled
+jvm/PipFold.java (spatial_join). The NumPy kernel and PolygonIndex are
+its test oracles (synthetic.expected_tiles, perfbench's correctness
+check) and the reference for its edge rule and floating-point order.
 """
 
 from __future__ import annotations

@@ -33,7 +33,7 @@ def flagship_partitioned(
 ) -> dict[str, dict]:
     """Run tile assignment band-by-band with ledger commits; re-runs skip
     committed bands. Returns this run's newly committed metrics."""
-    tiles = spatial_join.tile_assignments(images, boundaries, res=res, strategy="fused")
+    tiles = spatial_join.tile_assignments(images, boundaries, res=res, strategy="native")
     # band = latitude prefix of the tile cell key (the 'keyed by H3 cell'
     # partitioning): decode lat_idx from the packed cell id
     n_lat, _ = cells.hexlite_dims(res)

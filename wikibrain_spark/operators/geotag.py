@@ -1,12 +1,17 @@
 """Geotag extraction + cell encoding over the image table (SURVEY.md U3).
 
 Design for 100 TB:
-  - The ONLY Python work is parsing the 26-byte payload header (an EXIF
-    analogue) inside mapInPandas — pixels are never decoded on this path.
-    Column pruning matters: we select just (image_id, bytes) into the UDF,
-    so the Parquet scan never materializes captions for this stage.
+  - The 26-byte payload header (an EXIF analogue) is read in the JVM: lat
+    and lon are two calls of the compiled little-endian double read
+    (binparse.geotag_cols, jvm/LeDouble.java) inside the scan's stage, so
+    pixels are never decoded on this path and no row crosses to Python.
+    The same two reads serve the streaming ingest
+    (streaming.pipeline.streaming_geotags, jobs.streaming_flagship_ingest)
+    and the flagship tile_assignments strategies.
   - Cell encoding is a native Column expression (wikibrain_spark.geo.cells
-    hexlite_cell_col) => whole-stage codegen, no second Python hop.
+    hexlite_cell_col) => whole-stage codegen.
+  - The S2 cell id (with_s2) is the one Python column: an Arrow-batched
+    pandas UDF over the NumPy kernel.
   - The full pixel decode (PSNR checks, features, mosaics) is a separate
     operator `decode_stats` used only where pixels are genuinely needed.
 """
@@ -20,7 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wikibrain_spark import codecs
+from wikibrain_spark import codecs, jvm
+from wikibrain_spark.functions import binparse
 from wikibrain_spark.geo import cells
 
 GEOTAG_RESOLUTIONS = (7, 8, 9, 10, 11)  # H3-style res 7-11 per north_star
@@ -31,24 +37,17 @@ def extract_geotags(images: DataFrame, resolutions=GEOTAG_RESOLUTIONS, with_s2: 
 
     Reference parity: replaces the per-row coordinate lookup the reference
     does via network calls (wikimedia_link_issue_reporter.py:1866-1878) with
-    a batched header parse + native cell encoding.
+    the compiled header parse + native cell encoding. A payload too short
+    to hold the header parses to null coordinates.
     """
-
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            lat, lon = codecs.extract_geotags_batch(b["hdr"].tolist())
-            yield pd.DataFrame({"image_id": b["image_id"], "lat": lat, "lon": lon})
-
-    # slice the fixed-size header JVM-side: the Arrow channel ships 26 bytes
-    # per row instead of the full pixel payload (~100x less traffic — the
-    # geotag stage is bandwidth-bound, not compute-bound)
-    tagged = images.select(
-        "image_id", F.substring("bytes", 1, codecs.HEADER_SIZE).alias("hdr")
-    ).mapInPandas(parse_batch, schema="image_id string, lat double, lon double")
-    out_cols = [F.col("image_id"), F.col("lat"), F.col("lon")]
-    for r in resolutions:
-        out_cols.append(cells.hexlite_cell_col(F.col("lat"), F.col("lon"), r).alias(f"cell_r{r}"))
-    df = tagged.select(*out_cols)
+    # the parse resolves in images' session, which need not be the active
+    # one that le_double_col registers on
+    jvm.register(images.sparkSession)
+    df = images.select("image_id", *binparse.geotag_cols("bytes")).select(
+        "image_id", "lat", "lon",
+        *(cells.hexlite_cell_col(F.col("lat"), F.col("lon"), r).alias(f"cell_r{r}")
+          for r in resolutions),
+    )
     if with_s2:
         # S2 needs trig + Hilbert bits -> Arrow-batched pandas UDF (still no
         # per-row Python: the kernel is pure vectorized NumPy)

@@ -6,33 +6,25 @@ per-ring antimeridian unwrap — see geo/pip.py's module doc for the model.
 Legacy single-ring frames (ring_lat/ring_lon arrays) are upgraded by
 normalize_rings at every operator entry point.
 
-Two operators, one logical contract (SURVEY.md U4, J12-J14):
-
-1. Native candidate rows, the one operator behind broadcast_pip_join_native,
-   broadcast_pip_join and shuffle_pip_join: each point is joined to the
-   candidate polygons' packed geometry rows, and the compiled parity fold
-   jvm/PipFold.java is the join condition. Zero Python on the points side,
-   and none in the dims: the clipped dim's clip is compiled too
-   (jvm/ClipCells.java, ~0.2 s warm for the 600k-vertex megacoast at res
-   2 on a 4-core VM, in the boundary scan's stage).
-   - broadcast_pip_join_native broadcasts the dim (auto_prefilter plans
-     it: one-row, cell-prefiltered, or clipped to each cell's window);
-     broadcast_pip_join is its cell_prefilter_res="auto" form.
-   - shuffle_pip_join builds the same (cell, polygon) rows but joins them
-     on (cell, salt) with no broadcast hint, so Catalyst and AQE pick the
-     distribution from the dim's size. Hot cells (megacity polygons) are
-     salted explicitly: the points side gets salt =
-     pmod(xxhash64(image_id), n_salt) and each hot cell's dim rows are
-     replicated n_salt times, ONLY for cells above a hotness threshold
-     measured by a sampled count pre-pass.
-
-2. geotag_pip_fused, the one Python path: the geotag header parse fused
-   with a grid-bucketed PolygonIndex (geo/pip.py) in one mapInPandas,
-   built once per partition from a driver-side broadcast of the rings.
-   It stays as bench.py's flagship_fused row until that row moves onto
-   the native operator (ROADMAP direction 3); with its expressions built
-   once per JVM, the native plan now builds and runs faster at that
-   row's size.
+One operator (SURVEY.md U4, J12-J14): native candidate rows, behind
+broadcast_pip_join_native, broadcast_pip_join, shuffle_pip_join and every
+tile_assignments strategy. Each point is joined to the candidate
+polygons' packed geometry rows, and the compiled parity fold
+jvm/PipFold.java is the join condition. Zero Python on the points side,
+and none in the dims: the clipped dim's clip is compiled too
+(jvm/ClipCells.java, ~0.2 s warm for the 600k-vertex megacoast at res 2
+on a 4-core VM, in the boundary scan's stage). geo/pip.py's NumPy kernel
+and PolygonIndex are the test oracles the fold is pinned against.
+- broadcast_pip_join_native broadcasts the dim (auto_prefilter plans it:
+  one-row, cell-prefiltered, or clipped to each cell's window);
+  broadcast_pip_join is its cell_prefilter_res="auto" form.
+- shuffle_pip_join builds the same (cell, polygon) rows but joins them on
+  (cell, salt) with no broadcast hint, so Catalyst and AQE pick the
+  distribution from the dim's size. Hot cells (megacity polygons) are
+  salted explicitly: the points side gets salt =
+  pmod(xxhash64(image_id), n_salt) and each hot cell's dim rows are
+  replicated n_salt times, ONLY for cells above a hotness threshold
+  measured by a sampled count pre-pass.
 
 Driver cost: a PySpark Column is built in the JVM one py4j round trip per
 operator, and the native plan's higher-order-function expressions run to
@@ -54,13 +46,12 @@ import math
 from collections import OrderedDict
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikibrain_spark import jvm
-from wikibrain_spark.geo import cells, pip
+from wikibrain_spark.geo import cells
 from wikibrain_spark.session import expr_once
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
@@ -71,14 +62,10 @@ _MAX_MEAN_CELLS = 1024.0  # mean bbox cover per outer ring
 _MAX_RING_CELLS = 16384.0  # worst ring's bbox cover
 _HEAVY_EDGES_PER_POLY = 10_000.0  # above this mean, the mean gate widens 8x
 _CLIP_THRESHOLD_EDGES = 2_000_000.0  # unclipped sum_poly(edges x cover) past which to clip
-_INDEX_MAX_MEAN_CELLS = 256.0  # _auto_index_res (PolygonIndex buckets): mean cover
-_INDEX_MAX_RING_CELLS = 4096.0  # _auto_index_res: worst ring's cover
 
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
 RINGS_TYPE = "array<struct<ring_lat: array<double>, ring_lon: array<double>, is_hole: boolean>>"
-# the hit rows geotag_pip_fused emits
-_PIP_SCHEMA = "image_id string, lat double, lon double, boundary_id long"
 
 
 def normalize_rings(boundaries: DataFrame) -> DataFrame:
@@ -101,52 +88,6 @@ def normalize_rings(boundaries: DataFrame) -> DataFrame:
     return boundaries.select(*keep, wrapped.alias("rings"))
 
 
-def _collect_polygon_rings(boundaries: DataFrame) -> tuple[np.ndarray, list]:
-    """Driver-side pull of the broadcast dim: (ids, per-polygon ring-tuple
-    lists) as plain Python lists (pickles cheaply into the broadcast)."""
-    rows = normalize_rings(boundaries).select("boundary_id", "rings").collect()
-    ids = np.array([r["boundary_id"] for r in rows], dtype=np.int64)
-    rings = [
-        [(list(rr["ring_lat"]), list(rr["ring_lon"]), bool(rr["is_hole"])) for rr in r["rings"]]
-        for r in rows
-    ]
-    return ids, rings
-
-
-def _auto_index_res(rings_per_poly) -> int:
-    """Finest hexlite res whose bbox cover stays <= _INDEX_MAX_MEAN_CELLS
-    cells per outer ring ON AVERAGE and <= _INDEX_MAX_RING_CELLS for EVERY
-    ring. A fixed fine res is a trap for large polygons: at res 4 a
-    60°-wide boundary enumerates ~2x10^5 bucket cells, and the PolygonIndex
-    rebuilds that dict in EVERY Python worker — measured as the dominant
-    cost of the broadcast strategy on continent-scale test rectangles.
-    The max gate matters for SKEWED sets (round-5 verdict #3): one
-    continent-scale ring among 10^3 city-scale rings passes the mean gate
-    at a fine res (the cities dilute the average) and re-inherits exactly
-    that per-worker enumeration pathology — the worst ring, not the mean,
-    is what a worker's dict build actually pays per polygon. Driver-side,
-    deterministic, O(total rings)."""
-    spans = []
-    for rings in rings_per_poly:
-        for rlat, rlon, is_hole in rings:
-            if is_hole:
-                continue
-            rlat = np.asarray(rlat, dtype=np.float64)
-            rlon = np.asarray(rlon, dtype=np.float64)
-            if pip.ring_wraps(rlon):
-                rlon = pip.unwrap_lon(rlon)
-            spans.append((float(rlat.max() - rlat.min()), float(rlon.max() - rlon.min())))
-    if not spans:
-        return 0
-    for res in range(7, 0, -1):
-        step = cells.hexlite_step(res)
-        covers = [(a / step + 1.0) * (b / step + 1.0) for a, b in spans]
-        if (sum(covers) / len(covers) <= _INDEX_MAX_MEAN_CELLS
-                and max(covers) <= _INDEX_MAX_RING_CELLS):
-            return res
-    return 0
-
-
 def _shuffle_partitions(spark: SparkSession) -> int:
     """spark.sql.shuffle.partitions as an int, falling back to the
     cluster's default parallelism when the conf is non-numeric ("auto"
@@ -160,9 +101,8 @@ def _shuffle_partitions(spark: SparkSession) -> int:
 
 # LRU-bounded memo of _cover_stats results. Keyed by the plan's
 # semanticHash: a boundary snapshot is treated as IMMUTABLE for the
-# session (documented contract — same assumption geotag_pip_fused's
-# PolygonIndex pull makes). Every consumer is a perf knob, so a stale
-# hit can never change output rows; the bound keeps a long-lived session
+# session (documented contract). Every consumer is a perf knob, so a
+# stale hit can never change output rows; the bound keeps a long-lived session
 # iterating over many snapshots from growing the memo forever, and
 # clear_cover_stats_cache() is the explicit invalidation hook for a
 # session that REWRITES a snapshot path and wants fresh statistics.
@@ -189,14 +129,15 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     S_e_ab/step^2 + S_e_sum/step + S_e_n with S_e_* = sum_poly(edges *
     sum_outer_ring(ab | a+b | 1)) — also linear, captured in the same
     pass. Memoized per logical plan (semanticHash): a boundary snapshot
-    is treated as immutable for the session (the same assumption
-    geotag_pip_fused's PolygonIndex pull makes); every consumer is a perf
+    is treated as immutable for the session; every consumer is a perf
     knob, so a stale hit can never change output rows.
 
     The same pass counts the polygon rows per boundary_id (ring 0 of
     each row) and raises ValueError naming a repeated id: every native
     dim keys its geometry rows by boundary_id, so a repeated id would
-    pair a point with it more than once."""
+    pair a point with it more than once. Every native entry point
+    (broadcast_pip_join_native at any cell_prefilter_res, and
+    shuffle_pip_join) calls this first."""
     key = boundaries.semanticHash()
     stats = _COVER_STATS_CACHE.get(key)
     if stats is None:
@@ -329,8 +270,7 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
     conservative in exactly the safe direction. One tiny agg job, O(1)
     rows collected, memoized per logical plan (semanticHash) so repeated
     joins against the same boundary snapshot pay it once per session
-    (treats a boundary snapshot as immutable for the session — the same
-    assumption geotag_pip_fused's PolygonIndex pull makes; res is a
+    (treats a boundary snapshot as immutable for the session; res is a
     perf knob, so a stale hit can never change the output rows).
 
     What the gates bound: (a) the clip prepass —
@@ -500,7 +440,11 @@ def broadcast_pip_join_native(
     (e.g. event_time on the Structured Streaming path — every plan shape
     here is stream-static-join legal: a broadcast static dim and no
     shuffle of the points, so the SAME operator serves batch and stream).
+
+    boundary_id must be unique: every variant reads the memoized
+    _cover_stats pass first, which raises ValueError naming a repeated id.
     """
+    _cover_stats(boundaries)  # raises on a repeated boundary_id
     if cell_prefilter_res == "auto":
         cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
 
@@ -914,7 +858,7 @@ def _cover_explode(res: int) -> Column:
         # ordered within each branch's guard (sequence counts DOWN when
         # lo > hi — the F.sequence(1, 0) trap), and no pmod is needed:
         # both branches emit in-range indexes directly.
-        e180 = F.lit(float(np.nextafter(180.0, 0.0)))
+        e180 = F.lit(math.nextafter(180.0, 0.0))
         ja0 = F.greatest(F.lit(0).cast("long"), F.floor((lo_min + F.lit(180.0)) / F.lit(step)))
         ja1 = F.least(
             F.lit(n_lon - 1).cast("long"),
@@ -1065,43 +1009,6 @@ def shuffle_pip_join(
     return _fold_candidates(pts_salted.join(dim_salted, ["cell", "salt"]))
 
 
-def geotag_pip_fused(images: DataFrame, boundaries: DataFrame) -> DataFrame:
-    """Fused geotag-extract + PIP in ONE mapInPandas: images (image_id,
-    bytes) -> (image_id, lat, lon, boundary_id).
-
-    The polygon rings are collected on the driver and broadcast once;
-    each partition builds the PolygonIndex once (bucket grid sized to the
-    polygon extents, _auto_index_res), and each Arrow batch's headers are
-    parsed and probed in the same Python worker, which reads the binary
-    column exactly once. The Python path that remains, as bench.py's
-    flagship_fused row (ROADMAP direction 3).
-    """
-    from wikibrain_spark import codecs
-
-    ids, rings = _collect_polygon_rings(boundaries)
-    bc = images.sparkSession.sparkContext.broadcast((ids, rings, _auto_index_res(rings)))
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p_ids, p_rings, res = bc.value
-        index = pip.PolygonIndex(p_ids, rings=p_rings, res=res)  # once per partition
-        for b in batches:
-            lat, lon = codecs.extract_geotags_batch(b["hdr"].tolist())
-            pt_idx, poly_id = index.query_batch(lat, lon)
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"].to_numpy()[pt_idx],
-                    "lat": lat[pt_idx],
-                    "lon": lon[pt_idx],
-                    "boundary_id": poly_id,
-                }
-            )
-
-    # header-only projection before the Arrow hop (see extract_geotags)
-    return images.select(
-        "image_id", F.substring("bytes", 1, codecs.HEADER_SIZE).alias("hdr")
-    ).mapInPandas(fused, schema=_PIP_SCHEMA)
-
-
 def tile_assignments(
     points: DataFrame, boundaries: DataFrame, res: int = 9, strategy: str = "broadcast",
     native_prefilter_res: int | str | None = "auto",
@@ -1111,39 +1018,27 @@ def tile_assignments(
 
     Returns (image_id, cell_r{res}, boundary_id, qid, wikipedia).
     strategy: 'broadcast' | 'shuffle' (points = geotagged rows), or
-    'fused' | 'native' (points = the raw images DataFrame). 'broadcast'
-    (broadcast_pip_join), 'shuffle' (shuffle_pip_join) and 'native' run
-    the native candidate-row operator with no Python on the points side;
-    'fused' (geotag_pip_fused) is the one Python path, a single Python
-    hop per row. Any other value raises.
+    'native' (points = the raw images DataFrame: the compiled header
+    parse binparse.geotag_cols feeds broadcast_pip_join_native). 'fused'
+    is an alias of 'native'. All of them run the native candidate-row
+    operator with no Python anywhere in the plan. Any other value raises.
 
-    native_prefilter_res: the native strategy's cell-prefilter resolution.
-    Since round 5 the flagship native path DEFAULTS to the cell-prefiltered
-    dim: per-point work drops from O(all polygon edges) to O(cell-candidate
-    edges) — the one-row dim pairs every point with every polygon, which
-    stopped being competitive once boundaries grew multipolygon/hole
-    rings — and the dim build (polygon_cover) is now native expressions,
-    so the whole plan keeps zero Python (pinned). The DEFAULT is "auto"
-    (round 7): both the resolution and the clipped-vs-unclipped dim come
-    from the auto_prefilter statistics pass, so a user pointing the
-    flagship at an unknown/high-vertex boundary snapshot gets a legal
-    broadcast plan without knowing to ask — the engine-side analogue of
-    Catalyst choosing a join strategy from size statistics. Gate-carrier
-    measurability is preserved by a plan-identity pin: the flagship
-    fixture must keep resolving to (4, unclipped)
-    (tests/test_round7_hygiene.py), so the bench row's plan cannot drift
-    silently. A fixed int keeps the old behavior; None selects the
-    one-row dim, a nested-loop join (the scaling harness still measures
-    it).
+    native_prefilter_res: the native strategy's cell_prefilter_res. The
+    DEFAULT "auto" takes both the resolution and the clipped-vs-unclipped
+    dim from the auto_prefilter statistics pass, so an unknown or
+    high-vertex boundary snapshot gets a legal broadcast plan without
+    asking. The flagship fixture must keep resolving to (4, unclipped)
+    (tests/test_round7_hygiene.py pins it), so the bench row's plan
+    cannot drift silently. A fixed int keeps that res unclipped; None
+    selects the one-row dim, a nested-loop join (the scaling harness
+    still measures it).
     """
     if strategy not in ("broadcast", "fused", "native", "shuffle"):
         raise ValueError(
             "strategy must be one of 'broadcast', 'fused', 'native', 'shuffle', "
             f"got {strategy!r}"
         )
-    if strategy == "fused":
-        pairs = geotag_pip_fused(points, boundaries)
-    elif strategy == "native":
+    if strategy in ("fused", "native"):
         # fully-JVM flagship: compiled header parse + compiled PIP fold;
         # points = the raw images DataFrame
         from wikibrain_spark.functions import binparse

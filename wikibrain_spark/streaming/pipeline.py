@@ -3,8 +3,8 @@
 The reference is batch-only (SURVEY.md §2.8); this is the incremental
 variant a 100 TB ingest needs: new image files land in a directory
 (or an object-store prefix / Kafka topic at scale), are geotagged with the
-SAME mapInPandas kernel as the batch path, and roll up into per-cell
-counts with event-time watermarking for late data.
+SAME compiled header parse as the batch path (binparse.geotag_cols), and
+roll up into per-cell counts with event-time watermarking for late data.
 
 The batch and streaming paths share all operator code — only the source
 (read vs readStream) and sink differ, which is the Structured Streaming
@@ -13,13 +13,11 @@ contract.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wikibrain_spark import codecs
+from wikibrain_spark import jvm
+from wikibrain_spark.functions import binparse
 from wikibrain_spark.geo import cells
 
 # event_time arrives as epoch microseconds (int64) — parquet timestamp
@@ -31,33 +29,18 @@ IMAGE_SCHEMA = (
 
 
 def streaming_geotags(spark: SparkSession, source_dir: str, res: int = 7) -> DataFrame:
-    """readStream over an image-file directory -> geotagged stream."""
+    """readStream over an image-file directory -> geotagged stream
+    (image_id, lat, lon, event_time_us, event_time, cell): the same two
+    compiled header reads as geotag.extract_geotags, in the scan's stage."""
     stream = (
         spark.readStream.schema(IMAGE_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            lat, lon = codecs.extract_geotags_batch(b["hdr"].tolist())
-            yield pd.DataFrame(
-                {"image_id": b["image_id"], "lat": lat, "lon": lon,
-                 "event_time_us": b["event_time_us"]}
-            )
-
-    # header-only projection before the Arrow hop (round 8): the batch
-    # path (geotag.extract_geotags) has always sliced the fixed-size
-    # header JVM-side so the Python channel ships 26 bytes per row, not
-    # the pixel payload; the streaming parse was shipping the full image
-    # bytes per micro-batch — guide §4.1, pass only what the function
-    # needs. Same kernel, same outputs.
-    tagged = stream.select(
-        "image_id", F.substring("bytes", 1, codecs.HEADER_SIZE).alias("hdr"),
-        "event_time_us",
-    ).mapInPandas(
-        parse, "image_id string, lat double, lon double, event_time_us long"
-    )
+    # the parse resolves in `spark`, which need not be the active session
+    # that le_double_col registers on
+    jvm.register(spark)
+    tagged = stream.select("image_id", *binparse.geotag_cols("bytes"), "event_time_us")
     return tagged.withColumn("event_time", F.timestamp_micros("event_time_us")).withColumn(
         "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res)
     )
@@ -122,10 +105,10 @@ def streaming_pip_boundary_counts(
     stream-static join shape Structured Streaming supports statelessly.
     Event time rides through the operator via extra_cols; the windowed
     count then carries the watermark for late data. clip_dim passes
-    through: the clipped dim is STILL a broadcast static dim (its Python
-    prepass runs on the static side only), so the stream-static legality
+    through: the clipped dim is STILL a broadcast static dim (its compiled
+    clip runs on the static side only), so the stream-static legality
     argument is unchanged — pinned equal to batch over high-vertex
-    geometry in test_streaming.
+    geometry in test_streaming. The whole stream graph is zero-Python.
     """
     from wikibrain_spark.operators import spatial_join
 
@@ -162,7 +145,7 @@ def streaming_dedup(
     carrying (key_col, id_col); ``carry_cols`` names additional DOUBLE
     columns the survivor row carries through (e.g. lat/lon so the dedup
     stage can feed the spatial join without a re-join)."""
-    import pandas as pd  # noqa: F811 — explicit for the worker closure
+    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_cols = [key_col, id_col, *carry_cols]
