@@ -580,9 +580,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # crossing-parity oracle's nested-loop join stays ~5.5e8 predicate
     # evaluations at sf0.01 (~909 probes x 600k edges); the ENGINE side runs the same subsample so
     # the comparison is exact. Both physical strategies take their
-    # statistics-driven defaults: the shuffle flips clip_cover on (the
-    # replicated-edge estimate is ~10^8 at the auto res) and the native
-    # path resolves cell_prefilter_res="auto" to a clipped dim.
+    # statistics-driven defaults: auto_prefilter's res (2 here, the
+    # vertex-heavy relaxation) and the clipped dim every auto plan uses
+    # (the shuffle's clip_cover="auto" reads the same decision).
     def _mega_inputs(spark, sf):
         from wikibrain_spark.sources import synthetic
 

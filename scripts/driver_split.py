@@ -16,10 +16,12 @@ in five parts:
   plan     the aggregate's executedPlan()
   execute  its collect
 
-It prints one JSON line per run (seconds per part, py4j commands the
-driver's thread sent during read, stats, build and plan, and whether the
-run's (count, checksum) equals the workload's reference), then one line
-of medians. --root measures another source checkout (for a parent/change
+It prints one JSON line per run (seconds and Spark jobs per part, py4j
+commands the driver's thread sent during read, stats, build and plan, and
+whether the run's (count, checksum) equals the workload's reference), then
+one line of medians. A part's jobs are the ones its own job group holds
+(SparkContext.statusTracker); setting the group is not counted as a py4j
+command. --root measures another source checkout (for a parent/change
 comparison, interleave the two over the same seeds): its JVM starts with
 that checkout as the working directory, so Spark's Python workers import
 the measured package, not this one. Runs on local[N],
@@ -65,29 +67,41 @@ def count_py4j_calls():
         GatewayClient.send_command = send
 
 
-def one_run(spark, wl) -> dict:
+def one_run(spark, wl, run: int) -> dict:
     import workloads
     from pyspark.sql import functions as F
 
     from wikibrain_spark.operators import spatial_join
 
-    t = [time.perf_counter()]
+    sc = spark.sparkContext
+    group = {p: f"driver_split-{run}-{p}" for p in PARTS}
+
+    def start(part, calls):
+        n = calls.n
+        sc.setJobGroup(group[part], part)
+        calls.n = n
+        t.append(time.perf_counter())
+
+    t = []
     with count_py4j_calls() as calls:
+        start("read", calls)
         images = spark.read.parquet(wl.images_path)
         boundaries = spark.read.parquet(wl.boundaries_path)
-        t.append(time.perf_counter())
+        start("stats", calls)
         spatial_join.clear_cover_stats_cache()
         spatial_join.auto_prefilter(boundaries)
-        t.append(time.perf_counter())
+        start("build", calls)
         tiles = wl.tiles(images, boundaries)
         agg = tiles.agg(F.count("*").alias("n"),
                         F.sum(workloads.row_hash([F.col(c) for c in workloads.TILE_COLS])).alias("h"))
-        t.append(time.perf_counter())
+        start("plan", calls)
         agg._jdf.queryExecution().executedPlan()
-        t.append(time.perf_counter())
+        start("execute", calls)
     row = agg.collect()[0]
     t.append(time.perf_counter())
+    sc.setLocalProperty("spark.jobGroup.id", None)
     out = {f"{p}_s": round(b - a, 4) for p, a, b in zip(PARTS, t, t[1:])}
+    out.update({f"{p}_jobs": len(sc.statusTracker().getJobIdsForGroup(group[p])) for p in PARTS})
     out["total_s"] = round(t[-1] - t[0], 4)
     out["py4j_calls"] = calls.n
     out["correct"] = wl.check((row["n"], row["h"]))
@@ -123,11 +137,12 @@ def main(argv=None) -> int:
             warm = wl.check(wl.iterate()) and warm
         runs = []
         for i in range(args.runs):
-            rec = one_run(spark, wl)
+            rec = one_run(spark, wl, i)
             runs.append(rec)
             print(json.dumps({"run": i, **rec}), flush=True)
         median = {k: round(statistics.median(r[k] for r in runs), 4)
-                  for k in [f"{p}_s" for p in PARTS] + ["total_s", "py4j_calls"]}
+                  for k in [f"{p}_{u}" for u in ("s", "jobs") for p in PARTS]
+                  + ["total_s", "py4j_calls"]}
         print(json.dumps({"workload": args.workload, "seed": args.seed, "root": root,
                           "warmup_correct": warm, "all_correct": all(r["correct"] for r in runs),
                           "median": median}))

@@ -3,6 +3,8 @@ even-odd PIP) must agree exactly with the NumPy oracle, and every geotag
 parse Spark runs (batch, streaming, flagship) is the compiled one."""
 
 import functools
+import json
+import logging
 
 import numpy as np
 import pandas as pd
@@ -12,6 +14,7 @@ from pyspark.sql import functions as F
 from scripts.driver_split import count_py4j_calls
 from wikibrain_spark import codecs, jvm
 from wikibrain_spark.functions import binparse
+from wikibrain_spark.geo import pip
 from wikibrain_spark.operators import spatial_join
 from wikibrain_spark.sources import synthetic
 
@@ -127,7 +130,7 @@ def _jobs_run_by(spark, group, fn):
 
 def test_native_build_runs_only_the_statistics_jobs(spark, paths):
     """Every native entry reads the memoized statistics pass, so building
-    a plan at "auto" or a fixed res launches exactly the jobs
+    a plan at "auto" or a fixed res launches exactly the one job
     auto_prefilter alone does, and none on a memo hit."""
     images = spark.read.parquet(paths["images"])
     boundaries = spark.read.parquet(paths["boundaries"])
@@ -140,11 +143,115 @@ def test_native_build_runs_only_the_statistics_jobs(spark, paths):
         return run
 
     stats = _jobs_run_by(spark, "wb_stats", cold(lambda: spatial_join.auto_prefilter(boundaries)))
-    assert stats > 0
+    assert stats == 1
     for res in ("auto", 4, None):
         build = functools.partial(spatial_join.broadcast_pip_join_native, pts, boundaries, res)
         assert _jobs_run_by(spark, f"wb_cold_{res}", cold(build)) == stats, res
         assert _jobs_run_by(spark, f"wb_warm_{res}", build) == 0, res
+
+
+def test_native_tiles_plan_has_one_broadcast_and_no_tags_join(spark, paths):
+    """The executed native tiles plan broadcasts the clipped dim alone:
+    the qid and wikipedia tags ride in its rows, so no join on
+    boundary_id attaches them."""
+    images = spark.read.parquet(paths["images"])
+    boundaries = spark.read.parquet(paths["boundaries"])
+    tiles = spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
+    assert tiles.collect()  # runs this plan: AQE makes it final
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert plan.count("Join") == 1 and "BroadcastHashJoin [cell#" in plan, plan
+    assert f"{jvm.CLIP_CELLS}(" in plan, plan
+
+
+def test_statistics_measurement_logs_one_decision_record(spark, paths, caplog):
+    """auto_prefilter logs one JSON record per statistics measurement
+    (the statistics it read, its res and the predicted cover cells) and
+    none on a memo hit."""
+    boundaries = spark.read.parquet(paths["boundaries"])
+    caplog.set_level(logging.INFO, logger=spatial_join.__name__)
+    spatial_join.clear_cover_stats_cache()
+    assert spatial_join.auto_prefilter(boundaries) == (4, True)
+    assert spatial_join.auto_prefilter(boundaries) == (4, True)
+    records = [r for r in caplog.records if r.name == spatial_join.__name__]
+    assert len(records) == 1
+    rec = json.loads(records[0].getMessage())
+    assert rec["decision"] == "spatial_join.auto_prefilter"
+    assert (rec["res"], rec["clip"]) == (4, True)
+    assert rec["stats"]["polygons"] == 12 and rec["stats"]["n_outer"] >= 12
+    assert rec["cover_cells"] > 0
+
+
+def _ring_stats_reference(rings) -> dict:
+    """wb_ring_stats' terms for one rings value, from geo/pip.py's wrap
+    rule, in the UDF's operation order."""
+    out = {"sum_ab": 0.0, "sum_absum": 0.0, "n_outer": 0, "max_ab": None, "max_sum": None,
+           "edges": 0}
+    for r in rings:
+        la, lo = np.asarray(r["ring_lat"], float), np.asarray(r["ring_lon"], float)
+        out["edges"] += la.size
+        if r["is_hole"]:
+            continue
+        out["n_outer"] += 1
+        if not (la.size and lo.size):
+            continue
+        if pip.ring_wraps(lo):
+            lo = pip.unwrap_lon(lo)
+        a, b = float(la.max() - la.min()), float(lo.max() - lo.min())
+        out["sum_ab"] += a * b
+        out["sum_absum"] += a + b
+        out["max_ab"] = a * b if out["max_ab"] is None else max(out["max_ab"], a * b)
+        out["max_sum"] = a + b if out["max_sum"] is None else max(out["max_sum"], a + b)
+    return out
+
+
+def test_ring_stats_udf_matches_numpy_reference(spark):
+    """wb_ring_stats (jvm/RingStats.java) gives, per row and exactly, the
+    terms a NumPy reference built on pip.ring_wraps and pip.unwrap_lon
+    gives: a dateline ring, the raw-frame pole cap of q_pip_polar, holes,
+    a Fiji-style multipolygon, an empty rings, an empty outer ring and an
+    empty frame."""
+    def ring(lat, lon, hole=False):
+        return {"ring_lat": [float(x) for x in lat], "ring_lon": [float(x) for x in lon],
+                "is_hole": hole}
+
+    lons = [float(-180 + 5 * i) for i in range(73)]
+    rows = [
+        (1, [ring([-20.0, -20.0, -10.0, -10.0], [170.0, -165.0, -165.0, 170.0])]),
+        (2, [ring([-70.0] * 73 + [-90.0, -90.0], lons + [180.0, -180.0])]),
+        (3, [ring([0.0, 0.0, 9.5, 9.5], [10.0, 18.25, 18.25, 10.0]),
+             ring([2.0, 2.0, 3.0], [12.0, 13.0, 12.5], hole=True),
+             ring([4.0, 4.0, 5.0, 5.0], [14.0, 15.0, 15.0, 14.0], hole=True)]),
+        (4, [ring([-18.0, -18.0, -16.0, -16.0], [177.0, -179.5, -179.5, 177.0]),
+             ring([-21.0, -20.0, -19.5], [-178.3, -178.1, -178.9]),
+             ring([-17.2, -16.9, -16.5], [178.1, 178.7, 178.3])]),
+        (5, []),
+        (6, [ring([], []), ring([1.0, 1.0, 2.0], [1.0, 2.0, 1.0], hole=True)]),
+    ]
+    bdf = spark.createDataFrame(rows, f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
+    jvm.register(spark)
+    call = F.call_function(jvm.RING_STATS, F.col("rings")).alias("s")
+    got = {r["boundary_id"]: r["s"].asDict() for r in bdf.select("boundary_id", call).collect()}
+    assert got == {bid: _ring_stats_reference(rings) for bid, rings in rows}
+    assert pip.ring_wraps(np.asarray(rows[0][1][0]["ring_lon"]))  # the cases fire
+    assert not pip.ring_wraps(np.asarray(rows[1][1][0]["ring_lon"]))
+    assert bdf.limit(0).select(call).collect() == []
+    # outer rings without vertices cover no cell: res 0, no error
+    assert spatial_join._auto_cover_res(bdf.where("boundary_id in (5, 6)")) == 0
+
+
+def test_auto_cover_res_is_unchanged_on_the_fixtures(spark, paths, tmp_path):
+    """The compiled statistics give the resolutions the Column
+    expressions gave: 4 for the flagship fixture, 2 for the megacoast and
+    2 for the coastline fixture."""
+    spatial_join.clear_cover_stats_cache()
+    assert spatial_join._auto_cover_res(spark.read.parquet(paths["boundaries"])) == 4
+    for name, gen in (("mega", synthetic.generate_megacoast),
+                      ("coast", synthetic.generate_coastlines)):
+        gen().to_parquet(str(tmp_path / f"{name}.parquet"), index=False)
+        assert spatial_join._auto_cover_res(spark.read.parquet(str(tmp_path / f"{name}.parquet"))) == 2
 
 
 def test_native_pip_matches_kernel_path(spark, paths):
@@ -281,10 +388,11 @@ def test_native_pip_cell_prefilter_matches_default(spark):
 # --------------------------------------------- driver cost of the plan build
 
 # py4j round trips of one warm native tiles build on the 12-city fixture
-# (statistics pass + tile_assignments): measured 563 on local[4], with
-# each pure Column expression built once per JVM (session.expr_once); the
-# per-call builds made about 4,600. The bound leaves ~1.5x headroom.
-PY4J_BUDGET = 850
+# (statistics pass + tile_assignments): measured 246 on local[4], with
+# each pure Column expression built once per JVM (session.expr_once) and
+# the statistics pass one compiled select; the per-call builds made about
+# 4,600. The bound leaves ~1.6x headroom.
+PY4J_BUDGET = 400
 
 
 def test_warm_tiles_build_stays_within_py4j_budget(spark, paths):

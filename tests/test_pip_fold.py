@@ -37,7 +37,8 @@ def _star(rng, c_lat, c_lon, r_min, r_max, n):
 
 def _boundaries() -> list[tuple[int, list[dict]]]:
     """Multipolygons with holes, dateline rings, cell-aligned rectangles
-    with horizontal edges, and degenerate and duplicated rings."""
+    with horizontal edges, degenerate and duplicated rings, a
+    pole-enclosing cap and a pair of nearly coincident rings."""
     rng = np.random.default_rng(20261017)
     rows = []
     for bid in range(1, 7):
@@ -69,6 +70,13 @@ def _boundaries() -> list[tuple[int, list[dict]]]:
     rows.append((13, [twice, twice]))
     rows.append((14, [twice]))
     rows.append((15, [twice]))
+    # q_pip_polar's cap: it encloses the south pole in the raw frame
+    lons = [float(-180 + 5 * i) for i in range(73)]
+    rows.append((16, [_ring([-70.0] * 73 + [-90.0, -90.0], lons + [180.0, -180.0])]))
+    # two boundaries whose rings nearly coincide: every vertex moved 1e-9
+    near = _star(rng, 25.0, 60.0, 2.0, 4.0, 17)
+    rows.append((17, [_ring(*near)]))
+    rows.append((18, [_ring(near[0] + 1e-9, near[1] + 1e-9)]))
     return rows
 
 
@@ -131,7 +139,7 @@ def fold_case(spark):
     want = _expected(rows, pts)
     hit_ids = {bid for _, bid in want}
     # every interesting case fires, and the cancelled ring never does
-    assert {1, 2, 7, 8, 9, 10, 12, 14, 15} <= hit_ids and 13 not in hit_ids
+    assert {1, 2, 7, 8, 9, 10, 12, 14, 15, 16, 17, 18} <= hit_ids and 13 not in hit_ids
     bdf = spark.createDataFrame(rows, f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
     return rows, pts, want, bdf
 

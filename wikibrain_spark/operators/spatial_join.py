@@ -15,9 +15,11 @@ and none in the dims: the clipped dim's clip is compiled too
 (jvm/ClipCells.java, ~0.2 s warm for the 600k-vertex megacoast at res 2
 on a 4-core VM, in the boundary scan's stage). geo/pip.py's NumPy kernel
 and PolygonIndex are the test oracles the fold is pinned against.
-- broadcast_pip_join_native broadcasts the dim (auto_prefilter plans it:
-  one-row, cell-prefiltered, or clipped to each cell's window);
-  broadcast_pip_join is its cell_prefilter_res="auto" form.
+- broadcast_pip_join_native broadcasts the dim: one-row, unclipped
+  cell-prefiltered, or clipped to each cell's window, the one dim
+  auto_prefilter plans (at the resolution the statistics pass picks);
+  broadcast_pip_join is its cell_prefilter_res="auto" form. Boundary
+  columns the points lack (tile_assignments' tags) ride in the dim rows.
 - shuffle_pip_join builds the same (cell, polygon) rows but joins them on
   (cell, salt) with no broadcast hint, so Catalyst and AQE pick the
   distribution from the dim's size. Hot cells (megacity polygons) are
@@ -26,26 +28,33 @@ and PolygonIndex are the test oracles the fold is pinned against.
   replicated n_salt times, ONLY for cells above a hotness threshold
   measured by a sampled count pre-pass.
 
+Statistics: every native entry reads one memoized statistics pass first
+(_cover_stats): one Spark job, a select of the compiled per-polygon terms
+(jvm/RingStats.java) collected through Arrow and totalled with NumPy on
+the driver. It picks the cover resolution, raises on a repeated
+boundary_id, and logs one JSON decision record per measurement.
+
 Driver cost: a PySpark Column is built in the JVM one py4j round trip per
 operator, and the native plan's higher-order-function expressions run to
 hundreds of operators. Each pure expression here (polygon_cover's cells,
-polygon_structs' staged rings, edges and struct, the statistics lists,
+polygon_structs' staged rings, edges and struct, the statistics call,
 the clip call and its row struct, the cell and header columns, the fold
 condition) is therefore built ONCE PER JVM through session.expr_once,
 keyed on its parameters, and reused by every DataFrame after that. The
 memo holds only expressions without a top-level alias: every call site
 puts its own output alias on, so two frames (shuffle_pip_join's two
-polygon_cover frames, say) never share an output attribute. The one
-exception is the statistics pass, whose frame ends in its own collect
-(_measure_cover_stats).
+polygon_cover frames, say) never share an output attribute.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import math
 from collections import OrderedDict
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,12 +65,10 @@ from wikibrain_spark.session import expr_once
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
 
-# planner gates, shared by _auto_cover_res, auto_prefilter and
-# shuffle_pip_join (their docstrings give the cost model behind each)
+# planner gates of _choose_res (its docstring gives the cost model)
 _MAX_MEAN_CELLS = 1024.0  # mean bbox cover per outer ring
 _MAX_RING_CELLS = 16384.0  # worst ring's bbox cover
 _HEAVY_EDGES_PER_POLY = 10_000.0  # above this mean, the mean gate widens 8x
-_CLIP_THRESHOLD_EDGES = 2_000_000.0  # unclipped sum_poly(edges x cover) past which to clip
 
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
@@ -108,46 +115,52 @@ def _shuffle_partitions(spark: SparkSession) -> int:
 # session that REWRITES a snapshot path and wants fresh statistics.
 _COVER_STATS_CACHE: "OrderedDict[int, dict]" = OrderedDict()
 _COVER_STATS_CACHE_MAX = 64
+_LOG = logging.getLogger(__name__)
 
 
 def clear_cover_stats_cache() -> None:
     """Drop all memoized boundary-snapshot statistics (snapshot rollover
-    hook: res/clip decisions after a snapshot rewrite re-measure)."""
+    hook: res decisions after a snapshot rewrite re-measure)."""
     _COVER_STATS_CACHE.clear()
 
 
 def _cover_stats(boundaries: DataFrame) -> dict:
-    """One distributed agg of the polygon-dim sufficient statistics every
-    resolution/strategy decision needs — never collects geometry. Ring
-    level (outer rings, the cover): sums/ maxima of the bbox span products
-    ab and a+b, plus the outer-ring count, so any res's mean/max cover
-    follows from cover(r) = ab/step^2 + (a+b)/step + 1 (linear in the
-    stats). Poly level (the unclipped cover's replication): the shuffle
-    cover ships each polygon's FULL edge list once per covering cell, and
-    the unclipped native dim pairs it with every covering cell, so the
-    edge count at res is sum_poly(edges_poly * cover_poly) =
-    S_e_ab/step^2 + S_e_sum/step + S_e_n with S_e_* = sum_poly(edges *
-    sum_outer_ring(ab | a+b | 1)) — also linear, captured in the same
-    pass. Memoized per logical plan (semanticHash): a boundary snapshot
-    is treated as immutable for the session; every consumer is a perf
-    knob, so a stale hit can never change output rows.
+    """The polygon-dim sufficient statistics every resolution decision
+    needs, and that decision: one Spark job that never collects geometry
+    (_measure_cover_stats). Ring level (outer rings, the cover): sums and
+    maxima of the bbox span products ab and a+b, plus the outer-ring
+    count, so any res's mean/max cover follows from cover(r) =
+    ab/step^2 + (a+b)/step + 1 (linear in the stats); s_e_n =
+    sum_poly(edges x outer rings) gives the vertex weight. `res` is
+    auto_prefilter's resolution (_choose_res) and `cover_cells` the bbox
+    cover it predicts. Memoized per logical plan (semanticHash): a
+    boundary snapshot is treated as immutable for the session; every
+    consumer is a perf knob, so a stale hit can never change output rows.
+    Each measurement logs one JSON decision record (logger
+    wikibrain_spark.operators.spatial_join, level INFO): the statistics,
+    the res, clip and the predicted cover cells; a memo hit logs nothing.
 
-    The same pass counts the polygon rows per boundary_id (ring 0 of
-    each row) and raises ValueError naming a repeated id: every native
-    dim keys its geometry rows by boundary_id, so a repeated id would
-    pair a point with it more than once. Every native entry point
-    (broadcast_pip_join_native at any cell_prefilter_res, and
-    shuffle_pip_join) calls this first."""
+    The same pass counts the polygon rows per boundary_id and raises
+    ValueError naming a repeated id: every native dim keys its geometry
+    rows by boundary_id, so a repeated id would pair a point with it more
+    than once. Every native entry point (broadcast_pip_join_native at any
+    cell_prefilter_res, and shuffle_pip_join) calls this first."""
     key = boundaries.semanticHash()
     stats = _COVER_STATS_CACHE.get(key)
     if stats is None:
         stats = _measure_cover_stats(boundaries)
+        stats["res"], stats["cover_cells"] = _choose_res(stats)
+        _LOG.info("%s", json.dumps({
+            "decision": "spatial_join.auto_prefilter", "res": stats["res"], "clip": True,
+            "cover_cells": stats["cover_cells"],
+            "stats": {k: stats[k] for k in (
+                "polygons", "n_outer", "sum_ab", "sum_absum", "max_ab", "max_sum", "s_e_n")}}))
         _COVER_STATS_CACHE[key] = stats
         if len(_COVER_STATS_CACHE) > _COVER_STATS_CACHE_MAX:
             _COVER_STATS_CACHE.popitem(last=False)
     else:
         _COVER_STATS_CACHE.move_to_end(key)
-    if (stats["id_rows"] or 0) > 1:
+    if stats["id_rows"] > 1:
         raise ValueError(
             f"boundary_id {stats['dup_id']} names {stats['id_rows']} polygon rows; "
             "boundary_id must be unique"
@@ -156,183 +169,109 @@ def _cover_stats(boundaries: DataFrame) -> dict:
 
 
 def _measure_cover_stats(boundaries: DataFrame) -> dict:
-    """The one aggregate job behind _cover_stats. Its expressions are
-    built once per JVM (_cover_stats_exprs), their aliases included: the
-    frame never leaves this function's own collect, so two frames that
-    share the memoized output attributes never meet in one plan. The
-    totals are named in the returned dict."""
-    rings, staged, per_poly, per_id, total = expr_once(("cover_stats",), _cover_stats_exprs)
-    polys = (
-        normalize_rings(boundaries)
-        .select("boundary_id", rings)
-        .select("boundary_id", *staged)
-        .select("boundary_id", *per_poly, "edges", "first")
-        .groupBy("boundary_id")
-        .agg(*per_id)
-    )
-    row = polys.agg(*total.values()).collect()[0]
-    return dict(zip(total, row))
+    """The one job behind _cover_stats: a select of the compiled
+    per-polygon terms (jvm/RingStats.java) over the boundary scan,
+    collected through Arrow as one fixed-size row per polygon, and
+    totalled with NumPy on the driver. max_* skip nulls, as Spark's max
+    does, and are None without an outer ring that has vertices."""
+    jvm.register(boundaries.sparkSession)
+    terms = expr_once(("ring_stats",), lambda: F.call_function(jvm.RING_STATS, F.col("rings")))
+    t = normalize_rings(boundaries).select("boundary_id", terms.alias("s")).toArrow().flatten()
+    col = {n: t.column(f"s.{n}").to_numpy(zero_copy_only=False)
+           for n in ("sum_ab", "sum_absum", "n_outer", "max_ab", "max_sum", "edges")}
+    n_outer = np.nan_to_num(col["n_outer"]).astype(np.int64)  # a null rings counts nothing
 
+    def top(x):
+        x = x[~np.isnan(x)]
+        return float(x.max()) if x.size else None
 
-def _cover_stats_exprs() -> tuple:
-    """_measure_cover_stats' aliased ring explode (pos, r), then its
-    aliased lists: the per-ring staging projection, the per-ring terms
-    (besides `edges` and `first`, which pass through) and the per-polygon
-    aggregate; last the name -> Column dict of the total aggregate."""
-    r = F.col("r")
-    # round 8: stage the per-ring bbox scalars in one projection so the
-    # unwrap transform runs at most twice per ring (u_min/u_max, gated on
-    # the raw span) instead of ~6 inlined copies — same staging discipline
-    # as polygon_cover; the emitted statistics are bit-identical
-    raw_min, raw_max = F.array_min(r["ring_lon"]), F.array_max(r["ring_lon"])
-    can_wrap = raw_max - raw_min > F.lit(180.0)
-    u = F.transform(r["ring_lon"], lambda x: F.when(x < 0, x + F.lit(360.0)).otherwise(x))
-    staged = {
-        "first": (F.col("pos") == 0).cast("long"),
-        "is_hole": r["is_hole"],
-        "edges": F.size(r["ring_lat"]).cast("double"),
-        "a": F.array_max(r["ring_lat"]) - F.array_min(r["ring_lat"]),
-        "raw_min": raw_min,
-        "raw_max": raw_max,
-        "u_min": F.when(can_wrap, F.array_min(u)),
-        "u_max": F.when(can_wrap, F.array_max(u)),
-    }
-    w = (F.col("raw_max") - F.col("raw_min") > F.lit(180.0)) & (
-        F.col("u_max") - F.col("u_min") <= F.lit(180.0)
-    )
-    outer = (~F.col("is_hole")).cast("double")
-    a = F.col("a")
-    b = F.when(w, F.col("u_max") - F.col("u_min")).otherwise(F.col("raw_max") - F.col("raw_min"))
-    per_poly = {
-        "ab": outer * a * b,
-        "absum": outer * (a + b),
-        "n_outer": outer,
-        "ab_or_null": F.when(~F.col("is_hole"), a * b),
-        "absum_or_null": F.when(~F.col("is_hole"), a + b),
-    }
-    per_id = {
-        "p_ab": F.sum("ab"),
-        "p_sum": F.sum("absum"),
-        "p_n": F.sum("n_outer"),
-        "p_max_ab": F.max("ab_or_null"),
-        "p_max_sum": F.max("absum_or_null"),
-        "p_edges": F.sum("edges"),
-        "p_rows": F.sum("first"),
-    }
-    total = {
-        "sum_ab": F.sum("p_ab"),
-        "sum_absum": F.sum("p_sum"),
-        "n_outer": F.sum("p_n"),
-        "max_ab": F.max("p_max_ab"),
-        "max_sum": F.max("p_max_sum"),
-        "s_e_ab": F.sum(F.col("p_edges") * F.col("p_ab")),
-        "s_e_sum": F.sum(F.col("p_edges") * F.col("p_sum")),
-        "s_e_n": F.sum(F.col("p_edges") * F.col("p_n")),
-        "id_rows": F.max("p_rows"),
-        "dup_id": F.max_by("boundary_id", "p_rows"),
+    ids, rows = np.unique(t.column("boundary_id").to_numpy(zero_copy_only=False),
+                          return_counts=True)
+    return {
+        "polygons": t.num_rows,
+        "n_outer": int(n_outer.sum()),
+        "sum_ab": float(np.nansum(col["sum_ab"])),
+        "sum_absum": float(np.nansum(col["sum_absum"])),
+        "max_ab": top(col["max_ab"]),
+        "max_sum": top(col["max_sum"]),
+        "s_e_n": float(np.dot(np.nan_to_num(col["edges"]), n_outer)),
+        "id_rows": int(rows.max()) if rows.size else 0,
+        "dup_id": ids[rows.argmax()] if rows.size else None,
     }
 
-    def named(exprs: dict[str, Column]) -> list[Column]:
-        return [e.alias(n) for n, e in exprs.items()]
 
-    return (F.posexplode("rings").alias("pos", "r"), named(staged), named(per_poly),
-            named(per_id), total)
+def _choose_res(s: dict) -> tuple[int, float]:
+    """(res, predicted bbox cover cells at res) from the totals: the
+    finest res whose mean bbox cover per outer ring is <= _MAX_MEAN_CELLS
+    and whose worst ring's is <= _MAX_RING_CELLS, 0 when none is (or
+    there is no outer ring). The cover-count formula (a/step+1)(b/step+1)
+    = ab/step^2 + (a+b)/step + 1 is linear in (ab, a+b), so the mean needs
+    only E[ab], E[a+b]; the max gate uses max(ab), max(a+b), an upper
+    bound on the worst ring's cover, conservative in the safe direction.
+    A snapshot without an outer ring that has vertices covers no cell and
+    gets res 0.
 
-
-def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, float]:
-    """(estimated covered-cell count, estimated replicated edge structs)
-    for an UNCLIPPED cover of `boundaries` at `res`, from the memoized
-    _cover_stats sufficient statistics. The cover count is
-    sum_ring((a/step+1)(b/step+1)) expanded to the linear form; the
-    replication count weights each ring's cover by its edge count — the
-    edges the unclipped dim's fold pairs with covered cells. Both
-    auto_prefilter's clip_dim flip and shuffle_pip_join's clip_cover
-    flip read THIS function, so the two strategies make one consistent
-    statistics-driven decision."""
-    s = _cover_stats(boundaries)
-    if not s["n_outer"]:
-        return 0.0, 0.0
-    step = cells.hexlite_step(res)
-    cover_est = s["sum_ab"] / step**2 + s["sum_absum"] / step + s["n_outer"]
-    replicated = s["s_e_ab"] / step**2 + s["s_e_sum"] / step + s["s_e_n"]
-    return cover_est, replicated
-
-
-def _auto_cover_res(boundaries: DataFrame) -> int:
-    """Cover resolution of the native candidate-row dims: gates on the
-    mean bbox cover (<= _MAX_MEAN_CELLS per outer ring) and the worst
-    ring's (<= _MAX_RING_CELLS), computed from a native aggregate of
-    per-ring bbox spans — never a driver collect of the polygon
-    geometry (the dim can be big). The cover-count formula
-    (a/step+1)(b/step+1) = ab/step^2 + (a+b)/step + 1 is linear in
-    (ab, a+b), so mean needs only E[ab], E[a+b]; the max gate uses
-    max(ab), max(a+b) — an upper bound on the worst ring's cover,
-    conservative in exactly the safe direction. One tiny agg job, O(1)
-    rows collected, memoized per logical plan (semanticHash) so repeated
-    joins against the same boundary snapshot pay it once per session
-    (treats a boundary snapshot as immutable for the session; res is a
-    perf knob, so a stale hit can never change the output rows).
-
-    What the gates bound: (a) the clip prepass —
-    jvm/ClipCells.java clips each ring to all its strips and each strip
-    piece to all its columns, one task per boundary, measured warm on a
-    4-core VM at ~0.26 us per vertex plus ~1.6 us per occupied cell
-    (0.13 s for the 500k-vertex megacoast boundary over 2.8k cells at
-    res 2; 0.06 s for a 4-vertex square over 39k cells at res 3), so
-    _MAX_RING_CELLS caps a polygon's per-cell term at ~0.03 s — and (b)
-    cover row count (tiny rows). Finer res
-    buys pruning: fewer points survive the covered-cells semi-filter and
-    each cover row tests fewer points, so the gates sit as fine as the
-    prepass allows rather than as coarse as correctness allows.
+    What the gates bound: (a) the clip prepass — jvm/ClipCells.java clips
+    each ring to all its strips and each strip piece to all its columns,
+    one task per boundary, measured warm on a 4-core VM at ~0.26 us per
+    vertex plus ~1.6 us per occupied cell (0.13 s for the 500k-vertex
+    megacoast boundary over 2.8k cells at res 2; 0.06 s for a 4-vertex
+    square over 39k cells at res 3), so _MAX_RING_CELLS caps a polygon's
+    per-cell term at ~0.03 s — and (b) the clipped dim's rows (an interior
+    cell carries its 4-edge window, ~200 bytes). Finer res buys pruning:
+    each dim row holds fewer edges and fewer points reach each row, so the
+    gates sit as fine as the prepass allows rather than as coarse as
+    correctness allows.
 
     VERTEX-HEAVY relaxation (round 7, from the 600k-vertex megacoast
     row): the fold visits O(edges-in-the-probe's-cell) per point, and
     boundary-cell edge density falls ~linearly with step (the ring's
     edges spread over ~perimeter/step boundary cells), so for a
     high-vertex snapshot ONE step of extra resolution cuts the dominant
-    per-point term ~2.6x while the costs the mean gate bounds (cover
-    rows, clip prepass) stay seconds even at 8x the gate. When the mean
-    edge count per polygon exceeds _HEAVY_EDGES_PER_POLY the mean gate
-    widens 8x (the max gate — a single worst-task bound — never moves).
-    Measured on megacoast (res 1 -> 2): 20M-point join 3.5x faster; the
-    res-2 clipped dim builds in ~0.2 s once per snapshot. Low-vertex
-    snapshots are unaffected (coastline mean ~3.8k edges/poly keeps the
-    strict gate)."""
-    s = _cover_stats(boundaries)
-    if not s["n_outer"]:
-        return 0
+    per-point term ~2.6x while the costs the mean gate bounds (dim rows,
+    clip prepass) stay seconds even at 8x the gate. When the mean edge
+    count per polygon exceeds _HEAVY_EDGES_PER_POLY the mean gate widens
+    8x (the max gate — a single worst-task bound — never moves). Measured
+    on megacoast (res 1 -> 2): 20M-point join 3.5x faster; the res-2
+    clipped dim builds in ~0.2 s once per snapshot. Low-vertex snapshots
+    are unaffected (coastline mean ~3.8k edges/poly keeps the strict
+    gate)."""
+    n = s["n_outer"]
+    if s["max_ab"] is None:
+        return 0, 0.0
     max_mean_cells = _MAX_MEAN_CELLS
-    if s["s_e_n"] / s["n_outer"] > _HEAVY_EDGES_PER_POLY:
+    if s["s_e_n"] / n > _HEAVY_EDGES_PER_POLY:
         max_mean_cells = 8.0 * max_mean_cells
-    for res in range(7, 0, -1):
+    for res in range(7, -1, -1):
         step = cells.hexlite_step(res)
-        mean_cover = (s["sum_ab"] / s["n_outer"]) / step**2 + (
-            s["sum_absum"] / s["n_outer"]
-        ) / step + 1.0
+        mean_cover = (s["sum_ab"] / n) / step**2 + (s["sum_absum"] / n) / step + 1.0
         max_cover = s["max_ab"] / step**2 + s["max_sum"] / step + 1.0
-        if mean_cover <= max_mean_cells and max_cover <= _MAX_RING_CELLS:
-            return res
-    return 0
+        if res == 0 or (mean_cover <= max_mean_cells and max_cover <= _MAX_RING_CELLS):
+            return res, s["sum_ab"] / step**2 + s["sum_absum"] / step + n
+
+
+def _auto_cover_res(boundaries: DataFrame) -> int:
+    """Cover resolution of the native candidate-row dims, from the
+    memoized statistics pass (_cover_stats; _choose_res has the gates and
+    the cost model behind them)."""
+    return _cover_stats(boundaries)["res"]
 
 
 def auto_prefilter(boundaries: DataFrame) -> tuple[int, bool]:
-    """Physical-strategy chooser for the broadcast native path: returns
-    (cell_prefilter_res, clip_dim) from the same one-job distributed
-    stats pass the shuffle strategy sizes itself with (_cover_stats) —
-    the engine-side analogue of Catalyst picking a join strategy from
-    size statistics. res comes from the _auto_cover_res gates; clip_dim
-    flips ON when the UNCLIPPED cover at that res pairs more than
-    _CLIP_THRESHOLD_EDGES edges with cells. A point folds over the full
-    edge list of every polygon covering its cell, so sum_poly(edges x
-    cover), linear in the captured statistics, is the fold work summed
-    over the covered cells; past the threshold the clipped dim, whose
-    fold visits only each cell's local edges, wins outright (99.4M ->
-    59.8k edges on the 12k-vertex coastline fixture at res 3).
-    Pass the result to broadcast_pip_join_native, or just pass
-    cell_prefilter_res="auto" there."""
-    res = _auto_cover_res(boundaries)
-    _, replicated = _replication_estimates(boundaries, res)
-    return res, replicated > _CLIP_THRESHOLD_EDGES
+    """Physical-strategy chooser for the native dims: returns
+    (cell_prefilter_res, clip_dim) from the memoized one-job statistics
+    pass the shuffle strategy reads too (_cover_stats) — the engine-side
+    analogue of Catalyst picking a join strategy from size statistics.
+    res comes from the _choose_res gates. clip_dim is always True: the
+    clipped dim (clipped_cell_rows) carries only each cell's local edges,
+    so a point's fold is bounded at any vertex weight, and it is one
+    broadcast where the unclipped dim needs two. It measured faster, with
+    identical output, where the unclipped dim was chosen before (the
+    12-city tiles snapshot and bench.py's 20k-image flagship). The pair
+    keeps its shape for the callers that unpack it. Pass the result to
+    broadcast_pip_join_native, or just pass cell_prefilter_res="auto"
+    there."""
+    return _auto_cover_res(boundaries), True
 
 
 def broadcast_pip_join(points: DataFrame, boundaries: DataFrame) -> DataFrame:
@@ -411,51 +350,61 @@ def broadcast_pip_join_native(
     Zero Python and zero shuffle of the points side.
 
     cell_prefilter_res: None (the one-row dim) makes every polygon a
-    candidate of every point — a broadcast nested-loop join. When set, two
-    broadcast hash equi-joins — each point's hexlite cell against
-    polygon_cover's (boundary_id, cell) rows, then boundary_id against
-    polygon_structs — so each point folds only over the polygons whose
-    bbox covers its cell. This is the scale configuration for large
-    polygon COUNTS (per-point work drops from O(all polygons) to O(cell
-    candidates)). The broadcasts are O(cells + vertices): the cover
-    carries ids only and each polygon's struct ships once. Per-point work
-    still grows with VERTEX weight: a candidate's fold visits its
-    polygon's whole edge list, which is what clip_dim=True bounds.
+    candidate of every point — a broadcast nested-loop join. When set,
+    each point folds only over the polygons whose cover holds its hexlite
+    cell at that res. This is the scale configuration for large polygon
+    COUNTS (per-point work drops from O(all polygons) to O(cell
+    candidates)).
 
-    cell_prefilter_res="auto" resolves BOTH the resolution and clip_dim
-    from the auto_prefilter statistics pass (one tiny agg job, memoized
-    per boundary snapshot) — the engine picks the physical dim strategy
-    the way Catalyst picks a join strategy from size stats.
+    cell_prefilter_res="auto" takes the resolution from the auto_prefilter
+    statistics pass (one job, memoized per boundary snapshot) and always
+    uses the clipped dim.
 
     clip_dim (with cell_prefilter_res): one broadcast hash join on cell
     against clipped_cell_rows — each (cell, polygon) row carries only the
     geometry clipped to that cell's window, making the per-point fold
     O(local edges), so fine prefilter resolutions work at ANY vertex
-    weight. The dim build gains a once-per-snapshot compiled clip of each
+    weight. The dim build is a once-per-snapshot compiled clip of each
     boundary (jvm/ClipCells.java, in the boundary scan's stage; the whole
-    plan stays zero-Python); keep the default when the polygon set is
-    low-vertex and the cheaper dim build matters more than fold locality.
+    plan stays zero-Python). clip_dim=False at a fixed res makes two
+    broadcast hash equi-joins instead — each point's cell against
+    polygon_cover's (boundary_id, cell) rows, then boundary_id against
+    polygon_structs — whose broadcasts are O(cells + vertices) but whose
+    fold visits each candidate's whole edge list.
 
-    extra_cols: additional point-side columns carried through to the output
-    (e.g. event_time on the Structured Streaming path — every plan shape
-    here is stream-static-join legal: a broadcast static dim and no
-    shuffle of the points, so the SAME operator serves batch and stream).
+    Ties on a slanted edge: a point exactly on a slanted (neither
+    horizontal nor vertical) edge is inside or outside by the clip's
+    rounding in the clipped dim, while the one-row and unclipped dims and
+    the NumPy kernel (geo/pip.py) apply the half-open rule to the original
+    edge. Clipping moves a slanted edge's end points to the cell window by
+    interpolation, which can move the edge by an ulp. Points on vertices
+    and on horizontal edges get the same answer from every dim
+    (tests/test_pip_fold.py pins both).
+
+    extra_cols: additional columns carried through to the output. A column
+    the points frame has comes from each point (e.g. event_time on the
+    Structured Streaming path — every plan shape here is
+    stream-static-join legal: a broadcast static dim and no shuffle of the
+    points, so the SAME operator serves batch and stream). A column the
+    points frame lacks comes from the boundary frame and rides in the dim
+    row (tile_assignments' qid and wikipedia tags), so no join attaches it.
 
     boundary_id must be unique: every variant reads the memoized
     _cover_stats pass first, which raises ValueError naming a repeated id.
     """
-    _cover_stats(boundaries)  # raises on a repeated boundary_id
+    auto = auto_prefilter(boundaries)  # raises on a repeated boundary_id
     if cell_prefilter_res == "auto":
-        cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
+        cell_prefilter_res, clip_dim = auto
+    carry = tuple(c for c in extra_cols if c not in points.columns)
 
-    # each branch builds candidate rows (point, boundary_id, p) for the
-    # shared fold tail
+    # each branch builds candidate rows (point, boundary_id, *carry, p)
+    # for the shared fold tail
     if cell_prefilter_res is None:
-        cand = points.crossJoin(F.broadcast(polygon_structs(boundaries)))
+        cand = points.crossJoin(F.broadcast(polygon_structs(boundaries, carry)))
     elif clip_dim:
         cand = points.withColumn(
             "cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res)
-        ).join(F.broadcast(clipped_cell_rows(boundaries, cell_prefilter_res)), "cell")
+        ).join(F.broadcast(clipped_cell_rows(boundaries, cell_prefilter_res, carry)), "cell")
     else:
         # polygon_cover emits each (boundary_id, cell) once and boundary_id
         # is unique, so the cell join yields one row per (point, candidate)
@@ -467,7 +416,7 @@ def broadcast_pip_join_native(
         cand = (
             points.withColumn("cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res))
             .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
-            .join(F.broadcast(polygon_structs(boundaries)), "boundary_id")
+            .join(F.broadcast(polygon_structs(boundaries, carry)), "boundary_id")
         )
     return _fold_candidates(cand, extra_cols)
 
@@ -485,10 +434,11 @@ def _fold_candidates(cand: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataF
     return cand.where(inside).select("image_id", "lat", "lon", *extra_cols, "boundary_id")
 
 
-def polygon_structs(boundaries: DataFrame) -> DataFrame:
-    """(boundary_id, p) where p = struct<bid, bbin, ebin, edges> — the
-    row-data (multi)polygon representation consumed by the native PIP
-    fold (jvm/PipFold.java).
+def polygon_structs(boundaries: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(boundary_id, *carry, p) where p = struct<bid, bbin, ebin, edges> —
+    the row-data (multi)polygon representation consumed by the native PIP
+    fold (jvm/PipFold.java); carry names boundary columns (tags) to keep
+    beside it.
 
     bbin: one bbox per OUTER ring (holes never extend coverage), packed as
     five little-endian doubles [lat_min, lat_max, lon_min, lon_max, w]:
@@ -517,9 +467,9 @@ def polygon_structs(boundaries: DataFrame) -> DataFrame:
     edges, p = expr_once(("polygon_structs",), _polygon_struct_exprs)
     # the edge structs are staged too: ebin and edges both read them
     return (
-        _staged_rings_frame(boundaries)
-        .select("boundary_id", "_rs", edges.alias("_e"))
-        .select("boundary_id", p.alias("p"))
+        _staged_rings_frame(boundaries, carry)
+        .select("boundary_id", *carry, "_rs", edges.alias("_e"))
+        .select("boundary_id", *carry, p.alias("p"))
     )
 
 
@@ -582,14 +532,15 @@ def polygon_area_km2(boundaries: DataFrame) -> DataFrame:
     )
 
 
-def _staged_rings_frame(boundaries: DataFrame) -> DataFrame:
-    """(boundary_id, _rs) with the per-ring test-frame arrays materialized
-    once (see _staged_rings_col) — the shared input projection of the
-    geodesic folds, so their per-vertex lambdas reference pre-built arrays
-    instead of re-evaluating the O(vertices) unwrap per vertex (an
-    O(vertices^2) interpreted blowup on high-vertex rings; round 8)."""
+def _staged_rings_frame(boundaries: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(boundary_id, *carry, _rs) with the per-ring test-frame arrays
+    materialized once (see _staged_rings_col) — the shared input
+    projection of the geodesic folds, so their per-vertex lambdas
+    reference pre-built arrays instead of re-evaluating the O(vertices)
+    unwrap per vertex (an O(vertices^2) interpreted blowup on high-vertex
+    rings; round 8)."""
     staged = expr_once(("staged_rings",), lambda: _staged_rings_col(F.col("rings")))
-    return normalize_rings(boundaries).select("boundary_id", staged.alias("_rs"))
+    return normalize_rings(boundaries).select("boundary_id", *carry, staged.alias("_rs"))
 
 
 def _area_km2_col() -> Column:
@@ -721,11 +672,12 @@ def simplify_rings(boundaries: DataFrame, tolerance_deg: float) -> DataFrame:
     )
 
 
-def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
-    """(cell, boundary_id, p struct) — the per-cell candidate rows with
-    BOUNDED per-cell geometry, one row per (cell, polygon): each carries
-    only the polygon CLIPPED to that cell's window (geo/clip.py),
-    re-expressed as polygon_structs' struct<bid, bbin, ebin, edges> shape.
+def clipped_cell_rows(boundaries: DataFrame, res: int, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(cell, boundary_id, *carry, p struct) — the per-cell candidate rows
+    with BOUNDED per-cell geometry, one row per (cell, polygon): each
+    carries only the polygon CLIPPED to that cell's window (geo/clip.py),
+    re-expressed as polygon_structs' struct<bid, bbin, ebin, edges> shape,
+    beside the boundary columns (tags) that carry names.
     The unclipped prefilter folds each candidate's full edge
     list, so a point near a 10^5-vertex ring pays every vertex; clipped,
     the total is O(vertices + cells) (every original edge lands in the few
@@ -761,8 +713,8 @@ def clipped_cell_rows(boundaries: DataFrame, res: int) -> DataFrame:
     clipped, p = expr_once(("clipped_cell_rows", res), lambda: _clipped_row_exprs(res))
     return (
         normalize_rings(boundaries)
-        .select("boundary_id", clipped.alias("_c"))
-        .select(F.col("_c")["cell"].alias("cell"), "boundary_id", p.alias("p"))
+        .select("boundary_id", *carry, clipped.alias("_c"))
+        .select(F.col("_c")["cell"].alias("cell"), "boundary_id", *carry, p.alias("p"))
     )
 
 
@@ -922,8 +874,8 @@ def shuffle_pip_join(
     holds each (cell, polygon) once per salt (boundary_id must be unique;
     a repeated id raises ValueError).
 
-    res=None resolves the cover resolution from the _cover_stats pass
-    (_auto_cover_res, one tiny agg job memoized per boundary snapshot).
+    res=None takes the cover resolution from auto_prefilter (one job,
+    memoized per boundary snapshot).
 
     PROBE-SIDE-ONLY salting invariant: hotness is measured on the points
     side only, never on the polygon-cover side. Per-cell work is
@@ -938,18 +890,17 @@ def shuffle_pip_join(
     Points in cells no polygon covers are dropped by the covered-cells
     semi-filter before the join.
 
-    CLIP-TO-CELL DIM (clip_cover="auto", the default): the unclipped dim
-    (polygon_cover joined to polygon_structs on boundary_id) carries each
-    polygon's FULL edge list on every covered cell, O(cells x vertices),
-    and every candidate folds over all of it. clipped_cell_rows carries
-    only the polygon clipped to the cell's window: O(vertices + cells)
-    in total, built by the compiled clip (jvm/ClipCells.java) in the
-    boundary scan's stage, and each fold visits a handful of LOCAL edges
-    (geo/clip.py has the parity-preservation argument). "auto" clips
-    exactly when the unclipped dim would pair more than
-    _CLIP_THRESHOLD_EDGES edges with cells — the same statistics and
-    threshold auto_prefilter uses for clip_dim. Booleans force either
-    path.
+    CLIP-TO-CELL DIM (clip_cover="auto", the default, reads
+    auto_prefilter's clip decision, which is always True):
+    clipped_cell_rows carries only the polygon clipped to the cell's
+    window: O(vertices + cells) in total, built by the compiled clip
+    (jvm/ClipCells.java) in the boundary scan's stage, and each fold
+    visits a handful of LOCAL edges (geo/clip.py has the
+    parity-preservation argument). clip_cover=False ships the unclipped
+    dim (polygon_cover joined to polygon_structs on boundary_id), which
+    carries each polygon's FULL edge list on every covered cell,
+    O(cells x vertices). broadcast_pip_join_native's docstring has the
+    clipped dim's slanted-edge tie.
     """
     from wikibrain_spark.operators.knn import _sampled_hot_cells
 
@@ -957,11 +908,9 @@ def shuffle_pip_join(
         raise ValueError(
             f"clip_cover must be a bool or the string 'auto', got {clip_cover!r}"
         )  # round-7 ADVICE: any other string silently enabled clipping via truthiness
-    _cover_stats(boundaries)  # raises on a repeated boundary_id
-    if res is None:
-        res = _auto_cover_res(boundaries)
-    if clip_cover == "auto":
-        clip_cover = _replication_estimates(boundaries, res)[1] > _CLIP_THRESHOLD_EDGES
+    auto_res, auto_clip = auto_prefilter(boundaries)  # raises on a repeated boundary_id
+    res = auto_res if res is None else res
+    clip_cover = auto_clip if clip_cover == "auto" else clip_cover
     pts = points.select(
         "image_id", "lat", "lon",
         cells.hexlite_cell_col("lat", "lon", res).alias("cell"),
@@ -1024,39 +973,45 @@ def tile_assignments(
     operator with no Python anywhere in the plan. Any other value raises.
 
     native_prefilter_res: the native strategy's cell_prefilter_res. The
-    DEFAULT "auto" takes both the resolution and the clipped-vs-unclipped
-    dim from the auto_prefilter statistics pass, so an unknown or
-    high-vertex boundary snapshot gets a legal broadcast plan without
-    asking. The flagship fixture must keep resolving to (4, unclipped)
-    (tests/test_round7_hygiene.py pins it), so the bench row's plan
-    cannot drift silently. A fixed int keeps that res unclipped; None
-    selects the one-row dim, a nested-loop join (the scaling harness
-    still measures it).
+    DEFAULT "auto" takes the resolution from the auto_prefilter statistics
+    pass and uses the clipped dim, so an unknown or high-vertex boundary
+    snapshot gets a legal broadcast plan without asking; the flagship
+    fixture resolves to (4, clipped) (tests/test_round7_hygiene.py pins
+    it). A fixed int keeps that res unclipped; None selects the one-row
+    dim, a nested-loop join (the scaling harness still measures it).
+
+    The broadcast and native strategies carry the qid and wikipedia tags
+    in their dim rows (broadcast_pip_join_native's extra_cols), so the
+    plan holds one broadcast: the clipped dim's. The shuffle strategy
+    attaches them with a broadcast join on boundary_id.
     """
     if strategy not in ("broadcast", "fused", "native", "shuffle"):
         raise ValueError(
             "strategy must be one of 'broadcast', 'fused', 'native', 'shuffle', "
             f"got {strategy!r}"
         )
-    if strategy in ("fused", "native"):
-        # fully-JVM flagship: compiled header parse + compiled PIP fold;
-        # points = the raw images DataFrame
-        from wikibrain_spark.functions import binparse
-
-        # the parse resolves in points' session, which need not be the
-        # active one that le_double_col registers on
-        jvm.register(points.sparkSession)
-        pts = points.select("image_id", *binparse.geotag_cols("bytes"))
-        pairs = broadcast_pip_join_native(
-            pts, boundaries, cell_prefilter_res=native_prefilter_res
-        )
+    tags = ("qid", "wikipedia")
+    if strategy == "shuffle":
+        pairs = shuffle_pip_join(points, boundaries).join(  # carries lat/lon
+            F.broadcast(boundaries.select("boundary_id", *tags)), "boundary_id")
     else:
-        join_fn = broadcast_pip_join if strategy == "broadcast" else shuffle_pip_join
-        pairs = join_fn(points, boundaries)  # carries lat/lon: no re-join shuffle
-    dim = boundaries.select("boundary_id", "qid", "wikipedia")
+        if strategy == "broadcast":
+            pts, prefilter = points.select("image_id", "lat", "lon"), "auto"
+        else:
+            # fully-JVM flagship: compiled header parse + compiled PIP
+            # fold; points = the raw images DataFrame
+            from wikibrain_spark.functions import binparse
+
+            # the parse resolves in points' session, which need not be the
+            # active one that le_double_col registers on
+            jvm.register(points.sparkSession)
+            pts = points.select("image_id", *binparse.geotag_cols("bytes"))
+            prefilter = native_prefilter_res
+        # the points carry no tags, so they ride in the dim rows
+        pairs = broadcast_pip_join_native(
+            pts, boundaries, cell_prefilter_res=prefilter, extra_cols=tags)
     return (
-        pairs.join(F.broadcast(dim), "boundary_id")
-        .select(
+        pairs.select(
             "image_id",
             cells.hexlite_cell_col("lat", "lon", res).alias(f"cell_r{res}"),
             "boundary_id",

@@ -48,13 +48,7 @@ def expr_once(key: Hashable, build: Callable[[], T]) -> T:
     each DataFrame gets its own output attribute (exprId); two frames
     built from one memoized expression can then sit in one plan, as
     shuffle_pip_join's two polygon_cover frames do. Aliases nested inside
-    an expression (struct field names, lambda results) are fine.
-
-    One exception: expressions of a frame that never leaves its builder,
-    because the builder ends it in its own collect, may carry their
-    aliases (spatial_join._measure_cover_stats does). Such a frame is
-    never joined, so the output attributes it shares with the frames
-    before it cannot meet theirs in one plan."""
+    an expression (struct field names, lambda results) are fine."""
     global _EXPRS_GATEWAY
     with _EXPRS_LOCK:
         if SparkContext._gateway is not _EXPRS_GATEWAY:
