@@ -552,10 +552,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q_pip_coastline"] = q_pip_coastline
 
     # ---- the SAME high-vertex coastline through the CLIPPED prefiltered
-    # native path (round 6): unclipped, every point in a covered cell
-    # folds its boundary's full edge list (thousands of edges); clip_dim
-    # cuts each cell's geometry to its window (O(vertices + cells) in
-    # total), so each point's fold visits only its cell's local edges.
+    # native path (round 6): the clipped dim cuts each cell's geometry to
+    # its window (O(vertices + cells) in total), so each point's fold
+    # visits only its cell's local edges, not its boundary's full edge
+    # list (thousands of edges).
     # Same oracle as q_pip_coastline: the gate pins that the clipped
     # fold's parity is exact on outer+hole, dateline, and
     # multi-component rings.
@@ -566,7 +566,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pts.select(F.col("image_id").cast("string"), "lat", "lon"),
             bnd,
             cell_prefilter_res=2,
-            clip_dim=True,
         )
         return pairs.select(
             F.col("image_id").cast("long").alias("event_id"), "boundary_id"
@@ -581,8 +580,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # evaluations at sf0.01 (~909 probes x 600k edges); the ENGINE side runs the same subsample so
     # the comparison is exact. Both physical strategies take their
     # statistics-driven defaults: auto_prefilter's res (2 here, the
-    # vertex-heavy relaxation) and the clipped dim every auto plan uses
-    # (the shuffle's clip_cover="auto" reads the same decision).
+    # vertex-heavy relaxation) and the clipped dim every cell-prefiltered
+    # plan uses.
     def _mega_inputs(spark, sf):
         from wikibrain_spark.sources import synthetic
 

@@ -70,10 +70,6 @@ def main() -> None:
         ("megacoast shuffle PIP (20M pts x 600k-vertex snapshot)", "mega_clip_sec"),
         ("megacoast clip prepass probe (clipped-dim build alone)", "mega_prepass_probe_sec"),
         ("megacoast clipped-dim NATIVE PIP (same 20M pts)", "mega_native_clip_sec"),
-        # NOTE: the clipped-vs-unclipped payload PAIR is deliberately absent
-        # from this table — it is per-level A/B evidence (a 2M-point join
-        # whose fixed costs dominate each leg), carried in the prose below;
-        # a scaling column on it would measure trigger noise, not the engine
         ("streaming flagship ingest (crash+resume, exactly-once)", "ingest_sec"),
         ("Arrow-channel probe (identity mapInPandas)", "channel_probe_sec"),
     ]
@@ -171,14 +167,6 @@ def main() -> None:
                 "the broadcast fold over a clipped O(vertices + cells) dim",
                 "(round 6): fully JVM on the points side, so it carries the",
                 "broadcast-path scaling story for high-vertex boundary sets.",
-                "The payload pair runs the IDENTICAL 2M-point join with",
-                "clipping on vs OFF — unclipped pairs every ring in full with",
-                "each covered cell (O(cells x vertices)) and measures "
-                + (
-                    f"{lo.get('coast_payload_unclipped_sec', 0)}s vs {lo.get('coast_payload_clip_sec', 0)}s clipped at"
-                    f" local[{LEVELS[0]}], {hi.get('coast_payload_unclipped_sec', 0)}s vs"
-                    f" {hi.get('coast_payload_clip_sec', 0)}s at local[{LEVELS[1]}]."
-                ),
                 "The clip prepass itself distributes per polygon (32 tasks)",
                 "and is a once-per-snapshot dim cost at scale.",
                 "",
@@ -208,10 +196,10 @@ def main() -> None:
         "O(all polygons) to O(cell candidates)); its scaling row above is",
         "measured at 200x the points so it stays compute-bound.",
         "",
-        "The copy-probe row runs the IDENTICAL two-hop broadcast equi-join",
-        "(cell → polygon_cover, then boundary_id → polygon_structs) with the",
-        "PIP math replaced by size(p.edges): in local mode every thread probes",
-        "ONE shared hashed relation per hop and copies candidate structs",
+        "The copy-probe row runs the IDENTICAL one-hop broadcast equi-join",
+        "(cell → clipped_cell_rows) with the PIP math replaced by",
+        "size(p.edges): in local mode every thread probes ONE shared",
+        "hashed relation and copies candidate structs",
         "through ONE socket's memory system, so that term is",
         "bandwidth-bound at any core count — the broadcast-join analogue of",
         "the Arrow-channel probe. On a real cluster each executor holds its",

@@ -193,9 +193,9 @@ def main() -> None:
     res["pip3000_native_rows_per_sec"] = round(n_unpref / res["pip3000_native_sec"], 1)
     res["pip3000_prefilter_rows_per_sec"] = round(n_pref / res["pip3000_prefilter_sec"], 1)
 
-    # copy probe: the identical two-hop broadcast equi-join (cell ->
-    # cover rows, boundary_id -> struct) with the PIP math removed (reads
-    # only size(p.edges)). In local mode every thread probes ONE shared
+    # copy probe: the identical one-hop broadcast equi-join (cell ->
+    # clipped (cell, polygon) rows) with the PIP math removed (reads only
+    # size(p.edges)). In local mode every thread probes ONE shared
     # hashed relation and copies the candidate struct through ONE socket's
     # memory system, so this term scales sub-linearly at any core count —
     # the broadcast-join analogue of the Arrow-channel probe.
@@ -206,8 +206,7 @@ def main() -> None:
 
     probe = (
         pts_pref.withColumn("cell", _cells.hexlite_cell_col(F.col("lat"), F.col("lon"), 2))
-        .join(F.broadcast(_sj.polygon_cover(polys, 2)), "cell")
-        .join(F.broadcast(_sj.polygon_structs(polys)), "boundary_id")
+        .join(F.broadcast(_sj.clipped_cell_rows(polys, 2)), "cell")
         .select(F.size(F.col("p")["edges"]).alias("k"))
     )
     res["pip3000_copy_probe_sec"] = timed(lambda: probe)
@@ -277,10 +276,7 @@ def main() -> None:
     # against 32 coastline polygons of 4000 vertices each (128k edges)
     # through the clip-to-cell shuffle strategy. The clip prepass
     # distributes per polygon (32 tasks >= cores at both levels), each
-    # (cell, polygon) dim row carries only its LOCAL edge subset, and the
-    # payload pair below quantifies what that buys: the same join with
-    # clip_cover=False pairs full rings with every covered cell
-    # (O(cells x vertices) dim rows + O(full-ring) folds).
+    # (cell, polygon) dim row carries only its LOCAL edge subset.
     from wikibrain_spark.sources.synthetic import _coast_ring
 
     rngc = np.random.default_rng(77)
@@ -332,20 +328,11 @@ def main() -> None:
     # to high-vertex boundary sets.
     res["coast_native_clip_sec"] = timed(
         lambda: _sj.broadcast_pip_join_native(
-            pts_coast, coast_df, cell_prefilter_res=3, clip_dim=True
+            pts_coast, coast_df, cell_prefilter_res=3
         )
     )
     res["coast_native_clip_rows_per_sec"] = round(
         n_pref / res["coast_native_clip_sec"], 1
-    )
-
-    pts_coast_small = _pts_near(2_000_000)
-    res["coast_payload_points"] = 2_000_000
-    res["coast_payload_clip_sec"] = timed(
-        lambda: _sj.shuffle_pip_join(pts_coast_small, coast_df)
-    )
-    res["coast_payload_unclipped_sec"] = timed(
-        lambda: _sj.shuffle_pip_join(pts_coast_small, coast_df, clip_cover=False)
     )
 
     # 600k-VERTEX MEGACOAST (round 7): one boundary snapshot an order of

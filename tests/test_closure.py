@@ -50,9 +50,17 @@ def test_p279_closure_doubling_matches_frontier_loop(spark):
 
 
 def test_p279_closure_doubling_raises_without_fixpoint(spark):
+    """Every closure mode (doubling, the frontier loop and the
+    depth-tracking loop) raises instead of returning a partial closure
+    when max_iterations runs out."""
     e = _edges(spark, [(f"C{i}", f"C{i+1}", "P279") for i in range(20)])
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        closure.p279_closure(e, doubling=True, max_iterations=2)
+    for run in (
+        lambda: closure.p279_closure(e, doubling=True, max_iterations=2),
+        lambda: closure.p279_closure(e, max_iterations=2),
+        lambda: closure.p279_closure_with_depth(e, max_iterations=2),
+    ):
+        with pytest.raises(RuntimeError, match="fixpoint"):
+            run()
 
 
 def test_classifying_ancestors_union_semantics(spark):

@@ -101,7 +101,7 @@ def test_repeated_boundary_id_raises(spark):
         spatial_join.tile_assignments(images, boundaries, res=9, strategy="native")
     pts = spark.createDataFrame([("a", 10.0, 1.0)], "image_id string, lat double, lon double")
     with pytest.raises(ValueError, match="boundary_id 7 "):
-        spatial_join.shuffle_pip_join(pts, boundaries, res=2, clip_cover=False)
+        spatial_join.shuffle_pip_join(pts, boundaries, res=2)
 
 
 def test_repeated_boundary_id_raises_on_fixed_res_native(spark):
@@ -252,6 +252,24 @@ def test_auto_cover_res_is_unchanged_on_the_fixtures(spark, paths, tmp_path):
                       ("coast", synthetic.generate_coastlines)):
         gen().to_parquet(str(tmp_path / f"{name}.parquet"), index=False)
         assert spatial_join._auto_cover_res(spark.read.parquet(str(tmp_path / f"{name}.parquet"))) == 2
+
+
+def test_auto_res_bounds_the_total_cover_of_many_polygons(spark):
+    """3,000 small rings (the scaling harness's snapshot) pass the
+    per-ring gates up to res 5, a 3.06M-cell cover; the total gate stops
+    the planner at res 2, whose predicted cover is under it."""
+    rng = np.random.default_rng(123)
+    lat, lon = rng.uniform(-80, 80, 3000), rng.uniform(-175, 175, 3000)
+    rad = rng.uniform(0.3, 1.5, 3000)
+    ang = np.linspace(0, 2 * np.pi, 24, endpoint=False)
+    polys = spark.createDataFrame(
+        [(i, (lat[i] + rad[i] * np.sin(ang)).tolist(), (lon[i] + rad[i] * np.cos(ang)).tolist())
+         for i in range(3000)],
+        "boundary_id long, ring_lat array<double>, ring_lon array<double>")
+    spatial_join.clear_cover_stats_cache()
+    stats = spatial_join._cover_stats(polys)
+    assert stats["res"] == 2, stats
+    assert stats["cover_cells"] <= spatial_join._MAX_TOTAL_CELLS, stats
 
 
 def test_native_pip_matches_kernel_path(spark, paths):

@@ -219,20 +219,19 @@ def test_pole_ring_native_parity(spark):
     }
     for fn in (
         lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
-        lambda: spatial_join.broadcast_pip_join_native(pdf, bdf, cell_prefilter_res=2),
         # clipped dim (round 6): the pole ring stays in the RAW frame and
         # its closure edges at ±180 must clip per cell without tearing
-        lambda: spatial_join.broadcast_pip_join_native(
-            pdf, bdf, cell_prefilter_res=2, clip_dim=True),
+        lambda: spatial_join.broadcast_pip_join_native(pdf, bdf, cell_prefilter_res=2),
+        lambda: spatial_join.broadcast_pip_join_native(pdf, bdf, cell_prefilter_res=1),
         lambda: spatial_join.broadcast_pip_join(pdf, bdf),
-        # both SHUFFLE dims: Sutherland-Hodgman pieces of the
-        # pole-closure edges, and the full-ring structs
+        # the SHUFFLE dim: Sutherland-Hodgman pieces of the pole-closure
+        # edges, at two resolutions
         lambda: spatial_join.shuffle_pip_join(
             pdf, bdf, res=2, hot_cell_threshold=100, n_salt=4,
             hotness_sample_fraction=1.0),
         lambda: spatial_join.shuffle_pip_join(
-            pdf, bdf, res=2, hot_cell_threshold=100, n_salt=4,
-            hotness_sample_fraction=1.0, clip_cover=False),
+            pdf, bdf, res=1, hot_cell_threshold=100, n_salt=4,
+            hotness_sample_fraction=1.0),
     ):
         got = [r["image_id"] for r in fn().collect()]
         assert len(got) == len(set(got))

@@ -127,8 +127,8 @@ def _expected(rows, pts) -> set[tuple[str, int]]:
 
 VARIANTS = {
     "one_row": {},
-    "unclipped_res4": {"cell_prefilter_res": 4},
-    "clipped_res2": {"cell_prefilter_res": 2, "clip_dim": True},
+    "clipped_res4": {"cell_prefilter_res": 4},
+    "clipped_res2": {"cell_prefilter_res": 2},
 }
 
 
@@ -157,8 +157,8 @@ def test_every_native_variant_matches_numpy_kernel(spark, fold_case, variant):
     assert set(got) == want
 
 
-@pytest.mark.parametrize("clip_cover,res", [(False, 4), (True, 2)], ids=["unclipped_res4", "clipped_res2"])
-def test_shuffle_join_matches_numpy_kernel(spark, fold_case, clip_cover, res):
+@pytest.mark.parametrize("res", [4, 2], ids=["clipped_res4", "clipped_res2"])
+def test_shuffle_join_matches_numpy_kernel(spark, fold_case, res):
     """shuffle_pip_join returns exactly the NumPy kernel's pairs on the
     same adversarial points, with every cell salted, and drops null
     coordinates."""
@@ -166,7 +166,7 @@ def test_shuffle_join_matches_numpy_kernel(spark, fold_case, clip_cover, res):
     pdf = spark.createDataFrame(_with_nulls(pts), POINT_SCHEMA)
     out = spatial_join.shuffle_pip_join(
         pdf, bdf, res=res, hot_cell_threshold=0, n_salt=3,
-        hotness_sample_fraction=1.0, clip_cover=clip_cover)
+        hotness_sample_fraction=1.0)
     got = [(r["image_id"], r["boundary_id"]) for r in out.collect()]
     assert len(got) == len(set(got)), "duplicate output pairs"
     assert set(got) == want
@@ -174,7 +174,8 @@ def test_shuffle_join_matches_numpy_kernel(spark, fold_case, clip_cover, res):
 
 def test_stream_static_join_drops_null_coordinates(spark, fold_case, tmp_path):
     """Through the stream-static join, the compiled fold gives the batch
-    answer and null coordinates yield no row."""
+    answer and null coordinates yield no row; the cell-prefiltered stream
+    plan builds the clipped dim (one clip call)."""
     rows, pts, want, bdf = fold_case
     src = str(tmp_path / "points")
     spark.createDataFrame(_with_nulls(pts), POINT_SCHEMA).write.parquet(src)
@@ -188,6 +189,10 @@ def test_stream_static_join_drops_null_coordinates(spark, fold_case, tmp_path):
         q.awaitTermination()
         got = {(r["image_id"], r["boundary_id"]) for r in spark.table(table).collect()}
         assert got == want, name
+        # the adaptive plan prints its final plan, then its initial one
+        final = q._jsq.explainInternal(False).split("== Initial Plan ==")[0]
+        clips = final.count(f"{jvm.CLIP_CELLS}(")
+        assert clips == (0 if name == "one_row" else 1), name
 
 
 def test_changed_source_rebuilds_jar(tmp_path, monkeypatch):

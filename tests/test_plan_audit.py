@@ -101,14 +101,14 @@ def test_within_distance_shuffle_plan_is_salted_shuffle_join(spark):
 
 def test_shuffle_pip_plan_is_native_candidate_rows(native_pip_inputs):
     """The shuffle PIP builds the native candidate rows: no Python stage
-    anywhere in the unclipped plan, exactly one compiled fold call and it
+    anywhere in the plan, exactly one compiled fold call and it
     is the condition of the (cell, salt) join, the uncovered points leave
     through a broadcast SEMI join (no distinct aggregate), and nothing
     groups the candidates (pairs are unique by construction: one
     (cell, salt) per point, each (boundary, cell) once per salt)."""
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.shuffle_pip_join(
-        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=False))
+        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4))
     for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "Python"):
         assert op not in plan, plan
     assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
@@ -120,27 +120,13 @@ def test_shuffle_pip_plan_is_native_candidate_rows(native_pip_inputs):
     assert "Python" not in _plan(spatial_join.broadcast_pip_join(pts, bnd))
 
 
-def test_shuffle_pip_unclipped_dim_broadcasts_structs(native_pip_inputs):
-    """The unclipped shuffle dim attaches each polygon's one struct row
-    through a broadcast hash join on boundary_id, whatever size Catalyst
-    sees for the boundary frame: a createDataFrame frame has none, and
-    without the hint the dim planned a SortMergeJoin with two boundary_id
-    exchanges for a one-polygon snapshot."""
-    pts, bnd = native_pip_inputs
-    lines = _plan(spatial_join.shuffle_pip_join(
-        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=False)).splitlines()
-    joins = [ln for ln in lines if "Join [boundary_id" in ln]
-    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], "\n".join(lines)
-    assert not any("SortMergeJoin" in ln for ln in lines), "\n".join(lines)
-
-
 def test_clipped_shuffle_pip_plan_has_one_python_map(native_pip_inputs):
     """The clipped shuffle PIP has no Python operator at all: the dim
     build is the compiled clip exploded in the boundary scan's stage, and
     the fold stays the compiled join condition."""
     pts, bnd = native_pip_inputs
     plan = _plan(spatial_join.shuffle_pip_join(
-        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4, clip_cover=True))
+        pts, bnd, res=3, hot_cell_threshold=10, n_salt=4))
     assert "Python" not in plan and "InArrow" not in plan and "InPandas" not in plan, plan
     assert plan.count(f"{jvm.CLIP_CELLS}(") == 1, plan
     assert plan.count(f"{jvm.PIP_FOLD}(") == 1, plan
@@ -203,8 +189,7 @@ def test_clipped_dim_native_plan_points_side_pure(native_pip_inputs):
     ships the cell, the id and the clip's bbin and ebin; p.edges, unpacked
     from ebin only where it is read, never runs."""
     pts, bnd = native_pip_inputs
-    plan = _plan(spatial_join.broadcast_pip_join_native(
-        pts, bnd, cell_prefilter_res=2, clip_dim=True))
+    plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
     assert "Python" not in plan and "InArrow" not in plan and "InPandas" not in plan, plan
     assert "Aggregate" not in plan and "aggregate(" not in plan, plan
     _assert_compiled_fold(plan, ["_c.cell AS cell", "boundary_id"], packed="_c")
@@ -231,36 +216,6 @@ def test_one_row_dim_plan_is_one_broadcast_nested_loop_join(native_pip_inputs):
     assert "Aggregate" not in plan and "Generate" not in plan, plan
     assert plan.count("BroadcastExchange") == 1, plan
     assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
-
-
-def test_unclipped_prefilter_plan_is_two_broadcast_hash_joins(native_pip_inputs):
-    """The unclipped prefiltered native PIP joins each point's cell onto
-    polygon_cover's (boundary_id, cell) rows, then boundary_id onto
-    polygon_structs: exactly two broadcast hash joins and nothing that
-    numbers, groups or re-explodes the candidates — no Window, no
-    aggregate, no exchange besides the two broadcasts, and the only
-    Generate is the cover's explode inside its broadcast."""
-    pts, bnd = native_pip_inputs
-    plan = _plan(spatial_join.broadcast_pip_join_native(pts, bnd, cell_prefilter_res=2))
-    assert "Window" not in plan and "Aggregate" not in plan, plan
-    _assert_compiled_fold(plan, ["boundary_id"])
-    assert "aggregate(" not in plan and "Python" not in plan, plan
-    assert plan.count("BroadcastHashJoin") == 2, plan
-    assert plan.count("BroadcastExchange") == 2, plan
-    assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
-    lines = plan.splitlines()
-    gen = [i for i, ln in enumerate(lines) if "Generate " in ln]
-    assert len(gen) == 1 and "explode(" in lines[gen[0]], plan
-    # ancestors of the Generate: each line above it indented less than
-    # everything between them (toString indents children under parents)
-    depth = lines[gen[0]].index("+- ")
-    ancestors = []
-    for ln in reversed(lines[:gen[0]]):
-        d = ln.find("+- ")
-        if d < depth:
-            ancestors.append(ln[d + 3:])
-            depth = d
-    assert any(a.startswith("BroadcastExchange") for a in ancestors), plan
 
 
 def test_compactness_single_pass_no_join(spark):

@@ -9,8 +9,8 @@
 - _shuffle_partitions falls back to defaultParallelism when the conf is
   non-numeric ("auto" on AQE-managed deployments);
 - drop_table enforces the same _SAFE_NAME contract as save_table;
-- shuffle_pip_join's clip_cover="auto" and res=None read the same
-  decision as auto_prefilter and plan the same clipped dim.
+- shuffle_pip_join's res=None reads the same decision as
+  auto_prefilter and plans the same clipped dim.
 """
 
 import duckdb
@@ -176,8 +176,8 @@ def test_drop_table_rejects_unsafe_name(spark):
 
 
 def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
-    """shuffle_pip_join's "auto" decisions (res=None, clip_cover="auto")
-    and broadcast_pip_join_native's cell_prefilter_res="auto" plan the
+    """shuffle_pip_join's "auto" decision (res=None) and
+    broadcast_pip_join_native's cell_prefilter_res="auto" plan the
     same dim: auto_prefilter's res, clipped, on a 4-vertex rectangle and
     on the 12k-edge coastline alike."""
     import re
@@ -191,8 +191,8 @@ def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
     )
     pts = spark.createDataFrame([("a", 1.0, 2.0)], "image_id string, lat double, lon double")
     for bdf in (_tiny_boundary(spark, -20.0), cdf):
-        res, clip_dim = spatial_join.auto_prefilter(bdf)
-        assert clip_dim
+        res, clip = spatial_join.auto_prefilter(bdf)
+        assert clip
         plans = [
             f._jdf.queryExecution().executedPlan().toString() for f in (
                 spatial_join.shuffle_pip_join(pts, bdf),
@@ -240,9 +240,8 @@ def test_flagship_auto_prefilter_plan_identity(spark, tmp_path):
     """Round-6 verdict item 5: tile_assignments defaults to
     native_prefilter_res="auto". The gate-carrier bench row stays
     measurable only if the auto decision on the flagship fixture is
-    STABLE — pin it (res 4, clipped), and pin that the clipped auto
-    default stays row-identical to the unclipped fixed res 3 on the e2e
-    fixture."""
+    STABLE — pin it (res 4, clipped), and pin that the auto default
+    stays row-identical to the fixed res 3 on the e2e fixture."""
     paths = synthetic.materialize(str(tmp_path / "wbs"), 200)
     images = spark.read.parquet(paths["images"])
     bdf = spark.read.parquet(paths["boundaries"])

@@ -1,6 +1,6 @@
 """Round-8 optimization pins: the behavior-preserving guarantees of the
 performance work (staged HOF expressions, strip-chunked clip prepass,
-unclipped prefilter dim, fan_out) plus the round-7 ADVICE fixes."""
+prefilter dim, fan_out) plus the round-7 ADVICE fixes."""
 
 from __future__ import annotations
 
@@ -26,15 +26,16 @@ def test_dp_simplify_degenerate_ring_keeps_three_vertices():
 
 
 def test_shuffle_pip_rejects_unknown_clip_cover_string(spark):
-    """Round-7 ADVICE: clip_cover='false' (or any non-'auto' string) must
-    raise instead of silently enabling the clipped path via truthiness."""
+    """shuffle_pip_join has no clip_cover option: every shuffle plan
+    builds the clipped dim, so any clip_cover is an unknown argument."""
     bnd = spark.createDataFrame(
         [(1, [{"ring_lat": [0.0, 0.0, 10.0, 10.0],
                "ring_lon": [0.0, 10.0, 10.0, 0.0], "is_hole": False}])],
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}")
     pts = spark.createDataFrame([("a", 5.0, 5.0)], "image_id string, lat double, lon double")
-    with pytest.raises(ValueError, match="clip_cover"):
-        spatial_join.shuffle_pip_join(pts, bnd, clip_cover="false")
+    for value in ("false", "auto", False, True):
+        with pytest.raises(TypeError, match="clip_cover"):
+            spatial_join.shuffle_pip_join(pts, bnd, clip_cover=value)
 
 
 def test_tile_assignments_rejects_unknown_strategy(spark):
@@ -116,9 +117,8 @@ def test_fan_out_passes_streaming_frame_through(spark):
 
 
 def test_position_indexed_prefilter_dim_matches_one_row_dim(spark):
-    """The unclipped prefilter dim (cell join onto polygon_cover, then
-    boundary_id join onto polygon_structs) must produce exactly the one-row
-    dim's containment pairs, each pair once, on corner geometry: a
+    """The prefilter dim (cell join onto clipped_cell_rows) must produce
+    exactly the one-row dim's containment pairs, each pair once, on corner geometry: a
     dateline ring, overlapping rectangles, a two-outer-ring multipolygon
     whose ring bboxes share res-2 cells, and a ring with a hole; probes
     include res-2 cell borders and every ring vertex."""

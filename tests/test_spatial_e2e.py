@@ -159,13 +159,13 @@ def test_all_strategies_match_numpy_oracle_on_complex_fixture(spark):
     strategies = {
         "broadcast": lambda: spatial_join.broadcast_pip_join(pdf, bdf),
         "native": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
-        "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
-            pdf, bdf, cell_prefilter_res=3),
         # clipped dim: per-cell LOCAL geometry through the same native
         # fold (round 6) — donut/enclave/dateline parity must survive
-        # Sutherland-Hodgman fragmentation
-        "native_prefilter_clipped": lambda: spatial_join.broadcast_pip_join_native(
-            pdf, bdf, cell_prefilter_res=3, clip_dim=True),
+        # Sutherland-Hodgman fragmentation, at two resolutions
+        "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
+            pdf, bdf, cell_prefilter_res=3),
+        "native_prefilter_res2": lambda: spatial_join.broadcast_pip_join_native(
+            pdf, bdf, cell_prefilter_res=2),
         "shuffle_salted": lambda: spatial_join.shuffle_pip_join(
             pdf, bdf, hot_cell_threshold=100, n_salt=4, hotness_sample_fraction=1.0),
     }
@@ -224,24 +224,19 @@ def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark):
     strategies = {
         "broadcast": lambda: spatial_join.broadcast_pip_join(pdf, bdf),
         "native": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
-        # the unclipped prefiltered fold visits each candidate's FULL
-        # edge list, so vertex-heavy polygons at fine res belong to the
-        # clipped dims; this pins that the unclipped native path stays
-        # CORRECT on them at a coarse res.
+        # the clipped dim carries only each cell's LOCAL edge subset, so
+        # the vertex-heavy set runs at res 2 with a megabyte-scale dim;
+        # res 0 pins the coarsest cover (a few huge cells per ring)
         "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=0),
-        # the round-6 fix for exactly that limitation: clip_dim carries
-        # only each cell's LOCAL edge subset, so the vertex-heavy set
-        # runs at res 2 with a megabyte-scale dim instead of res 0
         "native_prefilter_clipped": lambda: spatial_join.broadcast_pip_join_native(
-            pdf, bdf, cell_prefilter_res=2, clip_dim=True),
+            pdf, bdf, cell_prefilter_res=2),
         "shuffle_salted": lambda: spatial_join.shuffle_pip_join(
             pdf, bdf, hot_cell_threshold=200, n_salt=4, hotness_sample_fraction=1.0),
-        # clip_cover=False ships full geometry once per covered cell —
-        # the transport-heavy fallback must stay output-identical
-        "shuffle_unclipped": lambda: spatial_join.shuffle_pip_join(
-            pdf, bdf, res=2, hot_cell_threshold=200, n_salt=4,
-            hotness_sample_fraction=1.0, clip_cover=False),
+        # the same shuffle dim at a fixed coarser res
+        "shuffle_res1": lambda: spatial_join.shuffle_pip_join(
+            pdf, bdf, res=1, hot_cell_threshold=200, n_salt=4,
+            hotness_sample_fraction=1.0),
     }
     for name, fn in strategies.items():
         pairs = [(r["image_id"], r["boundary_id"]) for r in fn().collect()]
@@ -302,7 +297,7 @@ def test_all_strategies_handle_empty_boundary_dim(spark):
     for fn in (
         lambda: spatial_join.shuffle_pip_join(pdf, empty),
         lambda: spatial_join.broadcast_pip_join_native(pdf, empty, cell_prefilter_res="auto"),
-        lambda: spatial_join.broadcast_pip_join_native(pdf, empty, cell_prefilter_res=2, clip_dim=True),
+        lambda: spatial_join.broadcast_pip_join_native(pdf, empty, cell_prefilter_res=2),
         lambda: spatial_join.broadcast_pip_join(pdf, empty),
         lambda: spatial_join.broadcast_pip_join_native(pdf, empty),
     ):

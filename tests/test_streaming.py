@@ -410,7 +410,7 @@ def test_streaming_pip_clipped_dim_matches_batch(spark, stream_dir, tmp_path):
         f"boundary_id long, rings {spatial_join.RINGS_TYPE}",
     )
     counts = pipeline.streaming_pip_boundary_counts(
-        spark, stream_dir, boundaries, window_duration="10 minutes", clip_dim=True
+        spark, stream_dir, boundaries, window_duration="10 minutes"
     )
     pipeline.run_stream_once(counts, str(tmp_path / "ckpt_clip"), "pip_clip_test")
     got = spark.sql("select * from pip_clip_test").toPandas()
@@ -422,8 +422,7 @@ def test_streaming_pip_clipped_dim_matches_batch(spark, stream_dir, tmp_path):
     )
     want = (
         spatial_join.broadcast_pip_join_native(
-            pts, boundaries, cell_prefilter_res=2, extra_cols=("event_time",),
-            clip_dim=True,
+            pts, boundaries, cell_prefilter_res=2, extra_cols=("event_time",)
         )
         .groupBy(F.window("event_time", "10 minutes").alias("win"), "boundary_id")
         .agg(F.count("*").alias("n_images"))
@@ -436,7 +435,7 @@ def test_streaming_pip_clipped_dim_matches_batch(spark, stream_dir, tmp_path):
         want.sort_values(key).reset_index(drop=True),
         check_dtype=False,
     )
-    # and the clipped batch plan equals the UNCLIPPED batch plan's rows
+    # and the res-2 batch plan equals the res-0 batch plan's rows
     want2 = (
         spatial_join.broadcast_pip_join_native(
             pts, boundaries, cell_prefilter_res=0, extra_cols=("event_time",)

@@ -84,9 +84,10 @@ def streaming_flagship_ingest(
 
     The stream graph is zero-Python except the dedup state operator: the
     geotag parse is the compiled header parse (binparse.geotag_cols), and
-    the PIP is the native broadcast fold (cell-prefiltered at
-    ``cell_prefilter_res``; None selects the one-row dim) — both the
-    UNCHANGED batch operators.
+    the PIP is the native broadcast fold (the clipped dim at
+    ``cell_prefilter_res``; None selects the one-row dim), whose dim rows
+    carry the boundaries' qid and wikipedia tags when the frame has them —
+    both the UNCHANGED batch operators.
 
     ``fail_before_commit``: test-only fault injection — batch ids that
     raise AFTER writing their parquet but BEFORE the ledger commit,
@@ -115,24 +116,20 @@ def streaming_flagship_ingest(
     unique = streaming_dedup(pts, key_col="fp", id_col="image_id", carry_cols=("lat", "lon"))
 
     ledger = PartitionLedger(out_root)
-    has_tags = "qid" in boundaries.columns
-    dim = boundaries.select("boundary_id", "qid", "wikipedia") if has_tags else None
+    # the tags ride in the PIP's dim rows; with tags, boundary_id leads the
+    # written columns (the committed partitions' schema)
+    tags = ("qid", "wikipedia") if "qid" in boundaries.columns else ()
+    cell = cells.hexlite_cell_col("lat", "lon", res).alias(f"cell_r{res}")
+    cols = ["boundary_id", "image_id", cell, *tags] if tags else ["image_id", cell, "boundary_id"]
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         key = f"b{batch_id}"
         if key in ledger.committed():
             return  # replayed after a post-commit crash: nothing to do
         t0 = time.time()
-        pairs = spatial_join.broadcast_pip_join_native(
-            batch_df, boundaries, cell_prefilter_res
-        )
-        out = pairs.select(
-            "image_id",
-            cells.hexlite_cell_col("lat", "lon", res).alias(f"cell_r{res}"),
-            "boundary_id",
-        )
-        if dim is not None:
-            out = out.join(F.broadcast(dim), "boundary_id")
+        out = spatial_join.broadcast_pip_join_native(
+            batch_df, boundaries, cell_prefilter_res, extra_cols=tags
+        ).select(*cols)
         part_dir = os.path.join(out_root, f"partition={key}")
         out.write.mode("overwrite").parquet(part_dir)
         # row_count MUST come from the WRITTEN files, not a second action on

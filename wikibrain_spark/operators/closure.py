@@ -59,7 +59,9 @@ def p279_closure(
     checkpoint jobs while doubling pays ~log2(d). The trade: each doubling
     round self-joins the WHOLE closure-so-far (a shuffle on qid) rather
     than frontier ⋈ edges, so it wins when depth, not closure width, is
-    the bottleneck. Both modes return identical tables (pinned in tests).
+    the bottleneck. Both modes return identical tables (pinned in tests),
+    and both raise RuntimeError if max_iterations rounds end before the
+    fixpoint rather than return a partial closure.
     """
     if doubling:
         return _p279_closure_doubling(edges, ignored, max_iterations)
@@ -86,12 +88,15 @@ def p279_closure(
         # codegen costs blow up long before the data does
         new = step.join(closure, ["qid", "ancestor"], "left_anti").localCheckpoint()
         if new.isEmpty():
-            break
+            return closure
         closure = closure.union(new)
         if i % checkpoint_every == checkpoint_every - 1:
             closure = closure.localCheckpoint()
         frontier = new
-    return closure
+    raise RuntimeError(
+        f"p279_closure: no fixpoint within {max_iterations} rounds "
+        f"(an ancestor lies {max_iterations} or more P279 steps away)"
+    )
 
 
 def _p279_closure_doubling(
@@ -153,7 +158,8 @@ def p279_closure_with_depth(
     depth-tracking closure variant (wikimedia_link_issue_reporter.py:
     1455-1478, SURVEY.md J8/A8). BFS order guarantees the first time an
     ancestor is reached is at its minimum depth, so the anti-join both
-    terminates cycles and fixes depth = min."""
+    terminates cycles and fixes depth = min. Raises RuntimeError if
+    max_iterations rounds end before the fixpoint."""
     spark = edges.sparkSession
     e = edges.select(F.col("child_qid").alias("child"), F.col("parent_qid").alias("parent"))
     if ignored:
@@ -178,12 +184,15 @@ def p279_closure_with_depth(
         )
         new = step.join(closure, ["qid", "ancestor"], "left_anti").localCheckpoint()
         if new.isEmpty():
-            break
+            return closure
         closure = closure.union(new)
         if i % checkpoint_every == checkpoint_every - 1:
             closure = closure.localCheckpoint()
         frontier = new
-    return closure
+    raise RuntimeError(
+        f"p279_closure_with_depth: no fixpoint within {max_iterations} rounds "
+        f"(an ancestor lies {max_iterations} or more P279 steps away)"
+    )
 
 
 def classifying_ancestors(

@@ -15,11 +15,11 @@ and none in the dims: the clipped dim's clip is compiled too
 (jvm/ClipCells.java, ~0.2 s warm for the 600k-vertex megacoast at res 2
 on a 4-core VM, in the boundary scan's stage). geo/pip.py's NumPy kernel
 and PolygonIndex are the test oracles the fold is pinned against.
-- broadcast_pip_join_native broadcasts the dim: one-row, unclipped
-  cell-prefiltered, or clipped to each cell's window, the one dim
-  auto_prefilter plans (at the resolution the statistics pass picks);
-  broadcast_pip_join is its cell_prefilter_res="auto" form. Boundary
-  columns the points lack (tile_assignments' tags) ride in the dim rows.
+- broadcast_pip_join_native broadcasts the dim: one-row, or clipped to
+  each cell's window at a fixed res or at the one auto_prefilter plans
+  (the resolution the statistics pass picks); broadcast_pip_join is its
+  cell_prefilter_res="auto" form. Boundary columns the points lack
+  (tile_assignments' tags) ride in the dim rows.
 - shuffle_pip_join builds the same (cell, polygon) rows but joins them on
   (cell, salt) with no broadcast hint, so Catalyst and AQE pick the
   distribution from the dim's size. Hot cells (megacity polygons) are
@@ -42,8 +42,8 @@ the clip call and its row struct, the cell and header columns, the fold
 condition) is therefore built ONCE PER JVM through session.expr_once,
 keyed on its parameters, and reused by every DataFrame after that. The
 memo holds only expressions without a top-level alias: every call site
-puts its own output alias on, so two frames (shuffle_pip_join's two
-polygon_cover frames, say) never share an output attribute.
+puts its own output alias on, so two frames (two joins over one boundary
+frame in one plan, say) never share an output attribute.
 """
 
 from __future__ import annotations
@@ -69,6 +69,7 @@ COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover
 _MAX_MEAN_CELLS = 1024.0  # mean bbox cover per outer ring
 _MAX_RING_CELLS = 16384.0  # worst ring's bbox cover
 _HEAVY_EDGES_PER_POLY = 10_000.0  # above this mean, the mean gate widens 8x
+_MAX_TOTAL_CELLS = 32_768.0  # whole snapshot's bbox cover
 
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
@@ -202,12 +203,14 @@ def _measure_cover_stats(boundaries: DataFrame) -> dict:
 
 def _choose_res(s: dict) -> tuple[int, float]:
     """(res, predicted bbox cover cells at res) from the totals: the
-    finest res whose mean bbox cover per outer ring is <= _MAX_MEAN_CELLS
-    and whose worst ring's is <= _MAX_RING_CELLS, 0 when none is (or
-    there is no outer ring). The cover-count formula (a/step+1)(b/step+1)
-    = ab/step^2 + (a+b)/step + 1 is linear in (ab, a+b), so the mean needs
-    only E[ab], E[a+b]; the max gate uses max(ab), max(a+b), an upper
-    bound on the worst ring's cover, conservative in the safe direction.
+    finest res whose mean bbox cover per outer ring is <= _MAX_MEAN_CELLS,
+    whose worst ring's is <= _MAX_RING_CELLS and whose total over the
+    snapshot is <= _MAX_TOTAL_CELLS, 0 when none is (or there is no outer
+    ring). The cover-count formula (a/step+1)(b/step+1) = ab/step^2 +
+    (a+b)/step + 1 is linear in (ab, a+b), so the mean and the total need
+    only the sums of ab and a+b; the max gate uses max(ab), max(a+b), an
+    upper bound on the worst ring's cover, conservative in the safe
+    direction.
     A snapshot without an outer ring that has vertices covers no cell and
     gets res 0.
 
@@ -218,7 +221,12 @@ def _choose_res(s: dict) -> tuple[int, float]:
     megacoast boundary over 2.8k cells at res 2; 0.06 s for a 4-vertex
     square over 39k cells at res 3), so _MAX_RING_CELLS caps a polygon's
     per-cell term at ~0.03 s — and (b) the clipped dim's rows (an interior
-    cell carries its 4-edge window, ~200 bytes). Finer res buys pruning:
+    cell carries its 4-edge window, ~200 bytes). The per-ring gates leave
+    the total free, so _MAX_TOTAL_CELLS bounds it: 3,000 24-vertex rings
+    of radius 0.3-1.5 deg (the scaling harness's snapshot) passed both at
+    res 5, a 3.06M-cell cover, and 2M points took ~7 s there against
+    1.0 s at res 2 (20.8k cells), 1.2 s at res 3 (86.6k) and 1.8 s at
+    res 4 (480k), local[4], identical output. Finer res buys pruning:
     each dim row holds fewer edges and fewer points reach each row, so the
     gates sit as fine as the prepass allows rather than as coarse as
     correctness allows.
@@ -246,8 +254,10 @@ def _choose_res(s: dict) -> tuple[int, float]:
         step = cells.hexlite_step(res)
         mean_cover = (s["sum_ab"] / n) / step**2 + (s["sum_absum"] / n) / step + 1.0
         max_cover = s["max_ab"] / step**2 + s["max_sum"] / step + 1.0
-        if res == 0 or (mean_cover <= max_mean_cells and max_cover <= _MAX_RING_CELLS):
-            return res, s["sum_ab"] / step**2 + s["sum_absum"] / step + n
+        total = s["sum_ab"] / step**2 + s["sum_absum"] / step + n
+        if res == 0 or (mean_cover <= max_mean_cells and max_cover <= _MAX_RING_CELLS
+                        and total <= _MAX_TOTAL_CELLS):
+            return res, total
 
 
 def _auto_cover_res(boundaries: DataFrame) -> int:
@@ -259,10 +269,10 @@ def _auto_cover_res(boundaries: DataFrame) -> int:
 
 def auto_prefilter(boundaries: DataFrame) -> tuple[int, bool]:
     """Physical-strategy chooser for the native dims: returns
-    (cell_prefilter_res, clip_dim) from the memoized one-job statistics
+    (cell_prefilter_res, clip) from the memoized one-job statistics
     pass the shuffle strategy reads too (_cover_stats) — the engine-side
     analogue of Catalyst picking a join strategy from size statistics.
-    res comes from the _choose_res gates. clip_dim is always True: the
+    res comes from the _choose_res gates. clip is always True: the
     clipped dim (clipped_cell_rows) carries only each cell's local edges,
     so a point's fold is bounded at any vertex weight, and it is one
     broadcast where the unclipped dim needs two. It measured faster, with
@@ -333,7 +343,6 @@ def broadcast_pip_join_native(
     boundaries: DataFrame,
     cell_prefilter_res: int | str | None = None,
     extra_cols: tuple[str, ...] = (),
-    clip_dim: bool = False,
 ) -> DataFrame:
     """Fully-JVM, fully-NARROW even-odd PIP: every variant joins each point
     to its candidate polygons' struct<bid, bbin, ebin, edges> rows from a
@@ -351,32 +360,24 @@ def broadcast_pip_join_native(
 
     cell_prefilter_res: None (the one-row dim) makes every polygon a
     candidate of every point — a broadcast nested-loop join. When set,
-    each point folds only over the polygons whose cover holds its hexlite
-    cell at that res. This is the scale configuration for large polygon
-    COUNTS (per-point work drops from O(all polygons) to O(cell
-    candidates)).
+    each point folds only over the polygons whose clipped cover holds its
+    hexlite cell at that res: one broadcast hash join on cell against
+    clipped_cell_rows, whose (cell, polygon) rows each carry only the
+    geometry clipped to that cell's window, so the per-point fold is
+    O(local edges) at ANY vertex weight. This is the scale configuration
+    for large polygon COUNTS (per-point work drops from O(all polygons) to
+    O(cell candidates)). The dim build is a once-per-snapshot compiled
+    clip of each boundary (jvm/ClipCells.java, in the boundary scan's
+    stage; the whole plan stays zero-Python).
 
     cell_prefilter_res="auto" takes the resolution from the auto_prefilter
-    statistics pass (one job, memoized per boundary snapshot) and always
-    uses the clipped dim.
-
-    clip_dim (with cell_prefilter_res): one broadcast hash join on cell
-    against clipped_cell_rows — each (cell, polygon) row carries only the
-    geometry clipped to that cell's window, making the per-point fold
-    O(local edges), so fine prefilter resolutions work at ANY vertex
-    weight. The dim build is a once-per-snapshot compiled clip of each
-    boundary (jvm/ClipCells.java, in the boundary scan's stage; the whole
-    plan stays zero-Python). clip_dim=False at a fixed res makes two
-    broadcast hash equi-joins instead — each point's cell against
-    polygon_cover's (boundary_id, cell) rows, then boundary_id against
-    polygon_structs — whose broadcasts are O(cells + vertices) but whose
-    fold visits each candidate's whole edge list.
+    statistics pass (one job, memoized per boundary snapshot).
 
     Ties on a slanted edge: a point exactly on a slanted (neither
     horizontal nor vertical) edge is inside or outside by the clip's
-    rounding in the clipped dim, while the one-row and unclipped dims and
-    the NumPy kernel (geo/pip.py) apply the half-open rule to the original
-    edge. Clipping moves a slanted edge's end points to the cell window by
+    rounding in the clipped dim, while the one-row dim and the NumPy
+    kernel (geo/pip.py) apply the half-open rule to the original edge.
+    Clipping moves a slanted edge's end points to the cell window by
     interpolation, which can move the edge by an ulp. Points on vertices
     and on horizontal edges get the same answer from every dim
     (tests/test_pip_fold.py pins both).
@@ -392,32 +393,18 @@ def broadcast_pip_join_native(
     boundary_id must be unique: every variant reads the memoized
     _cover_stats pass first, which raises ValueError naming a repeated id.
     """
-    auto = auto_prefilter(boundaries)  # raises on a repeated boundary_id
+    auto_res = _auto_cover_res(boundaries)  # raises on a repeated boundary_id
     if cell_prefilter_res == "auto":
-        cell_prefilter_res, clip_dim = auto
+        cell_prefilter_res = auto_res
     carry = tuple(c for c in extra_cols if c not in points.columns)
 
-    # each branch builds candidate rows (point, boundary_id, *carry, p)
-    # for the shared fold tail
+    # candidate rows (point, boundary_id, *carry, p) for the shared fold tail
     if cell_prefilter_res is None:
         cand = points.crossJoin(F.broadcast(polygon_structs(boundaries, carry)))
-    elif clip_dim:
+    else:
         cand = points.withColumn(
             "cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res)
         ).join(F.broadcast(clipped_cell_rows(boundaries, cell_prefilter_res, carry)), "cell")
-    else:
-        # polygon_cover emits each (boundary_id, cell) once and boundary_id
-        # is unique, so the cell join yields one row per (point, candidate)
-        # and the boundary_id join attaches that candidate's own struct.
-        # Both sides are broadcast hash relations (O(cells + vertices)
-        # bytes). Keep the structs on a hash join's build side: resolving
-        # them from a per-row array column copies the whole array per row
-        # (measured 70x slower at 2M points).
-        cand = (
-            points.withColumn("cell", cells.hexlite_cell_col("lat", "lon", cell_prefilter_res))
-            .join(F.broadcast(polygon_cover(boundaries, cell_prefilter_res)), "cell")
-            .join(F.broadcast(polygon_structs(boundaries, carry)), "boundary_id")
-        )
     return _fold_candidates(cand, extra_cols)
 
 
@@ -452,11 +439,10 @@ def polygon_structs(boundaries: DataFrame, carry: tuple[str, ...] = ()) -> DataF
     array<struct<y0, x0, y1, x1, w>>, for size(p.edges) counters; the
     join reads only bbin and ebin, so Spark prunes it from the broadcast.
 
-    boundary_id must be unique: the prefiltered native joins attach
-    structs by boundary_id, so a duplicated id attaches both polygons'
-    structs to each of their cover rows and a point can come out paired
-    with that id more than once. _cover_stats, which every auto-planned
-    join and shuffle_pip_join reads, raises ValueError on one.
+    boundary_id must be unique: a duplicated id gives two struct rows
+    under it, so a point inside both comes out paired with that id twice.
+    _cover_stats, which every native join reads first, raises ValueError
+    on one.
 
     Round 8: the per-ring test-frame arrays are STAGED once
     (_staged_rings_col, a separate projection so CollapseProject cannot
@@ -678,12 +664,12 @@ def clipped_cell_rows(boundaries: DataFrame, res: int, carry: tuple[str, ...] = 
     carries only the polygon CLIPPED to that cell's window (geo/clip.py),
     re-expressed as polygon_structs' struct<bid, bbin, ebin, edges> shape,
     beside the boundary columns (tags) that carry names.
-    The unclipped prefilter folds each candidate's full edge
-    list, so a point near a 10^5-vertex ring pays every vertex; clipped,
-    the total is O(vertices + cells) (every original edge lands in the few
-    cells it crosses, interior cells degenerate to the 4-edge window), so
-    fine resolutions stay broadcast-sized at ANY vertex weight and each
-    point's fold visits only LOCAL edges.
+    A whole-polygon row would make a point near a 10^5-vertex ring fold
+    every vertex; clipped, the total is O(vertices + cells) (every
+    original edge lands in the few cells it crosses, interior cells
+    degenerate to the 4-edge window), so fine resolutions stay
+    broadcast-sized at ANY vertex weight and each point's fold visits
+    only LOCAL edges.
 
     The build is one projection over the boundary scan: the compiled
     jvm/ClipCells.java clips each boundary row to its cells (byte for byte
@@ -747,9 +733,9 @@ def polygon_cover(boundaries: DataFrame, res: int = COVER_RES) -> DataFrame:
     NATIVE expressions end to end (round 5): the per-ring bbox index
     ranges are enumerated with sequence() (codegen'd) and the cell ids
     assembled with shift/or — zero Python in the plan, which is what lets
-    the cell-prefiltered native PIP (whose dim embeds this cover) keep the
-    flagship's no-Python-anywhere property. Bit-parity with the NumPy
-    hexlite_cover_bbox kernel is pinned in tests, dateline rings included
+    shuffle_pip_join's covered-cells semi-filter (a superset of the
+    clipped cover) keep its no-Python-anywhere property. Bit-parity with
+    the NumPy hexlite_cover_bbox kernel is pinned in tests, dateline rings included
     (the unwrapped bbox portion at/above +180 is enumerated through the
     probe formula — see hexlite_cover_bbox — so raw-negative probes land
     in exactly the emitted cells at every resolution).
@@ -856,7 +842,6 @@ def shuffle_pip_join(
     hot_cell_threshold: int = 50_000,
     n_salt: int = 8,
     hotness_sample_fraction: float = 0.01,
-    clip_cover: bool | str = "auto",
 ) -> DataFrame:
     """Shuffled native PIP with explicit hot-cell salting.
 
@@ -890,27 +875,17 @@ def shuffle_pip_join(
     Points in cells no polygon covers are dropped by the covered-cells
     semi-filter before the join.
 
-    CLIP-TO-CELL DIM (clip_cover="auto", the default, reads
-    auto_prefilter's clip decision, which is always True):
-    clipped_cell_rows carries only the polygon clipped to the cell's
-    window: O(vertices + cells) in total, built by the compiled clip
-    (jvm/ClipCells.java) in the boundary scan's stage, and each fold
-    visits a handful of LOCAL edges (geo/clip.py has the
-    parity-preservation argument). clip_cover=False ships the unclipped
-    dim (polygon_cover joined to polygon_structs on boundary_id), which
-    carries each polygon's FULL edge list on every covered cell,
-    O(cells x vertices). broadcast_pip_join_native's docstring has the
-    clipped dim's slanted-edge tie.
+    CLIP-TO-CELL DIM: clipped_cell_rows carries only the polygon clipped
+    to the cell's window: O(vertices + cells) in total, built by the
+    compiled clip (jvm/ClipCells.java) in the boundary scan's stage, and
+    each fold visits a handful of LOCAL edges (geo/clip.py has the
+    parity-preservation argument). broadcast_pip_join_native's docstring
+    has the clipped dim's slanted-edge tie.
     """
     from wikibrain_spark.operators.knn import _sampled_hot_cells
 
-    if isinstance(clip_cover, str) and clip_cover != "auto":
-        raise ValueError(
-            f"clip_cover must be a bool or the string 'auto', got {clip_cover!r}"
-        )  # round-7 ADVICE: any other string silently enabled clipping via truthiness
-    auto_res, auto_clip = auto_prefilter(boundaries)  # raises on a repeated boundary_id
+    auto_res = _auto_cover_res(boundaries)  # raises on a repeated boundary_id
     res = auto_res if res is None else res
-    clip_cover = auto_clip if clip_cover == "auto" else clip_cover
     pts = points.select(
         "image_id", "lat", "lon",
         cells.hexlite_cell_col("lat", "lon", res).alias("cell"),
@@ -923,17 +898,9 @@ def shuffle_pip_join(
     # exact pre-pass. See knn._sampled_hot_cells for the cutoff math.
     hot = _sampled_hot_cells(pts, "cell", hot_cell_threshold, n_salt, hotness_sample_fraction)
 
-    if clip_cover:
-        dim = clipped_cell_rows(boundaries, res)
-    else:
-        # one struct per polygon: broadcast it, as the native path does (a
-        # boundary frame with no size statistics would otherwise plan a
-        # sort-merge join with two boundary_id exchanges)
-        dim = polygon_cover(boundaries, res).join(
-            F.broadcast(polygon_structs(boundaries)), "boundary_id")
     # replicate the dim rows of hot cells: salt 0..n_salt-1
     dim_salted = (
-        dim.join(F.broadcast(hot), "cell", "left")
+        clipped_cell_rows(boundaries, res).join(F.broadcast(hot), "cell", "left")
         .withColumn("salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1)))
         .drop("n_salt")
     )
@@ -977,8 +944,9 @@ def tile_assignments(
     pass and uses the clipped dim, so an unknown or high-vertex boundary
     snapshot gets a legal broadcast plan without asking; the flagship
     fixture resolves to (4, clipped) (tests/test_round7_hygiene.py pins
-    it). A fixed int keeps that res unclipped; None selects the one-row
-    dim, a nested-loop join (the scaling harness still measures it).
+    it). A fixed int builds the clipped dim at that res; None selects the
+    one-row dim, a nested-loop join (the scaling harness still measures
+    it).
 
     The broadcast and native strategies carry the qid and wikipedia tags
     in their dim rows (broadcast_pip_join_native's extra_cols), so the

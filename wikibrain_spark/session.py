@@ -46,8 +46,8 @@ def expr_once(key: Hashable, build: Callable[[], T]) -> T:
     The rule for what goes in: only expressions WITHOUT a top-level alias
     (or a value holding only such expressions). Alias at the call site, so
     each DataFrame gets its own output attribute (exprId); two frames
-    built from one memoized expression can then sit in one plan, as
-    shuffle_pip_join's two polygon_cover frames do. Aliases nested inside
+    built from one memoized expression can then sit in one plan, as two
+    joins over one boundary frame do. Aliases nested inside
     an expression (struct field names, lambda results) are fine."""
     global _EXPRS_GATEWAY
     with _EXPRS_LOCK:

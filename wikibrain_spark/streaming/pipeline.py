@@ -95,7 +95,6 @@ def streaming_pip_boundary_counts(
     window_duration: str = "10 minutes",
     watermark: str = "30 minutes",
     cell_prefilter_res: int | None = 2,
-    clip_dim: bool = False,
 ) -> DataFrame:
     """Streaming geotag → PIP → windowed per-boundary counts.
 
@@ -104,11 +103,11 @@ def streaming_pip_boundary_counts(
     onto the stream with zero shuffle of the points, which is exactly the
     stream-static join shape Structured Streaming supports statelessly.
     Event time rides through the operator via extra_cols; the windowed
-    count then carries the watermark for late data. clip_dim passes
-    through: the clipped dim is STILL a broadcast static dim (its compiled
-    clip runs on the static side only), so the stream-static legality
-    argument is unchanged — pinned equal to batch over high-vertex
-    geometry in test_streaming. The whole stream graph is zero-Python.
+    count then carries the watermark for late data. The cell-prefiltered
+    dim is clipped, and STILL a broadcast static dim (its compiled clip
+    runs on the static side only), so the stream-static legality argument
+    holds — pinned equal to batch over high-vertex geometry in
+    test_streaming. The whole stream graph is zero-Python.
     """
     from wikibrain_spark.operators import spatial_join
 
@@ -116,8 +115,7 @@ def streaming_pip_boundary_counts(
         "image_id", "lat", "lon", "event_time"
     )
     enriched = spatial_join.broadcast_pip_join_native(
-        tagged, boundaries, cell_prefilter_res, extra_cols=("event_time",),
-        clip_dim=clip_dim,
+        tagged, boundaries, cell_prefilter_res, extra_cols=("event_time",)
     )
     return (
         enriched.withWatermark("event_time", watermark)
