@@ -494,7 +494,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = spatial_join.broadcast_pip_join_native(
             pts.select(F.col("image_id").cast("string"), "lat", "lon"),
             bnd,
-            cell_prefilter_res=3,
+            cell_prefilter_res="auto",
         )
         return pairs.select(
             F.col("image_id").cast("long").alias("event_id"), "boundary_id"

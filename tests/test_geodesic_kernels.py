@@ -1,6 +1,6 @@
 """Ellipsoidal (Vincenty / Karney-parity) geodesic kernel: first-principles
 properties, haversine-delta bounds at the 20 km J13 threshold, and J13
-golden-case parity under both ResolveConfig kernels (round-2 verdict #7).
+golden-case parity of the two WGS-84 kernels (round-2 verdict #7).
 
 Ground-truth anchors that do not need geographiclib:
   - equatorial arc length is exactly a * dlon (the equator is a geodesic
@@ -11,7 +11,6 @@ Ground-truth anchors that do not need geographiclib:
 """
 
 import numpy as np
-import pytest
 
 from wikibrain_spark.geo.geodesic import (
     WGS84_A_KM,
@@ -77,8 +76,8 @@ def test_documented_delta_at_20km_threshold():
     The worst case is meridional at high latitude (~ +0.11 km / 0.56%);
     equatorial east-west pairs swing the other way (~ -0.07 km). A reference
     (Karney) report within (20 - 0.12, 20 + 0.12) km can therefore flip vs
-    the haversine kernel — that is the documented residual, and the
-    'ellipsoidal' ResolveConfig kernel exists to close exactly that band."""
+    the haversine kernel — that is the documented residual, and the reason
+    J13 measures with the WGS-84 Karney kernel instead."""
     rng = np.random.default_rng(7)
     n = 4000
     la1 = rng.uniform(-84, 84, n)
@@ -160,55 +159,27 @@ def test_karney_symmetry_identity_poles():
     assert abs(karney_km(90, 10, 0, 25) - 10001.9657293) < 1e-6
 
 
-@pytest.fixture(scope="module")
-def dims(spark):
-    from wikibrain_spark.operators import linkres
+def test_j13_golden_under_all_kernels():
+    """J13 (the 20 km headquarters check) measures with the Karney kernel;
+    the ellipsoidal (Vincenty) kernel puts every golden (element, HQ) pair
+    on the same side of 20 km, so the golden verdicts do not depend on the
+    choice between the two WGS-84 kernels."""
     from wikibrain_spark.sources import synthetic
 
     d = synthetic.generate_wikidata_dim()
-    return linkres.WikiDims(
-        wikidata=spark.createDataFrame(
-            d["wikidata"],
-            "qid string, label_en string, sitelinks map<string,string>, lat double, lon double",
-        ),
-        claims=spark.createDataFrame(
-            d["wikidata_claims"],
-            "qid string, pid string, value_str string, value_qid string, "
-            "value_lat double, value_lon double, qualifier_pids array<string>",
-        ),
-        pages=spark.createDataFrame(d["wikipedia_pages"], "lang string, title string, qid string"),
-        page_redirects=spark.createDataFrame(
-            d["wikipedia_redirects"], "lang string, from_title string, to_title string"
-        ),
-        qid_redirects=spark.createDataFrame(d["wikidata_redirects"], "from_qid string, to_qid string"),
-        edges=spark.createDataFrame(d["ontology_edges"], "child_qid string, parent_qid string, pid string"),
-    )
-
-
-def test_j13_golden_under_all_kernels(spark, dims):
-    """Every golden case resolves identically under the haversine, the
-    ellipsoidal, and the karney kernel (fixture HQ distances are far from
-    the 20 km band)."""
-    from wikibrain_spark.operators import linkres
-    from wikibrain_spark.sources import synthetic
-
-    elements = spark.createDataFrame(
-        synthetic.generate_test_elements(),
-        "element_id long, object_type string, tags map<string,string>, "
-        "lat double, lon double, expected_error_id string",
-    ).drop("expected_error_id")
-    base = {
-        (r["element_id"], r["error_id"])
-        for r in linkres.resolve(elements, dims).select("element_id", "error_id").collect()
-    }
-    for kernel in ("ellipsoidal", "karney"):
-        got = {
-            (r["element_id"], r["error_id"])
-            for r in linkres.resolve(
-                elements, dims, linkres.ResolveConfig(geodesic_kernel=kernel)
-            ).select("element_id", "error_id").collect()
-        }
-        assert base == got, f"kernel {kernel} diverged on the golden corpus"
-    assert any(
-        "multiple locations" in (e or "") for _, e in base
-    ), "J13 cases must be present"
+    qid_of_page = {(r.lang, r.title): r.qid for r in d["wikipedia_pages"].itertuples()}
+    hq = d["wikidata_claims"]
+    hq = hq[(hq["pid"] == "P159") & hq["value_lat"].notna()]
+    pairs = []
+    for el in synthetic.generate_test_elements().itertuples():
+        tags = dict(el.tags)
+        qid = tags.get("wikidata") or qid_of_page.get(tuple(tags.get("wikipedia", "").split(":", 1)))
+        if qid is None or el.lat is None or np.isnan(el.lat):
+            continue
+        for h in hq[hq["qid"] == qid].itertuples():
+            pairs.append((el.lat, el.lon, h.value_lat, h.value_lon))
+    la1, lo1, la2, lo2 = np.array(pairs, dtype=np.float64).T
+    far_karney = karney_km(la1, lo1, la2, lo2) > 20.0
+    far_ellipsoidal = ellipsoidal_km(la1, lo1, la2, lo2) > 20.0
+    assert (far_karney == far_ellipsoidal).all()
+    assert far_karney.any(), "J13 cases must be present"

@@ -264,13 +264,6 @@ def karney_km(lat1, lon1, lat2, lon2, bisect_iters: int = 80) -> np.ndarray:
     return dist.reshape(shape)
 
 
-GEODESIC_KERNELS = {
-    "haversine": haversine_km,
-    "ellipsoidal": ellipsoidal_km,
-    "karney": karney_km,
-}
-
-
 def distance_human_string_col(dist_km: Column) -> Column:
     """Reference's km/m cutoff formatting (wikimedia_link_issue_reporter.py:1362-1366):
     > 3 km -> '<int> km', else '<int> m'."""

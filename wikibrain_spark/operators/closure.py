@@ -12,8 +12,8 @@ ontology depth (~20 for Wikidata). Each iteration:
     frontier' = frontier ⋈ edges ON ancestor=child → parent, minus ignored,
                 minus already-seen (via left_anti) to guarantee termination
                 on cycles.
-The edges side is broadcast when small; `localCheckpoint` every few rounds
-truncates the lineage so the plan does not grow unboundedly.
+The edges side is broadcast; `localCheckpoint` every _CHECKPOINT_EVERY
+rounds truncates the lineage so the plan does not grow unboundedly.
 
 Every `localCheckpoint` here (edge lists, closure, frontiers) is EAGER and
 NOT RECOVERABLE: it runs a job at the call, keeps the blocks on the
@@ -26,6 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# frontier rounds between eager checkpoints of the growing closure
+_CHECKPOINT_EVERY = 4
 
 
 def _filtered_edges(edges: DataFrame, ignored: list[str] | None) -> DataFrame:
@@ -43,8 +46,6 @@ def p279_closure(
     edges: DataFrame,
     ignored: list[str] | None = None,
     max_iterations: int = 25,
-    broadcast_edges: bool = True,
-    checkpoint_every: int = 4,
     doubling: bool = False,
 ) -> DataFrame:
     """(child_qid, parent_qid) P279 edges -> (qid, ancestor) closure table.
@@ -69,9 +70,7 @@ def p279_closure(
     # it, and without this each of the ~depth rounds re-runs the edge scan +
     # filter and rebuilds its broadcast from source (round 8; the loop is
     # fixed-overhead-bound at small scale and scan-bound at large)
-    e = _filtered_edges(edges, ignored).localCheckpoint()
-    if broadcast_edges:
-        e = F.broadcast(e)
+    e = F.broadcast(_filtered_edges(edges, ignored).localCheckpoint())
 
     nodes = e.select(F.col("child").alias("qid")).union(e.select("parent")).distinct()
     closure = nodes.select("qid", F.col("qid").alias("ancestor")).localCheckpoint()
@@ -90,7 +89,7 @@ def p279_closure(
         if new.isEmpty():
             return closure
         closure = closure.union(new)
-        if i % checkpoint_every == checkpoint_every - 1:
+        if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             closure = closure.localCheckpoint()
         frontier = new
     raise RuntimeError(
@@ -151,8 +150,6 @@ def p279_closure_with_depth(
     edges: DataFrame,
     ignored: list[str] | None = None,
     max_iterations: int = 25,
-    broadcast_edges: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(qid, ancestor, depth) with MIN depth per ancestor — the reference's
     depth-tracking closure variant (wikimedia_link_issue_reporter.py:
@@ -160,17 +157,8 @@ def p279_closure_with_depth(
     ancestor is reached is at its minimum depth, so the anti-join both
     terminates cycles and fixes depth = min. Raises RuntimeError if
     max_iterations rounds end before the fixpoint."""
-    spark = edges.sparkSession
-    e = edges.select(F.col("child_qid").alias("child"), F.col("parent_qid").alias("parent"))
-    if ignored:
-        ign = spark.createDataFrame([(q,) for q in ignored], "qid string")
-        e = (
-            e.join(F.broadcast(ign), e["parent"] == ign["qid"], "left_anti")
-            .join(F.broadcast(ign), e["child"] == ign["qid"], "left_anti")
-        )
-    e = e.localCheckpoint()  # scanned every round — materialize once (round 8)
-    if broadcast_edges:
-        e = F.broadcast(e)
+    # scanned every round — materialize once (round 8)
+    e = F.broadcast(_filtered_edges(edges, ignored).localCheckpoint())
 
     nodes = e.select(F.col("child").alias("qid")).union(e.select("parent")).distinct()
     closure = nodes.select("qid", F.col("qid").alias("ancestor"), F.lit(0).alias("depth")).localCheckpoint()
@@ -186,13 +174,24 @@ def p279_closure_with_depth(
         if new.isEmpty():
             return closure
         closure = closure.union(new)
-        if i % checkpoint_every == checkpoint_every - 1:
+        if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             closure = closure.localCheckpoint()
         frontier = new
     raise RuntimeError(
         f"p279_closure_with_depth: no fixpoint within {max_iterations} rounds "
         f"(an ancestor lies {max_iterations} or more P279 steps away)"
     )
+
+
+def _p31_roots(edges: DataFrame, ignored: list[str] | None) -> DataFrame:
+    """(qid, root): each entity's non-ignored P31 roots."""
+    p31 = edges.where(F.col("pid") == "P31").select(
+        F.col("child_qid").alias("qid"), F.col("parent_qid").alias("root")
+    )
+    if ignored:
+        ign = edges.sparkSession.createDataFrame([(q,) for q in ignored], "iqid string")
+        p31 = p31.join(F.broadcast(ign), p31["root"] == ign["iqid"], "left_anti")
+    return p31
 
 
 def classifying_ancestors(
@@ -206,15 +205,9 @@ def classifying_ancestors(
     closure_df: a precomputed (qid, ancestor) P279 closure of these edges —
     pass the same frame to instance_types so one closure build (or one
     materialized_closure table) serves both consumers."""
-    p279 = edges.where(F.col("pid") == "P279")
-    p31 = edges.where(F.col("pid") == "P31").select(
-        F.col("child_qid").alias("qid"), F.col("parent_qid").alias("root")
-    )
-    if ignored:
-        spark = edges.sparkSession
-        ign = spark.createDataFrame([(q,) for q in ignored], "iqid string")
-        p31 = p31.join(F.broadcast(ign), p31["root"] == ign["iqid"], "left_anti")
-    closure = closure_df if closure_df is not None else p279_closure(p279, ignored=ignored, **kw)
+    p31 = _p31_roots(edges, ignored)
+    closure = closure_df if closure_df is not None else p279_closure(
+        edges.where(F.col("pid") == "P279"), ignored=ignored, **kw)
     own = closure  # includes (qid, qid)
     via_roots = p31.join(closure.withColumnRenamed("qid", "root"), "root").select("qid", "ancestor")
     # roots themselves are ancestors even if they have no P279 edges
@@ -229,15 +222,9 @@ def instance_types(edges: DataFrame, ignored: list[str] | None = None,
     wikimedia_link_issue_reporter.py:1130-1140, :1737-1759).
 
     closure_df: see classifying_ancestors — share one closure build."""
-    p279 = edges.where(F.col("pid") == "P279")
-    p31 = edges.where(F.col("pid") == "P31").select(
-        F.col("child_qid").alias("qid"), F.col("parent_qid").alias("root")
-    )
-    if ignored:
-        spark = edges.sparkSession
-        ign = spark.createDataFrame([(q,) for q in ignored], "iqid string")
-        p31 = p31.join(F.broadcast(ign), p31["root"] == ign["iqid"], "left_anti")
-    closure = closure_df if closure_df is not None else p279_closure(p279, ignored=ignored, **kw)
+    p31 = _p31_roots(edges, ignored)
+    closure = closure_df if closure_df is not None else p279_closure(
+        edges.where(F.col("pid") == "P279"), ignored=ignored, **kw)
     via_roots = p31.join(closure.withColumnRenamed("qid", "root"), "root").select(
         "qid", F.col("ancestor").alias("type_qid")
     )

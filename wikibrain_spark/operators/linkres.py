@@ -4,12 +4,16 @@ re-expressed as columnar Spark (SURVEY.md §2.2-§2.4, §3.1).
 Architecture (scale-first):
   1. build_qid_facts(): ALL per-QID knowledge (existence, best interwiki,
      disambig/list/unlinkable classification, dissolved, headquarters, ...)
-     is aggregated ONCE PER DISTINCT QID — never per element row. At 10^12
-     elements this is the difference between joining a broadcastable facts
-     dim and re-running ontology closure per row.
+     is aggregated ONCE PER DISTINCT QID — never per element row — with one
+     aggregate per source (sitelinks, instance types, classifying
+     ancestors, claims) left-joined onto `wikidata`. At 10^12 elements this
+     is the difference between joining a broadcastable facts dim and
+     re-running ontology closure per row.
   2. resolve(): the element-side pipeline is a DAG of column expressions +
      broadcast joins against qid_facts/pages/redirects, with three small
-     explode->aggregate stages for the per-key loops. The reference's
+     explode->aggregate stages for the per-key loops. Each element looks up
+     the facts of its effective QID once; the collision check looks up
+     each pair's wikidata QID once. The reference's
      short-circuit priority (wikimedia_link_issue_reporter.py:275-298) is
      preserved by a coalesce fold over per-stage error structs, in exactly
      the reference's order.
@@ -19,6 +23,10 @@ Deterministic canonicalizations (documented deviations, SURVEY.md §7.3):
     key order for the per-key loops (min_by over (key_rank, check_rank)).
   - A5 broad-vs-specific: we pick min(type_qid) among non-broad failures
     (reference keeps the last traversal hit, which is cache-order dependent).
+  - claim order: P17 countries and P105 values sorted, P159 locations
+    sorted, teryt:simc = the smallest P4046 value (build_qid_facts).
+  - J13 measures with the Karney WGS-84 inverse (geo/geodesic.karney_km),
+    the kernel behind the reference's geopy distance.
 
 Every error_id string is byte-identical to the reference (citations at
 each construction site).
@@ -145,19 +153,6 @@ class WikiDims:
 class ResolveConfig:
     expected_language_code: str | None = None
     languages_ordered_by_preference: list[str] = field(default_factory=list)
-    # broadcast the per-QID facts dim only below this row count; above it
-    # (e.g. a full Wikidata snapshot, ~100M QIDs) fall back to a shuffle
-    # hash join on qid so the driver never materializes the dim
-    facts_broadcast_threshold: int = 10_000_000
-    # distance kernel for the 20 km headquarters check (J13):
-    # 'karney' (default; full-globe quadrature-exact WGS-84 inverse, no
-    # non-convergence regime — the reference-parity kernel, geo/geodesic.py;
-    # it runs only over the small per-QID facts dim so the pandas-UDF cost
-    # is bounded), 'ellipsoidal' (WGS-84 Vincenty pandas UDF), or
-    # 'haversine' (native expression, whole-stage codegen — the SQL-oracle /
-    # bench opt-in; deviates from Karney by up to ±0.12 km at 20 km, so J13
-    # verdicts can differ in the (19.88, 20.12) km band)
-    geodesic_kernel: str = "karney"
     # when set, the P279 closure is served from this qid-bucketed catalog
     # table (built once per edge snapshot, fingerprint-checked — see
     # closure.materialized_closure) instead of rebuilt inline per run
@@ -168,38 +163,41 @@ class ResolveConfig:
 # per-QID facts (computed once per distinct QID, broadcast to elements)
 # =====================================================================
 
-def _any_hq_far_np_kernel(kernel: str):
-    """Factory: a pandas-UDF body testing any P159 location > 20 km away
-    under the named WGS-84 kernel (geo/geodesic.GEODESIC_KERNELS:
-    'ellipsoidal' = Vincenty, 'karney' = quadrature-exact full-globe
-    inverse; both Karney/geopy-parity at this scale). Arrow-batched; the
-    per-row hq lists are flattened so the kernel runs once, vectorized,
-    over the whole batch. Wrapped with pandas_udf lazily at the call site
-    (the decorator needs an active SparkSession)."""
+# broadcast the per-QID facts dim only up to this many rows; above it (e.g.
+# a full Wikidata snapshot, ~100M QIDs) every facts-side join is a shuffle
+# hash join on qid, so the driver never materializes the dim
+_FACTS_BROADCAST_THRESHOLD = 10_000_000
 
-    def _any_hq_far(
-        lat: pd.Series, lon: pd.Series, hq_lats: pd.Series, hq_lons: pd.Series
-    ) -> pd.Series:
-        import numpy as np
+# resolve()'s view of one QID: the columns build_qid_facts returns after qid
+FACTS_COLS = ("best_link", "is_disambig", "is_list", "is_ambiguous_item", "unlink_what",
+              "unlink_replacement", "is_taxon", "p105_qids", "countries", "has_p17",
+              "sitelink_expected", "has_p247", "has_p279_claim", "dissolved",
+              "hq_lats", "hq_lons", "has_area", "teryt_simc")
 
-        from wikibrain_spark.geo.geodesic import GEODESIC_KERNELS
 
-        dist_km = GEODESIC_KERNELS[kernel]
-        lens = np.array([0 if a is None else len(a) for a in hq_lats], dtype=np.int64)
-        out = np.zeros(len(lat), dtype=bool)
-        if lens.sum() > 0:
-            idx = np.repeat(np.arange(len(lat)), lens)
-            flat_la = np.concatenate([np.asarray(a, dtype=np.float64) for a in hq_lats if a is not None and len(a)])
-            flat_lo = np.concatenate([np.asarray(a, dtype=np.float64) for a in hq_lons if a is not None and len(a)])
-            la = lat.to_numpy(dtype=np.float64)[idx]
-            lo = lon.to_numpy(dtype=np.float64)[idx]
-            ok = ~(np.isnan(la) | np.isnan(lo))
-            far = np.zeros(len(idx), dtype=bool)
-            far[ok] = dist_km(la[ok], lo[ok], flat_la[ok], flat_lo[ok]) > 20.0
-            np.logical_or.at(out, idx, far)
-        return pd.Series(out)
+def _any_hq_far(lat: pd.Series, lon: pd.Series, hq_lats: pd.Series, hq_lons: pd.Series) -> pd.Series:
+    """pandas-UDF body: is any P159 location more than 20 km away, under
+    the Karney WGS-84 inverse (geo/geodesic.karney_km, the reference's
+    geopy kernel). Arrow-batched; the per-row hq lists are flattened so
+    the kernel runs once, vectorized, over the whole batch. Wrapped with
+    pandas_udf at the call site."""
+    import numpy as np
 
-    return _any_hq_far
+    from wikibrain_spark.geo.geodesic import karney_km
+
+    lens = np.array([0 if a is None else len(a) for a in hq_lats], dtype=np.int64)
+    out = np.zeros(len(lat), dtype=bool)
+    if lens.sum() > 0:
+        idx = np.repeat(np.arange(len(lat)), lens)
+        flat_la = np.concatenate([np.asarray(a, dtype=np.float64) for a in hq_lats if a is not None and len(a)])
+        flat_lo = np.concatenate([np.asarray(a, dtype=np.float64) for a in hq_lons if a is not None and len(a)])
+        la = lat.to_numpy(dtype=np.float64)[idx]
+        lo = lon.to_numpy(dtype=np.float64)[idx]
+        ok = ~(np.isnan(la) | np.isnan(lo))
+        far = np.zeros(len(idx), dtype=bool)
+        far[ok] = karney_km(la[ok], lo[ok], flat_la[ok], flat_lo[ok]) > 20.0
+        np.logical_or.at(out, idx, far)
+    return pd.Series(out)
 
 
 def best_interwiki(dims: WikiDims, cfg: ResolveConfig) -> DataFrame:
@@ -218,18 +216,21 @@ def best_interwiki(dims: WikiDims, cfg: ResolveConfig) -> DataFrame:
 
 
 def build_qid_facts(dims: WikiDims, cfg: ResolveConfig) -> DataFrame:
-    """One row per QID with every per-entity fact the pipeline needs.
+    """One row per wikidata QID with every per-entity fact the pipeline
+    needs: qid + FACTS_COLS. One aggregate per source, four joins onto
+    `wikidata`: best_interwiki, the instance-type flags (disambig/list),
+    one aggregate over the classifying ancestors (ambiguous item, A5
+    unlink class, taxon) and one over the claims (P105, P17, P247, P279,
+    P576 w/o P1011 qualifier, P159 hq_lats/hq_lons, P2046, P4046).
 
-    Columns: qid, best_link, is_disambig, is_list, unlink_what,
-    unlink_replacement, has_p247, has_p279_claim, dissolved (P576 w/o P1011
-    qualifier), hq_lats, hq_lons (P159), has_area (P2046), teryt_simc (P4046).
+    A claims array with no element is null, as if the QID had no such
+    claim: `p105_qids` is null exactly when "no P105" applies, `hq_lats`
+    is null when J13 has nothing to measure. Lists are canonical: P105 and
+    P17 sorted, the P159 (lat, lon) pairs sorted by lat then lon, and
+    `teryt_simc` is the smallest P4046 string (the claims carry no order).
     """
     spark = dims.wikidata.sparkSession
     ignored = knowledge.ontology_ignore_list()
-
-    base = dims.wikidata.select("qid")
-
-    bi = best_interwiki(dims, cfg)
 
     # ONE P279 closure serves both consumers below (and, when
     # cfg.closure_table is set, is a bucketed build-once-per-snapshot
@@ -252,121 +253,84 @@ def build_qid_facts(dims: WikiDims, cfg: ResolveConfig) -> DataFrame:
     )
 
     # classifying ancestors (P279-closure of self ∪ closure of P31 roots,
-    # :1433-1453) + reflexive self, joined to invalid_types (:1539-1732)
+    # :1433-1453) + reflexive self, left-joined to invalid_types (:1539-1732)
     classifying = closure_ops.classifying_ancestors(
         dims.edges, ignored=ignored, closure_df=shared_closure
     )
-    classifying = classifying.union(base.select("qid", F.col("qid").alias("ancestor"))).distinct()
+    classifying = classifying.union(dims.wikidata.select("qid", F.col("qid").alias("ancestor"))).distinct()
     inv = knowledge.invalid_types_df(spark)
-    fails = classifying.join(F.broadcast(inv), classifying["ancestor"] == inv["type_qid"])
-    ambiguous = classifying.where(F.col("ancestor") == "Q122754124").select("qid").distinct() \
-        .withColumn("is_ambiguous_item", F.lit(True))  # :1503-1506
-    unlink = (
-        fails.groupBy("qid")
+    ancestor = F.col("ancestor")
+    classes = (
+        classifying.join(F.broadcast(inv), classifying["ancestor"] == inv["type_qid"], "left")
+        .groupBy("qid")
         .agg(
+            F.max(ancestor == "Q122754124").alias("is_ambiguous_item"),  # :1503-1506
             # A5 specificity preference (:1524-1529): non-broad beats broad;
-            # canonical tie-break = min type_qid (see module docstring)
+            # canonical tie-break = min type_qid (see module docstring).
+            # min_by skips the null keys of ancestors that match no type
             F.min_by(
                 F.struct("what", "replacement"),
-                F.struct(F.col("is_broad").cast("int").alias("b"), F.col("type_qid").alias("t")),
-            ).alias("u")
+                F.when(F.col("type_qid").isNotNull(),
+                       F.struct(F.col("is_broad").cast("int").alias("b"), F.col("type_qid").alias("t"))),
+            ).alias("u"),
+            F.max(ancestor == "Q16521").alias("is_taxon"),  # :1776, :1822-1824
         )
-        .select("qid", F.col("u.what").alias("unlink_what"), F.col("u.replacement").alias("unlink_replacement"))
+        .select("qid", "is_ambiguous_item", F.col("u.what").alias("unlink_what"),
+                F.col("u.replacement").alias("unlink_replacement"), "is_taxon")
     )
 
-    # taxonomy + country facts
-    is_taxon = (
-        classifying.where(F.col("ancestor") == "Q16521").select("qid").distinct()
-        .withColumn("is_taxon", F.lit(True))  # :1776, :1822-1824
+    pid = F.col("pid")
+    qualifiers = F.coalesce("qualifier_pids", F.array())
+
+    def nonempty(arr: Column) -> Column:
+        return F.when(F.size(arr) > 0, arr)
+
+    hq = F.array_sort(F.collect_list(F.when(
+        (pid == "P159") & F.col("value_lat").isNotNull(),
+        F.struct(F.col("value_lat").alias("la"), F.col("value_lon").alias("lo")),
+    )))
+    claims = dims.claims.groupBy("qid").agg(
+        nonempty(F.sort_array(F.collect_set(F.when(pid == "P105", F.col("value_qid"))))).alias("p105_qids"),  # :1795
+        # P17 countries, excluding statements qualified by P582 (:2684-2701).
+        # Sorted for a deterministic "first foreign country" (the reference
+        # uses claim order, which is API-response order — canonicalized here)
+        nonempty(F.sort_array(F.collect_set(F.when(
+            (pid == "P17") & ~F.array_contains(qualifiers, "P582"), F.col("value_qid"))))).alias("countries"),
+        F.max(pid == "P17").alias("has_p17"),
+        F.max(pid == "P247").alias("has_p247"),
+        F.max(pid == "P279").alias("has_p279_claim"),
+        # P576 dissolved unless qualified by P1011 (:736-750)
+        F.max((pid == "P576") & ~F.array_contains(qualifiers, "P1011")).alias("dissolved"),
+        nonempty(F.transform(hq, lambda s: s["la"])).alias("hq_lats"),
+        nonempty(F.transform(hq, lambda s: s["lo"])).alias("hq_lons"),
+        F.max(pid == "P2046").alias("has_area"),
+        F.min(F.when(pid == "P4046", F.col("value_str"))).alias("teryt_simc"),
     )
 
-    c = dims.claims
-    p105 = (
-        c.where((F.col("pid") == "P105") & F.col("value_qid").isNotNull())
-        .groupBy("qid").agg(F.collect_set("value_qid").alias("p105_qids"))  # :1795
-    )
-    # P17 countries, excluding statements qualified by P582 (:2684-2701).
-    # Sorted for a deterministic "first foreign country" (the reference uses
-    # claim order, which is API-response order — canonicalized here)
-    p17 = (
-        c.where((F.col("pid") == "P17") & F.col("value_qid").isNotNull()
-                & ~F.array_contains(F.coalesce("qualifier_pids", F.array()), "P582"))
-        .groupBy("qid").agg(F.sort_array(F.collect_set("value_qid")).alias("countries"))
-    )
-    has_p17 = c.where(F.col("pid") == "P17").select("qid").distinct().withColumn("has_p17", F.lit(True))
-
-    sitelink_expected = dims.wikidata.select(
+    base = dims.wikidata.select(
         "qid",
         (F.element_at("sitelinks", cfg.expected_language_code)
          if cfg.expected_language_code else F.lit(None).cast("string")).alias("sitelink_expected"),
     )
-
-    p247 = c.where(F.col("pid") == "P247").select("qid").distinct().withColumn("has_p247", F.lit(True))
-    p279c = c.where(F.col("pid") == "P279").select("qid").distinct().withColumn("has_p279_claim", F.lit(True))
-    # P576 dissolved unless qualified by P1011 (:736-750)
-    dissolved = (
-        c.where((F.col("pid") == "P576") & ~F.array_contains(F.coalesce("qualifier_pids", F.array()), "P1011"))
-        .select("qid").distinct().withColumn("dissolved", F.lit(True))
-    )
-    hq = (
-        c.where((F.col("pid") == "P159") & F.col("value_lat").isNotNull())
-        .groupBy("qid")
-        .agg(F.collect_list("value_lat").alias("hq_lats"), F.collect_list("value_lon").alias("hq_lons"))
-    )
-    area = c.where(F.col("pid") == "P2046").select("qid").distinct().withColumn("has_area", F.lit(True))
-    teryt = (
-        c.where(F.col("pid") == "P4046")
-        .groupBy("qid").agg(F.first("value_str").alias("teryt_simc"))
-    )
-
     facts = (
-        base.join(bi, "qid", "left")
+        base.join(best_interwiki(dims, cfg), "qid", "left")
         .join(type_flags, "qid", "left")
-        .join(ambiguous, "qid", "left")
-        .join(unlink, "qid", "left")
-        .join(is_taxon, "qid", "left")
-        .join(p105, "qid", "left")
-        .join(p17, "qid", "left")
-        .join(has_p17, "qid", "left")
-        .join(sitelink_expected, "qid", "left")
-        .join(p247, "qid", "left")
-        .join(p279c, "qid", "left")
-        .join(dissolved, "qid", "left")
-        .join(hq, "qid", "left")
-        .join(area, "qid", "left")
-        .join(teryt, "qid", "left")
+        .join(classes, "qid", "left")
+        .join(claims, "qid", "left")
         .fillna(
             {"is_disambig": False, "is_list": False, "is_ambiguous_item": False,
              "is_taxon": False, "has_p17": False,
              "has_p247": False, "has_p279_claim": False, "dissolved": False, "has_area": False}
         )
     )
-    return facts
-
-
-def _facts_cols(prefix: str) -> list[str]:
-    return ["best_link", "is_disambig", "is_list", "is_ambiguous_item", "unlink_what",
-            "unlink_replacement", "has_p247", "has_p279_claim", "dissolved",
-            "hq_lats", "hq_lons", "has_area", "teryt_simc",
-            "is_taxon", "p105_qids", "countries", "has_p17", "sitelink_expected"]
+    return facts.select("qid", *FACTS_COLS)
 
 
 def _maybe_broadcast(df: DataFrame, broadcast: bool) -> DataFrame:
     """Size-gated broadcast (round-1 verdict 'what's wrong #3'): below the
-    configured facts threshold broadcast wins; above it a shuffle hash join
-    on qid avoids materializing the dim on the driver."""
+    facts threshold broadcast wins; above it a shuffle hash join on qid
+    avoids materializing the dim on the driver."""
     return F.broadcast(df) if broadcast else df.hint("shuffle_hash")
-
-
-def _join_facts(df: DataFrame, facts: DataFrame, qid_col: str, prefix: str, broadcast: bool = True) -> DataFrame:
-    """Left-join qid_facts for `qid_col`, aliasing fact columns with prefix.
-    Adds `{prefix}_exists` (the 404 signal, SURVEY.md J1)."""
-    sel = [F.col("qid").alias(f"__{prefix}_qid"), F.lit(True).alias(f"{prefix}_exists")] + [
-        F.col(c).alias(f"{prefix}_{c}") for c in _facts_cols(prefix)
-    ]
-    f = facts.select(*sel)
-    out = df.join(_maybe_broadcast(f, broadcast), df[qid_col] == f[f"__{prefix}_qid"], "left").drop(f"__{prefix}_qid")
-    return out.withColumn(f"{prefix}_exists", F.coalesce(F.col(f"{prefix}_exists"), F.lit(False)))
 
 
 # =====================================================================
@@ -819,18 +783,16 @@ def _collision_errors(elements: DataFrame, dims: WikiDims, facts: DataFrame, bca
     )
     pairs = pairs.join(F.broadcast(p_red), ["lang", "redir_title"], "left")
 
-    fd = facts.select(F.col("qid"), F.col("is_disambig"))
     pairs = pairs.join(
-        _maybe_broadcast(fd.withColumnRenamed("qid", "qid_article").withColumnRenamed("is_disambig", "article_disambig"), bcast),
+        _maybe_broadcast(facts.select(F.col("qid").alias("qid_article"),
+                                      F.col("is_disambig").alias("article_disambig")), bcast),
         "qid_article", "left",
-    ).join(
-        _maybe_broadcast(fd.withColumnRenamed("qid", "wd_val").withColumnRenamed("is_disambig", "wd_disambig"), bcast),
-        "wd_val", "left",
     )
-
-    # best interwiki of the wikidata-side qid (for the disambig retarget, :1090)
+    # the wikidata side: its disambig flag and its best interwiki (for the
+    # disambig retarget, :1090)
     pairs = pairs.join(
-        _maybe_broadcast(facts.select(F.col("qid").alias("wd_val"), F.col("best_link").alias("wd_side_best_link")), bcast),
+        _maybe_broadcast(facts.select(F.col("qid").alias("wd_val"), F.col("is_disambig").alias("wd_disambig"),
+                                      F.col("best_link").alias("wd_side_best_link")), bcast),
         "wd_val", "left",
     )
 
@@ -942,14 +904,13 @@ def ser_changes_col(c: Column) -> Column:
     )
 
 
-def _disambig_fix_lists(cand: DataFrame, dims: WikiDims, facts: DataFrame, bcast: bool) -> DataFrame:
-    """get_list_of_disambig_fixes (:1387-1410) -> (element_id, disambig_list):
-    outlinks of the disambig page's best-interwiki article, each line
+def _disambig_fix_lists(cand: DataFrame, dims: WikiDims, bcast: bool) -> DataFrame:
+    """get_list_of_disambig_fixes (:1387-1410): cand(element_id, lat, lon,
+    best_link) -> (element_id, disambig_list): outlinks of the disambig
+    page's best-interwiki article, each line
     'title[ is N km away| <no location data on wikidata>]\\n'. Listed in
     canonical title order (the reference uses API response order)."""
-    bi = facts.select(F.col("qid").alias("effective_wd"), "best_link")
-    c = cand.join(_maybe_broadcast(bi, bcast), "effective_wd", "left")
-    c = c.withColumn("d_lang", wikitext.lang_code_of(F.col("best_link"))).withColumn(
+    c = cand.withColumn("d_lang", wikitext.lang_code_of(F.col("best_link"))).withColumn(
         "d_title", wikitext.article_name_of(F.col("best_link"))
     )
     links = dims.disambig_links.where(F.col("ns") == 0).select(  # ns=0 only, :1358-1360
@@ -1031,7 +992,7 @@ def resolve(elements: DataFrame, dims: WikiDims, cfg: ResolveConfig | None = Non
     facts = build_qid_facts(dims, cfg).persist()
     # size gate: count once (materializes the persisted dim anyway);
     # above the threshold every facts-side join degrades to shuffle hash
-    bcast = facts.count() <= cfg.facts_broadcast_threshold
+    bcast = facts.count() <= _FACTS_BROADCAST_THRESHOLD
     bi = facts.select("qid", "best_link")
 
     base = elements.where(~F.coalesce(_should_be_deleted(), F.lit(False)))  # :276-277
@@ -1046,8 +1007,12 @@ def resolve(elements: DataFrame, dims: WikiDims, cfg: ResolveConfig | None = Non
     base = base.join(F.broadcast(p), ["wp_lang", "wp_article"], "left")
     base = base.withColumn("effective_wd", F.coalesce("wikidata", "qid_from_wp"))  # :416-423
 
-    base = _join_facts(base, facts, "wikidata", "wd", broadcast=bcast)
-    base = _join_facts(base, facts, "effective_wd", "eff", broadcast=bcast)
+    # the one element-level facts lookup, as eff_<fact>; the wikidata tag's
+    # own facts are the same row whenever the tag is set
+    eff = facts.select(F.col("qid").alias("effective_wd"), *[F.col(c).alias(f"eff_{c}") for c in FACTS_COLS])
+    base = base.join(_maybe_broadcast(eff, bcast), "effective_wd", "left")
+    for c in ("best_link", "teryt_simc"):
+        base = base.withColumn(f"wd_{c}", F.when(F.col("wikidata").isNotNull(), F.col(f"eff_{c}")))
 
     # taxon-prefix qid resolution (:1785-1789) + slim taxonomy facts
     for pfx in ("species:", "taxon:", "genus:"):
@@ -1157,8 +1122,9 @@ def resolve(elements: DataFrame, dims: WikiDims, cfg: ResolveConfig | None = Non
     # distance-annotated disambig outlink list (:1746-1747 via :1387-1410)
     if dims.disambig_links is not None:
         dlists = _disambig_fix_lists(
-            base.where(F.col("eff_is_disambig")).select("element_id", "lat", "lon", "effective_wd"),
-            dims, facts, bcast,
+            base.where(F.col("eff_is_disambig")).select(
+                "element_id", "lat", "lon", F.col("eff_best_link").alias("best_link")),
+            dims, bcast,
         )
         base = base.join(dlists, "element_id", "left")
     else:
@@ -1218,25 +1184,19 @@ def resolve(elements: DataFrame, dims: WikiDims, cfg: ResolveConfig | None = Non
              prerequisite=pre_eff_wd),
     )
 
-    # headquarters distance (:1880-1895): any P159 location > 20 km away.
-    # Gated on reducible_to_point (P2): a route relation or river has no
-    # single location, so its anchor coordinate must not drive the check
-    if cfg.geodesic_kernel == "haversine":
-        hq_any_far = F.exists(
-            F.zip_with("eff_hq_lats", "eff_hq_lons", lambda a, b: F.struct(a.alias("la"), b.alias("lo"))),
-            lambda s: haversine_km_col(F.col("lat"), F.col("lon"), s["la"], s["lo"]) > 20,
-        )
-    else:  # 'ellipsoidal' / 'karney': WGS-84 kernels (geo/geodesic.py)
-        hq_any_far = F.pandas_udf(_any_hq_far_np_kernel(cfg.geodesic_kernel), "boolean")(
-            F.col("lat"), F.col("lon"), F.col("eff_hq_lats"), F.col("eff_hq_lons")
-        )
-    hq_far = F.when(
+    # headquarters distance (:1880-1895): any P159 location > 20 km away
+    # under the Karney kernel. Gated on reducible_to_point (P2): a route
+    # relation or river has no single location, so its anchor coordinate
+    # must not drive the check. A column below the brand join, so the final
+    # filter and select share one evaluation of the UDF
+    base = base.withColumn("hq_far", F.when(
         reducible_to_point()
         & F.col("lat").isNotNull() & F.col("eff_hq_lats").isNotNull() & ~F.col("eff_has_area"),
-        hq_any_far,
-    ).otherwise(F.lit(False))
+        F.pandas_udf(_any_hq_far, "boolean")(
+            F.col("lat"), F.col("lon"), F.col("eff_hq_lats"), F.col("eff_hq_lons")),
+    ).otherwise(F.lit(False)))
     hq_err = F.when(
-        hq_far,
+        F.col("hq_far"),
         _err(F.concat(F.lit("should use a secondary wikipedia tag - linking from "),
                       tag_summary, F.lit(" tag to a company that has multiple locations")),  # :1893
              _subject_message(F.lit("a company that has multiple locations"), F.lit("brand:"),
