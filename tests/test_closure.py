@@ -28,39 +28,69 @@ def test_ignore_list_prunes_traversal(spark):
     assert ("A", "Z") not in got and ("A", "HUB") not in got
 
 
+def _bfs_min_depths(rows, ignored):
+    """Oracle: {(qid, ancestor): min depth} by breadth-first search from
+    every node of the edges that touch no ignored qid."""
+    parents = {}
+    for child, parent, _ in rows:
+        if child not in ignored and parent not in ignored:
+            parents.setdefault(child, set()).add(parent)
+            parents.setdefault(parent, set())
+    out = {}
+    for start in parents:
+        depth, frontier = {start: 0}, [start]
+        while frontier:
+            nxt = []
+            for q in frontier:
+                for p in parents[q]:
+                    if p not in depth:
+                        depth[p] = depth[q] + 1
+                        nxt.append(p)
+            frontier = nxt
+        out.update({(start, a): d for a, d in depth.items()})
+    return out
+
+
 def test_p279_closure_doubling_matches_frontier_loop(spark):
-    """Path-doubling mode returns the IDENTICAL closure table on a mixed
-    topology (deep chain + cycle + diamond + ignored hub), in
-    ceil(log2(depth)) growth rounds + 1 fixpoint-confirm round — a 20-deep
-    chain converges within 6 doubling iterations where the frontier loop
-    needs 20."""
+    """Both public entries return exactly the breadth-first oracle's pairs
+    and min depths on a mixed topology, and a 20-deep chain converges
+    within 6 rounds (ceil(log2 20) + 1)."""
     rows = [(f"C{i}", f"C{i+1}", "P279") for i in range(20)]  # 20-deep chain
     rows += [("X", "Y", "P279"), ("Y", "X", "P279")]          # 2-cycle
     rows += [("D", "L", "P279"), ("D", "R", "P279"),
              ("L", "T", "P279"), ("R", "T", "P279")]          # diamond
     rows += [("A", "HUB", "P279"), ("HUB", "Z", "P279")]      # ignored hub
+    rows += [("S", "S", "P279")]                              # self-loop
+    rows += [("DA", "DC", "P279"), ("DA", "DB", "P279"),
+             ("DB", "DC", "P279")]                            # uneven diamond
+    # two new paths of lengths 3 and 4 to one pair, found in one round
+    rows += [("U0", "U1", "P279"), ("U1", "U2", "P279"), ("U2", "U3", "P279"),
+             ("U0", "V1", "P279"), ("V1", "V2", "P279"), ("V2", "V3", "P279"),
+             ("V3", "U3", "P279")]
+    rows += [("X", "Y", "P279"), ("C3", "C4", "P279")]        # duplicate edges
+    rows += [("W", "V", "P279"), ("W", "HUB", "P279")]        # edge into an ignored qid
+    rows += [("P", "Q", "P279")]                              # disconnected pair
     e = _edges(spark, rows)
-    loop = {(r["qid"], r["ancestor"])
-            for r in closure.p279_closure(e, ignored=["HUB"]).collect()}
-    dbl = {(r["qid"], r["ancestor"])
-           for r in closure.p279_closure(
-               e, ignored=["HUB"], doubling=True, max_iterations=6).collect()}
-    assert dbl == loop
-    assert ("C0", "C20") in dbl and ("A", "Z") not in dbl
+    want = _bfs_min_depths(rows, {"HUB"})
+    assert want[("C0", "C20")] == 20 and want[("DA", "DC")] == 1 and want[("U0", "U3")] == 3
+    assert want[("S", "S")] == 0 and ("A", "Z") not in want
+
+    got = [(r["qid"], r["ancestor"], r["depth"]) for r in closure.p279_closure_with_depth(
+        e, ignored=["HUB"], max_iterations=6).collect()]
+    assert len(got) == len(want)
+    assert {(q, a): d for q, a, d in got} == want
+    pairs = [(r["qid"], r["ancestor"]) for r in closure.p279_closure(
+        e, ignored=["HUB"], max_iterations=6).collect()]
+    assert len(pairs) == len(want) and set(pairs) == set(want)
 
 
 def test_p279_closure_doubling_raises_without_fixpoint(spark):
-    """Every closure mode (doubling, the frontier loop and the
-    depth-tracking loop) raises instead of returning a partial closure
+    """Both public entries raise instead of returning a partial closure
     when max_iterations runs out."""
     e = _edges(spark, [(f"C{i}", f"C{i+1}", "P279") for i in range(20)])
-    for run in (
-        lambda: closure.p279_closure(e, doubling=True, max_iterations=2),
-        lambda: closure.p279_closure(e, max_iterations=2),
-        lambda: closure.p279_closure_with_depth(e, max_iterations=2),
-    ):
+    for entry in (closure.p279_closure, closure.p279_closure_with_depth):
         with pytest.raises(RuntimeError, match="fixpoint"):
-            run()
+            entry(e, max_iterations=2)
 
 
 def test_classifying_ancestors_union_semantics(spark):

@@ -112,6 +112,16 @@ def test_facts_join_size_gate(spark, dims, monkeypatch):
     assert got == want
 
 
+def test_resolve_leaves_cache_manager_empty(spark, dims):
+    """resolve() caches nothing in the session: repeated calls must not
+    pile up persisted frames (and the blocks they pin) in the CacheManager."""
+    elements = spark.createDataFrame(synthetic.generate_test_elements(), ELEMENTS_SCHEMA)
+    spark.catalog.clearCache()
+    for _ in range(2):
+        linkres.resolve(elements.drop("expected_error_id"), dims)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_disambig_fix_list_message(spark, dims):
     """get_list_of_disambig_fixes (:1387-1410): the disambig error message
     carries the outlink list with per-link distance descriptions."""

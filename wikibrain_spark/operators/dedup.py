@@ -549,8 +549,9 @@ def near_dup_clusters(
     graph, cluster_id = MIN doc id in the component (the deterministic
     survivor a dedup pipeline keeps; every other member is the drop set).
 
-    Iterative min-label propagation WITH pointer jumping, the same
-    driver-controlled loop shape as the ontology closure: each round takes,
+    Iterative min-label propagation WITH pointer jumping, in a
+    driver-controlled fixpoint loop like the ontology closure's (whose
+    delta doubling is this pointer jump's analogue): each round takes,
     per node, the min over (its own label, its neighbors' labels pushed one
     hop across the symmetrized edge list, and the label OF its current
     label — the pointer-doubling shortcut). One-hop alone converges in

@@ -989,9 +989,13 @@ def resolve(elements: DataFrame, dims: WikiDims, cfg: ResolveConfig | None = Non
     cfg = cfg or ResolveConfig()
     spark = elements.sparkSession
 
-    facts = build_qid_facts(dims, cfg).persist()
-    # size gate: count once (materializes the persisted dim anyway);
-    # above the threshold every facts-side join degrades to shuffle hash
+    # an eager localCheckpoint, not persist(): a persisted frame stays in the
+    # session's CacheManager after the call, pinning its blocks; checkpointed
+    # blocks are released with the frame. The closure under the facts is
+    # localCheckpoint'ed already, so this adds no new unrecoverable-block
+    # exposure (see the closure module docstring).
+    facts = build_qid_facts(dims, cfg).localCheckpoint()
+    # size gate: above the threshold every facts-side join is a shuffle hash
     bcast = facts.count() <= _FACTS_BROADCAST_THRESHOLD
     bi = facts.select("qid", "best_link")
 
